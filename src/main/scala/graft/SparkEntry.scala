@@ -1,10 +1,12 @@
 package graft
 
+import graft.queries.Entry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Query packs live under graft.queries.*; this object only aggregates them.
+  * Query packs live under graft.queries.*; each declares its `entries`
+  * (name, plan, oracle SQL) once, and this object only aggregates them.
   */
 object SparkEntry {
 
@@ -12,17 +14,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every pack's entries; names are unique across packs (RegistrySpec). */
+  lazy val entries: Seq[Entry] = Seq(
+    graft.queries.Relational.entries,
+    graft.queries.Dataflow.entries,
+    graft.queries.Scalars.entries,
+    graft.queries.LlmPipeline.entries,
+    graft.queries.CorpusBuild.entries,
+    graft.queries.Profile.entries,
+    graft.queries.Sketches.entries,
+    graft.queries.Layout.entries,
+    graft.queries.UdLang.entries).flatten
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Dataflow.queries ++
-      graft.queries.Scalars.queries ++
-      graft.queries.LlmPipeline.queries ++
-      graft.queries.CorpusBuild.queries ++
-      graft.queries.Profile.queries ++
-      graft.queries.Sketches.queries ++
-      graft.queries.Layout.queries ++
-      graft.queries.UdLang.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.build).toMap
 
   /** Queries that exist as EXACTNESS BASELINES (deliberately quadratic
     * oracle twins of a bucketed scale path), not as production plans.
@@ -33,15 +39,7 @@ object SparkEntry {
   val baselineOnly: Set[String] = Set("embed_neardup")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.Dataflow.oracle ++
-      graft.queries.Scalars.oracle ++
-      graft.queries.LlmPipeline.oracle ++
-      graft.queries.CorpusBuild.oracle ++
-      graft.queries.Profile.oracle ++
-      graft.queries.Sketches.oracle ++
-      graft.queries.Layout.oracle ++
-      graft.queries.UdLang.oracle
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    entries.map(e => e.name -> e.oracleSql).toMap
 }

@@ -1026,9 +1026,10 @@ private[lang] object Lowering {
     * filters over it. A `throw` (UdException) anywhere in the record's
     * evaluation — effect-annotated funcs included — drops that record's
     * outputs and carries the message; any other exception still aborts
-    * the job (a bug is not data). The split legs re-run the flatMap (no
-    * cache — same Validated posture as routeTagged), which stays
-    * shuffle-free and pipelined in both legs. */
+    * the job (a bug is not data). The tagged rows are materialized once
+    * (an eager local checkpoint), so consuming both legs evaluates each
+    * record once and a `!` trace prints once per record. Batch frames
+    * only: a streaming frame cannot be checkpointed. */
   def runKernelEither(script: Script, df: DataFrame,
                       libs: Map[String, Values.Value] = Map.empty)
       : (DataFrame, DataFrame) = {
@@ -1053,7 +1054,7 @@ private[lang] object Lowering {
           case e: UdException => Row(null, e.message, row)
         }
       }
-    }(enc)
+    }(enc).localCheckpoint(eager = true)
     val good = tagged.filter(col("_error").isNull)
       .select(explode(col("_out")).as("_o")).select(col("_o.*"))
     val dlq = tagged.filter(col("_error").isNotNull)

@@ -284,7 +284,10 @@ object Multimodal extends Serializable {
       // the cached writer must never survive mid-sequence: reset()
       // clears its output/sequence state so the next call on this
       // thread starts clean (the stream alone is closed by finally)
-      case t: Throwable => writer.reset(); throw t
+      case t: Throwable =>
+        try writer.reset()
+        catch { case scala.util.control.NonFatal(r) => t.addSuppressed(r) }
+        throw t
     } finally ios.close()
     bos.toByteArray
   }
@@ -307,30 +310,36 @@ object Multimodal extends Serializable {
       content(3) != '8'.toByte) return None
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(content))
+    val r = Iio.gifReader
+    // rejection must be TOTAL over corrupt GIF8-prefixed bytes: the JDK
+    // GIF reader throws RuntimeExceptions (not just IOException) on
+    // malformed LZW/descriptor data. Only the reader's calls are
+    // guarded, so a bug in the ARGB sum below still fails the job.
+    // reset() clears the cached reader's input state so the next call
+    // on this thread starts clean.
+    def reading[T](body: => T): Option[T] =
+      try Some(body)
+      catch { case scala.util.control.NonFatal(_) => r.reset(); None }
+    // bulk ARGB fetch: one ColorModel conversion pass per frame instead
+    // of a per-pixel getRGB call (same palette-faithful values — the
+    // gray level is the blue channel either way)
+    def graySum(i: Int, img: java.awt.image.BufferedImage) = {
+      val w = img.getWidth
+      val h = img.getHeight
+      val px = img.getRGB(0, 0, w, h, null, 0, w)
+      var s = 0L
+      var k = 0
+      while (k < px.length) { s += (px(k) & 0xFF).toLong; k += 1 }
+      (i, w, h, s)
+    }
     try {
-      val r = Iio.gifReader
-      r.setInput(iis, false, false)
-      val n = r.getNumImages(true)
-      Some((0 until n).map { i =>
-        val img = r.read(i)
-        val w = img.getWidth
-        val h = img.getHeight
-        // bulk ARGB fetch: one ColorModel conversion pass per frame
-        // instead of a per-pixel getRGB call (same palette-faithful
-        // values — the gray level is the blue channel either way)
-        val px = img.getRGB(0, 0, w, h, null, 0, w)
-        var s = 0L
-        var k = 0
-        while (k < px.length) { s += (px(k) & 0xFF).toLong; k += 1 }
-        (i, w, h, s)
-      })
-    } catch {
-      // rejection must be TOTAL over corrupt GIF8-prefixed bytes: the
-      // JDK GIF reader throws RuntimeExceptions (not just IOException)
-      // on malformed LZW/descriptor data. reset() clears the cached
-      // reader's input state so the next call on this thread starts
-      // clean.
-      case scala.util.control.NonFatal(_) => Iio.gifReader.reset(); None
+      reading { r.setInput(iis, false, false); r.getNumImages(true) }
+        .flatMap { n =>
+          val frames = (0 until n).iterator
+            .map(i => reading(r.read(i)).map(graySum(i, _)))
+            .takeWhile(_.isDefined).flatten.toVector
+          if (frames.size == n) Some(frames) else None
+        }
     } finally iis.close()
   }
 

@@ -1955,37 +1955,24 @@ object CorpusBuild {
        |        > ${StopDriftTvMicro} THEN 'retrain' ELSE 'serve' END)
        |ORDER BY kind, shingle""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "crawl_frontier" -> (crawlFrontier _),
-    "corpus_build_e2e" -> (corpusBuildE2e _),
-    "corpus_lineage" -> (corpusLineage _),
-    "corpus_build_tokenized" -> (corpusBuildTokenized _),
-    "corpus_build_incr" -> (corpusBuildIncr _),
-    "corpus_build_incr2" -> (corpusBuildIncr2 _),
-    "corpus_build_compact" -> (corpusBuildCompact _),
-    "u_stream_corpus_append" -> (uStreamCorpusAppend _),
-    "corpus_build_retract" -> (corpusBuildRetract _),
-    "corpus_build_retract_incr" -> (corpusBuildRetractIncr _),
-    "corpus_retrain" -> (corpusRetrain _),
-    "corpus_stop_drift" -> (corpusStopDrift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "crawl_frontier" -> crawlFrontierSql,
-    "corpus_build_e2e" -> corpusBuildE2eSql,
-    "corpus_build_incr" -> corpusBuildIncrSql,
-    "corpus_build_incr2" -> corpusBuildIncr2Sql,
-    "corpus_build_compact" -> corpusBuildIncr2Sql,
+  val entries: Seq[Entry] = Seq(
+    Entry("crawl_frontier", crawlFrontier, crawlFrontierSql),
+    Entry("corpus_build_e2e", corpusBuildE2e, corpusBuildE2eSql),
+    Entry("corpus_lineage", corpusLineage, corpusLineageSql),
+    Entry("corpus_build_tokenized", corpusBuildTokenized,
+      corpusBuildTokenizedSql),
+    Entry("corpus_build_incr", corpusBuildIncr, corpusBuildIncrSql),
+    Entry("corpus_build_incr2", corpusBuildIncr2, corpusBuildIncr2Sql),
+    Entry("corpus_build_compact", corpusBuildCompact, corpusBuildIncr2Sql),
     // the stream drains into exactly the incr2 segment stack, so the
     // oracle is the same split-invariant frozen-stop rebuild
-    "u_stream_corpus_append" -> corpusBuildIncr2Sql,
-    "corpus_build_retract" -> corpusBuildRetractSql,
-    "corpus_build_retract_incr" -> corpusBuildRetractIncrSql,
+    Entry("u_stream_corpus_append", uStreamCorpusAppend, corpusBuildIncr2Sql),
+    Entry("corpus_build_retract", corpusBuildRetract, corpusBuildRetractSql),
+    Entry("corpus_build_retract_incr", corpusBuildRetractIncr,
+      corpusBuildRetractIncrSql),
     // retrain ends exactly where a from-scratch build of the grown
     // corpus ends: the refreshed-parameter replay IS the monolith's
-    "corpus_retrain" -> corpusBuildE2eSql,
-    "corpus_stop_drift" -> corpusStopDriftSql,
-    "corpus_lineage" -> corpusLineageSql,
-    "corpus_build_tokenized" -> corpusBuildTokenizedSql
+    Entry("corpus_retrain", corpusRetrain, corpusBuildE2eSql),
+    Entry("corpus_stop_drift", corpusStopDrift, corpusStopDriftSql)
   )
 }

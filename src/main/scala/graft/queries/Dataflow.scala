@@ -291,33 +291,18 @@ object Dataflow extends Serializable {
     """SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us
       |FROM events ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "msgpack_roundtrip" -> (msgpackRoundtrip _),
-    "d1_kernel_flatmap" -> (d1KernelFlatmap _),
-    "d3_multi_emit_count" -> (d3MultiEmitCount _),
-    "d_fact_kernel" -> (dFactKernel _),
-    "d6_for_explode" -> (d6ForExplode _),
-    "d7_for_map" -> (d7ForMap _),
-    "d8_comprehension" -> (d8Comprehension _),
-    "d9_suppose" -> (d9Suppose _),
-    "d11_throw_dlq" -> (d11ThrowDlq _),
-    "d5_validation" -> (d5Validation _),
-    "p1_dot_has" -> (p1DotHas _),
-    "p3_index" -> (p3Index _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "msgpack_roundtrip" -> msgpackRoundtripSql,
-    "d1_kernel_flatmap" -> d1KernelFlatmapSql,
-    "d3_multi_emit_count" -> d3MultiEmitCountSql,
-    "d_fact_kernel" -> dFactKernelSql,
-    "d6_for_explode" -> d6ForExplodeSql,
-    "d7_for_map" -> d7ForMapSql,
-    "d8_comprehension" -> d8ComprehensionSql,
-    "d9_suppose" -> d9SupposeSql,
-    "d11_throw_dlq" -> d11ThrowDlqSql,
-    "d5_validation" -> d5ValidationSql,
-    "p1_dot_has" -> p1DotHasSql,
-    "p3_index" -> p3IndexSql
+  val entries: Seq[Entry] = Seq(
+    Entry("msgpack_roundtrip", msgpackRoundtrip, msgpackRoundtripSql),
+    Entry("d1_kernel_flatmap", d1KernelFlatmap, d1KernelFlatmapSql),
+    Entry("d3_multi_emit_count", d3MultiEmitCount, d3MultiEmitCountSql),
+    Entry("d_fact_kernel", dFactKernel, dFactKernelSql),
+    Entry("d6_for_explode", d6ForExplode, d6ForExplodeSql),
+    Entry("d7_for_map", d7ForMap, d7ForMapSql),
+    Entry("d8_comprehension", d8Comprehension, d8ComprehensionSql),
+    Entry("d9_suppose", d9Suppose, d9SupposeSql),
+    Entry("d11_throw_dlq", d11ThrowDlq, d11ThrowDlqSql),
+    Entry("d5_validation", d5Validation, d5ValidationSql),
+    Entry("p1_dot_has", p1DotHas, p1DotHasSql),
+    Entry("p3_index", p3Index, p3IndexSql)
   )
 }

@@ -262,13 +262,9 @@ object Layout {
        |ORDER BY box""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_zorder" -> (layoutZorder _),
-    "idx_zonemap_build" -> (zonemapBuild _),
-    "idx_zonemap_serve" -> (zonemapServe _))
-
-  val oracle: Map[String, String] = Map(
-    "layout_zorder" -> layoutZorderSql,
-    "idx_zonemap_build" -> zonemapBuildSql,
-    "idx_zonemap_serve" -> zonemapServeSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("layout_zorder", layoutZorder, layoutZorderSql),
+    Entry("idx_zonemap_build", zonemapBuild, zonemapBuildSql),
+    Entry("idx_zonemap_serve", zonemapServe, zonemapServeSql)
+  )
 }

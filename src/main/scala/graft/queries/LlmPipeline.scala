@@ -6604,277 +6604,151 @@ object LlmPipeline extends Serializable {
        |  ex.n_kept, ex.extract_sha
        |FROM ex ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_warc" -> (sourceWarc _),
-    "text_html_pagerank" -> (textHtmlPagerank _),
-    "text_html_links" -> (textHtmlLinks _),
-    "text_html_urlnorm" -> (textHtmlUrlnorm _),
-    "text_html_robots" -> (textHtmlRobots _),
-    "text_html_linkgraph" -> (textHtmlLinkgraph _),
-    "text_html_pipeline" -> (textHtmlPipeline _),
-    "idx_pq_build" -> (idxPqBuild _),
-    "idx_pq_serve" -> (idxPqServe _),
-    "idx_ivf_build" -> (idxIvfBuild _),
-    "idx_ivf_serve" -> (idxIvfServe _),
-    "idx_ivf_append" -> (idxIvfAppend _),
-    "idx_ivf_compact" -> (idxIvfCompact _),
-    "idx_ivf_retract" -> (idxIvfRetract _),
-    "idx_ivf_drift" -> (idxIvfDrift _),
-    "idx_ivf_retrain" -> (idxIvfRetrain _),
-    "tok_bpe_drift" -> (tokBpeDrift _),
-    "idx_sq8_build" -> (idxSq8Build _),
-    "idx_sq8_serve" -> (idxSq8Serve _),
-    "idx_lsh_build" -> (idxLshBuild _),
-    "idx_lsh_serve" -> (idxLshServe _),
-    "idx_bloom_build" -> (idxBloomBuild _),
-    "idx_bloom_serve" -> (idxBloomServe _),
-    "tok_bpe_build" -> (tokBpeBuild _),
-    "tok_bpe_serve" -> (tokBpeServe _),
-    "tok_bpe_retrain" -> (tokBpeRetrain _),
-    "tok_wp_build" -> (tokWpBuild _),
-    "tok_wp_serve" -> (tokWpServe _),
-    "tok_uni_build" -> (tokUniBuild _),
-    "tok_uni_serve" -> (tokUniServe _),
-    "text_html_blocks" -> (textHtmlBlocks _),
-    "text_html_extract" -> (textHtmlExtract _),
-    "multimodal_audio" -> (multimodalAudioSegments _),
-    "multimodal_frames" -> (multimodalFrames _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_soft_weights" -> (dedupSoftWeights _),
-    "text_cluster_topics" -> (textClusterTopics _),
-    "sample_cluster_balanced" -> (sampleClusterBalanced _),
-    "dedup_jaccard_blocked" -> (dedupJaccardBlocked _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_clusters_multi" -> (dedupClustersMulti _),
-    "dedup_canonical" -> (dedupCanonical _),
-    "text_redact" -> (textRedact _),
-    "text_packing" -> (textPacking _),
-    "dedup_minhash_lsh" -> (dedupMinhashLsh _),
-    "dedup_minhash_incremental" -> (dedupMinhashIncremental _),
-    "embed_project" -> (embedProject _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "ann_cosine_topk" -> (annCosineTopk _),
-    "ann_filtered" -> (annFiltered _),
-    "ann_ivf_filtered" -> (annIvfFiltered _),
-    "ann_sq8" -> (annSq8 _),
-    "ann_pq" -> (annPq _),
-    "ann_hamming_rerank" -> (annHammingRerank _),
-    "ann_pq_rerank" -> (annPqRerank _),
-    "ann_ivf" -> (annIvf _),
-    "ann_ivf_kmeans" -> (annIvfKmeans _),
-    "ann_ivf_pq" -> (annIvfPq _),
-    "ann_ivf_pq_residual" -> (annIvfPqResidual _),
-    "embed_neardup" -> (embedNeardup _),
-    "ann_lsh" -> (annLsh _),
-    "text_langid" -> (textLangid _),
-    "text_quality" -> (textQuality _),
-    "text_quality_trained" -> (textQualityTrained _),
-    "text_tokens" -> (textTokens _),
-    "text_vocab" -> (textVocab _),
-    "text_approx_vocab" -> (textApproxVocab _),
-    "text_normalize" -> (textNormalize _),
-    "text_bigram_coverage" -> (textBigramCoverage _),
-    "sample_split" -> (sampleSplit _),
-    "sample_split_grouped" -> (sampleSplitGrouped _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_repetition" -> (textRepetition _),
-    "text_tfidf" -> (textTfidf _),
-    "text_chunks" -> (textChunks _),
-    "text_chunk_dedup" -> (textChunkDedup _),
-    "text_substring_dedup" -> (textSubstringDedup _),
-    "text_cut_dup_spans" -> (textCutDupSpans _),
-    "text_filter_pipeline" -> (textFilterPipeline _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "corpus_diff" -> (corpusDiff _),
-    "text_contamination" -> (textContamination _),
-    "sample_mixture" -> (sampleMixture _),
-    "sample_weighted" -> (sampleWeighted _),
-    "sample_importance" -> (sampleImportance _),
-    "text_bpe" -> (textBpe _),
-    "text_wordpiece" -> (textWordpiece _),
-    "text_wordpiece_encode" -> (textWordpieceEncode _),
-    "text_wordpiece_apply" -> (textWordpieceApply _),
-    "text_wordpiece_corpus" -> (textWordpieceCorpus _),
-    "text_unigram" -> (textUnigram _),
-    "text_unigram_prune" -> (textUnigramPrune _),
-    "text_unigram_encode" -> (textUnigramEncode _),
-    "text_unigram_corpus" -> (textUnigramCorpus _),
-    "text_unigram_fertility" -> (textUnigramFertility _),
-    "text_bpe_batch32" -> (textBpeBatch32 _),
-    "text_bpe_encode" -> (textBpeEncode _),
-    "text_bpe_fertility" -> (textBpeFertility _),
-    "multimodal_decode" -> (multimodalDecode _),
-    "multimodal_resize" -> (multimodalResize _),
-    "multimodal_imageio" -> (multimodalImageio _),
-    "multimodal_wav" -> (multimodalWav _),
-    "multimodal_mp4" -> (multimodalMp4 _),
-    "multimodal_webp" -> (multimodalWebp _),
-    "multimodal_gif" -> (multimodalGif _),
-    "multimodal_vp8l" -> (multimodalVp8l _),
-    "multimodal_vp8" -> (multimodalVp8 _),
-    "multimodal_vp8_filtered" -> (multimodalVp8Filtered _),
-    "multimodal_h264" -> (multimodalH264 _),
-    "multimodal_h264_filtered" -> (multimodalH264Filtered _),
-    "multimodal_adts" -> (multimodalAdts _),
-    "multimodal_h264_mp4" -> (multimodalH264Mp4 _),
-    "multimodal_h264_cabac" -> (multimodalH264Cabac _),
-    "multimodal_aac_spectral" -> (multimodalAacSpectral _),
-    "multimodal_image_dedup" -> (multimodalImageDedup _),
-    "multimodal_image_neardup" -> (multimodalImageNearDup _),
-    "multimodal_audio_dedup" -> (multimodalAudioDedup _),
-    "multimodal_g711" -> (multimodalG711 _),
-    "multimodal_adpcm" -> (multimodalAdpcm _),
-    "multimodal_exif" -> (multimodalExif _),
-    "multimodal_mjpeg" -> (multimodalMjpeg _),
-    "multimodal_flac" -> (multimodalFlac _),
-    "multimodal_video_dedup" -> (multimodalVideoDedup _),
-    "text_bigram_lm" -> (textBigramLm _),
-    "text_lm_score" -> (textLmScore _),
-    "ann_knn_graph" -> (annKnnGraph _),
-    "sample_shuffle" -> (sampleShuffle _),
-    "sample_shards" -> (sampleShards _),
-    "text_ngram_overlap" -> (textNgramOverlap _),
-    "text_domain_stats" -> (textDomainStats _),
-    "text_winnowing" -> (textWinnowing _),
-    "dedup_winnowing" -> (dedupWinnowing _),
-    "sample_curriculum" -> (sampleCurriculum _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "source_warc" -> sourceWarcSql,
-    "text_html_pagerank" -> textHtmlPagerankSql,
-    "text_html_links" -> textHtmlLinksSql,
-    "text_html_urlnorm" -> textHtmlUrlnormSql,
-    "text_html_robots" -> textHtmlRobotsSql,
-    "text_html_linkgraph" -> textHtmlLinkgraphSql,
-    "text_html_pipeline" -> textHtmlPipelineSql,
-    "idx_pq_build" -> idxPqBuildSql,
-    "idx_pq_serve" -> annPqSql,
-    "idx_ivf_build" -> idxIvfBuildSql,
-    "idx_ivf_serve" -> annIvfKmeansSql,
-    "idx_ivf_append" -> idxIvfAppendSql,
-    "idx_ivf_compact" -> idxIvfCompactSql,
-    "idx_ivf_retract" -> idxIvfRetractSql,
-    "idx_ivf_drift" -> idxIvfDriftSql,
-    "idx_ivf_retrain" -> idxIvfRetrainSql,
-    "tok_bpe_drift" -> tokBpeDriftSql,
-    "idx_sq8_build" -> idxSq8BuildSql,
-    "idx_sq8_serve" -> annSq8Sql,
-    "idx_lsh_build" -> idxLshBuildSql,
-    "idx_lsh_serve" -> dedupMinhashLshSql,
-    "idx_bloom_build" -> idxBloomBuildSql,
-    "idx_bloom_serve" -> textContaminationSql,
-    "tok_bpe_build" -> textBpeSql,
-    "tok_bpe_serve" -> textBpeEncodeSql,
-    "tok_bpe_retrain" -> tokBpeRetrainSql,
-    "tok_wp_build" -> tokWpBuildSql,
-    "tok_wp_serve" -> textWordpieceCorpusSql,
-    "tok_uni_build" -> textUnigramSql,
-    "tok_uni_serve" -> textUnigramCorpusSql,
-    "text_html_blocks" -> textHtmlBlocksSql,
-    "text_html_extract" -> textHtmlExtractSql,
-    "multimodal_audio" -> multimodalAudioSegmentsSql,
-    "dedup_minhash_lsh" -> dedupMinhashLshSql,
-    "dedup_minhash_incremental" -> dedupMinhashIncrementalSql,
-    "embed_project" -> embedProjectSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "ann_lsh" -> annLshSql,
-    "multimodal_frames" -> multimodalFramesSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_soft_weights" -> dedupSoftWeightsSql,
-    "text_cluster_topics" -> textClusterTopicsSql,
-    "sample_cluster_balanced" -> sampleClusterBalancedSql,
-    "dedup_jaccard_blocked" -> dedupJaccardBlockedSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_clusters_multi" -> dedupClustersMultiSql,
-    "dedup_canonical" -> dedupCanonicalSql,
-    "text_redact" -> textRedactSql,
-    "text_packing" -> textPackingSql,
-    "ann_cosine_topk" -> annCosineTopkSql,
-    "ann_filtered" -> annFilteredSql,
-    "ann_ivf_filtered" -> annIvfFilteredSql,
-    "ann_sq8" -> annSq8Sql,
-    "ann_pq" -> annPqSql,
-    "ann_hamming_rerank" -> annHammingRerankSql,
-    "ann_pq_rerank" -> annPqRerankSql,
-    "ann_ivf" -> annIvfSql,
-    "ann_ivf_kmeans" -> annIvfKmeansSql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "ann_ivf_pq" -> annIvfPqSql,
-    "ann_ivf_pq_residual" -> annIvfPqResidualSql,
-    "embed_neardup" -> embedNeardupSql,
-    "text_langid" -> textLangidSql,
-    "text_quality" -> textQualitySql,
-    "text_quality_trained" -> textQualityTrainedSql,
-    "text_tokens" -> textTokensSql,
-    "text_vocab" -> textVocabSql,
-    "text_approx_vocab" -> textApproxVocabSql,
-    "text_normalize" -> textNormalizeSql,
-    "text_bigram_coverage" -> textBigramCoverageSql,
-    "sample_split" -> sampleSplitSql,
-    "sample_split_grouped" -> sampleSplitGroupedSql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_tfidf" -> textTfidfSql,
-    "text_chunks" -> textChunksSql,
-    "text_chunk_dedup" -> textChunkDedupSql,
-    "text_substring_dedup" -> textSubstringDedupSql,
-    "text_cut_dup_spans" -> textCutDupSpansSql,
-    "text_filter_pipeline" -> textFilterPipelineSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "corpus_diff" -> corpusDiffSql,
-    "text_contamination" -> textContaminationSql,
-    "sample_mixture" -> sampleMixtureSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "sample_importance" -> sampleImportanceSql,
-    "text_bpe" -> textBpeSql,
-    "text_wordpiece" -> textWordpieceSql,
-    "text_wordpiece_encode" -> textWordpieceEncodeSql,
-    "text_wordpiece_apply" -> textWordpieceApplySql,
-    "text_wordpiece_corpus" -> textWordpieceCorpusSql,
-    "text_unigram" -> textUnigramSql,
-    "text_unigram_prune" -> textUnigramPruneSql,
-    "text_unigram_encode" -> textUnigramEncodeSql,
-    "text_unigram_corpus" -> textUnigramCorpusSql,
-    "text_unigram_fertility" -> textUnigramFertilitySql,
-    "text_bpe_batch32" -> textBpeBatch32Sql,
-    "text_bpe_encode" -> textBpeEncodeSql,
-    "text_bpe_fertility" -> textBpeFertilitySql,
-    "multimodal_decode" -> multimodalDecodeSql,
-    "multimodal_resize" -> multimodalResizeSql,
-    "multimodal_imageio" -> multimodalImageioSql,
-    "multimodal_wav" -> multimodalWavSql,
-    "multimodal_mp4" -> multimodalMp4Sql,
-    "multimodal_webp" -> multimodalWebpSql,
-    "multimodal_gif" -> multimodalGifSql,
-    "multimodal_vp8l" -> multimodalVp8lSql,
-    "multimodal_vp8" -> multimodalVp8Sql,
-    "multimodal_vp8_filtered" -> multimodalVp8FilteredSql,
-    "multimodal_h264" -> multimodalH264Sql,
-    "multimodal_h264_filtered" -> multimodalH264FilteredSql,
-    "multimodal_adts" -> multimodalAdtsSql,
-    "multimodal_h264_mp4" -> multimodalH264Mp4Sql,
-    "multimodal_h264_cabac" -> multimodalH264CabacSql,
-    "multimodal_aac_spectral" -> multimodalAacSpectralSql,
-    "multimodal_image_dedup" -> multimodalImageDedupSql,
-    "multimodal_image_neardup" -> multimodalImageNearDupSql,
-    "multimodal_audio_dedup" -> multimodalAudioDedupSql,
-    "multimodal_g711" -> multimodalG711Sql,
-    "multimodal_adpcm" -> multimodalAdpcmSql,
-    "multimodal_exif" -> multimodalExifSql,
-    "multimodal_mjpeg" -> multimodalMjpegSql,
-    "multimodal_flac" -> multimodalFlacSql,
-    "multimodal_video_dedup" -> multimodalVideoDedupSql,
-    "text_bigram_lm" -> textBigramLmSql,
-    "text_lm_score" -> textLmScoreSql,
-    "ann_knn_graph" -> annKnnGraphSql,
-    "sample_shuffle" -> sampleShuffleSql,
-    "sample_shards" -> sampleShardsSql,
-    "text_ngram_overlap" -> textNgramOverlapSql,
-    "text_domain_stats" -> textDomainStatsSql,
-    "text_winnowing" -> textWinnowingSql,
-    "dedup_winnowing" -> dedupWinnowingSql,
-    "sample_curriculum" -> sampleCurriculumSql
+  val entries: Seq[Entry] = Seq(
+    Entry("source_warc", sourceWarc, sourceWarcSql),
+    Entry("text_html_pagerank", textHtmlPagerank, textHtmlPagerankSql),
+    Entry("text_html_links", textHtmlLinks, textHtmlLinksSql),
+    Entry("text_html_urlnorm", textHtmlUrlnorm, textHtmlUrlnormSql),
+    Entry("text_html_robots", textHtmlRobots, textHtmlRobotsSql),
+    Entry("text_html_linkgraph", textHtmlLinkgraph, textHtmlLinkgraphSql),
+    Entry("text_html_pipeline", textHtmlPipeline, textHtmlPipelineSql),
+    Entry("idx_pq_build", idxPqBuild, idxPqBuildSql),
+    Entry("idx_pq_serve", idxPqServe, annPqSql),
+    Entry("idx_ivf_build", idxIvfBuild, idxIvfBuildSql),
+    Entry("idx_ivf_serve", idxIvfServe, annIvfKmeansSql),
+    Entry("idx_ivf_append", idxIvfAppend, idxIvfAppendSql),
+    Entry("idx_ivf_compact", idxIvfCompact, idxIvfCompactSql),
+    Entry("idx_ivf_retract", idxIvfRetract, idxIvfRetractSql),
+    Entry("idx_ivf_drift", idxIvfDrift, idxIvfDriftSql),
+    Entry("idx_ivf_retrain", idxIvfRetrain, idxIvfRetrainSql),
+    Entry("tok_bpe_drift", tokBpeDrift, tokBpeDriftSql),
+    Entry("idx_sq8_build", idxSq8Build, idxSq8BuildSql),
+    Entry("idx_sq8_serve", idxSq8Serve, annSq8Sql),
+    Entry("idx_lsh_build", idxLshBuild, idxLshBuildSql),
+    Entry("idx_lsh_serve", idxLshServe, dedupMinhashLshSql),
+    Entry("idx_bloom_build", idxBloomBuild, idxBloomBuildSql),
+    Entry("idx_bloom_serve", idxBloomServe, textContaminationSql),
+    Entry("tok_bpe_build", tokBpeBuild, textBpeSql),
+    Entry("tok_bpe_serve", tokBpeServe, textBpeEncodeSql),
+    Entry("tok_bpe_retrain", tokBpeRetrain, tokBpeRetrainSql),
+    Entry("tok_wp_build", tokWpBuild, tokWpBuildSql),
+    Entry("tok_wp_serve", tokWpServe, textWordpieceCorpusSql),
+    Entry("tok_uni_build", tokUniBuild, textUnigramSql),
+    Entry("tok_uni_serve", tokUniServe, textUnigramCorpusSql),
+    Entry("text_html_blocks", textHtmlBlocks, textHtmlBlocksSql),
+    Entry("text_html_extract", textHtmlExtract, textHtmlExtractSql),
+    Entry("multimodal_audio", multimodalAudioSegments,
+      multimodalAudioSegmentsSql),
+    Entry("multimodal_frames", multimodalFrames, multimodalFramesSql),
+    Entry("dedup_exact", dedupExact, dedupExactSql),
+    Entry("dedup_soft_weights", dedupSoftWeights, dedupSoftWeightsSql),
+    Entry("text_cluster_topics", textClusterTopics, textClusterTopicsSql),
+    Entry("sample_cluster_balanced", sampleClusterBalanced,
+      sampleClusterBalancedSql),
+    Entry("dedup_jaccard_blocked", dedupJaccardBlocked, dedupJaccardBlockedSql),
+    Entry("dedup_clusters", dedupClusters, dedupClustersSql),
+    Entry("dedup_clusters_multi", dedupClustersMulti, dedupClustersMultiSql),
+    Entry("dedup_canonical", dedupCanonical, dedupCanonicalSql),
+    Entry("text_redact", textRedact, textRedactSql),
+    Entry("text_packing", textPacking, textPackingSql),
+    Entry("dedup_minhash_lsh", dedupMinhashLsh, dedupMinhashLshSql),
+    Entry("dedup_minhash_incremental", dedupMinhashIncremental,
+      dedupMinhashIncrementalSql),
+    Entry("embed_project", embedProject, embedProjectSql),
+    Entry("dedup_semantic", dedupSemantic, dedupSemanticSql),
+    Entry("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    Entry("ann_cosine_topk", annCosineTopk, annCosineTopkSql),
+    Entry("ann_filtered", annFiltered, annFilteredSql),
+    Entry("ann_ivf_filtered", annIvfFiltered, annIvfFilteredSql),
+    Entry("ann_sq8", annSq8, annSq8Sql),
+    Entry("ann_pq", annPq, annPqSql),
+    Entry("ann_hamming_rerank", annHammingRerank, annHammingRerankSql),
+    Entry("ann_pq_rerank", annPqRerank, annPqRerankSql),
+    Entry("ann_ivf", annIvf, annIvfSql),
+    Entry("ann_ivf_kmeans", annIvfKmeans, annIvfKmeansSql),
+    Entry("ann_ivf_pq", annIvfPq, annIvfPqSql),
+    Entry("ann_ivf_pq_residual", annIvfPqResidual, annIvfPqResidualSql),
+    Entry("embed_neardup", embedNeardup, embedNeardupSql),
+    Entry("ann_lsh", annLsh, annLshSql),
+    Entry("text_langid", textLangid, textLangidSql),
+    Entry("text_quality", textQuality, textQualitySql),
+    Entry("text_quality_trained", textQualityTrained, textQualityTrainedSql),
+    Entry("text_tokens", textTokens, textTokensSql),
+    Entry("text_vocab", textVocab, textVocabSql),
+    Entry("text_approx_vocab", textApproxVocab, textApproxVocabSql),
+    Entry("text_normalize", textNormalize, textNormalizeSql),
+    Entry("text_bigram_coverage", textBigramCoverage, textBigramCoverageSql),
+    Entry("sample_split", sampleSplit, sampleSplitSql),
+    Entry("sample_split_grouped", sampleSplitGrouped, sampleSplitGroupedSql),
+    Entry("text_fingerprint", textFingerprint, textFingerprintSql),
+    Entry("text_repetition", textRepetition, textRepetitionSql),
+    Entry("text_tfidf", textTfidf, textTfidfSql),
+    Entry("text_chunks", textChunks, textChunksSql),
+    Entry("text_chunk_dedup", textChunkDedup, textChunkDedupSql),
+    Entry("text_substring_dedup", textSubstringDedup, textSubstringDedupSql),
+    Entry("text_cut_dup_spans", textCutDupSpans, textCutDupSpansSql),
+    Entry("text_filter_pipeline", textFilterPipeline, textFilterPipelineSql),
+    Entry("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    Entry("corpus_diff", corpusDiff, corpusDiffSql),
+    Entry("text_contamination", textContamination, textContaminationSql),
+    Entry("sample_mixture", sampleMixture, sampleMixtureSql),
+    Entry("sample_weighted", sampleWeighted, sampleWeightedSql),
+    Entry("sample_importance", sampleImportance, sampleImportanceSql),
+    Entry("text_bpe", textBpe, textBpeSql),
+    Entry("text_wordpiece", textWordpiece, textWordpieceSql),
+    Entry("text_wordpiece_encode", textWordpieceEncode, textWordpieceEncodeSql),
+    Entry("text_wordpiece_apply", textWordpieceApply, textWordpieceApplySql),
+    Entry("text_wordpiece_corpus", textWordpieceCorpus, textWordpieceCorpusSql),
+    Entry("text_unigram", textUnigram, textUnigramSql),
+    Entry("text_unigram_prune", textUnigramPrune, textUnigramPruneSql),
+    Entry("text_unigram_encode", textUnigramEncode, textUnigramEncodeSql),
+    Entry("text_unigram_corpus", textUnigramCorpus, textUnigramCorpusSql),
+    Entry("text_unigram_fertility", textUnigramFertility,
+      textUnigramFertilitySql),
+    Entry("text_bpe_batch32", textBpeBatch32, textBpeBatch32Sql),
+    Entry("text_bpe_encode", textBpeEncode, textBpeEncodeSql),
+    Entry("text_bpe_fertility", textBpeFertility, textBpeFertilitySql),
+    Entry("multimodal_decode", multimodalDecode, multimodalDecodeSql),
+    Entry("multimodal_resize", multimodalResize, multimodalResizeSql),
+    Entry("multimodal_imageio", multimodalImageio, multimodalImageioSql),
+    Entry("multimodal_wav", multimodalWav, multimodalWavSql),
+    Entry("multimodal_mp4", multimodalMp4, multimodalMp4Sql),
+    Entry("multimodal_webp", multimodalWebp, multimodalWebpSql),
+    Entry("multimodal_gif", multimodalGif, multimodalGifSql),
+    Entry("multimodal_vp8l", multimodalVp8l, multimodalVp8lSql),
+    Entry("multimodal_vp8", multimodalVp8, multimodalVp8Sql),
+    Entry("multimodal_vp8_filtered", multimodalVp8Filtered,
+      multimodalVp8FilteredSql),
+    Entry("multimodal_h264", multimodalH264, multimodalH264Sql),
+    Entry("multimodal_h264_filtered", multimodalH264Filtered,
+      multimodalH264FilteredSql),
+    Entry("multimodal_adts", multimodalAdts, multimodalAdtsSql),
+    Entry("multimodal_h264_mp4", multimodalH264Mp4, multimodalH264Mp4Sql),
+    Entry("multimodal_h264_cabac", multimodalH264Cabac, multimodalH264CabacSql),
+    Entry("multimodal_aac_spectral", multimodalAacSpectral,
+      multimodalAacSpectralSql),
+    Entry("multimodal_image_dedup", multimodalImageDedup,
+      multimodalImageDedupSql),
+    Entry("multimodal_image_neardup", multimodalImageNearDup,
+      multimodalImageNearDupSql),
+    Entry("multimodal_audio_dedup", multimodalAudioDedup,
+      multimodalAudioDedupSql),
+    Entry("multimodal_g711", multimodalG711, multimodalG711Sql),
+    Entry("multimodal_adpcm", multimodalAdpcm, multimodalAdpcmSql),
+    Entry("multimodal_exif", multimodalExif, multimodalExifSql),
+    Entry("multimodal_mjpeg", multimodalMjpeg, multimodalMjpegSql),
+    Entry("multimodal_flac", multimodalFlac, multimodalFlacSql),
+    Entry("multimodal_video_dedup", multimodalVideoDedup,
+      multimodalVideoDedupSql),
+    Entry("text_bigram_lm", textBigramLm, textBigramLmSql),
+    Entry("text_lm_score", textLmScore, textLmScoreSql),
+    Entry("ann_knn_graph", annKnnGraph, annKnnGraphSql),
+    Entry("sample_shuffle", sampleShuffle, sampleShuffleSql),
+    Entry("sample_shards", sampleShards, sampleShardsSql),
+    Entry("text_ngram_overlap", textNgramOverlap, textNgramOverlapSql),
+    Entry("text_domain_stats", textDomainStats, textDomainStatsSql),
+    Entry("text_winnowing", textWinnowing, textWinnowingSql),
+    Entry("dedup_winnowing", dedupWinnowing, dedupWinnowingSql),
+    Entry("sample_curriculum", sampleCurriculum, sampleCurriculumSql)
   )
 }

@@ -381,17 +381,11 @@ object Profile {
       |  WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = g.k))
       |ORDER BY fk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "profile_table" -> (profileTable _),
-    "profile_table_events" -> (profileTableEvents _),
-    "profile_checks" -> (profileChecks _),
-    "profile_drift" -> (profileDrift _),
-    "profile_fk_orphans" -> (profileFkOrphans _))
-
-  val oracle: Map[String, String] = Map(
-    "profile_table" -> profileTableSql,
-    "profile_table_events" -> profileTableEventsSql,
-    "profile_checks" -> profileChecksSql,
-    "profile_drift" -> profileDriftSql,
-    "profile_fk_orphans" -> profileFkOrphansSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("profile_table", profileTable, profileTableSql),
+    Entry("profile_table_events", profileTableEvents, profileTableEventsSql),
+    Entry("profile_checks", profileChecks, profileChecksSql),
+    Entry("profile_drift", profileDrift, profileDriftSql),
+    Entry("profile_fk_orphans", profileFkOrphans, profileFkOrphansSql)
+  )
 }

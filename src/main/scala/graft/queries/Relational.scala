@@ -1207,87 +1207,45 @@ object Relational extends Serializable {
        |WHERE rank <= 20 ORDER BY rank""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pagerank" -> (qPagerank _),
-    "q_pagerank_full" -> (qPagerankFull _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_merge_cow" -> (qMergeCow _),
-    "q_resample" -> (qResample _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_window_range" -> (qWindowRange _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_funnel" -> (qFunnel _),
-    "q_scd2" -> (qScd2 _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_lag_lead" -> (qLagLead _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_window_sliding" -> (qWindowSliding _),
-    "q_pivot" -> (qPivot _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_stats_agg" -> (qStatsAgg _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_bloom_join_sharded" -> (qBloomJoinSharded _),
-    "q1_agg" -> (q1Agg _),
-    "q3_join_topk" -> (q3JoinTopk _),
-    "q5_star_broadcast" -> (q5StarBroadcast _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_window_ntile" -> (qWindowNtile _),
-    "q_topk" -> (qTopk _),
-    "q_set_except" -> (qSetExcept _),
-    "q_set_intersect" -> (qSetIntersect _),
-    "q_union_all" -> (qUnionAll _),
-    "q_distinct" -> (qDistinct _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_window_tumbling" -> (qWindowTumbling _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_pagerank" -> qPagerankSql,
-    "q_pagerank_full" -> qPagerankFullSql,
-    "q_merge_upsert" -> qMergeUpsertSql,
-    "q_merge_cow" -> qMergeCowSql,
-    "q_resample" -> qResampleSql,
-    "q_outer_join" -> qOuterJoinSql,
-    "q_window_range" -> qWindowRangeSql,
-    "q_json_extract" -> qJsonExtractSql,
-    "q_funnel" -> qFunnelSql,
-    "q_scd2" -> qScd2Sql,
-    "q_bucketed_join" -> qBucketedJoinSql,
-    "q_lag_lead" -> qLagLeadSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_window_sliding" -> qWindowSlidingSql,
-    "q_pivot" -> qPivotSql,
-    "q_percentiles" -> qPercentilesSql,
-    "q_session_window" -> qSessionWindowSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_stats_agg" -> qStatsAggSql,
-    "q_salted_join" -> qSaltedJoinSql,
-    "q_bloom_join" -> qBloomJoinSql,
-    "q_bloom_join_sharded" -> qBloomJoinSql,
-    "q1_agg" -> q1AggSql,
-    "q3_join_topk" -> q3JoinTopkSql,
-    "q5_star_broadcast" -> q5StarBroadcastSql,
-    "q_semi_join" -> qSemiJoinSql,
-    "q_anti_join" -> qAntiJoinSql,
-    "q_window_rank" -> qWindowRankSql,
-    "q_window_ntile" -> qWindowNtileSql,
-    "q_topk" -> qTopkSql,
-    "q_set_except" -> qSetExceptSql,
-    "q_set_intersect" -> qSetIntersectSql,
-    "q_union_all" -> qUnionAllSql,
-    "q_distinct" -> qDistinctSql,
-    "q_rollup" -> qRollupSql,
-    "q_cube" -> qCubeSql,
-    "q_asof_join" -> qAsofJoinSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_window_tumbling" -> qWindowTumblingSql
+  val entries: Seq[Entry] = Seq(
+    Entry("q_pagerank", qPagerank, qPagerankSql),
+    Entry("q_pagerank_full", qPagerankFull, qPagerankFullSql),
+    Entry("q_merge_upsert", qMergeUpsert, qMergeUpsertSql),
+    Entry("q_merge_cow", qMergeCow, qMergeCowSql),
+    Entry("q_resample", qResample, qResampleSql),
+    Entry("q_outer_join", qOuterJoin, qOuterJoinSql),
+    Entry("q_window_range", qWindowRange, qWindowRangeSql),
+    Entry("q_json_extract", qJsonExtract, qJsonExtractSql),
+    Entry("q_funnel", qFunnel, qFunnelSql),
+    Entry("q_scd2", qScd2, qScd2Sql),
+    Entry("q_bucketed_join", qBucketedJoin, qBucketedJoinSql),
+    Entry("q_lag_lead", qLagLead, qLagLeadSql),
+    Entry("q_unpivot", qUnpivot, qUnpivotSql),
+    Entry("q_window_sliding", qWindowSliding, qWindowSlidingSql),
+    Entry("q_pivot", qPivot, qPivotSql),
+    Entry("q_percentiles", qPercentiles, qPercentilesSql),
+    Entry("q_session_window", qSessionWindow, qSessionWindowSql),
+    Entry("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Entry("q_stats_agg", qStatsAgg, qStatsAggSql),
+    Entry("q_salted_join", qSaltedJoin, qSaltedJoinSql),
+    Entry("q_bloom_join", qBloomJoin, qBloomJoinSql),
+    Entry("q_bloom_join_sharded", qBloomJoinSharded, qBloomJoinSql),
+    Entry("q1_agg", q1Agg, q1AggSql),
+    Entry("q3_join_topk", q3JoinTopk, q3JoinTopkSql),
+    Entry("q5_star_broadcast", q5StarBroadcast, q5StarBroadcastSql),
+    Entry("q_semi_join", qSemiJoin, qSemiJoinSql),
+    Entry("q_anti_join", qAntiJoin, qAntiJoinSql),
+    Entry("q_window_rank", qWindowRank, qWindowRankSql),
+    Entry("q_window_ntile", qWindowNtile, qWindowNtileSql),
+    Entry("q_topk", qTopk, qTopkSql),
+    Entry("q_set_except", qSetExcept, qSetExceptSql),
+    Entry("q_set_intersect", qSetIntersect, qSetIntersectSql),
+    Entry("q_union_all", qUnionAll, qUnionAllSql),
+    Entry("q_distinct", qDistinct, qDistinctSql),
+    Entry("q_rollup", qRollup, qRollupSql),
+    Entry("q_cube", qCube, qCubeSql),
+    Entry("q_asof_join", qAsofJoin, qAsofJoinSql),
+    Entry("q_range_join", qRangeJoin, qRangeJoinSql),
+    Entry("q_window_tumbling", qWindowTumbling, qWindowTumblingSql)
   )
 }

@@ -218,25 +218,14 @@ object Scalars extends Serializable {
       |       ELSE 'ops' END AS match_union
       |FROM events ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_arith" -> (sArith _),
-    "s_pow_minmax" -> (sPowMinmax _),
-    "s_bitwise_logic" -> (sBitwiseLogic _),
-    "s_compare" -> (sCompare _),
-    "s_coerce" -> (sCoerce _),
-    "s_coerce_f32" -> (sCoerceF32 _),
-    "s_strings" -> (sStrings _),
-    "s_cond_match" -> (sCondMatch _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s_arith" -> sArithSql,
-    "s_pow_minmax" -> sPowMinmaxSql,
-    "s_bitwise_logic" -> sBitwiseLogicSql,
-    "s_compare" -> sCompareSql,
-    "s_coerce" -> sCoerceSql,
-    "s_coerce_f32" -> sCoerceF32Sql,
-    "s_strings" -> sStringsSql,
-    "s_cond_match" -> sCondMatchSql
+  val entries: Seq[Entry] = Seq(
+    Entry("s_arith", sArith, sArithSql),
+    Entry("s_pow_minmax", sPowMinmax, sPowMinmaxSql),
+    Entry("s_bitwise_logic", sBitwiseLogic, sBitwiseLogicSql),
+    Entry("s_compare", sCompare, sCompareSql),
+    Entry("s_coerce", sCoerce, sCoerceSql),
+    Entry("s_coerce_f32", sCoerceF32, sCoerceF32Sql),
+    Entry("s_strings", sStrings, sStringsSql),
+    Entry("s_cond_match", sCondMatch, sCondMatchSql)
   )
 }

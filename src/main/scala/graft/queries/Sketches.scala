@@ -577,23 +577,14 @@ object Sketches {
 
   // ------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_hist_build" -> (histBuild _),
-    "sketch_hist_serve" -> (histServe _),
-    "sketch_quantiles" -> (quantiles _),
-    "sketch_hll_shingles" -> (hllShingles _),
-    "sketch_hll_cube_build" -> (hllCubeBuild _),
-    "sketch_hll_cube_serve" -> (hllCubeServe _),
-    "sketch_cms_topk" -> (cmsTopk _),
-    "sketch_kmv_intersect" -> (kmvIntersect _))
-
-  val oracle: Map[String, String] = Map(
-    "sketch_hist_build" -> histBuildSql,
-    "sketch_hist_serve" -> histServeSql,
-    "sketch_quantiles" -> quantilesSql,
-    "sketch_hll_shingles" -> hllShinglesSql,
-    "sketch_hll_cube_build" -> hllCubeBuildSql,
-    "sketch_hll_cube_serve" -> hllCubeServeSql,
-    "sketch_cms_topk" -> cmsTopkSql,
-    "sketch_kmv_intersect" -> kmvIntersectSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("sketch_hist_build", histBuild, histBuildSql),
+    Entry("sketch_hist_serve", histServe, histServeSql),
+    Entry("sketch_quantiles", quantiles, quantilesSql),
+    Entry("sketch_hll_shingles", hllShingles, hllShinglesSql),
+    Entry("sketch_hll_cube_build", hllCubeBuild, hllCubeBuildSql),
+    Entry("sketch_hll_cube_serve", hllCubeServe, hllCubeServeSql),
+    Entry("sketch_cms_topk", cmsTopk, cmsTopkSql),
+    Entry("sketch_kmv_intersect", kmvIntersect, kmvIntersectSql)
+  )
 }

@@ -1138,61 +1138,34 @@ object UdLang extends Serializable {
       |  FROM events WHERE event_type <> 'click'
       |) ORDER BY event_id, seq""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "u_suppose" -> (uSuppose _),
-    "u_stream_enrich" -> (uStreamEnrich _),
-    "u_stream_state" -> (uStreamState _),
-    "u_stream_dedup" -> (uStreamDedup _),
-    "u_stream_html" -> (uStreamHtml _),
-    "u_stream_crawl_gate" -> (uStreamCrawlGate _),
-    "u_stream_neardup" -> (uStreamNeardup _),
-    "u_stream_contamination" -> (uStreamContamination _),
-    "u_stream_shards" -> (uStreamShards _),
-    "u_stream_quantiles" -> (uStreamQuantiles _),
-    "u_stream_hll" -> (uStreamHll _),
-    "u_effect_dlq" -> (uEffectDlq _),
-    "u_stream_join" -> (uStreamJoin _),
-    "u_union_ingest" -> (uUnionIngest _),
-    "u_stream_pipe" -> (uStreamPipe _),
-    "u_stream_session" -> (uStreamSession _),
-    "u_stream_window" -> (uStreamWindow _),
-    "u_debug_trace" -> (uDebugTrace _),
-    "u_stream_filter" -> (uStreamFilter _),
-    "u_stream_count" -> (uStreamCount _),
-    "u_union_match" -> (uUnionMatch _),
-    "u_html_render" -> (uHtmlRender _),
-    "u_hello" -> (uHello _),
-    "u_filter_match" -> (uFilterMatch _),
-    "u_fact" -> (uFact _),
-    "u_count" -> (uCount _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "u_suppose" -> uSupposeSql,
-    "u_stream_enrich" -> uStreamEnrichSql,
-    "u_stream_state" -> uStreamStateSql,
-    "u_stream_dedup" -> uStreamDedupSql,
-    "u_stream_html" -> graft.queries.LlmPipeline.textHtmlExtractSql,
-    "u_stream_crawl_gate" -> uStreamCrawlGateSql,
-    "u_stream_neardup" -> uStreamNeardupSql,
-    "u_stream_contamination" -> uStreamContaminationSql,
-    "u_stream_shards" -> uStreamShardsSql,
-    "u_stream_quantiles" -> uStreamQuantilesSql,
-    "u_stream_hll" -> uStreamHllSql,
-    "u_effect_dlq" -> uEffectDlqSql,
-    "u_stream_join" -> uStreamJoinSql,
-    "u_union_ingest" -> uUnionIngestSql,
-    "u_stream_pipe" -> uStreamPipeSql,
-    "u_stream_session" -> uStreamSessionSql,
-    "u_stream_window" -> uStreamWindowSql,
-    "u_debug_trace" -> uDebugTraceSql,
-    "u_stream_filter" -> uStreamFilterSql,
-    "u_stream_count" -> uStreamCountSql,
-    "u_union_match" -> uUnionMatchSql,
-    "u_html_render" -> uHtmlRenderSql,
-    "u_hello" -> uHelloSql,
-    "u_filter_match" -> uFilterMatchSql,
-    "u_fact" -> uFactSql,
-    "u_count" -> uCountSql
+  val entries: Seq[Entry] = Seq(
+    Entry("u_suppose", uSuppose, uSupposeSql),
+    Entry("u_stream_enrich", uStreamEnrich, uStreamEnrichSql),
+    Entry("u_stream_state", uStreamState, uStreamStateSql),
+    Entry("u_stream_dedup", uStreamDedup, uStreamDedupSql),
+    Entry("u_stream_html", uStreamHtml,
+      graft.queries.LlmPipeline.textHtmlExtractSql),
+    Entry("u_stream_crawl_gate", uStreamCrawlGate, uStreamCrawlGateSql),
+    Entry("u_stream_neardup", uStreamNeardup, uStreamNeardupSql),
+    Entry("u_stream_contamination", uStreamContamination,
+      uStreamContaminationSql),
+    Entry("u_stream_shards", uStreamShards, uStreamShardsSql),
+    Entry("u_stream_quantiles", uStreamQuantiles, uStreamQuantilesSql),
+    Entry("u_stream_hll", uStreamHll, uStreamHllSql),
+    Entry("u_effect_dlq", uEffectDlq, uEffectDlqSql),
+    Entry("u_stream_join", uStreamJoin, uStreamJoinSql),
+    Entry("u_union_ingest", uUnionIngest, uUnionIngestSql),
+    Entry("u_stream_pipe", uStreamPipe, uStreamPipeSql),
+    Entry("u_stream_session", uStreamSession, uStreamSessionSql),
+    Entry("u_stream_window", uStreamWindow, uStreamWindowSql),
+    Entry("u_debug_trace", uDebugTrace, uDebugTraceSql),
+    Entry("u_stream_filter", uStreamFilter, uStreamFilterSql),
+    Entry("u_stream_count", uStreamCount, uStreamCountSql),
+    Entry("u_union_match", uUnionMatch, uUnionMatchSql),
+    Entry("u_html_render", uHtmlRender, uHtmlRenderSql),
+    Entry("u_hello", uHello, uHelloSql),
+    Entry("u_filter_match", uFilterMatch, uFilterMatchSql),
+    Entry("u_fact", uFact, uFactSql),
+    Entry("u_count", uCount, uCountSql)
   )
 }

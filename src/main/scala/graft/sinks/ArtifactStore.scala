@@ -103,7 +103,8 @@ object ArtifactStore {
     val f = fs(s)
     val tmp = new Path(root,
       s".tmp_${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    try df.write.mode("overwrite").parquet(tmp.toString)
+    catch { case t: Throwable => f.delete(tmp, true); throw t }
     val dst = path(name)
     if (f.exists(dst) || !f.rename(tmp, dst)) f.delete(tmp, true)
     else {
@@ -123,25 +124,37 @@ object ArtifactStore {
     * sites' idempotent-commit pattern), each commit keeps the
     * temp-dir + single-rename protocol, and the store's concurrent-
     * committer race rules already cover same-key races, so concurrency
-    * adds no new failure mode. Failures propagate after the pool
-    * drains. */
+    * adds no new failure mode. On the first failure the commits not yet
+    * started are cancelled, the running ones finish (a failed commit
+    * removes its temp dir), and the original exception is rethrown:
+    * no commit is still running when this returns. */
   def commitAll(pairs: Seq[(DataFrame, String)]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException,
+      ExecutorCompletionService, Executors, TimeUnit}
     val todo = pairs.filter { case (df, k) => !exists(df.sparkSession, k) }
     if (todo.size <= 1)
       todo.foreach { case (df, k) => commit(df, k) }
     else {
       // 3-4 jobs in flight is plenty (guide §2.6): enough to fill the
       // driver gaps and task tails, not enough to fight for slots
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, todo.size))
+      val pool = Executors.newFixedThreadPool(math.min(4, todo.size))
+      val done = new ExecutorCompletionService[Unit](pool)
       try {
         val futs = todo.map { case (df, k) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
+          done.submit(new Callable[Unit] {
             override def call(): Unit = commit(df, k)
           })
         }
-        futs.foreach(_.get())
-      } finally pool.shutdown()
+        try futs.foreach(_ => done.take().get())
+        catch {
+          case e: ExecutionException =>
+            futs.foreach(_.cancel(false))
+            throw e.getCause
+        }
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     }
   }
 

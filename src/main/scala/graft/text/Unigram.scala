@@ -160,17 +160,6 @@ object Unigram {
 
   /** Train `rounds` Viterbi-EM rounds. Returns (final model, word-freq
     * table). */
-  // stage-level accessors for the trainer-depth probe (graft.TrainProbe)
-  // — same code paths train() composes, exposed so the probe can time
-  // and bound each stage separately
-  private[graft] def wordFreqProbe(tokens: DataFrame, maxWordLen: Int)
-      : DataFrame = wordFreq(tokens, maxWordLen)
-  private[graft] def seedModelProbe(wf: DataFrame, seedMax: Int,
-      maxPieceLen: Int): Model = seedModel(wf, seedMax, maxPieceLen)
-  private[graft] def emRoundProbe(s: SparkSession, wf: DataFrame,
-      model: Model, maxPieceLen: Int): Model =
-    emRound(s, wf, model, maxPieceLen)
-
   private[graft] def train(s: SparkSession, tokens: DataFrame,
                            seedMax: Int = 128, maxPieceLen: Int = 6,
                            maxWordLen: Int = 16, rounds: Int = 2)

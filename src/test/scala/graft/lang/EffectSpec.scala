@@ -31,6 +31,23 @@ class EffectSpec extends SparkSpec {
       bad(0).getString(bad(0).fieldIndex("_error")) == "boom:bad")
   }
 
+  test("runEither evaluates each record once when both legs are consumed") {
+    // the CLI's --mode dlq and u_effect_dlq read both legs; a `!` trace
+    // shows every evaluation of a record, so a re-run would print twice
+    val c = UdScript.compile(throwingSrc.replace("out {", "! in.id;\nout {"))
+    val df = Seq((1L, "x"), (2L, "bad"), (3L, "y")).toDF("id", "tag")
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try {
+      val (good, dlq) = c.runEither(df)
+      assert(good.collect().length == 2 && dlq.collect().length == 1)
+    } finally System.setErr(stderr)
+    val traces = captured.toString.linesIterator
+      .filter(_.startsWith("[ud-debug]")).toSeq.sorted
+    assert(traces == Seq("[ud-debug] 1", "[ud-debug] 2", "[ud-debug] 3"))
+  }
+
   test("throw payload must fit the declared effect type") {
     val src = """script "bad effects";
       |input  {id: Int};

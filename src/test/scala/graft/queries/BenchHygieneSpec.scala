@@ -38,9 +38,9 @@ class BenchHygieneSpec extends SparkSpec {
   }
 
   test("pair-graph-backed dedup is stable across clearCache") {
-    val a = LlmPipeline.queries("dedup_canonical")(spark, sf).collect()
+    val a = graft.SparkEntry.queries("dedup_canonical")(spark, sf).collect()
     spark.catalog.clearCache()
-    val b = LlmPipeline.queries("dedup_canonical")(spark, sf).collect()
+    val b = graft.SparkEntry.queries("dedup_canonical")(spark, sf).collect()
     assert(a.toSeq === b.toSeq)
   }
 }

@@ -27,6 +27,12 @@ class CorpusIncrSpec extends SparkSpec {
     df.select(col("doc_id"), col("norm_text")).as[(Long, String)]
   }
 
+  /** A report as a sorted multiset: chainReport has no ORDER BY (its
+    * shard rows come from a groupBy), and the oracle gate compares
+    * multisets too. */
+  private def report(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   test("incremental report equals the frozen-stop full rebuild " +
     "(independent global-mining reference)") {
     import spark.implicits._
@@ -64,7 +70,7 @@ class CorpusIncrSpec extends SparkSpec {
     val s = spark
     val keys = CorpusBuild.incrStageNames(s, sf)
     keys.foreach(ArtifactStore.remove(s, _)) // force a clean base build
-    val first = CorpusBuild.corpusBuildIncr(s, sf).collect().toSeq
+    val first = report(CorpusBuild.corpusBuildIncr(s, sf))
     assert(keys.forall(ArtifactStore.exists(s, _)),
       "first run must commit every base stage")
     // compare the recursive PART-FILE listing, not directory mtimes: a
@@ -73,7 +79,7 @@ class CorpusIncrSpec extends SparkSpec {
     // Spark job (round-14 ADVICE)
     def parts = keys.map(k => SparkSpec.partListing(s, k))
     val before = parts
-    val second = CorpusBuild.corpusBuildIncr(s, sf).collect().toSeq
+    val second = report(CorpusBuild.corpusBuildIncr(s, sf))
     assert(second == first, "served rerun must reproduce the report")
     assert(parts == before,
       "rerun re-committed a base stage — the delta path rebuilt base work")
@@ -129,12 +135,12 @@ class CorpusIncrSpec extends SparkSpec {
       .map(k => SparkSpec.partListing(s, k))
     val afterAppend1 = parts
     // the append-2 event: the full entry over the twice-appended corpus
-    val first = CorpusBuild.corpusBuildIncr2(s, sf).collect().toSeq
+    val first = report(CorpusBuild.corpusBuildIncr2(s, sf))
     assert(parts == afterAppend1,
       "append-2 re-committed base or segment-1 work — the stack rebuilt " +
         "instead of serving")
     // and a rerun serves the whole stack
-    val second = CorpusBuild.corpusBuildIncr2(s, sf).collect().toSeq
+    val second = report(CorpusBuild.corpusBuildIncr2(s, sf))
     assert(second == first, "served rerun must reproduce the report")
     assert(parts == afterAppend1, "rerun re-committed stack work")
   }
@@ -148,8 +154,8 @@ class CorpusIncrSpec extends SparkSpec {
       CorpusBuild.incr2Delta1Keys(s, sf)
     val compKeys = CorpusBuild.incr2CompactKeys(s, sf)
     compKeys.foreach(ArtifactStore.remove(s, _))
-    val stacked = CorpusBuild.corpusBuildIncr2(s, sf).collect().toSeq
-    val first = CorpusBuild.corpusBuildCompact(s, sf).collect().toSeq
+    val stacked = report(CorpusBuild.corpusBuildIncr2(s, sf))
+    val first = report(CorpusBuild.corpusBuildCompact(s, sf))
     assert(first == stacked,
       "compacted world must land exactly where the stacked one does")
     assert(compKeys.forall(ArtifactStore.exists(s, _)),
@@ -159,7 +165,7 @@ class CorpusIncrSpec extends SparkSpec {
     // stages, not the segment, not even the original stop artifact
     // (the frozen set travels with the fold)
     preKeys.foreach(ArtifactStore.remove(s, _))
-    val second = CorpusBuild.corpusBuildCompact(s, sf).collect().toSeq
+    val second = report(CorpusBuild.corpusBuildCompact(s, sf))
     assert(second == first, "post-compaction serve must reproduce")
     assert(preKeys.forall(k => !ArtifactStore.exists(s, k)),
       "post-compaction append rebuilt a pre-compaction artifact — the " +

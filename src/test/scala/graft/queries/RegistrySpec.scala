@@ -3,29 +3,15 @@ package graft.queries
 import graft.SparkEntry
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry invariants the driver contract depends on — pinned so a new
-  * entry cannot silently ship half-wired. */
+/** Registry invariants that Verify, Bench and DumpOracle rely on. Every entry
+  * carries its oracle by construction (`Entry.oracleSql` is required). */
 class RegistrySpec extends AnyFunSuite {
 
-  /** Entries DELIBERATELY without a DuckDB oracle (the driver records a
-    * weaker rows-only check). Every such exception carries its reason
-    * here; anything else missing an oracle fails the suite. */
-  private val rowsOnlyAllowed: Map[String, String] = Map.empty
-  // (round 12: idx_lsh_build gained a real oracle via md5-derived band
-  // keys — the last exception is gone; keep the mechanism for future
-  // genuinely non-SQL-expressible entries.)
-
-  test("every query either carries an oracle or is a documented " +
-    "rows-only exception") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    val missing = q -- o -- rowsOnlyAllowed.keySet
-    assert(missing.isEmpty,
-      s"entries without oracle or documented exception: $missing")
-    val stale = rowsOnlyAllowed.keySet -- q
-    assert(stale.isEmpty, s"stale rows-only exceptions: $stale")
-    val orphaned = o -- q
-    assert(orphaned.isEmpty, s"oracles without a query entry: $orphaned")
+  test("entry names are unique across packs and number exactly 247") {
+    val names = SparkEntry.entries.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"entry names declared twice: $dups")
+    assert(names.size == 247)
   }
 
   test("baselineOnly names exist and stay the deliberate exactness " +

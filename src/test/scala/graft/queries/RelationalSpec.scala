@@ -4,10 +4,10 @@ import graft.SparkSpec
 
 class RelationalSpec extends SparkSpec {
   test("every relational query runs at sf0.001 and is deterministic") {
-    Relational.queries.foreach { case (name, fn) =>
-      val a = fn(spark, sf).collect()
-      val b = fn(spark, sf).collect()
-      assert(a.sameElements(b), s"$name not deterministic")
+    Relational.entries.foreach { e =>
+      val a = e.build(spark, sf).collect()
+      val b = e.build(spark, sf).collect()
+      assert(a.sameElements(b), s"${e.name} not deterministic")
     }
   }
 

@@ -141,14 +141,14 @@ class ShardContractSpec extends SparkSpec {
   }
 
   test("epoch-shuffle order composes per shard") {
-    val shuffled = LlmPipeline.queries("sample_shuffle")(spark, sf)
+    val shuffled = graft.SparkEntry.queries("sample_shuffle")(spark, sf)
       .where(col("epoch") === 1).orderBy("pos")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     val shardDocs = spark.read.parquet(outDir).where(col("shard") === 3)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // the loader's view: pruned read of shard 3, then epoch order applied
     // within it — must equal the global epoch order restricted to shard 3
-    val withinShard = LlmPipeline.queries("sample_shuffle")(spark, sf)
+    val withinShard = graft.SparkEntry.queries("sample_shuffle")(spark, sf)
       .where(col("epoch") === 1)
       .join(spark.read.parquet(outDir).where(col("shard") === 3)
         .select("doc_id"), Seq("doc_id"))
