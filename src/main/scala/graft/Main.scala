@@ -1,24 +1,32 @@
 package graft
 
-import java.io.{InputStream, OutputStream, PrintStream}
+import java.io.{InputStream, PrintStream}
 
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+
+import graft.kernel.UdException
 import graft.lang.Ast._
-import graft.lang.{UdParser, UdScript}
+import graft.lang.{Interp, UdParser, UdScript}
 import graft.sources.{JsonRecords, Msgpack, ValidatedIngest}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.{SparkException, SparkThrowable}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types._
 
 /** The command-line driver — the reference's front door
-  * (/root/reference/src/main.rs:51-62: `--dump-expr`, `--dump-ast path`,
-  * `--compile path`, bare `path` = run with records on stdin), re-expressed
-  * over the Spark engine.
+  * (reference src/main.rs:51-62: `--dump-expr`, `--dump-ast path`,
+  * `--compile path`, bare `path` = run with records on stdin).
   *
   * `run` is the unix-filter deployment shape (HACKING.md:136-140): records
-  * in on stdin, records out on stdout, JSON-lines or msgpack framing. The
-  * stdin/stdout legs are driver-serialized BY DESIGN (a pipe is one
-  * stream); `--in`/`--out` paths keep full executor parallelism and are
-  * the form a cluster job uses.
+  * in on stdin, records out on stdout, JSON-lines or msgpack framing. A
+  * pipe is one stream, so with neither `--in` nor `--out` the script runs
+  * in this thread with no SparkSession: each record is decoded (the same
+  * row, presence flags and invalid reasons as the Spark sources), run
+  * through `Interp` whatever its lowering tier, and rendered as `to_json`
+  * would, in constant memory. `--in`/`--out` paths are the parallel file
+  * legs a cluster job uses: they plan the script on Spark, and `--cores`
+  * applies to them only.
   *
   * Usage:
   *   graft.Main --dump-expr                     REPL: parse one expression per line
@@ -32,31 +40,42 @@ import org.apache.spark.sql.types.StructType
   *   --mode abort|skip|dlq   invalid-record handling (default abort;
   *                           dlq routes bad records to stderr)
   *   --libdir DIR            module resolution directory (repeatable)
-  *   --cores N               local parallelism (default 4)
+  *   --cores N               local parallelism of --in/--out runs (default 4)
+  *
+  * Exit codes: 0 ok, 1 runtime error (an invalid record in abort mode or
+  * a script's `throw` outside dlq mode), 2 usage error, 3 compile error.
   */
 object Main {
 
   final case class CliError(msg: String) extends RuntimeException(msg)
 
+  /** A record stopped the run: its invalid reason in abort mode, or the
+    * message of the script's `throw`. */
+  final case class RunError(reason: String) extends RuntimeException(reason)
+
   def main(args: Array[String]): Unit = {
-    val code =
-      try execute(args.toList, System.in, System.out, System.err, None)
-      catch {
-        case e: CliError => System.err.println(s"error: ${e.msg}"); 2
-        case e: UdScript.CompileError =>
-          System.err.println(s"compile error: ${e.getMessage}"); 3
-        case e: org.apache.spark.SparkException =>
-          // abort-mode validation failures and kernel runtime errors
-          // (main.rs `.expect("runtime error")` panics; we exit cleanly)
-          System.err.println(s"runtime error: ${e.getMessage}"); 1
-      }
+    val code = exitCode(args.toList, System.in, System.out, System.err, None)
     if (code != 0) sys.exit(code)
   }
 
-  /** Testable core: explicit streams, optional externally-owned session.
-    * When `session` is None a local session is created (and NOT stopped:
-    * the JVM exits right after, and getOrCreate may have returned a
-    * shared session we don't own). */
+  /** `execute` with every failure mapped to its one stderr line and exit
+    * code — what `main` runs. */
+  def exitCode(args: List[String], in: InputStream, out: PrintStream,
+               err: PrintStream, session: Option[SparkSession]): Int =
+    try execute(args, in, out, err, session)
+    catch {
+      case e: CliError => err.println(s"error: ${e.msg}"); 2
+      case e: UdScript.CompileError =>
+        err.println(s"compile error: ${e.getMessage}"); 3
+      case e: RunError => err.println(s"runtime error: ${e.reason}"); 1
+      case e: SparkException => err.println(s"runtime error: ${e.getMessage}"); 1
+    }
+
+  /** Testable core: explicit streams, optional externally-owned session
+    * (used by `--compile` and the `--in`/`--out` legs only). When
+    * `session` is None and one is needed, a local session is created (and
+    * NOT stopped: the JVM exits right after, and getOrCreate may have
+    * returned a shared session we don't own). */
   def execute(args: List[String], in: InputStream, out: PrintStream,
               err: PrintStream, session: Option[SparkSession]): Int =
     args match {
@@ -87,7 +106,12 @@ object Main {
       case rest =>
         val (opts, pos) = parseOpts(rest)
         pos match {
-          case script :: Nil => run(script, opts, in, out, err, session); 0
+          case script :: Nil =>
+            val c = compileFile(script, opts.libDirs)
+            if (opts.inPath.isEmpty && opts.outPath.isEmpty)
+              runLocal(c, opts, in, out, err)
+            else runSpark(c, opts, in, out, err, session)
+            0
           case _ => err.println(usage); 2
         }
     }
@@ -211,49 +235,14 @@ object Main {
     if (!asText && !opts.contains("--json"))
       throw CliError("lower supports --json | --text")
     val buf = java.nio.ByteBuffer.wrap(in.readAllBytes())
+    val text = new LineBuffer(out)
     while (buf.hasRemaining) {
-      val v = Msgpack.readValue(buf)
-      if (asText) v match {
-        case s: String => out.println(s)
-        case other     => out.println(renderJson(other))
-      }
-      else out.println(renderJson(v))
+      text += (Msgpack.readValue(buf) match {
+        case s: String if asText => s
+        case v => JsonRecords.render(v, null)
+      })
     }
-  }
-
-  /** Minimal JSON rendering of decoded msgpack values (maps decode to
-    * ordered entry vectors). */
-  def renderJson(v: Any): String = v match {
-    case null       => "null"
-    case b: Boolean => b.toString
-    case i: Long    => i.toString
-    case d: Double  => if (d == d.floor && !d.isInfinite) f"$d%.1f" else d.toString
-    case s: String  => quote(s)
-    case bytes: Array[Byte] =>
-      quote(java.util.Base64.getEncoder.encodeToString(bytes))
-    case xs: Vector[_] if xs.forall(_.isInstanceOf[(_, _)]) && xs.nonEmpty =>
-      xs.collect { case (k: String, x) => quote(k) + ":" + renderJson(x) }
-        .mkString("{", ",", "}")
-    case xs: Vector[_] if xs.isEmpty => "[]"
-    case xs: Vector[_] => xs.map(renderJson).mkString("[", ",", "]")
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => quote(String.valueOf(k)) + ":" + renderJson(x) }
-        .mkString("{", ",", "}")
-    case other => quote(String.valueOf(other))
-  }
-
-  private def quote(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < 0x20 => b.append(f"\\u$c%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
+    text.flush()
   }
 
   // ---- subcommands ----
@@ -268,111 +257,217 @@ object Main {
     }
   }
 
-  private def run(path: String, opts: Opts, in: InputStream,
-                  out: PrintStream, errS: PrintStream,
-                  session: Option[SparkSession]): Unit = {
-    val c = compileFile(path, opts.libDirs)
+  /** Lines to a stream as UTF-8 (what stdin is read as, whatever the
+    * platform charset), written in 64 KB chunks instead of one flush per
+    * line. */
+  private final class LineBuffer(out: PrintStream) {
+    private val sb = new java.lang.StringBuilder()
+    def +=(line: String): Unit = {
+      sb.append(line).append('\n')
+      if (sb.length >= (1 << 16)) flush()
+    }
+    def flush(): Unit = {
+      val b = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out.write(b, 0, b.length); out.flush(); sb.setLength(0)
+    }
+  }
+
+  /** A value in the shape a collected Spark row has: structs carry their
+    * schema (`rowToValue` and the msgpack writer look fields up by name)
+    * and arrays are ArraySeqs, as in a DLQ line printed from Spark. */
+  private def typed(v: Any, dt: DataType): Any = (v, dt) match {
+    case (r: Row, st: StructType) =>
+      new GenericRowWithSchema(st.fields.indices.map(i =>
+        typed(r.get(i), st.fields(i).dataType)).toArray, st)
+    case (xs: scala.collection.Seq[_], ArrayType(et, _)) =>
+      ArraySeq.from(xs.map(typed(_, et)))
+    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
+      m.map { case (k, x) => k -> typed(x, vt) }.toMap
+    case _ => v
+  }
+
+  /** The good rows on stdin, each with the input frame's columns: the
+    * declared fields and `__present` flags of a record, or `value` of a
+    * scalar. Invalid records follow `mode` here: abort stops the run,
+    * skip drops them, dlq prints them to `dlq` (the JSON line and its
+    * reason, or the whole decoded msgpack row). */
+  private def stdinRows(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                        dlq: LineBuffer): (StructType, Iterator[Row]) = {
+    lazy val lines = {
+      val r = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+      Iterator.continually(r.readLine()).takeWhile(_ != null)
+    }
+    // each tagged row (its last column the invalid reason) comes with
+    // its DLQ line
+    def goodRows(tagged: StructType, rows: Iterator[(Row, () => String)])
+        : (StructType, Iterator[Row]) = {
+      val schema = StructType(tagged.fields.init)
+      (schema, rows.flatMap { case (r, dlqLine) =>
+        r.getString(r.length - 1) match {
+          case null =>
+            Some(new GenericRowWithSchema(r.toSeq.init.toArray, schema))
+          case reason => opts.mode match {
+            case "abort" => throw RunError(reason)
+            case "skip"  => None
+            case _       => dlq += dlqLine(); None
+          }
+        }
+      })
+    }
+    def jsonLines(decode: String => Row): Iterator[(Row, () => String)] =
+      lines.map { l =>
+        val r = decode(l)
+        (r, () => l + "\t" + r.getString(r.length - 1))
+      }
+    (c.script.input, opts.format) match {
+      case (rec: TRecord, "msgpack") =>
+        val tagged = Msgpack.decodedSchema(rec)
+        goodRows(tagged, Msgpack.decodeFile(in.readAllBytes(), rec).map { r =>
+          val t = typed(r, tagged).asInstanceOf[Row]
+          (t, () => t.mkString("\t"))
+        })
+      case (rec: TRecord, _) =>
+        goodRows(Msgpack.decodedSchema(rec), jsonLines(JsonRecords.lineDecoder(rec)))
+      case (_, "msgpack") =>
+        throw CliError("scalar input requires --format json (one JSON value per line)")
+      case (scalar, _) =>
+        goodRows(JsonRecords.scalarSchema(scalar),
+          jsonLines(JsonRecords.scalarDecoder(scalar)))
+    }
+  }
+
+  /** Does the script emit bare wire values rather than records? */
+  private def scalarOut(c: UdScript.Compiled): Boolean =
+    !c.script.output.isInstanceOf[TRecord] && !c.script.output.isInstanceOf[TTuple]
+
+  /** stdin → stdout in this thread, with no session: decode, route by
+    * mode, `Interp`, render. A record's outputs are written once it has
+    * run to the end. In dlq mode a `throw` sends the input row and its
+    * message to stderr, as `runEither` does. */
+  private def runLocal(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                       out: PrintStream, err: PrintStream): Unit = {
+    val outType = c.script.output
+    val outSchema = c.outputSchema
+    val interp = new Interp(c.script, c.libs)
+    val dlq = new LineBuffer(err)
+    val text = new LineBuffer(out)
+    val bytes = new java.io.BufferedOutputStream(out, 1 << 16)
+    val emit: Row => Unit = (opts.format, scalarOut(c)) match {
+      case ("msgpack", true) =>
+        r => Msgpack.writeValue(bytes, typed(r.get(0), outSchema.fields(0).dataType))
+      case ("msgpack", false) =>
+        r => Msgpack.writeRows(bytes, outSchema.fieldNames.toSeq,
+          Iterator(typed(r, outSchema).asInstanceOf[Row]))
+      case (_, true) =>
+        r => text += JsonRecords.render(r.get(0), outSchema.fields(0).dataType)
+      case (_, false) => r => text += JsonRecords.render(r, outSchema)
+    }
+    try {
+      val (_, rows) = stdinRows(c, opts, in, dlq)
+      rows.foreach { r =>
+        val outs = Vector.newBuilder[Row]
+        try {
+          interp.run(UdScript.rowToValue(r, c.script.input),
+            v => outs += UdScript.valueToRow(v, outType, outSchema))
+          outs.result().foreach(emit)
+        } catch {
+          case e: UdException if opts.mode == "dlq" =>
+            dlq += (r.toSeq :+ e.message).mkString("\t")
+          case e: UdException => throw RunError(e.message)
+        }
+      }
+    } finally {
+      text.flush(); bytes.flush(); dlq.flush()
+    }
+  }
+
+  /** The message a Spark run failed on: a `raise_error` of an invalid
+    * record in abort mode, or a script's `throw`, wherever it sits in the
+    * cause chain. */
+  private def recordFailure(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case u: UdException => u.message
+      case t: SparkThrowable if t.getCondition == "USER_RAISED_EXCEPTION" =>
+        t.getMessageParameters.get("errorMessage")
+    }
+
+  /** The `--in`/`--out` legs: the script planned on Spark. Records from
+    * stdin (with `--out` alone) take the same decoder as `runLocal`. */
+  private def runSpark(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                       out: PrintStream, err: PrintStream,
+                       session: Option[SparkSession]): Unit = {
     val s = session.getOrElse(GraftSession.local(opts.cores))
     val mode = opts.mode match {
       case "abort" => ValidatedIngest.Abort
       case "skip"  => ValidatedIngest.Skip
       case "dlq"   => ValidatedIngest.Dlq
     }
-    val validated = readInput(s, c, opts, in, mode)
-    if (opts.mode == "dlq")
-      validated.bad.toLocalIterator().forEachRemaining { r =>
-        errS.println(r.mkString("\t"))
+    try {
+      val validated = opts.inPath match {
+        case Some(p) => readPath(s, c, opts, p, mode)
+        case None =>
+          val dlq = new LineBuffer(err)
+          val (schema, rows) = stdinRows(c, opts, in, dlq)
+          val good = try rows.toList finally dlq.flush()
+          ValidatedIngest.Validated(
+            s.createDataFrame(good.asJava, schema), s.emptyDataFrame)
       }
-    // --mode dlq also routes RUNTIME throws (the udmonad dead-letter
-    // posture): a record whose kernel evaluation throws lands on stderr
-    // with its input row + message, clean records keep flowing. In
-    // abort/skip modes a throw keeps its fail-the-run semantics.
-    val result =
-      if (opts.mode == "dlq") {
-        val (good, dead) = c.runEither(validated.good)
-        dead.toLocalIterator().forEachRemaining { r =>
-          errS.println(r.mkString("\t"))
-        }
-        good
-      } else c.run(validated.good)
-    // scalar-output scripts emit BARE wire values on the pipe (the
-    // reference's model: `udlower --text` receives msgpack strings);
-    // record outputs emit record maps / JSON objects. File legs always
-    // keep the columnar record shape.
-    val scalarOut = !c.script.output.isInstanceOf[TRecord] &&
-      !c.script.output.isInstanceOf[TTuple]
-    opts.outPath match {
-      case Some(p) if opts.format == "msgpack" => Msgpack.write(result, p)
-      case Some(p) => // same replace semantics as the msgpack sink
-        JsonRecords.toJsonLines(result).write.mode("overwrite").text(p)
-      case None if opts.format == "msgpack" =>
-        val buffered = new java.io.BufferedOutputStream(out, 1 << 16)
-        if (scalarOut)
-          localRows(result).foreach(r => Msgpack.writeValue(buffered, r.get(0)))
-        else
-          Msgpack.writeRows(buffered, result.schema.fieldNames.toSeq,
-            localRows(result))
-        buffered.flush()
-      case None if scalarOut =>
-        localRows(result).foreach(r => out.println(renderJson(r.get(0))))
-      case None =>
-        JsonRecords.toJsonLines(result).toLocalIterator()
-          .forEachRemaining(out.println)
+      val dlq = new LineBuffer(err)
+      val text = new LineBuffer(out)
+      if (opts.mode == "dlq")
+        validated.bad.toLocalIterator().asScala.foreach(r => dlq += r.mkString("\t"))
+      // --mode dlq also routes RUNTIME throws (the udmonad dead-letter
+      // posture): a record whose kernel evaluation throws lands on stderr
+      // with its input row + message, clean records keep flowing. In
+      // abort/skip modes a throw keeps its fail-the-run semantics.
+      val result =
+        if (opts.mode == "dlq") {
+          val (good, dead) = c.runEither(validated.good)
+          dead.toLocalIterator().asScala.foreach(r => dlq += r.mkString("\t"))
+          good
+        } else c.run(validated.good)
+      dlq.flush()
+      val rows = () => result.toLocalIterator().asScala
+      opts.outPath match {
+        case Some(p) if opts.format == "msgpack" => Msgpack.write(result, p)
+        case Some(p) => // same replace semantics as the msgpack sink
+          JsonRecords.toJsonLines(result).write.mode("overwrite").text(p)
+        case None if opts.format == "msgpack" =>
+          val buffered = new java.io.BufferedOutputStream(out, 1 << 16)
+          if (scalarOut(c)) rows().foreach(r => Msgpack.writeValue(buffered, r.get(0)))
+          else Msgpack.writeRows(buffered, result.schema.fieldNames.toSeq, rows())
+          buffered.flush()
+        case None if scalarOut(c) =>
+          val dt = c.outputSchema.fields(0).dataType
+          rows().foreach(r => text += JsonRecords.render(r.get(0), dt))
+        case None =>
+          JsonRecords.toJsonLines(result).toLocalIterator().asScala.foreach(text += _)
+      }
+      text.flush()
+    } catch {
+      case e: Exception if recordFailure(e).isDefined =>
+        throw RunError(recordFailure(e).get)
     }
   }
 
-  /** toLocalIterator as a plain scala Iterator[Row]. */
-  private def localRows(df: DataFrame): Iterator[Row] = {
-    val it = df.toLocalIterator()
-    new Iterator[Row] {
-      def hasNext: Boolean = it.hasNext
-      def next(): Row = it.next()
-    }
-  }
-
-  /** Input leg: declared-type-driven decode from stdin or a path, in
+  /** Input leg from a file or directory: declared-type-driven decode in
     * either framing. Record inputs go through the validating sources
-    * (presence flags, modes); scalar inputs are JSON values one-per-line. */
-  private def readInput(s: SparkSession, c: UdScript.Compiled, opts: Opts,
-                        in: InputStream, mode: ValidatedIngest.Mode)
-      : ValidatedIngest.Validated = {
-    import s.implicits._
+    * (presence flags, modes); scalar inputs are JSON values one per line.
+    */
+  private def readPath(s: SparkSession, c: UdScript.Compiled, opts: Opts,
+                       path: String, mode: ValidatedIngest.Mode)
+      : ValidatedIngest.Validated =
     c.script.input match {
-      case rec: TRecord => (opts.format, opts.inPath) match {
-        case ("msgpack", Some(p)) => Msgpack.read(s, p, rec, mode)
-        case ("msgpack", None) =>
-          val bytes = in.readAllBytes()
-          val rows = Msgpack.decodeFile(bytes, rec).toSeq
-          val tagged = s.createDataFrame(
-            new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-              .SeqHasAsJava(rows).asJava),
-            Msgpack.decodedSchema(rec))
-          ValidatedIngest.routeTagged(tagged, mode)
-        case ("json", Some(p)) =>
-          JsonRecords.read(s, s.read.textFile(p), rec, mode)
-        case ("json", None) =>
-          val lines = scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toSeq
-          JsonRecords.read(s, s.createDataset(lines), rec, mode)
-        case (other, _) => throw CliError(s"unsupported format: $other")
+      case rec: TRecord => opts.format match {
+        case "msgpack" => Msgpack.read(s, path, rec, mode)
+        case _ => JsonRecords.read(s, s.read.textFile(path), rec, mode)
       }
       case scalar =>
         if (opts.format != "json")
           throw CliError("scalar input requires --format json (one JSON value per line)")
-        val lines: Seq[String] = opts.inPath match {
-          case Some(p) => s.read.textFile(p).collect().toSeq
-          case None => scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toSeq
-        }
-        val schema = StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            c.inputSchema.fields(0).dataType)))
-        val df = s.createDataset(lines).toDF("_payload")
-          .select(from_json(concat(lit("{\"value\":"), col("_payload"),
-            lit("}")), schema).getField("value").as("value"))
-        ValidatedIngest.Validated(df, s.emptyDataFrame)
+        JsonRecords.readScalar(s, s.read.textFile(path), scalar, mode)
     }
-  }
 
   // ---- helpers ----
 

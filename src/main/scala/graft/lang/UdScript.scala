@@ -245,10 +245,11 @@ object UdScript {
     // the struct (top-level records keep them as external sibling
     // columns, appended by the sources/decodedSchema) — `rec.addr.zip?`
     // then reads a real column in both tiers instead of conflating
-    // absent with null
+    // absent with null. Nested fields are all nullable: from_json yields
+    // nullable struct fields, and a cast of such a struct to one with a
+    // NOT NULL field (a script passing `in.addr` through) fails analysis.
     case TRecord(fs, _) => StructType(fs.map(f =>
-      StructField(f.name, sparkType(f.t),
-        nullable = f.absentOptional || f.t.isInstanceOf[TOption])) ++
+      StructField(f.name, sparkType(f.t), nullable = true)) ++
       fs.filter(_.absentOptional).map(f =>
         StructField(s"${f.name}__present", BooleanType)))
     // pair-of-floats placeholder (ir.rs:359-362)

@@ -346,10 +346,13 @@ object Msgpack extends Serializable {
     decodeFile(bytes, declared).next()
 
   /** Schema of the decoded frame: declared fields + presence flags +
-    * the (pre-routing) invalid reason. */
+    * the (pre-routing) invalid reason. Every declared field is nullable
+    * here: an invalid record's row carries nulls even for required
+    * fields, and a non-null field would fail the row encoder before the
+    * reason could route it. */
   def decodedSchema(declared: TRecord): StructType = {
     val base = UdScript.schemaOf(declared)
-    StructType(base.fields.toSeq ++
+    StructType(base.fields.toSeq.map(_.copy(nullable = true)) ++
       declared.fields.filter(_.absentOptional).map(f =>
         StructField(s"${f.name}__present", BooleanType, nullable = false)) :+
       StructField("_invalid_reason", StringType, nullable = true))

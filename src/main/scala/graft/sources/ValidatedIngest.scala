@@ -69,10 +69,12 @@ object ValidatedIngest {
     * the reason during decode (Msgpack). */
   def routeTagged(tagged: DataFrame, mode: Mode): Validated = mode match {
     case Abort =>
+      // pinned: a downstream filter (a script's `if`) pushed below the
+      // check would drop an invalid record before it could abort the run
       val good = tagged
-        .withColumn("_check",
+        .withColumn("_check", graft.plans.Materialized.once(
           when(col("_invalid_reason").isNotNull,
-            raise_error(col("_invalid_reason"))).otherwise(lit(true)))
+            raise_error(col("_invalid_reason"))).otherwise(lit(true))))
         .filter(col("_check"))
         .drop("_invalid_reason", "_check")
       Validated(good, tagged.sparkSession.emptyDataFrame)

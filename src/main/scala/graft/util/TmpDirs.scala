@@ -13,13 +13,24 @@ package graft.util
   * restart-critical may use this root. */
 object TmpDirs {
 
-  /** tmpfs when available, `java.io.tmpdir` otherwise. */
+  /** Least usable space for tmpfs to be chosen: a small /dev/shm (a
+    * container's 64 MB default) fills up mid-entry, where a disk-backed
+    * tmpdir only costs speed. */
+  val MinFastBytes: Long = 512L << 20
+
+  /** The root for a candidate tmpfs dir with `usableBytes` free (0 when
+    * it is missing or not writable): the candidate when it has at least
+    * [[MinFastBytes]], `fallback` otherwise. */
+  def choose(candidate: String, usableBytes: Long, fallback: String): String =
+    if (usableBytes >= MinFastBytes) candidate else fallback
+
+  /** tmpfs when available and roomy, `java.io.tmpdir` otherwise. */
   val fastRoot: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) shm.getAbsolutePath
-      else sys.props("java.io.tmpdir")
-    java.nio.file.Paths.get(base)
+    val usable =
+      if (shm.isDirectory && shm.canWrite) shm.getUsableSpace else 0L
+    java.nio.file.Paths.get(
+      choose(shm.getAbsolutePath, usable, sys.props("java.io.tmpdir")))
   }
 
   /** Create a fresh throwaway dir under [[fastRoot]]. The caller owns

@@ -1,0 +1,247 @@
+package graft
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File, PrintStream}
+import java.nio.ByteBuffer
+import java.nio.file.Files
+
+import graft.sources.{JsonRecords, Msgpack}
+
+/** The CLI's two ways to run a script must agree: stdin → stdout runs in
+  * the driver thread through `Interp` with no session, `--in FILE` plans
+  * the script on Spark in whatever tier it lowers to. Every script runs in
+  * abort, skip and dlq modes on both, and must give the same exit code,
+  * the same stderr lines (DLQ lines, or the one runtime error) and — when
+  * it exits 0 — the same stdout multiset. An aborted in-process run has
+  * already streamed the outputs of the records before the failing one,
+  * while Spark's single-partition job prints none, so stdout is not
+  * compared on a nonzero exit. */
+class CliDifferentialSpec extends SparkSpec {
+
+  private final case class Run(code: Int, out: Seq[String], err: Seq[String],
+                               bytes: Array[Byte])
+
+  private def exec(args: List[String], stdin: Array[Byte]): Run = {
+    val out = new ByteArrayOutputStream()
+    val err = new ByteArrayOutputStream()
+    val code = Main.exitCode(args, new ByteArrayInputStream(stdin),
+      new PrintStream(out, true, "UTF-8"), new PrintStream(err, true, "UTF-8"),
+      Some(spark))
+    Run(code, out.toString("UTF-8").linesIterator.toSeq.sorted,
+      err.toString("UTF-8").linesIterator.toSeq.sorted, out.toByteArray)
+  }
+
+  private def tmp(suffix: String, bytes: Array[Byte]): String = {
+    val f = File.createTempFile("graft_diff", suffix)
+    f.deleteOnExit()
+    Files.write(f.toPath, bytes)
+    f.getPath
+  }
+
+  private def script(src: String): String = tmp(".us", src.getBytes("UTF-8"))
+
+  private val modes = Seq("abort", "skip", "dlq")
+
+  /** Run `scriptPath` over `input` on both paths in every mode; returns
+    * the in-process runs by mode for extra assertions. */
+  private def agree(scriptPath: String, input: Array[Byte],
+                    extra: List[String] = Nil): Map[String, Run] = {
+    val inFile = tmp(".in", input)
+    modes.map { mode =>
+      val args = List("--mode", mode) ++ extra :+ scriptPath
+      val local = exec(args, input)
+      val spark = exec(List("--in", inFile) ++ args, Array.emptyByteArray)
+      val what = s"$scriptPath --mode $mode ${extra.mkString(" ")}"
+      assert(local.code == spark.code,
+        s"$what: exit ${local.code} vs ${spark.code}; stderr ${local.err} vs ${spark.err}")
+      assert(local.err == spark.err, s"$what: stderr")
+      if (local.code == 0) {
+        if (extra.contains("msgpack"))
+          assert(decodeAll(local.bytes).map(render).sorted ==
+            decodeAll(spark.bytes).map(render).sorted, s"$what: stdout")
+        else assert(local.out == spark.out, s"$what: stdout")
+      }
+      mode -> local
+    }.toMap
+  }
+
+  private def lines(ls: String*): Array[Byte] =
+    ls.map(_ + "\n").mkString.getBytes("UTF-8")
+
+  private def decodeAll(bytes: Array[Byte]): Seq[Any] = {
+    val b = ByteBuffer.wrap(bytes)
+    Iterator.continually(if (b.hasRemaining) Some(Msgpack.readValue(b))
+      else None).takeWhile(_.isDefined).flatten.toSeq
+  }
+
+  private def render(v: Any): String = JsonRecords.render(v, null)
+
+  // invalid inputs every record script sees: a malformed line, a missing
+  // field, an explicit null, a type mismatch
+  private val events = lines(
+    """{"event_id": 1, "event_type": "click", "value": 80.5}""",
+    """{"event_id": 2, "event_type": "view", "value": 10.0}""",
+    """{"event_id": 3, "event_type": "purchase", "value": 60}""",
+    """{"event_id": 4, "event_type": "signup", "value": 1e20}""",
+    """{"event_id": 5, "event_type": "share", "value": -99.5, "extra": [1]}""",
+    """this is not json""",
+    """{"event_id": 6, "value": 70.0}""",
+    """{"event_id": 7, "event_type": null, "value": 70.0}""",
+    """{"event_id": "8", "event_type": "view", "value": 70.0}""",
+    """{"event_id": 9, "event_type": "view", "value": "70"}""",
+    """{"event_id": 10, "event_type": "view", "value": 70.0, "event_id": 11}""",
+    """""")
+
+  test("examples/filter_events.us (column tier) agrees on both paths") {
+    val runs = agree("examples/filter_events.us", events)
+    assert(runs("dlq").out.size == 3 && runs("dlq").err.size == 7,
+      runs("dlq").toString)
+    assert(runs("abort").code == 1)
+  }
+
+  test("examples/checked_effects.us (kernel tier, throw) agrees on both paths") {
+    val runs = agree("examples/checked_effects.us", lines(
+      """{"event_id": 1, "value": 4.5}""",
+      """{"event_id": 2, "value": -1.0}""",
+      """{"event_id": 3, "value": 2}""",
+      """{"event_id": 4, "value": null}""",
+      """{"event_id": 5}""",
+      """{"event_id": 6, "value": true}""",
+      """[1, 2]"""))
+    assert(runs("dlq").err.exists(_.endsWith("\tnegative value")))
+    assert(runs("dlq").out.size == 2)
+  }
+
+  test("examples/hello.us (scalar in, scalar out) agrees on both paths") {
+    val runs = agree("examples/hello.us", lines("\"world\"",
+      "\"gr\\u00e4ft\"", "\"tab\\there\"", "42", """{"a": [1, 2.50]}""",
+      "null", "not json", ""))
+    assert(runs("dlq").out.contains("\"Hello, gr\u00e4ft\""))
+    assert(runs("dlq").out.contains("\"Hello, {\\\"a\\\":[1,2.5]}\""))
+    assert(runs("dlq").err == Seq("\tmalformed_json:_payload",
+      "not json\tmalformed_json:_payload", "null\tnull:value"))
+  }
+
+  test("examples with imported modules agree on both paths") {
+    val docs = lines("""{"doc_id": 1, "text": "a <b> & \"c\""}""",
+      """{"doc_id": 2, "text": null}""", """{"doc_id": 3}""")
+    agree("examples/use_greet.us", docs, List("--libdir", "examples/lib"))
+    agree("examples/render_doc.us", docs, List("--libdir", "examples/lib"))
+  }
+
+  test("LoopTier (the count.us shape) agrees with the interpreter") {
+    val src = script("""script "count";
+      |input  Int;
+      |output Int;
+      |proc count(n: Int) {
+      |  out n;
+      |  if (n > 0) { count(n - 1); }
+      |}
+      |out count(in);""".stripMargin)
+    assert(exec(List("--compile", src), Array.emptyByteArray).out
+      .exists(_.startsWith("tier: LoopTier")))
+    val runs = agree(src, lines("3", "0", "-2", "1", "\"x\"", "null"))
+    assert(runs("dlq").out == Seq("-2", "0", "0", "0", "1", "1", "2", "3"))
+    assert(runs("dlq").err == Seq("\"x\"\ttype:value", "null\tnull:value"))
+  }
+
+  test("absent-optional and T? fields agree on both paths") {
+    val src = script("""script "optionals";
+      |input  {id: Int, note?: Str, score: Float?};
+      |output {id: Int, has_note: Bool, score: Float?};
+      |out {id: in.id, has_note: in.?.note, score: in.score};""".stripMargin)
+    agree(src, lines(
+      """{"id": 1, "note": "x", "score": 2.5}""",
+      """{"id": 2, "note": null, "score": null}""",
+      """{"id": 3}""",
+      """{"id": 4, "note": 5}""",
+      """{"id": null}"""))
+  }
+
+  test("nested records with presence flags agree on both paths") {
+    val src = script("""script "nested";
+      |input  {id: Int, addr: {city: Str, zip?: Int}?};
+      |output {id: Int, hz: Bool, addr: {city: Str, zip?: Int}?};
+      |out {id: in.id, hz: in.addr.?.zip, addr: in.addr};""".stripMargin)
+    agree(src, lines(
+      """{"id": 1, "addr": {"city": "a", "zip": 5}}""",
+      """{"id": 2, "addr": {"city": "b", "zip": null}}""",
+      """{"id": 3, "addr": {"city": "c"}}""",
+      """{"id": 4, "addr": null}""",
+      """{"id": 5, "addr": {"city": "d", "zip": "x"}}""",
+      """{"id": 6, "addr": [1]}"""))
+  }
+
+  test("string enums and sized ints agree on both paths") {
+    val src = script("""script "checks";
+      |input  {id: Int, kind: "a" | "b", v: U8};
+      |output {id: Int, k: Str, w: Int};
+      |out {id: in.id, k: in.kind, w: in.v + 1};""".stripMargin)
+    val runs = agree(src, lines(
+      """{"id": 1, "kind": "a", "v": 200}""",
+      """{"id": 2, "kind": "c", "v": 1}""",
+      """{"id": 3, "kind": "b", "v": 300}""",
+      """{"id": 4, "kind": "b", "v": -1}""",
+      """{"id": 5, "kind": 7, "v": 1.5}"""))
+    assert(runs("dlq").err.map(_.split("\t").last) ==
+      Seq("bad_enum:kind", "range:v", "range:v", "type:kind"))
+  }
+
+  test("general unions agree on both paths, in and out") {
+    val src = script("""script "union";
+      |input  {id: Int, v: Int | Str};
+      |output {id: Int, r: Str, w: Int | Str};
+      |for x in [in.v] {
+      |  out {id: in.id, r: match (x) { case i: Int => "n"; case s: Str => s; },
+      |       w: x};
+      |}""".stripMargin)
+    val runs = agree(src, lines(
+      """{"id": 1, "v": 5}""",
+      """{"id": 2, "v": "hi"}""",
+      """{"id": 3, "v": 1.5}""",
+      """{"id": 4, "v": [1]}""",
+      """{"id": 5, "v": null}""",
+      """{"id": 6}"""))
+    assert(runs("dlq").err.map(_.split("\t").last).sorted ==
+      Seq("missing:v", "null:v", "union_no_branch:v", "union_no_branch:v"))
+  }
+
+  test("a kernel-tier throw drops the record's outputs on both paths") {
+    val src = script("""script "throws";
+      |input  {id: Int, n: Int};
+      |output {id: Int, r: Int};
+      |for x in [1, 2] {
+      |  out {id: in.id, r: x};
+      |  if (in.n < 0) { throw "negative n"; }
+      |}""".stripMargin)
+    val runs = agree(src, lines("""{"id": 1, "n": 1}""", """{"id": 2, "n": -1}"""))
+    assert(runs("dlq").out == Seq("""{"id":1,"r":1}""", """{"id":1,"r":2}"""))
+    assert(runs("dlq").err == Seq("2\t-1\tnegative n"))
+    assert(runs("abort").err == Seq("runtime error: negative n"))
+    assert(runs("skip").code == 1)
+  }
+
+  test("msgpack stdin/stdout round-trips like the JSON run, on both paths") {
+    val json = lines(
+      """{"id": 1, "note": "x", "score": 2.5}""",
+      """{"id": 2, "score": null}""",
+      """{"id": "bad"}""")
+    val src = script("""script "optionals";
+      |input  {id: Int, note?: Str, score: Float?};
+      |output {id: Int, has_note: Bool, score: Float?};
+      |out {id: in.id, has_note: in.?.note, score: in.score};""".stripMargin)
+    val lifted = new ByteArrayOutputStream()
+    assert(Main.execute(List("lift", "--json"), new ByteArrayInputStream(json),
+      new PrintStream(lifted), new PrintStream(new ByteArrayOutputStream()),
+      Some(spark)) == 0)
+    val runs = agree(src, lifted.toByteArray, List("--format", "msgpack"))
+    // msgpack writes null fields as nil where to_json omits them
+    val viaMsgpack = decodeAll(runs("skip").bytes).map {
+      case es: Vector[_] => render(es.filter {
+        case (_, v) => v != null; case _ => true })
+      case v => render(v)
+    }.sorted
+    assert(viaMsgpack == exec(List("--mode", "skip", src), json).out)
+    assert(viaMsgpack.size == 2)
+    assert(runs("dlq").err.size == 1 && runs("dlq").err.head.contains("type:id"))
+  }
+}

@@ -19,6 +19,91 @@ class CliSpec extends SparkSpec {
     (code, out.toString("UTF-8"), err.toString("UTF-8"))
   }
 
+  /** `main`'s whole exit mapping: code, stdout, stderr. */
+  private def exit(args: List[String], stdin: String = "")
+      : (Int, String, String) = {
+    val out = new ByteArrayOutputStream()
+    val err = new ByteArrayOutputStream()
+    val code = Main.exitCode(args, new ByteArrayInputStream(stdin.getBytes("UTF-8")),
+      new PrintStream(out, true, "UTF-8"), new PrintStream(err, true, "UTF-8"),
+      Some(spark))
+    (code, out.toString("UTF-8"), err.toString("UTF-8"))
+  }
+
+  private def tmpFile(suffix: String, text: String): String = {
+    val f = java.io.File.createTempFile("graft_cli", suffix)
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, text.getBytes("UTF-8"))
+    f.getPath
+  }
+
+  test("Float outputs render as to_json does, in any locale, on both paths") {
+    val stdin = "1e20\n12345678.0\n2.5\n"
+    val scalar = tmpFile(".us",
+      "script \"f\";\ninput Float;\noutput Float;\nout in;\n")
+    val record = tmpFile(".us",
+      "script \"f\";\ninput Float;\noutput {x: Float};\nout {x: in};\n")
+    val want = Seq("1.0E20", "1.2345678E7", "2.5")
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      for (leg <- Seq(Nil, List("--in", tmpFile(".in", stdin)))) {
+        val (c1, o1, e1) = exit(leg :+ scalar, stdin)
+        assert(c1 == 0, e1)
+        assert(o1.linesIterator.toSeq.sorted == want.sorted, s"$leg")
+        val (c2, o2, e2) = exit(leg :+ record, stdin)
+        assert(c2 == 0, e2)
+        assert(o2.linesIterator.toSeq.sorted ==
+          want.map(w => s"""{"x":$w}""").sorted, s"$leg")
+      }
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("stdout is UTF-8 whatever the stream's own charset") {
+    val out = new ByteArrayOutputStream()
+    assert(Main.exitCode(List("examples/hello.us"),
+      new ByteArrayInputStream("\"gr\u00e4ft\"\n".getBytes("UTF-8")),
+      new PrintStream(out, true, "US-ASCII"),
+      new PrintStream(new ByteArrayOutputStream()), Some(spark)) == 0)
+    assert(out.toString("UTF-8").trim == "\"Hello, gr\u00e4ft\"")
+  }
+
+  test("abort mode: an invalid record or a throw is one runtime error line, exit 1") {
+    val bad = """{"event_id": 1, "event_type": "click", "value": 80.5}
+                |this is not json
+                |""".stripMargin
+    val neg = """{"event_id": 2, "value": -1.0}
+                |""".stripMargin
+    for (leg <- Seq((s: String) => Nil, (s: String) => List("--in", tmpFile(".in", s)))) {
+      val (c1, _, e1) = exit(leg(bad) :+ "examples/filter_events.us", bad)
+      assert(c1 == 1 && e1.linesIterator.toSeq ==
+        Seq("runtime error: malformed_json:_payload"), e1)
+      val (c2, _, e2) = exit(leg(neg) :+ "examples/checked_effects.us", neg)
+      assert(c2 == 1 && e2.linesIterator.toSeq ==
+        Seq("runtime error: negative value"), e2)
+    }
+    // usage and compile errors keep their own codes
+    val (c3, _, e3) = exit(List("--mode", "bogus", "examples/hello.us"))
+    assert(c3 == 2 && e3.trim == "error: bad --mode bogus")
+    val (c4, _, e4) = exit(List(tmpFile(".us", "this is not uDLang")))
+    assert(c4 == 3 && e4.startsWith("compile error:"), e4)
+  }
+
+  test("--out with records on stdin decodes them like the in-process run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_out").toFile
+    val outDir = new java.io.File(dir, "out")
+    val stdin =
+      """{"event_id": 1, "event_type": "click", "value": 80.5}
+        |{"event_id": "x", "event_type": "view", "value": 70.0}
+        |""".stripMargin
+    val (code, _, err) = exit(List("--mode", "dlq", "--out", outDir.getPath,
+      "examples/filter_events.us"), stdin)
+    assert(code == 0, err)
+    assert(err.trim.endsWith("\ttype:event_id"))
+    val produced = spark.read.text(outDir.getPath).collect().map(_.getString(0))
+    assert(produced.toSeq == Seq("""{"event_id":1,"cat":"ui","boosted":161.0}"""))
+  }
+
   test("run examples/hello.us: scalar JSON values stdin -> stdout") {
     val (code, out, _) = cli(List("examples/hello.us"),
       "\"world\"\n\"graft\"\n".getBytes("UTF-8"))
