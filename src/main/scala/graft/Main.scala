@@ -1,8 +1,9 @@
 package graft
 
-import java.io.{InputStream, PrintStream}
+import java.io.{ByteArrayOutputStream, InputStream, PrintStream}
+import java.nio.charset.StandardCharsets
 
-import scala.collection.immutable.ArraySeq
+import scala.collection.immutable.{ArraySeq, VectorMap}
 import scala.jdk.CollectionConverters._
 
 import graft.kernel.UdException
@@ -54,7 +55,10 @@ object Main {
   final case class RunError(reason: String) extends RuntimeException(reason)
 
   def main(args: Array[String]): Unit = {
-    val code = exitCode(args.toList, System.in, System.out, System.err, None)
+    // every line the CLI prints is UTF-8, whatever the platform charset
+    def utf8(s: PrintStream) = new PrintStream(s, true, StandardCharsets.UTF_8)
+    val code = exitCode(args.toList, System.in, utf8(System.out),
+      utf8(System.err), None)
     if (code != 0) sys.exit(code)
   }
 
@@ -183,50 +187,56 @@ object Main {
       else if (opts.contains("--ignore")) "ignore"
       else if (opts.contains("--warn")) "warn"
       else "reject" // type-safe by default (README.md:295-296)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val o = new java.io.BufferedOutputStream(out, 1 << 16)
-    def encode(tree: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      val bytes = {
-        val buf = new java.io.ByteArrayOutputStream()
-        Msgpack.writeValue(buf, jsonToValue(tree))
-        buf.toByteArray
-      }
-      declared match {
-        case None => o.write(bytes)
-        case Some(rec) =>
-          // decode-validate through the SAME typed path the engine uses
-          val row = Msgpack.decodeOne(bytes, rec)
-          val reason = row.getString(row.length - 1)
-          if (reason == null) o.write(bytes)
-          else mode match {
-            case "reject" => throw CliError(s"invalid input: $reason")
-            case "ignore" => ()
-            case "warn"   => err.println(s"warning: dropped record: $reason")
-          }
-      }
+    def drop(reason: String): Unit = mode match {
+      case "reject" => throw CliError(s"invalid input: $reason")
+      case "ignore" => ()
+      case "warn"   => err.println(s"warning: dropped record: $reason")
     }
-    if (opts.contains("--oneshot")) encode(mapper.readTree(in))
+    val o = new java.io.BufferedOutputStream(out, 1 << 16)
+    // the run path's parser: a malformed payload or an integer outside
+    // i64 is an invalid record, routed like a --schema mismatch
+    def encode(text: String): Unit =
+      JsonRecords.parseOrNull(text, strict = false) match {
+        case null => drop("malformed_json:_payload")
+        case tree => wireValue(tree) match {
+          case None => drop("range:_payload")
+          case Some(v) =>
+            val buf = new ByteArrayOutputStream()
+            Msgpack.writeValue(buf, v)
+            val bytes = buf.toByteArray
+            // --schema: decode-validate through the SAME typed path the
+            // engine's msgpack source uses
+            val reason = declared.flatMap { rec =>
+              val row = Msgpack.decodeOne(bytes, rec)
+              Option(row.getString(row.length - 1))
+            }
+            reason.fold(o.write(bytes))(drop)
+        }
+      }
+    if (opts.contains("--oneshot"))
+      encode(new String(in.readAllBytes(), StandardCharsets.UTF_8))
     else {
       val sc = new java.util.Scanner(in, "UTF-8")
       while (sc.hasNextLine) {
         val line = sc.nextLine()
-        if (line.trim.nonEmpty) encode(mapper.readTree(line))
+        if (line.trim.nonEmpty) encode(line)
       }
     }
     o.flush()
   }
 
-  private def jsonToValue(n: com.fasterxml.jackson.databind.JsonNode): Any = {
-    import scala.jdk.CollectionConverters._
-    if (n == null || n.isNull) null
-    else if (n.isBoolean) n.booleanValue()
-    else if (n.isIntegralNumber) n.longValue()
-    else if (n.isNumber) n.doubleValue()
-    else if (n.isTextual) n.textValue()
-    else if (n.isArray) n.elements().asScala.map(jsonToValue).toVector
-    else // object: ordered entries -> msgpack map
-      scala.collection.immutable.VectorMap.from(
-        n.fields().asScala.map(e => e.getKey -> jsonToValue(e.getValue)))
+  /** A parsed JSON tree as msgpack values; None when it holds an integer
+    * outside i64, which the msgpack run path cannot read back. */
+  private def wireValue(n: Any): Option[Any] = n match {
+    case JsonRecords.JsonNull    => Some(null)
+    case _: java.math.BigInteger => None
+    case xs: Vector[_] =>
+      val vs = xs.map(wireValue)
+      Option.when(vs.forall(_.isDefined))(vs.map(_.get))
+    case m: java.util.LinkedHashMap[_, _] =>
+      val vs = m.asScala.toVector.map { case (k, x) => wireValue(x).map(k.toString -> _) }
+      Option.when(vs.forall(_.isDefined))(VectorMap.from(vs.map(_.get)))
+    case x => Some(x)
   }
 
   private def lower(opts: List[String], in: InputStream,

@@ -63,25 +63,7 @@ object Dedup extends Serializable {
     sig
   }
 
-  /** 64-bit SimHash over token hashes. */
-  def simhash64(text: String): Long = {
-    val counts = new Array[Int](64)
-    text.split("\\s+").foreach { t =>
-      val h = hashString(t)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
   final case class DocSig(doc_id: Long, sig: Array[Long])
-  final case class DocSim(doc_id: Long, simhash: Long)
 
   /** MinHash signatures for a documents table (kernel tier: narrow map). */
   def minhashSignatures(docs: Dataset[(Long, String)], w: Int, k: Int)
@@ -227,14 +209,6 @@ object Dedup extends Serializable {
       .join(verified, Seq("doc_id"), "left")
       .select(col("doc_id"), col("dup_of").isNotNull.as("is_dup"),
         col("dup_of"))
-  }
-
-  /** Exact word-set Jaccard between two token-array columns (column tier). */
-  def wordSetJaccard(a: Column, b: Column): Column = {
-    val ad = array_distinct(a)
-    val bd = array_distinct(b)
-    size(array_intersect(ad, bd)).cast("double") /
-      size(array_union(ad, bd)).cast("double")
   }
 
   /** Distinct word w-shingles as STRINGS (the verify-stage measure — no
@@ -416,17 +390,6 @@ object Dedup extends Serializable {
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** The 4 md5-derived 16-bit chunk hashes of one token (JVM mirror of the
-    * column expression). Hex chars 4j+1..4j+4 of the md5 are digest bytes
-    * 2j, 2j+1 — read them directly; no hex-string round-trip in the hot
-    * loop, and the MessageDigest is thread-local (one per executor core). */
-  def tokenChunksLocal(tok: String): Array[Int] = {
-    val md = md5Local.get()
-    md.reset()
-    val b = md.digest(tok.getBytes("UTF-8"))
-    Array.tabulate(4)(j => ((b(2 * j) & 0xFF) << 8) | (b(2 * j + 1) & 0xFF))
   }
 
   /** Local mirror of the per-doc simhash chunks, for spec brute-force.

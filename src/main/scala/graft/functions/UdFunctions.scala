@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   *
   * uDLang rules preserved:
   *  - strict arithmetic: Int×Int→Int, Float×Float→Float, no implicit mix
-  *    (manual.md:118-121). Our front-end typechecker inserts explicit casts;
-  *    at the Column layer `add/sub/...` assume same-typed operands and
-  *    `addStr` is the Str+Str concat arm (doc-intended, examples/hello.us).
+  *    (manual.md:118-121). The front-end typechecker rejects mixed
+  *    operands, and the column tier picks each member here from the
+  *    operand types it computed (`Lowering.binaryOp`): `add/sub/...` see
+  *    same-typed operands and `addStr` is the Str+Str concat arm
+  *    (doc-intended, examples/hello.us).
   *  - integer division truncates (ir.rs:607-630) → Spark `div`.
   *  - Pow on Int silently casts exponent to u32 (ir.rs:592) → long pow.
   *  - And/Or/Xor are dual-use: Bool logical / Int bitwise (ir.rs:632-645).
@@ -64,6 +66,7 @@ object UdFunctions {
   def gte(a: Column, b: Column): Column = a >= b
   /** Deep structural equality; null-safe like the VM's Value::eq. */
   def eq(a: Column, b: Column): Column = a <=> b
+  def neq(a: Column, b: Column): Column = !(a <=> b)
 
   // ---- coercions (ir.rs:510-529) ----
   /** Truthiness: Bool id; Int/Float ≠0; Str/List/Map non-empty. */

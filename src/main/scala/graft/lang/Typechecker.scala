@@ -13,6 +13,25 @@ object Typechecker {
 
   final case class TypeError(msg: String)
 
+  /** The type `infer` computed for each expression node, keyed by node
+    * identity: equal nodes in different scopes can have different types
+    * (`x + y` over Str params in one function, Int params in another). */
+  final class Types private[Typechecker] (
+      m: java.util.IdentityHashMap[Expr, UdType]) {
+    /** TAny for a node the checker never reached. */
+    def apply(e: Expr): UdType = { val t = m.get(e); if (t == null) TAny else t }
+  }
+
+  final case class Checked(errors: Seq[TypeError], types: Types)
+
+  /** Literal string types decay to Str, sized ints to Int, for operator
+    * purposes (ranges are runtime boundaries, not operator types). */
+  def decay(t: UdType): UdType = t match {
+    case TValue(_)   => TStr
+    case TIntN(_, _) => TInt
+    case other       => other
+  }
+
   private final class TEnv(var vars: Map[String, UdType],
                            val parent: Option[TEnv]) {
     def lookup(n: String): Option[UdType] =
@@ -27,8 +46,12 @@ object Typechecker {
     def child(): TEnv = new TEnv(Map.empty, Some(this))
   }
 
-  def check(script: Script): Seq[TypeError] = {
+  def check(script: Script): Seq[TypeError] = infer(script).errors
+
+  /** Check a script, keeping the type of every expression it checked. */
+  def infer(script: Script): Checked = {
     val errs = Seq.newBuilder[TypeError]
+    val types = new java.util.IdentityHashMap[Expr, UdType]()
     def error(m: String): UdType = { errs += TypeError(m); TAny }
 
     // name -> (type params, body); non-generic decls have no params
@@ -111,8 +134,10 @@ object Typechecker {
       case (TMap(x), TMap(y))     => subtype(x, y)
       case (TTuple(xs), TTuple(ys)) =>
         xs.size == ys.size && xs.zip(ys).forall { case (x, y) => subtype(x, y) }
-      case (x, TUnion(ys))        => ys.exists(subtype(x, _))
+      // union source first: each branch must fit the target, which may
+      // itself be a union (`Float | Str` <: `Float | Str` branch-wise)
       case (TUnion(xs), y)        => xs.forall(subtype(_, y))
+      case (x, TUnion(ys))        => ys.exists(subtype(x, _))
       case (TRecord(xs, _), TRecord(ys, _)) => // width+depth structural
         // an absent-optional target field may be OMITTED from the source
         // literal — that is what absence means on the way out
@@ -160,7 +185,13 @@ object Typechecker {
           error(s"throw payload $t not <: declared effect $eff")
       }
 
-    def checkExpr(e: Expr, env: TEnv): UdType = e match {
+    def checkExpr(e: Expr, env: TEnv): UdType = {
+      val t = checkExpr0(e, env)
+      types.put(e, t)
+      t
+    }
+
+    def checkExpr0(e: Expr, env: TEnv): UdType = e match {
       case LitInt(_)   => TInt
       case LitFloat(_) => TFloat
       case LitStr(s)   => TValue(s) // literal carries its value type
@@ -172,15 +203,7 @@ object Typechecker {
         if (env.lookup("__glob_import__").isDefined) TAny
         else error(s"unbound identifier: $n"))
       case Bin(op, l, r) =>
-        val lt0 = checkExpr(l, env); val rt0 = checkExpr(r, env)
-        // literal string types decay to Str, sized ints to Int, for
-        // operator purposes (ranges are runtime boundaries, not op types)
-        def decay(t: UdType): UdType = t match {
-          case TValue(_)   => TStr
-          case TIntN(_, _) => TInt
-          case other       => other
-        }
-        val lt = decay(lt0); val rt = decay(rt0)
+        val lt = decay(checkExpr(l, env)); val rt = decay(checkExpr(r, env))
         if (lt == TAny || rt == TAny) op match {
           case Lt | Gt | Lte | Gte | Eq | Neq => TBool
           case _ => TAny // dynamic operand: checked at runtime
@@ -485,6 +508,6 @@ object Typechecker {
     root.define("__output__", resolve(script.output))
     script.decls.foreach(s => checkStmt(s, root))
     script.body.foreach(s => checkStmt(s, root))
-    errs.result()
+    Checked(errs.result(), new Types(types))
   }
 }

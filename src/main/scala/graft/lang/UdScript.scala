@@ -16,8 +16,11 @@ import org.apache.spark.sql.types._
   *    pure expressions lower to native select/filter/when plans — function
   *    calls are inlined (the reference's planned partial-evaluation pass,
   *    stackfolder.py, realized as Catalyst expressions: constant folding,
-  *    CSE and pushdown then come free). Recursion blocks inlining and
-  *    falls back to the kernel tier.
+  *    CSE and pushdown then come free). Each operator lowers to the
+  *    `UdFunctions` member for the operand types the typechecker computed
+  *    (Str `+` concatenates, Int `/` truncates, Int `and` is bitwise); an
+  *    operator with no member for its operand types, and recursion, keep
+  *    the script on the kernel tier.
   *  - KERNEL tier: everything else (recursion, for-loops with multi-emit,
   *    suppose/capture, closures) runs the Interp evaluator inside a typed
   *    flatMap — still distributed, pipelined, shuffle-free.
@@ -45,16 +48,19 @@ object UdScript {
                             initArgs: Seq[Expr])
   final case class LoopTier(plan: LoopPlan) extends Tier
 
+  /** `types` are the checker's expression types the column and loop tiers
+    * lower with; driver-only, so never serialized. */
   final case class Compiled(script: Script, tier: Tier,
                             typeErrors: Seq[Typechecker.TypeError],
+                            @transient types: Typechecker.Types,
                             libs: Map[String, Values.Value] = Map.empty) {
     val inputSchema: StructType = schemaOf(script.input)
     val outputSchema: StructType = schemaOf(script.output)
 
     /** Run over a DataFrame whose columns match the declared input. */
     def run(df: DataFrame): DataFrame = tier match {
-      case ColumnTier   => Lowering.runColumn(script, df)
-      case LoopTier(lp) => Lowering.runCountedLoop(script, lp, df)
+      case ColumnTier   => Lowering.runColumn(script, types, df)
+      case LoopTier(lp) => Lowering.runCountedLoop(script, types, lp, df)
       case KernelTier   => Lowering.runKernel(script, df, libs)
     }
 
@@ -110,16 +116,16 @@ object UdScript {
     // resolve named/generic types in the IO declarations so schemas derive
     // (the checker re-resolves internally for body checking)
     val script = resolveIoTypes(script0)
-    val errs = Typechecker.check(script)
+    val Typechecker.Checked(errs, types) = Typechecker.infer(script)
     if (strict && errs.nonEmpty)
       throw CompileError(errs.map(_.msg).mkString("; "))
     val resolver = new LibResolver(libraries, libraryDirs)
     val libs = importsOf(script.decls)
       .map(name => name -> resolver.resolve(name)).toMap
-    val tier = Lowering.detectCountedLoop(script).map(LoopTier.apply)
+    val tier = Lowering.detectCountedLoop(script, types).map(LoopTier.apply)
       .getOrElse(
-        if (Lowering.columnExpressible(script)) ColumnTier else KernelTier)
-    Compiled(script, tier, errs, libs)
+        if (Lowering.columnExpressible(script, types)) ColumnTier else KernelTier)
+    Compiled(script, tier, errs, types, libs)
   }
 
   private def importsOf(stmts: Seq[Stmt]): Seq[String] =
@@ -260,8 +266,10 @@ object UdScript {
     // general unions are tagged structs: {_tag, v0, v1, ...} — one nullable
     // slot per branch, discriminated by _tag (SURVEY §1.3); column-tier
     // `match` narrows with CASE over _tag
+    // _tag is nullable like the slots: ingest builds it from a nullable
+    // column, and a cast to a NOT NULL field fails analysis
     case TUnion(ts) => StructType(
-      StructField("_tag", StringType, nullable = false) +:
+      StructField("_tag", StringType, nullable = true) +:
         ts.zipWithIndex.map { case (t, i) =>
           StructField(s"v$i", sparkType(t), nullable = true)
         })
@@ -471,11 +479,71 @@ object UdScript {
 /** The two lowering paths. */
 private[lang] object Lowering {
   import UdScript._
+  import graft.functions.{UdFunctions => F}
+
+  private type Op1 = Column => Column
+  private type Op2 = (Column, Column) => Column
+
+  /** The column tier's operator table: the `UdFunctions` member for a
+    * binary operator over the checker's operand types, decayed as the
+    * checker decays them. None (an operand typed Any, a mixed pair, a
+    * shift by anything but an Int literal) keeps the script on the kernel
+    * tier. */
+  def binaryOp(op: BinOp, l: UdType, r: UdType, rhs: Expr): Option[Op2] = {
+    val same = Some(Typechecker.decay(l)).filter(_ == Typechecker.decay(r))
+    def num(int: Op2, float: Op2) =
+      same.collect[Op2] { case TInt => int; case TFloat => float }
+    def logic(bool: Op2, int: Op2) =
+      same.collect[Op2] { case TBool => bool; case TInt => int }
+    def ordered(f: Op2) =
+      same.collect[Op2] { case TInt | TFloat | TStr => f }
+    op match {
+      case Add => same.collect[Op2] {
+        case TInt | TFloat => F.add; case TStr => F.addStr }
+      case Sub => num(F.sub, F.sub)
+      case Mul => num(F.mul, F.mul)
+      case Div => num(F.divInt, F.divFloat)
+      case Mod => num(F.mod, F.mod)
+      case Pow => num(F.powInt, F.powFloat)
+      case Min => num(F.min2, F.min2)
+      case Max => num(F.max2, F.max2)
+      case And => logic(F.andBool, F.andInt)
+      case Or  => logic(F.orBool, F.orInt)
+      case Xor => logic(F.xorBool, F.xorInt)
+      case Shl | Shr => (same, rhs) match {
+        case (Some(TInt), LitInt(n)) if n.isValidInt =>
+          Some((a, _) => if (op == Shl) F.shl(a, n.toInt) else F.shr(a, n.toInt))
+        case _ => None
+      }
+      case Lt  => ordered(F.lt)
+      case Gt  => ordered(F.gt)
+      case Lte => ordered(F.lte)
+      case Gte => ordered(F.gte)
+      // deep equality is false across types, which Spark would cast
+      // together: the two sides must ride as the same Spark type
+      case Eq | Neq =>
+        def carrier(t: UdType) =
+          if (t == TAny) None else scala.util.Try(sparkType(t)).toOption
+        Option.when[Op2](l == TNone || r == TNone ||
+            carrier(l).exists(carrier(r).contains))(
+          if (op == Eq) F.eq else F.neq)
+    }
+  }
+
+  /** The unary half of the operator table. */
+  def unaryOp(op: UnOp, t: UdType): Option[Op1] =
+    (op, Typechecker.decay(t)) match {
+      case (Not, TBool)         => Some(F.notBool)
+      case (Not, TInt)          => Some(F.notInt)
+      case (Neg, TInt | TFloat) => Some(F.neg)
+      case (Abs, TInt | TFloat) => Some(F.abs1)
+      case _                    => None
+    }
 
   /** Purity/inlinability of one expression against a script's decls —
     * shared by columnExpressible and detectCountedLoop. */
-  def exprOkIn(script: Script)(e0: Expr, stack0: Set[String],
-                               bound0: Set[String]): Boolean = {
+  def exprOkIn(script: Script, types: Typechecker.Types)(e0: Expr,
+      stack0: Set[String], bound0: Set[String]): Boolean = {
     val funcs: Map[String, FuncStmt] = script.decls.collect {
       case f: FuncStmt => f.name -> f
     }.toMap
@@ -489,8 +557,11 @@ private[lang] object Lowering {
           true
         case Id(n) =>
           bound.contains(n) || lets.get(n).exists(exprOk(_, stack, bound))
-        case Bin(_, l, r) => exprOk(l, stack, bound) && exprOk(r, stack, bound)
-        case Un(_, x)     => exprOk(x, stack, bound)
+        case Bin(op, l, r) =>
+          binaryOp(op, types(l), types(r), r).isDefined &&
+            exprOk(l, stack, bound) && exprOk(r, stack, bound)
+        case Un(op, x) =>
+          unaryOp(op, types(x)).isDefined && exprOk(x, stack, bound)
         case Cond(cs, o) =>
           cs.forall { case (c, t) =>
             exprOk(c, stack, bound) && exprOk(t, stack, bound)
@@ -552,8 +623,8 @@ private[lang] object Lowering {
   /** Column-tier eligibility: body is a sequence of OutStmt / IfStmt
     * (whose blocks contain only OutStmt/IfStmt), and every expression is
     * pure + inlinable (no recursion, no lambdas-as-values, no suppose). */
-  def columnExpressible(script: Script): Boolean = {
-    val ok = exprOkIn(script) _
+  def columnExpressible(script: Script, types: Typechecker.Types): Boolean = {
+    val ok = exprOkIn(script, types) _
 
     def stmtOk(s: Stmt): Boolean = s match {
       case OutStmt(e)     => ok(e, Set.empty, Set.empty)
@@ -574,7 +645,8 @@ private[lang] object Lowering {
     * other argument passed through unchanged. Such a kernel is
     * `explode(sequence(...))` — 300k interpreter activations become one
     * codegen'd generator (VERDICT r1 item 7). */
-  def detectCountedLoop(script: Script): Option[UdScript.LoopPlan] = {
+  def detectCountedLoop(script: Script, types: Typechecker.Types)
+      : Option[UdScript.LoopPlan] = {
     val procs: Map[String, FuncStmt] = script.decls.collect {
       case f: FuncStmt => f.name -> f
     }.toMap
@@ -622,8 +694,8 @@ private[lang] object Lowering {
                 }
                 pnames = p.params.map(_._1).toSet
                 // outE must be pure, non-recursive, closed over the params
-                if exprOkIn(script)(outE, Set(pname), pnames)
-                if initArgs.forall(exprOkIn(script)(_, Set(pname), Set.empty))
+                if exprOkIn(script, types)(outE, Set(pname), pnames)
+                if initArgs.forall(exprOkIn(script, types)(_, Set(pname), Set.empty))
                 // the last EMITTED value x satisfies x - step (the caller)
                 // still passing the guard; solve per guard shape for the
                 // sequence() stop bound (emission happens before the
@@ -651,7 +723,8 @@ private[lang] object Lowering {
 
   /** Compiles uDLang expressions to Columns over one DataFrame — shared by
     * the column tier and the counted-loop tier. */
-  private[lang] final class ColumnCompiler(script: Script, df: DataFrame) {
+  private[lang] final class ColumnCompiler(script: Script,
+      types: Typechecker.Types, df: DataFrame) {
     private val funcs: Map[String, FuncStmt] = script.decls.collect {
       case f: FuncStmt => f.name -> f
     }.toMap
@@ -731,31 +804,11 @@ private[lang] object Lowering {
         binds.getOrElse(n,
           lets.get(n).map(colOf(_, binds)).getOrElse(
             throw CompileError(s"unbound in column tier: $n")))
+      // columnExpressible admitted the script only if both tables have
+      // a member for every operator
       case Bin(op, l, r) =>
-        val (a, b) = (colOf(l, binds), colOf(r, binds))
-        op match {
-          case Add =>
-            if (isStrTyped(l, r)) concat(a, b) else a + b
-          case Sub => a - b
-          case Mul => a * b
-          case Div =>
-            if (isIntExpr(l) && isIntExpr(r)) call_function("div", a, b)
-            else a / b
-          case Mod => a % b
-          case Pow => pow(a, b)
-          case Min => least(a, b)
-          case Max => greatest(a, b)
-          case And => a && b
-          case Or  => a || b
-          case Xor => a =!= b
-          case Shl | Shr => throw CompileError("shift needs literal in column tier")
-          case Lt => a < b;   case Gt => a > b
-          case Lte => a <= b; case Gte => a >= b
-          case Eq => a <=> b; case Neq => !(a <=> b)
-        }
-      case Un(Not, x) => !colOf(x, binds)
-      case Un(Neg, x) => -colOf(x, binds)
-      case Un(Abs, x) => abs(colOf(x, binds))
+        binaryOp(op, types(l), types(r), r).get(colOf(l, binds), colOf(r, binds))
+      case Un(op, x) => unaryOp(op, types(x)).get(colOf(x, binds))
       case Cond(cases, otherwise) =>
         val w = cases.foldLeft[Option[Column]](None) {
           case (None, (c, t)) =>
@@ -829,40 +882,6 @@ private[lang] object Lowering {
       case BlockExpr(Seq(), result) => colOf(result, binds)
       case other =>
         throw CompileError(s"not column-expressible: $other")
-    }
-
-    def isStrTyped(l: Expr, r: Expr): Boolean = {
-      def isStr(e: Expr): Boolean = e match {
-        case LitStr(_) => true
-        case In        => script.input == TStr ||
-          script.input.isInstanceOf[TValue] || (script.input match {
-            case TUnion(ts) => ts.forall(_.isInstanceOf[TValue])
-            case _          => false
-          })
-        case Bin(Add, a, b) => isStr(a) || isStr(b)
-        case Dot(In, f) => script.input match {
-          case TRecord(fs, _) => fs.exists(x => x.name == f &&
-            (x.t == TStr || x.t.isInstanceOf[TValue]))
-          case _ => false
-        }
-        case _ => false
-      }
-      isStr(l) || isStr(r)
-    }
-
-    def isIntExpr(e: Expr): Boolean = {
-      def intish(t: UdType): Boolean =
-        t == TInt || t.isInstanceOf[TIntN]
-      e match {
-      case LitInt(_) => true
-      case In        => intish(script.input)
-      case Dot(In, f) => script.input match {
-        case TRecord(fs, _) => fs.exists(x => x.name == f && intish(x.t))
-        case _ => false
-      }
-      case Bin(Add | Sub | Mul | Div | Mod, a, b) => isIntExpr(a) && isIntExpr(b)
-      case _ => false
-      }
     }
 
     /** Declared type of input-rooted expressions (enough for union
@@ -946,8 +965,9 @@ private[lang] object Lowering {
     * runtime, while a column-tier out whose expression evaluates to null
     * emits a null row — a column-tier body can only produce none from
     * nullable data, which the eligibility check doesn't admit today. */
-  def runColumn(script: Script, df: DataFrame): DataFrame = {
-    val cc = new ColumnCompiler(script, df)
+  def runColumn(script: Script, types: Typechecker.Types,
+                df: DataFrame): DataFrame = {
+    val cc = new ColumnCompiler(script, types, df)
     def colOf(e: Expr, binds: Map[String, Column]): Column = cc.colOf(e, binds)
 
     // collect control paths: (guard, outExpr)
@@ -987,17 +1007,17 @@ private[lang] object Lowering {
     * stop clamps at the guard bound: the kernel always emits the first
     * value, then steps while the guard holds, so the emitted range is
     * v0 .. least/greatest(v0, bound). */
-  def runCountedLoop(script: Script, lp: UdScript.LoopPlan, df: DataFrame)
-      : DataFrame = {
+  def runCountedLoop(script: Script, types: Typechecker.Types,
+                     lp: UdScript.LoopPlan, df: DataFrame): DataFrame = {
     val loopCol = "__ud_loop"
-    val cc = new ColumnCompiler(script, df)
+    val cc = new ColumnCompiler(script, types, df)
     val initV = cc.colOf(lp.initArgs(lp.vi), Map.empty).cast(LongType)
     val stop =
       if (lp.step < 0) least(initV, lit(lp.bound))
       else greatest(initV, lit(lp.bound))
     val df2 = df.withColumn(loopCol,
       explode(sequence(initV, stop, lit(lp.step))))
-    val cc2 = new ColumnCompiler(script, df2)
+    val cc2 = new ColumnCompiler(script, types, df2)
     val binds = lp.params.zipWithIndex.map { case ((pn, _), i) =>
       pn -> (if (i == lp.vi) df2(loopCol)
              else cc2.colOf(lp.initArgs(i), Map.empty))

@@ -65,7 +65,6 @@ object Flac extends Serializable {
     }
     def alignByte(): Unit = if (nAcc > 0) writeBits(0, 8 - nAcc)
     def toBytes: Array[Byte] = { alignByte(); bos.toByteArray }
-    def sizeBytes: Int = bos.size() + (if (nAcc > 0) 1 else 0)
   }
 
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
@@ -91,7 +90,6 @@ object Flac extends Serializable {
       q
     }
     def alignByte(): Unit = if (bitPos != 0) { bitPos = 0; pos += 1 }
-    def atByteBoundary: Boolean = bitPos == 0
     def remaining: Int = bytes.length - pos
   }
 

@@ -812,7 +812,6 @@ object H264 {
       qpDelta: Int = 0)
 
   private val MB_I4x4 = 0
-  private val MB_I16x16 = 1
   val MB_PCM = 2
 
   /** Scan-order coeffs → raster 4x4 via [[zigzag4x4]], with position 0

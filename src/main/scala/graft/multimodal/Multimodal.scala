@@ -669,8 +669,6 @@ object Multimodal extends Serializable {
     }
   }
 
-  final case class ImageDedupRow(keep_id: Long, n_dups: Long, phash: Long)
-
   /** Perceptual-hash image dedup (the LAION-style near-dup pass over
     * decoded image CONTENT, not bytes): dHash — the 8×8 grid of
     * horizontal gradient signs over a 9×8 grayscale — computed from
@@ -1048,9 +1046,6 @@ object Multimodal extends Serializable {
       new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
     AudioSpi.write(ais, javax.sound.sampled.AudioFileFormat.Type.AIFF)
   }
-
-  final case class AudioDedupRow(keep_id: Long, n_dups: Long,
-                                 n_frames: Long, energy: Long)
 
   /** Audio CONTENT dedup across container formats: planted duplicate
     * blocks carry the same PCM, alternately encoded as RIFF/WAVE

@@ -26,12 +26,6 @@ import org.apache.spark.sql.types._
   */
 object JsonRecords {
 
-  /** Key-presence probe: true iff the JSON object has the key (even if
-    * its value is null) — json_object_keys distinguishes what from_json
-    * cannot. */
-  def hasField(payload: Column, name: String): Column =
-    coalesce(array_contains(json_object_keys(payload), name), lit(false))
-
   /** True union INGEST (manual.md:112-115): a declared `Int | Str` field
     * arrives as its RAW JSON value, and the tag is inferred at validation
     * time from the value's JSON type — the payload is parsed ONCE into a
@@ -302,7 +296,7 @@ object JsonRecords {
   // LinkedHashMap (object, in key order). jackson-core's streaming parser
   // builds it; databind's ObjectMapper would load ~400 classes at start-up.
 
-  private case object JsonNull
+  private[graft] case object JsonNull
 
   private object Malformed extends RuntimeException(null, null, false, false)
 
@@ -312,7 +306,7 @@ object JsonRecords {
     * for `try_parse_json`: empty, invalid, or — when `strict` — holding a
     * duplicate key; `from_json` keeps the last of duplicates instead).
     * Text after the first value is ignored, as by both. */
-  private def parseOrNull(text: String, strict: Boolean): Any = {
+  private[graft] def parseOrNull(text: String, strict: Boolean): Any = {
     import com.fasterxml.jackson.core.JsonToken._
     val p = jsonFactory.createParser(text)
     def value(t: JsonToken): Any = t match {

@@ -54,9 +54,6 @@ object ValidatedIngest {
   def rangeCheck(c: String, lo: Double, hi: Double): Rule = _ =>
     when(col(c) < lo || col(c) > hi, concat(lit(s"out_of_range:$c="), col(c)))
 
-  def notNull(c: String): Rule = _ =>
-    when(col(c).isNull, lit(s"null:$c"))
-
   /** Apply rules under the given mode. First failing rule wins the reason.
     */
   def validate(df: DataFrame, rules: Seq[Rule], mode: Mode): Validated = {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.kernel.{Kernel, UdException}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -9,33 +8,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   *
   * The reference's lifecycle — read → exec → present per record, stateless
   * kernel, 0..n ordered outputs (manual.md:26-41) — is exactly a streaming
-  * flatMap: the same Kernel value runs unchanged over a batch Dataset or a
-  * streaming one. Statelessness makes every kernel trivially correct under
-  * micro-batch retries (idempotent per record, no cross-record state).
+  * flatMap: `Kernel.run` and `Kernel.runEither` take a batch Dataset or a
+  * streaming one unchanged. Statelessness makes every kernel trivially
+  * correct under micro-batch retries (idempotent per record, no
+  * cross-record state).
   *
   * Beyond parity, the planned `udmonad` stateful driver (README.md:61) maps
   * to flatMapGroupsWithState / transformWithState; `statefulCount` and
-  * `sessionize` below are the canonical shapes (running aggregate, session
-  * windows with timeout). At scale: state is partitioned by key across
-  * executors, checkpointed incrementally via the state store — design
-  * points the single-process reference defers entirely.
+  * `statefulCountTws` below are the canonical shape (a running aggregate)
+  * on each. At scale: state is partitioned by key across executors,
+  * checkpointed incrementally via the state store — design points the
+  * single-process reference defers entirely.
   */
 object StreamKernel {
-
-  /** Run a kernel over any Dataset — batch or streaming; the plan is
-    * identical (flatMap), Spark picks execution. */
-  def transform[I, O: Encoder](ds: Dataset[I], k: Kernel[I, O]): Dataset[O] =
-    ds.flatMap(k(_))
-
-  /** Streaming run with dead-letter routing (uDLang --warn/--skip modes):
-    * UdException-aborted records become onError outputs. */
-  def transformWithDlq[I, O: Encoder](
-      ds: Dataset[I], k: Kernel[I, O],
-      onError: (I, UdException) => Iterator[O]): Dataset[O] =
-    ds.flatMap { in =>
-      try k(in).toSeq.iterator
-      catch { case e: UdException => onError(in, e) }
-    }
 
   /** udmonad shape 1: per-key running aggregate with explicit state.
     * (key, runningCount, runningSum) emitted on every update. */

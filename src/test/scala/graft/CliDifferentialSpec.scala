@@ -220,6 +220,121 @@ class CliDifferentialSpec extends SparkSpec {
     assert(runs("skip").code == 1)
   }
 
+  /** `src` compiles to `tier` and agrees on both paths over `input`. */
+  private def agreeIn(tier: String, src: String, input: String*): Map[String, Run] = {
+    val path = script(src)
+    val compiled = exec(List("--compile", path), Array.emptyByteArray)
+    assert(compiled.out.contains(s"tier: $tier"), compiled.out.take(3))
+    agree(path, lines(input: _*))
+  }
+
+  // Operators lower from the typechecker's operand types through
+  // UdFunctions; the scripts below are the ones whose types the column
+  // tier could not see from syntax alone.
+
+  test("Str + Str of function parameters concatenates on both paths") {
+    val runs = agreeIn("ColumnTier", """script "cat";
+      |input  {a: Str, b: Str};
+      |output {s: Str};
+      |func cat(x: Str, y: Str) -> Str { x + y }
+      |out {s: cat(in.a, in.b)};""".stripMargin,
+      """{"a": "foo", "b": "bar"}""", """{"a": "", "b": "x"}""",
+      """{"a": 1, "b": "x"}""")
+    assert(runs("dlq").out == Seq("""{"s":"foobar"}""", """{"s":"x"}"""))
+  }
+
+  test("Str + a let-bound Str concatenates on both paths") {
+    val runs = agreeIn("ColumnTier", """script "shout";
+      |input  {a: Str};
+      |output {s: Str};
+      |let suffix = "!";
+      |func shout(x: Str) -> Str { x + suffix }
+      |out {s: shout(in.a)};""".stripMargin,
+      """{"a": "hey"}""", """{"a": null}""")
+    assert(runs("dlq").out == Seq("""{"s":"hey!"}"""))
+  }
+
+  test("Int / Int of a function parameter truncates on both paths") {
+    val runs = agreeIn("ColumnTier", """script "div";
+      |input  {a: Int};
+      |output {y: Int};
+      |func f(n: Int) -> Int { n / 2 * 2 }
+      |out {y: f(in.a)};""".stripMargin,
+      """{"a": 7}""", """{"a": -7}""", """{"a": 1.5}""")
+    assert(runs("dlq").out == Seq("""{"y":-6}""", """{"y":6}"""))
+  }
+
+  test("and / xor on Int are bitwise on both paths") {
+    val runs = agreeIn("ColumnTier", """script "bits";
+      |input  {a: Int, b: Int};
+      |output {x: Int, y: Int};
+      |out {x: in.a xor in.b, y: in.a and in.b};""".stripMargin,
+      """{"a": 6, "b": 3}""", """{"a": -1, "b": 12}""", "not json")
+    assert(runs("dlq").out == Seq("""{"x":-13,"y":12}""", """{"x":5,"y":2}"""))
+  }
+
+  test("or on Int is bitwise, on Bool logical, on both paths") {
+    val runs = agreeIn("ColumnTier", """script "or";
+      |input  {a: Int, b: Int, p: Bool};
+      |output {x: Int, q: Bool};
+      |out {x: in.a or in.b, q: in.p or in.a > 5};""".stripMargin,
+      """{"a": 6, "b": 3, "p": false}""", """{"a": 1, "b": 8, "p": true}""",
+      """{"a": 1, "b": 8}""")
+    assert(runs("dlq").out == Seq("""{"x":7,"q":true}""", """{"x":9,"q":true}"""))
+  }
+
+  test("shifts by an Int literal lower to the column tier") {
+    val runs = agreeIn("ColumnTier", """script "shifts";
+      |input  {a: Int};
+      |output {l: Int, r: Int};
+      |out {l: in.a << 1, r: in.a >> 1};""".stripMargin,
+      """{"a": 6}""", """{"a": -7}""", """{"a": "6"}""")
+    assert(runs("dlq").out == Seq("""{"l":-14,"r":-4}""", """{"l":12,"r":3}"""))
+  }
+
+  test("equal expressions in two scopes keep their own types") {
+    val runs = agreeIn("ColumnTier", """script "scopes";
+      |input  {a: Int, b: Int, s: Str, t: Str};
+      |output {n: Int, j: Str};
+      |func f(x: Int, y: Int) -> Int { x + y }
+      |func g(x: Str, y: Str) -> Str { x + y }
+      |out {n: f(in.a, in.b), j: g(in.s, in.t)};""".stripMargin,
+      """{"a": 1, "b": 2, "s": "p", "t": "q"}""")
+    assert(runs("dlq").out == Seq("""{"n":3,"j":"pq"}"""))
+  }
+
+  test("operators with no column member keep the script on the kernel tier") {
+    // a shift by a column, an operand typed Any (a `$` lambda's
+    // parameter), and == across Int and Float, which deep equality calls
+    // false and Spark would widen to true
+    agreeIn("KernelTier", """script "shift";
+      |input  {a: Int, b: Int};
+      |output {s: Int};
+      |out {s: in.a << in.b};""".stripMargin,
+      """{"a": 3, "b": 2}""", """{"a": 3}""")
+    agreeIn("KernelTier", """script "any";
+      |input  {xs: [Int]};
+      |output {ys: [Int]};
+      |out {ys: [in.xs | $ * 2]};""".stripMargin,
+      """{"xs": [1, 2]}""", """{"xs": null}""")
+    val runs = agreeIn("KernelTier", """script "eq";
+      |input  {a: Int, f: Float};
+      |output {e: Bool};
+      |out {e: in.a == in.f};""".stripMargin,
+      """{"a": 1, "f": 1.0}""")
+    assert(runs("dlq").out == Seq("""{"e":false}"""))
+  }
+
+  test("a general union passes through on both paths") {
+    val runs = agreeIn("ColumnTier", """script "union";
+      |input  {x: Int | Str};
+      |output {x: Int | Str};
+      |out {x: in.x};""".stripMargin,
+      """{"x": 5}""", """{"x": "hi"}""", """{"x": 1.5}""")
+    assert(runs("dlq").out ==
+      Seq("""{"x":{"_tag":"Int","v0":5}}""", """{"x":{"_tag":"Str","v1":"hi"}}"""))
+  }
+
   test("msgpack stdin/stdout round-trips like the JSON run, on both paths") {
     val json = lines(
       """{"id": 1, "note": "x", "score": 2.5}""",

@@ -234,6 +234,43 @@ class CliSpec extends SparkSpec {
       Vector("items" -> Vector(1L, 2L, 3L)))
   }
 
+  test("lift routes a malformed line or an integer outside i64 by its mode") {
+    def lift(mode: List[String], stdin: String): (Int, Array[Byte], String) = {
+      val out = new ByteArrayOutputStream()
+      val err = new ByteArrayOutputStream()
+      val code = Main.exitCode(List("lift", "--json") ++ mode,
+        new ByteArrayInputStream(stdin.getBytes("UTF-8")), new PrintStream(out),
+        new PrintStream(err, true, "UTF-8"), Some(spark))
+      (code, out.toByteArray, err.toString("UTF-8"))
+    }
+    val (c1, o1, e1) = lift(Nil, """{"x": 18446744073709551616}""")
+    assert(c1 == 2 && o1.isEmpty)
+    assert(e1.trim == "error: invalid input: range:_payload")
+    val (c2, o2, e2) = lift(List("--warn"), Seq("""{"x": 1}""", "not json",
+      """{"x": -18446744073709551616}""", """{"x": [2, 9223372036854775807]}""")
+      .mkString("\n"))
+    assert(c2 == 0, e2)
+    assert(e2.linesIterator.toSeq == Seq(
+      "warning: dropped record: malformed_json:_payload",
+      "warning: dropped record: range:_payload"))
+    val b = ByteBuffer.wrap(o2)
+    assert(Msgpack.readValue(b) == Vector("x" -> 1L))
+    assert(Msgpack.readValue(b) == Vector("x" -> Vector(2L, Long.MaxValue)))
+    assert(!b.hasRemaining)
+  }
+
+  test("front-end output is UTF-8 whatever the platform charset") {
+    val src = tmpFile(".us",
+      "script \"a\";\ninput Str;\noutput Str;\nout \"ä\" + in;\n")
+    val jvm = new java.io.File(System.getProperty("java.home"), "bin/java")
+    val p = new ProcessBuilder(jvm.getPath, "-Dfile.encoding=US-ASCII",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.Main", "--dump-ast", src).redirectErrorStream(true).start()
+    val text = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() == 0, text)
+    assert(text.contains("\"ä\""), text)
+  }
+
   test("modules resolve from --libdir (and the script's own directory)") {
     val stdin = """{"doc_id": 1, "text": "cli"}""".getBytes("UTF-8")
     // explicit --libdir

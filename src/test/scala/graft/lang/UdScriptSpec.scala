@@ -213,6 +213,17 @@ class UdScriptSpec extends SparkSpec {
     assert(e2.msg.contains("output"))
   }
 
+  test("a union-typed body conforms to a declared union branch by branch") {
+    def func(ret: String) = s"""script "u";
+      |input Int; output Float | Str;
+      |func g(n: Int) -> $ret { if (n > 0) { 1.5 } else { "neg" } }
+      |out g(in);""".stripMargin
+    assert(UdScript.compile(func("Float | Str")).typeErrors.isEmpty)
+    assert(UdScript.compile(func("Str | Float")).typeErrors.isEmpty)
+    val e = intercept[UdScript.CompileError] { UdScript.compile(func("Float | Bool")) }
+    assert(e.msg.contains("func g body"))
+  }
+
   test("throw aborts a record (uDLang exception surface)") {
     val src = """script "thrower";
       |input Int; output Int;

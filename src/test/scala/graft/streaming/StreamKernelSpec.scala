@@ -20,7 +20,7 @@ class StreamKernelSpec extends SparkSpec {
     val k = Kernel[Int, Int] { (n, em) =>
       if (n % 2 == 0) { em.out(n); em.out(n * 10) } // multi-emit evens
     }
-    val q = StreamKernel.transform(input.toDS(), k)
+    val q = Kernel.run(input.toDS(), k)
       .writeStream.format("memory").queryName("kout").outputMode("append")
       .start()
     try {
@@ -39,7 +39,7 @@ class StreamKernelSpec extends SparkSpec {
       if (n < 0) throw UdException(s"neg:$n")
       em.out(s"ok:$n")
     }
-    val q = StreamKernel.transformWithDlq(input.toDS(), k,
+    val q = Kernel.runEither(input.toDS(), k,
         (i: Int, e: UdException) => Iterator(s"dlq:${e.message}"))
       .writeStream.format("memory").queryName("dlqout").outputMode("append")
       .start()
