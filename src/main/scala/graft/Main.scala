@@ -3,12 +3,12 @@ package graft
 import java.io.{ByteArrayOutputStream, InputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 
-import scala.collection.immutable.{ArraySeq, VectorMap}
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import graft.kernel.UdException
 import graft.lang.Ast._
-import graft.lang.{Interp, UdParser, UdScript}
+import graft.lang.{UdParser, UdScript}
 import graft.sources.{JsonRecords, Msgpack, ValidatedIngest}
 import org.apache.spark.{SparkException, SparkThrowable}
 import org.apache.spark.sql.{Row, SparkSession}
@@ -25,9 +25,10 @@ import org.apache.spark.sql.types._
   * in this thread with no SparkSession: each record is decoded (the same
   * row, presence flags and invalid reasons as the Spark sources), run
   * through `Interp` whatever its lowering tier, and rendered as `to_json`
-  * would, in constant memory. `--in`/`--out` paths are the parallel file
-  * legs a cluster job uses: they plan the script on Spark, and `--cores`
-  * applies to them only.
+  * would. JSON lines stream in constant memory; msgpack stdin is read
+  * whole, then decoded one record at a time. `--in`/`--out` paths are
+  * the parallel file legs a cluster job uses: they plan the script on
+  * Spark, and `--cores` applies to them only.
   *
   * Usage:
   *   graft.Main --dump-expr                     REPL: parse one expression per line
@@ -282,20 +283,6 @@ object Main {
     }
   }
 
-  /** A value in the shape a collected Spark row has: structs carry their
-    * schema (`rowToValue` and the msgpack writer look fields up by name)
-    * and arrays are ArraySeqs, as in a DLQ line printed from Spark. */
-  private def typed(v: Any, dt: DataType): Any = (v, dt) match {
-    case (r: Row, st: StructType) =>
-      new GenericRowWithSchema(st.fields.indices.map(i =>
-        typed(r.get(i), st.fields(i).dataType)).toArray, st)
-    case (xs: scala.collection.Seq[_], ArrayType(et, _)) =>
-      ArraySeq.from(xs.map(typed(_, et)))
-    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-      m.map { case (k, x) => k -> typed(x, vt) }.toMap
-    case _ => v
-  }
-
   /** The good rows on stdin, each with the input frame's columns: the
     * declared fields and `__present` flags of a record, or `value` of a
     * scalar. Invalid records follow `mode` here: abort stops the run,
@@ -332,11 +319,8 @@ object Main {
       }
     (c.script.input, opts.format) match {
       case (rec: TRecord, "msgpack") =>
-        val tagged = Msgpack.decodedSchema(rec)
-        goodRows(tagged, Msgpack.decodeFile(in.readAllBytes(), rec).map { r =>
-          val t = typed(r, tagged).asInstanceOf[Row]
-          (t, () => t.mkString("\t"))
-        })
+        goodRows(Msgpack.decodedSchema(rec),
+          Msgpack.decodeFile(in.readAllBytes(), rec).map(r => (r, () => r.mkString("\t"))))
       case (rec: TRecord, _) =>
         goodRows(Msgpack.decodedSchema(rec), jsonLines(JsonRecords.lineDecoder(rec)))
       case (_, "msgpack") =>
@@ -357,18 +341,15 @@ object Main {
     * message to stderr, as `runEither` does. */
   private def runLocal(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream): Unit = {
-    val outType = c.script.output
     val outSchema = c.outputSchema
-    val interp = new Interp(c.script, c.libs)
+    val kernel = UdScript.kernel(c.script, c.libs)
     val dlq = new LineBuffer(err)
     val text = new LineBuffer(out)
     val bytes = new java.io.BufferedOutputStream(out, 1 << 16)
     val emit: Row => Unit = (opts.format, scalarOut(c)) match {
-      case ("msgpack", true) =>
-        r => Msgpack.writeValue(bytes, typed(r.get(0), outSchema.fields(0).dataType))
+      case ("msgpack", true) => r => Msgpack.writeValue(bytes, r.get(0))
       case ("msgpack", false) =>
-        r => Msgpack.writeRows(bytes, outSchema.fieldNames.toSeq,
-          Iterator(typed(r, outSchema).asInstanceOf[Row]))
+        r => Msgpack.writeRows(bytes, outSchema.fieldNames.toSeq, Iterator(r))
       case (_, true) =>
         r => text += JsonRecords.render(r.get(0), outSchema.fields(0).dataType)
       case (_, false) => r => text += JsonRecords.render(r, outSchema)
@@ -376,12 +357,8 @@ object Main {
     try {
       val (_, rows) = stdinRows(c, opts, in, dlq)
       rows.foreach { r =>
-        val outs = Vector.newBuilder[Row]
-        try {
-          interp.run(UdScript.rowToValue(r, c.script.input),
-            v => outs += UdScript.valueToRow(v, outType, outSchema))
-          outs.result().foreach(emit)
-        } catch {
+        try kernel(r).foreach(emit)
+        catch {
           case e: UdException if opts.mode == "dlq" =>
             dlq += (r.toSeq :+ e.message).mkString("\t")
           case e: UdException => throw RunError(e.message)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   *    operand types it computed (`Lowering.binaryOp`): `add/sub/...` see
   *    same-typed operands and `addStr` is the Str+Str concat arm
   *    (doc-intended, examples/hello.us).
-  *  - integer division truncates (ir.rs:607-630) → Spark `div`.
+  *  - integer division truncates (ir.rs:607-630) → Spark `div`; a zero
+  *    divisor raises the VM's error, a zero Float divisor gives IEEE ±∞/NaN.
   *  - Pow on Int silently casts exponent to u32 (ir.rs:592) → long pow.
   *  - And/Or/Xor are dual-use: Bool logical / Int bitwise (ir.rs:632-645).
   *  - comparisons: Int, Float, and Str lexicographic (ir.rs:655-677).
@@ -33,10 +34,19 @@ object UdFunctions {
   def addStr(a: Column, b: Column): Column = concat(a, b)
   def sub(a: Column, b: Column): Column = a - b
   def mul(a: Column, b: Column): Column = a * b
-  /** Int division truncates; Float division is IEEE. */
-  def divInt(a: Column, b: Column): Column = call_function("div", a, b)
-  def divFloat(a: Column, b: Column): Column = a / b
-  def mod(a: Column, b: Column): Column = a % b
+  /** Int `/` truncates; a zero divisor stops the record, as in the VM
+    * (Spark's `div` and `%` would give null). */
+  def divInt(a: Column, b: Column): Column =
+    when(b === 0, raise_error(lit("div by zero")))
+      .otherwise(call_function("div", a, b))
+  def modInt(a: Column, b: Column): Column =
+    when(b === 0, raise_error(lit("mod by zero"))).otherwise(a % b)
+  /** Float `/` and `%` are IEEE at a zero divisor too: a * b^-1 is a / b
+    * for b = ±0, the sign of the zero included. */
+  def divFloat(a: Column, b: Column): Column =
+    when(b === 0, a * pow(b, -1.0)).otherwise(a / b)
+  def modFloat(a: Column, b: Column): Column =
+    when(b === 0, lit(Double.NaN)).otherwise(a % b)
   /** Int pow: exponent treated as non-negative int (ir.rs:591-595). */
   def powInt(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.pow(a, b).cast(LongType)

@@ -1,6 +1,7 @@
 package graft.lang
 
 import Ast._
+import scala.jdk.CollectionConverters._
 
 /** Static typechecker — full, in-pipeline (the reference wrote one but
   * never wired it in: typechecker.rs is invoked only by its own tests).
@@ -20,6 +21,7 @@ object Typechecker {
       m: java.util.IdentityHashMap[Expr, UdType]) {
     /** TAny for a node the checker never reached. */
     def apply(e: Expr): UdType = { val t = m.get(e); if (t == null) TAny else t }
+    def nodes: Iterator[Expr] = m.keySet.iterator.asScala
   }
 
   final case class Checked(errors: Seq[TypeError], types: Types)

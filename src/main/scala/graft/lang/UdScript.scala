@@ -1,16 +1,17 @@
 package graft.lang
 
-import graft.kernel.{Emitter, Kernel, UdException}
+import graft.kernel.UdException
 import Ast._
 import Values._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Compile + run uDLang scripts on Spark — the engine's front door.
   *
-  * Pipeline (SURVEY.md §7.1): parse → typecheck → lower. Lowering is
-  * two-tier:
+  * Pipeline (SURVEY.md §7.1): parse → typecheck → lower. Lowering has
+  * three tiers:
   *
   *  - COLUMN tier: bodies consisting of conditional/unconditional `out` of
   *    pure expressions lower to native select/filter/when plans — function
@@ -20,14 +21,18 @@ import org.apache.spark.sql.types._
   *    `UdFunctions` member for the operand types the typechecker computed
   *    (Str `+` concatenates, Int `/` truncates, Int `and` is bitwise); an
   *    operator with no member for its operand types, and recursion, keep
-  *    the script on the kernel tier.
+  *    the script on the kernel tier. Conditions lower through the
+  *    interpreter's truthiness for their checked type.
+  *  - COUNTED-LOOP tier: a tail-recursive `out`-then-step proc (the
+  *    count.us shape) lowers to `explode(sequence(...))` (`LoopPlan`).
   *  - KERNEL tier: everything else (recursion, for-loops with multi-emit,
   *    suppose/capture, closures) runs the Interp evaluator inside a typed
   *    flatMap — still distributed, pipelined, shuffle-free.
   *
   * The declared input/output types become the DataFrame schemas: records
   * map to StructType columns; scalar input reads the single column of the
-  * input frame; scalar output is a single `out` column.
+  * input frame; scalar output is a single `out` column. Kernel-tier
+  * outputs are encoded from the declared output type (`valueToRow`).
   */
 object UdScript {
 
@@ -67,14 +72,15 @@ object UdScript {
     /** Run with the reference's dead-letter posture (README udmonad): a
       * record whose evaluation throws routes its INPUT row + exception
       * message to the second leg; clean records emit their outputs to
-      * the first. Kernel tier only — the column tier has no throw. */
-    def runEither(df: DataFrame): (DataFrame, DataFrame) = tier match {
-      case KernelTier => Lowering.runKernelEither(script, df, libs)
-      case _ =>
-        (run(df), df.sparkSession.createDataFrame(
-          df.sparkSession.sparkContext.emptyRDD[Row],
-          df.schema.add("_error", StringType)))
-    }
+      * the first. The column and loop tiers have no throw, but an Int `/`
+      * or `%` stops a record on a zero divisor: such a script runs on the
+      * kernel here, which routes that record instead of failing the job. */
+    def runEither(df: DataFrame): (DataFrame, DataFrame) =
+      if (tier == KernelTier || Lowering.mayRaise(types))
+        Lowering.runKernelEither(script, df, libs)
+      else (run(df), df.sparkSession.createDataFrame(
+        df.sparkSession.sparkContext.emptyRDD[Row],
+        df.schema.add("_error", StringType)))
   }
 
   /** Compile a script. strict=false downgrades type errors to warnings
@@ -277,20 +283,27 @@ object UdScript {
     case other => throw CompileError(s"no schema for $other")
   }
 
-  /** The _tag discriminator for a union branch type. */
+  /** The _tag discriminator for a union branch type — one name per type,
+    * used by ingest, egress and the column tier's `match` alike. Sized
+    * ints are spelled as the parser reads them (`U8`, `I16`, `U64`). */
   def tagOf(t: UdType): String = t match {
     case TInt    => "Int"
+    case n: TIntN => s"${if (n.signed) "I" else "U"}${n.bits}"
     case TFloat  => "Float"
     case TFloat32 => "F32"
     case TPoint  => "Point"
     case TStr    => "Str"
     case TBool   => "Bool"
     case TNone   => "None"
+    case TAny    => "Any"
     case TValue(s)   => s"val:$s"
     case TList(_)    => "list"
     case TMap(_)     => "map"
     case TRecord(_, _) => "record"
-    case other       => other.toString
+    case TTuple(_)   => "tuple"
+    case TOption(x)  => tagOf(x)
+    case TUnion(_)   => "union"
+    case other => throw CompileError(s"no union branch type: $other")
   }
 
   def schemaOf(t: UdType): StructType = t match {
@@ -363,14 +376,9 @@ object UdScript {
         if (x.isNullAt(i)) VNone else anyToValue(x.get(i), t2)
       }.toVector)
     case (x: Row, TUnion(ts)) if !ts.forall(_.isInstanceOf[TValue]) =>
-      // tagged-struct union: decode the active branch slot
-      val tag = x.getString(x.fieldIndex("_tag"))
-      val i = ts.indexWhere(t => tagOf(t) == tag)
-      if (i < 0) VNone
-      else {
-        val slot = x.get(x.fieldIndex(s"v$i"))
-        if (slot == null) VNone else anyToValue(slot, ts(i))
-      }
+      // tagged-struct union {_tag, v0, v1, ...}: decode the active slot
+      val i = ts.indexWhere(t => tagOf(t) == x.getString(0))
+      if (i < 0 || x.isNullAt(i + 1)) VNone else anyToValue(x.get(i + 1), ts(i))
     case (x: Row, rt: TRecord)  => rowToValue(x, rt)
     case (x: Map[_, _], TMap(vt)) =>
       VMap(x.toVector.map { case (k, v) =>
@@ -379,82 +387,97 @@ object UdScript {
     case (x, _) => VStr(String.valueOf(x))
   }
 
-  def valueToAny(v: Value, dt: DataType): Any = (v, dt) match {
-    case (VNone, _)            => null
-    case (VInt(i), LongType)   => i
-    case (VInt(i), DoubleType) => i.toDouble
-    case (VFloat(d), DoubleType) => d
-    case (VBool(b), BooleanType) => b
-    case (VStr(s), StringType) => s
-    case (v2, StringType)      => render(v2)
-    case (VList(xs), ArrayType(et, _)) => xs.map(valueToAny(_, et))
-    case (v2, st: StructType) if st.fields.nonEmpty &&
-        st.fields(0).name == "_tag" =>
-      // tagged-struct union: route the value into the first slot whose
-      // Spark type accepts it, tag accordingly
-      def accepts(x: Value, dt2: DataType): Boolean = (x, dt2) match {
-        case (VInt(_), LongType) | (VFloat(_), DoubleType) |
-            (VStr(_), StringType) | (VBool(_), BooleanType) |
-            (VList(_), ArrayType(_, _)) | (_: VMap, _: MapType) => true
-        case (VPoint(_, _), st2: StructType) =>
-          st2.fieldNames.sameElements(Array("x", "y"))
-        case (_: VMap, _: StructType) => true
-        case _ => false
-      }
-      val slots = st.fields.drop(1)
-      val i = slots.indexWhere(f => accepts(v2, f.dataType))
-      if (i < 0) throw CompileError(s"no union slot for ${render(v2)}")
-      val tag = v2 match {
-        case VInt(_)   => "Int";  case VFloat(_) => "Float"
-        case VStr(_)   => "Str";  case VBool(_)  => "Bool"
-        case VPoint(_, _) => "Point"
-        case VList(_)  => "list"
-        case _: VMap =>
-          if (slots(i).dataType.isInstanceOf[StructType]) "record" else "map"
-        case other     => render(other)
-      }
-      Row.fromSeq(tag +: slots.indices.map(j =>
-        if (j == i) valueToAny(v2, slots(j).dataType) else null))
-    case (VPoint(x, y), _: StructType) => Row(x, y)
-    case (VTuple(xs), st: StructType) =>
-      Row.fromSeq(st.fields.toSeq.zip(xs).map { case (f, x) =>
-        valueToAny(x, f.dataType)
-      })
-    case (m: VMap, st: StructType) =>
-      Row.fromSeq(st.fields.toSeq.map { f =>
-        if (f.name.endsWith("__present"))
-          m.index.contains(f.name.stripSuffix("__present"))
-        else m.index.get(f.name).map(valueToAny(_, f.dataType)).orNull
-      })
-    case (m: VMap, MapType(_, vt, _)) =>
-      m.entries.map { case (k, x) => k -> valueToAny(x, vt) }.toMap
-    case (VFloat(d), LongType) => d.toLong // declared-boundary narrow
-    case _ => throw CompileError(s"cannot encode ${render(v)} as $dt")
+  /** The kernel tier's per-record function, for `runKernel`,
+    * `runKernelEither` and the CLI's in-process run: decode, `Interp`,
+    * `valueToRow`. A `throw` surfaces as UdException. */
+  def kernel(script: Script, libs: Map[String, Value]): Row => Vector[Row] = {
+    val interp = new Interp(script, libs)
+    interp.initEnv
+    val (inType, outType) = (script.input, script.output)
+    val outSchema = schemaOf(outType)
+    row => {
+      val buf = Vector.newBuilder[Row]
+      interp.run(rowToValue(row, inType), v => buf += valueToRow(v, outType, outSchema))
+      buf.result()
+    }
   }
 
-  /** Declared-boundary float32 rounding on OUTPUT: a value emitted into a
-    * declared F32 slot rounds through float32, mirroring the input
-    * boundary (anyToValue) and the column tier (projectOut). */
-  private def roundF32(v: Value, t: UdType): Value =
-    if (!typeHasF32(t)) v
-    else (v, t) match {
-      case (VFloat(d), TFloat32)       => VFloat(d.toFloat.toDouble)
-      case (VInt(i), TFloat32)         => VFloat(i.toFloat.toDouble)
-      case (x, TOption(inner))         => roundF32(x, inner)
-      case (VList(xs), TList(et))      => VList(xs.map(roundF32(_, et)))
-      case (VTuple(xs), TTuple(ts))    =>
-        VTuple(xs.zip(ts).map { case (x, t2) => roundF32(x, t2) })
-      case (m: VMap, TMap(vt))         =>
-        VMap(m.entries.map { case (k, x) => k -> roundF32(x, vt) })(m.absentOk)
-      case (m: VMap, TRecord(fs, _)) =>
-        VMap(m.entries.map { case (k, x) =>
-          fs.find(_.name == k) match {
-            case Some(f) => k -> roundF32(x, f.t)
-            case None    => k -> x
+  /** Encode one interpreter output under the declared output type: the
+    * twin of `anyToValue`, walking the `UdType` and its Spark `DataType`
+    * together. A general-union value takes the first branch it belongs to
+    * and that branch's `tagOf`; a declared F32 slot rounds through
+    * float32; nested presence flags follow `TField.absentOptional`; an
+    * Int widens into a Float slot and a Float narrows into an Int slot. A
+    * value that fits no slot stops its record, as a `throw` does. */
+  def valueToRow(v: Value, t: UdType, schema: StructType): Row = t match {
+    case TRecord(_, _) | TTuple(_) => encode(v, t, schema).asInstanceOf[Row]
+    case _ => new GenericRowWithSchema(
+      Array(encode(v, t, schema.fields(0).dataType)), schema)
+  }
+
+  private def encode(v: Value, t: UdType, dt: DataType): Any = (v, dt) match {
+    // leaves first: they are most of the calls
+    case (VNone, _)              => null
+    case (VInt(i), LongType)     => i
+    case (VStr(s), StringType)   => s
+    case (VBool(b), BooleanType) => b
+    case (VFloat(d), DoubleType) => if (typeHasF32(t)) d.toFloat.toDouble else d
+    case (VInt(i), DoubleType)   =>
+      if (typeHasF32(t)) i.toFloat.toDouble else i.toDouble
+    case (VFloat(d), LongType)   => d.toLong
+    case (_, StringType)         => render(v)
+    case _ =>
+      def st = dt.asInstanceOf[StructType]
+      (v, t) match {
+        case (_, TOption(inner)) => encode(v, inner, dt)
+        case (_, TUnion(ts)) =>
+          val i = ts.indexWhere(belongs(v, _))
+          if (i < 0) Values.err(s"no union slot for ${render(v)}")
+          new GenericRowWithSchema((tagOf(ts(i)) +: ts.indices.map(j =>
+            if (j == i) encode(v, ts(i), st.fields(i + 1).dataType) else null)).toArray, st)
+        case (m: VMap, TRecord(fs, _)) =>
+          // filled in place: this runs once per output record
+          val cells = new Array[Any](st.length)
+          var i = 0
+          fs.foreach { f =>
+            cells(i) = m.index.get(f.name).map(encode(_, f.t, st.fields(i).dataType)).orNull
+            i += 1
           }
-        })(m.absentOk)
-      case _ => v
-    }
+          // a nested struct ends with one flag per absent-optional field
+          if (i < cells.length) fs.filter(_.absentOptional).foreach { f =>
+            cells(i) = m.index.contains(f.name); i += 1
+          }
+          new GenericRowWithSchema(cells, st)
+        case (VTuple(xs), TTuple(ts)) =>
+          new GenericRowWithSchema(xs.zip(ts).zip(st.fields).map {
+            case ((x, t2), f) => encode(x, t2, f.dataType)
+          }.toArray, st)
+        case (VPoint(x, y), TPoint) => new GenericRowWithSchema(Array(x, y), st)
+        case (VList(xs), TList(et)) =>
+          xs.map(encode(_, et, dt.asInstanceOf[ArrayType].elementType))
+        case (m: VMap, TMap(vt)) => m.entries.map { case (k, x) =>
+          k -> encode(x, vt, dt.asInstanceOf[MapType].valueType)
+        }.toMap
+        case _ => Values.err(s"cannot encode ${render(v)} as $dt")
+      }
+  }
+
+  /** Does an interpreter value belong to a union branch? An Int belongs
+    * to `Int` and to a sized int whose range holds it, a Float to `Float`
+    * and `F32` (rounded at the leaf), a string to an equal literal and to
+    * `Str`. */
+  private def belongs(v: Value, t: UdType): Boolean = (v, t) match {
+    case (_, TOption(inner))      => belongs(v, inner)
+    case (_, TUnion(ts))          => ts.exists(belongs(v, _))
+    case (VInt(i), n: TIntN)      => n.contains(i)
+    case (VStr(s), TValue(lit))   => s == lit
+    case (VTuple(xs), TTuple(ts)) => xs.size == ts.size
+    case (VInt(_), TInt) | (VFloat(_), TFloat | TFloat32) | (VStr(_), TStr) |
+        (VBool(_), TBool) | (VPoint(_, _), TPoint) | (VList(_), TList(_)) |
+        (_: VMap, TRecord(_, _) | TMap(_)) | (_, TAny) => true
+    case _ => false
+  }
+
   /** Does the declared type contain an F32 slot at ANY depth? */
   private[lang] def typeHasF32(t: UdType): Boolean = t match {
     case TFloat32        => true
@@ -465,18 +488,9 @@ object UdScript {
     case TTuple(ts)      => ts.exists(typeHasF32)
     case _               => false
   }
-
-  def valueToRow(v: Value, t: UdType, schema: StructType): Row = t match {
-    case TRecord(_, _) =>
-      valueToAny(roundF32(v, t), schema).asInstanceOf[Row]
-    case TTuple(_)     =>
-      valueToAny(roundF32(v, t), schema).asInstanceOf[Row]
-    case _          =>
-      Row(valueToAny(roundF32(v, t), schema.fields(0).dataType))
-  }
 }
 
-/** The two lowering paths. */
+/** The column, counted-loop and kernel lowerings. */
 private[lang] object Lowering {
   import UdScript._
   import graft.functions.{UdFunctions => F}
@@ -503,7 +517,7 @@ private[lang] object Lowering {
       case Sub => num(F.sub, F.sub)
       case Mul => num(F.mul, F.mul)
       case Div => num(F.divInt, F.divFloat)
-      case Mod => num(F.mod, F.mod)
+      case Mod => num(F.modInt, F.modFloat)
       case Pow => num(F.powInt, F.powFloat)
       case Min => num(F.min2, F.min2)
       case Max => num(F.max2, F.max2)
@@ -540,6 +554,27 @@ private[lang] object Lowering {
       case _                    => None
     }
 
+  /** Can a record stop this script's column lowering? Int `/` and `%`
+    * raise on a zero divisor, as the interpreter does. */
+  def mayRaise(types: Typechecker.Types): Boolean = types.nodes.exists {
+    case Bin(Div | Mod, l, r) => Typechecker.decay(types(l)) == TInt &&
+      (r match { case LitInt(n) => n == 0; case _ => true })
+    case _ => false
+  }
+
+  /** A condition as a Bool column, with `Interp.truthy`'s reading of its
+    * checked type: Bool as is, numbers ≠ 0, strings and lists non-empty.
+    * None keeps the script on the kernel tier. */
+  def condition(t: UdType): Option[Op1] = Typechecker.decay(t) match {
+    case TOption(inner)        => condition(inner)
+    case TBool                 => Some(identity)
+    case TInt | TFloat | TFloat32 => Some(F.truthyNum)
+    case TStr                  => Some(F.truthyStr)
+    case TUnion(ts) if ts.forall(_.isInstanceOf[TValue]) => Some(F.truthyStr)
+    case TList(_)              => Some(F.truthyArr)
+    case _                     => None
+  }
+
   /** Purity/inlinability of one expression against a script's decls —
     * shared by columnExpressible and detectCountedLoop. */
   def exprOkIn(script: Script, types: Typechecker.Types)(e0: Expr,
@@ -564,7 +599,8 @@ private[lang] object Lowering {
           unaryOp(op, types(x)).isDefined && exprOk(x, stack, bound)
         case Cond(cs, o) =>
           cs.forall { case (c, t) =>
-            exprOk(c, stack, bound) && exprOk(t, stack, bound)
+            condition(types(c)).isDefined && exprOk(c, stack, bound) &&
+              exprOk(t, stack, bound)
           } && exprOk(o, stack, bound)
         case Dot(x, _)  => exprOk(x, stack, bound)
         case Has(x, _)  => exprOk(x, stack, bound)
@@ -630,7 +666,8 @@ private[lang] object Lowering {
       case OutStmt(e)     => ok(e, Set.empty, Set.empty)
       case IfStmt(cs, o)  =>
         cs.forall { case (c, blk) =>
-          ok(c, Set.empty, Set.empty) && blk.forall(stmtOk)
+          condition(types(c)).isDefined && ok(c, Set.empty, Set.empty) &&
+            blk.forall(stmtOk)
         } && o.forall(stmtOk)
       case _ => false
     }
@@ -812,9 +849,9 @@ private[lang] object Lowering {
       case Cond(cases, otherwise) =>
         val w = cases.foldLeft[Option[Column]](None) {
           case (None, (c, t)) =>
-            Some(when(colOf(c, binds), colOf(t, binds)))
+            Some(when(condOf(c, binds), colOf(t, binds)))
           case (Some(acc), (c, t)) =>
-            Some(acc.when(colOf(c, binds), colOf(t, binds)))
+            Some(acc.when(condOf(c, binds), colOf(t, binds)))
         }
         w.get.otherwise(colOf(otherwise, binds))
       case Index(x, LitInt(i)) => element_at(colOf(x, binds), i.toInt + 1)
@@ -884,6 +921,10 @@ private[lang] object Lowering {
         throw CompileError(s"not column-expressible: $other")
     }
 
+    /** A condition as a Bool column (`exprOkIn` admitted its type). */
+    def condOf(c: Expr, binds: Map[String, Column]): Column =
+      condition(types(c)).get(colOf(c, binds))
+
     /** Declared type of input-rooted expressions (enough for union
       * narrowing and nested presence; anything else is untyped at this
       * layer). Walks arbitrary Dot chains off `in`. */
@@ -911,8 +952,8 @@ private[lang] object Lowering {
       }
   }
 
-  /** Project the declared output record/scalar from a compiled out-expr. */
-  /** Column-tier twin of roundF32: rebuild a column of declared type t
+  /** Column-tier twin of the F32 leaves of `anyToValue` and
+    * `valueToRow`: rebuild a column of declared type t
     * with every F32 slot rounded through float32 — recursing through
     * options, lists, maps, tuples, and nested records (whose in-struct
     * presence flags pass through untouched). No-op when t has no F32. */
@@ -939,6 +980,7 @@ private[lang] object Lowering {
       case _ => c
     }
 
+  /** Project the declared output record/scalar from a compiled out-expr. */
   private def projectOut(script: Script, cc: ColumnCompiler, base: DataFrame,
                          outE: Expr, binds: Map[String, Column]): DataFrame = {
     val outSchema = schemaOf(script.output)
@@ -968,7 +1010,6 @@ private[lang] object Lowering {
   def runColumn(script: Script, types: Typechecker.Types,
                 df: DataFrame): DataFrame = {
     val cc = new ColumnCompiler(script, types, df)
-    def colOf(e: Expr, binds: Map[String, Column]): Column = cc.colOf(e, binds)
 
     // collect control paths: (guard, outExpr)
     def paths(ss: Seq[Stmt], guard: Option[Column]): Seq[(Option[Column], Expr)] =
@@ -977,9 +1018,12 @@ private[lang] object Lowering {
         case IfStmt(cases, otherwise) =>
           var notPrev: Option[Column] = None
           val branchPaths = cases.flatMap { case (c, blk) =>
-            val cc = colOf(c, Map.empty)
-            val g = Seq(guard, notPrev, Some(cc)).flatten.reduce(_ && _)
-            notPrev = Some(notPrev.fold(!cc)(np => np && !cc))
+            val cond = cc.condOf(c, Map.empty)
+            val g = Seq(guard, notPrev, Some(cond)).flatten.reduce(_ && _)
+            // a null condition is false (Interp.truthy), so a later
+            // branch's guard reads it as false too
+            val notC = !coalesce(cond, lit(false))
+            notPrev = Some(notPrev.fold(notC)(_ && notC))
             paths(blk, Some(g))
           }
           val elsePaths =
@@ -1025,22 +1069,10 @@ private[lang] object Lowering {
     projectOut(script, cc2, df2, lp.outE, binds)
   }
 
-  /** Kernel tier: Interp inside a typed flatMap over Rows. */
+  /** Kernel tier: `kernel` inside a typed flatMap over Rows. */
   def runKernel(script: Script, df: DataFrame,
-                libs: Map[String, Values.Value] = Map.empty): DataFrame = {
-    val interp = new Interp(script, libs)
-    interp.initEnv // force init on the driver (then ships with the closure)
-    val inType = script.input
-    val outType = script.output
-    val outSchema = schemaOf(outType)
-    val enc = Encoders.row(outSchema)
-    df.flatMap { row =>
-      val buf = Vector.newBuilder[Row]
-      interp.run(rowToValue(row, inType),
-        v => buf += valueToRow(v, outType, outSchema))
-      buf.result()
-    }(enc)
-  }
+                libs: Map[String, Values.Value] = Map.empty): DataFrame =
+    df.flatMap(kernel(script, libs))(Encoders.row(schemaOf(script.output)))
 
   /** Kernel tier with dead-letter routing: each input row maps to ONE
     * tagged row {_out: [outputs], _error, _in}; the two legs are cheap
@@ -1054,28 +1086,15 @@ private[lang] object Lowering {
   def runKernelEither(script: Script, df: DataFrame,
                       libs: Map[String, Values.Value] = Map.empty)
       : (DataFrame, DataFrame) = {
-    val interp = new Interp(script, libs)
-    interp.initEnv
-    val inType = script.input
-    val outType = script.output
-    val outSchema = schemaOf(outType)
+    val k = kernel(script, libs)
     val tagSchema = StructType(Seq(
-      StructField("_out", ArrayType(outSchema)),
+      StructField("_out", ArrayType(schemaOf(script.output))),
       StructField("_error", StringType),
       StructField("_in", df.schema)))
-    val enc = Encoders.row(tagSchema)
-    val tagged = df.mapPartitions { it =>
-      it.map { row =>
-        try {
-          val buf = Vector.newBuilder[Row]
-          interp.run(rowToValue(row, inType),
-            v => buf += valueToRow(v, outType, outSchema))
-          Row(buf.result(), null, row)
-        } catch {
-          case e: UdException => Row(null, e.message, row)
-        }
-      }
-    }(enc).localCheckpoint(eager = true)
+    val tagged = df.map { row =>
+      try Row(k(row), null, row)
+      catch { case e: UdException => Row(null, e.message, row) }
+    }(Encoders.row(tagSchema)).localCheckpoint(eager = true)
     val good = tagged.filter(col("_error").isNull)
       .select(explode(col("_out")).as("_o")).select(col("_o.*"))
     val dlq = tagged.filter(col("_error").isNotNull)

@@ -3,9 +3,12 @@ package graft.sources
 import java.io.OutputStream
 import java.nio.ByteBuffer
 
+import scala.collection.immutable.ArraySeq
+
 import graft.lang.Ast._
 import graft.lang.UdScript
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -167,6 +170,12 @@ object Msgpack extends Serializable {
   }
 
   // ---- msgpack value → declared Spark type ----
+  // Decoded values take the shape of a collected Spark row: structs carry
+  // their schema (`rowToValue` and the writer look fields up by name) and
+  // arrays are ArraySeqs.
+
+  private def row(cells: Seq[Any], st: StructType): Row =
+    new GenericRowWithSchema(cells.toArray, st)
 
   private def coerce(v: Any, dt: DataType, path: String): Any = (v, dt) match {
     case (null, _)                 => null
@@ -177,11 +186,11 @@ object Msgpack extends Serializable {
     case (x: String, StringType)   => x
     case (x: Array[Byte], BinaryType) => x
     case (xs: Vector[_], ArrayType(et, _)) if !xs.headOption.exists(_.isInstanceOf[(_, _)]) =>
-      xs.map(coerce(_, et, path))
+      ArraySeq.from(xs.map(coerce(_, et, path)))
     case (es: Vector[_], st: StructType) =>
       val entries = es.collect { case (k: String, x) => k -> x }.toMap
-      Row.fromSeq(st.fields.toSeq.map(f =>
-        entries.get(f.name).map(coerce(_, f.dataType, s"$path.${f.name}")).orNull))
+      row(st.fields.toSeq.map(f =>
+        entries.get(f.name).map(coerce(_, f.dataType, s"$path.${f.name}")).orNull), st)
     case (es: Vector[_], MapType(StringType, vt, _)) =>
       es.collect { case (k: String, x) => k -> coerce(x, vt, path) }.toMap
     case (x, t) =>
@@ -232,11 +241,11 @@ object Msgpack extends Serializable {
         if (i < 0) throw MsgpackError(
           s"union_no_branch:$path ${v.getClass.getSimpleName}")
         val st = dt.asInstanceOf[StructType]
-        Row.fromSeq(UdScript.tagOf(ts(i)) +: ts.zipWithIndex.map {
+        row(UdScript.tagOf(ts(i)) +: ts.zipWithIndex.map {
           case (bt, j) =>
             if (j == i) coerceTyped(v, bt, st(s"v$j").dataType, path)
             else null
-        })
+        }, st)
       case (_, TOption(inner)) => coerceTyped(v, inner, dt, path)
       // sized ints enforce their declared range AT THE BOUNDARY, so an
       // out-of-range record routes through abort/skip/dlq like any other
@@ -255,26 +264,21 @@ object Msgpack extends Serializable {
           case l: Long => l.toDouble; case dd: Double => dd
           case other => throw MsgpackError(s"type:$path Point wants floats")
         }
-        Row(d(m("x")), d(m("y")))
+        row(Seq(d(m("x")), d(m("y"))), dt.asInstanceOf[StructType])
       case (es: Vector[_], TRecord(fs, _)) if dt.isInstanceOf[StructType] =>
         val st = dt.asInstanceOf[StructType]
         val entries = es.collect { case (k: String, x) => k -> x }.toMap
-        val byName = fs.map(f => f.name -> f).toMap
-        // nested schemas carry in-struct __present flags for their
-        // absent-optional fields — populate from key presence
-        Row.fromSeq(st.fields.toSeq.map { sf =>
-          if (sf.name.endsWith("__present") &&
-              !byName.contains(sf.name))
-            entries.contains(sf.name.stripSuffix("__present"))
-          else byName.get(sf.name).map(f =>
-            entries.get(f.name).map(x =>
-              coerceTyped(x, f.t, sf.dataType, s"$path.${f.name}"))
-              .orNull).orNull
-        })
+        // a nested struct ends with one flag per absent-optional field,
+        // set from key presence
+        row(fs.zipWithIndex.map { case (f, i) =>
+          entries.get(f.name).map(x =>
+            coerceTyped(x, f.t, st.fields(i).dataType, s"$path.${f.name}"))
+            .orNull
+        } ++ fs.filter(_.absentOptional).map(f => entries.contains(f.name)), st)
       case (xs: Vector[_], TList(et))
           if dt.isInstanceOf[ArrayType] && branchMatches(v, TList(et)) =>
-        xs.map(coerceTyped(_, et,
-          dt.asInstanceOf[ArrayType].elementType, path))
+        ArraySeq.from(xs.map(coerceTyped(_, et,
+          dt.asInstanceOf[ArrayType].elementType, path)))
       case (es: Vector[_], TMap(vt)) if dt.isInstanceOf[MapType] =>
         es.collect { case (k: String, x) =>
           k -> coerceTyped(x, vt, dt.asInstanceOf[MapType].valueType, path)
@@ -283,61 +287,50 @@ object Msgpack extends Serializable {
     }
 
   /** Decode a whole file (concatenated record maps) into Rows of
-    * [declared fields ++ __present flags ++ _invalid_reason]. A record
-    * whose shape mismatches the declaration yields a reason row; a byte
-    * level decode failure yields one final reason row (a corrupt stream
-    * cannot be resynced — msgpack has no sync markers) and stops the file.
+    * `decodedSchema`: declared fields ++ __present flags ++
+    * _invalid_reason. Records decode one at a time, as the iterator is
+    * read. A record whose shape mismatches the declaration yields a reason
+    * row; a byte level decode failure yields one final reason row (a
+    * corrupt stream cannot be resynced — msgpack has no sync markers) and
+    * stops the file.
     */
   def decodeFile(bytes: Array[Byte], declared: TRecord): Iterator[Row] = {
-    val schema = UdScript.schemaOf(declared)
+    val schema = decodedSchema(declared)
     val absentOpt = declared.fields.filter(_.absentOptional).map(_.name)
+    def invalid(reason: String): Row =
+      row(declared.fields.map(_ => null) ++ absentOpt.map(_ => false) :+ reason,
+        schema)
     val buf = ByteBuffer.wrap(bytes)
-    val out = Vector.newBuilder[Row]
     var halted = false
-    while (buf.hasRemaining && !halted) {
+    Iterator.continually(()).takeWhile(_ => buf.hasRemaining && !halted).map { _ =>
       val offset = buf.position()
       try {
         readValue(buf) match {
           case entries: Vector[_] if entries.forall(_.isInstanceOf[(_, _)]) =>
             val m = entries.collect { case (k: String, v) => k -> v }.toMap
-            var reason: String = null
+            var reason: String = null // the first field's wins
+            def fail(r: String): Any = { if (reason == null) reason = r; null }
             val fieldVals = declared.fields.map { f =>
+              val required = !f.absentOptional && !f.t.isInstanceOf[TOption]
               m.get(f.name) match {
-                case Some(null)
-                    if !f.absentOptional && !f.t.isInstanceOf[TOption] =>
-                  // explicit nil for a REQUIRED field — same posture as a
-                  // missing key, distinct reason
-                  if (reason == null) reason = s"null:${f.name}"
-                  null
+                // explicit nil for a REQUIRED field — same posture as a
+                // missing key, distinct reason
+                case Some(null) if required => fail(s"null:${f.name}")
                 case Some(v) =>
                   try coerceTyped(v, f.t, schema(f.name).dataType, f.name)
-                  catch {
-                    case e: MsgpackError =>
-                      if (reason == null) reason = e.msg; null
-                  }
-                case None =>
-                  if (!f.absentOptional && !f.t.isInstanceOf[TOption] &&
-                      reason == null)
-                    reason = s"missing:${f.name}"
-                  null
+                  catch { case e: MsgpackError => fail(e.msg) }
+                case None => if (required) fail(s"missing:${f.name}") else null
               }
             }
-            val present = absentOpt.map(m.contains)
-            out += Row.fromSeq(fieldVals ++ present :+ reason)
-          case other =>
-            out += Row.fromSeq(
-              declared.fields.map(_ => null) ++ absentOpt.map(_ => false) :+
-                s"not_a_record@$offset")
+            row(fieldVals ++ absentOpt.map(m.contains) :+ reason, schema)
+          case _ => invalid(s"not_a_record@$offset")
         }
       } catch {
         case e: Throwable =>
-          out += Row.fromSeq(
-            declared.fields.map(_ => null) ++ absentOpt.map(_ => false) :+
-              s"malformed@$offset:${e.getMessage}")
           halted = true
+          invalid(s"malformed@$offset:${e.getMessage}")
       }
     }
-    out.result().iterator
   }
 
   /** Decode exactly one framed record (socket/pipe ingest: one frame =
@@ -369,10 +362,6 @@ object Msgpack extends Serializable {
     ValidatedIngest.routeTagged(tagged.toDF(), mode)
   }
 
-  /** Write a DataFrame as msgpack record streams, one file per partition.
-    * Columns named `<f>__present` are treated as presence flags: when
-    * false, field `f` is OMITTED from the record map (absent), as opposed
-    * to a null field which is encoded as nil. */
   /** Encode rows as concatenated record maps. Columns named
     * `<f>__present` are presence flags: when false, field `f` is OMITTED
     * from the record map (absent) rather than encoded as nil. */
@@ -391,6 +380,7 @@ object Msgpack extends Serializable {
     }
   }
 
+  /** Write a DataFrame as msgpack record streams, one file per partition. */
   def write(df: DataFrame, path: String): Unit = {
     val names = df.schema.fieldNames.toSeq
     val uri = new java.net.URI(path)

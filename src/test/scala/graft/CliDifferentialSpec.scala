@@ -333,6 +333,142 @@ class CliDifferentialSpec extends SparkSpec {
       """{"x": 5}""", """{"x": "hi"}""", """{"x": 1.5}""")
     assert(runs("dlq").out ==
       Seq("""{"x":{"_tag":"Int","v0":5}}""", """{"x":{"_tag":"Str","v1":"hi"}}"""))
+    // a sized-int branch and a string-literal branch keep the tag ingest
+    // gave them, on JSON and on msgpack
+    val sized = agreeBoth("ColumnTier", """script "u8";
+      |input  {x: U8 | Str};
+      |output {x: U8 | Str};
+      |out {x: in.x};""".stripMargin,
+      """{"x": 5}""", """{"x": "hi"}""", """{"x": true}""")
+    assert(sized("dlq").out ==
+      Seq("""{"x":{"_tag":"Str","v1":"hi"}}""", """{"x":{"_tag":"U8","v0":5}}"""))
+    val literal = agreeBoth("ColumnTier", """script "lit";
+      |input  {x: "a" | Int};
+      |output {x: "a" | Int};
+      |out {x: in.x};""".stripMargin,
+      """{"x": "a"}""", """{"x": 7}""", """{"x": "b"}""")
+    assert(literal("dlq").out ==
+      Seq("""{"x":{"_tag":"Int","v1":7}}""", """{"x":{"_tag":"val:a","v0":"a"}}"""))
+  }
+
+  /** JSON lines as lifted msgpack records. */
+  private def lifted(json: Array[Byte]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    assert(Main.execute(List("lift", "--json"), new ByteArrayInputStream(json),
+      new PrintStream(out), new PrintStream(new ByteArrayOutputStream()),
+      Some(spark)) == 0)
+    out.toByteArray
+  }
+
+  /** `agreeIn` on the JSON lines, then the same records as msgpack. */
+  private def agreeBoth(tier: String, src: String, input: String*): Map[String, Run] = {
+    val runs = agreeIn(tier, src, input: _*)
+    agree(script(src), lifted(lines(input: _*)), List("--format", "msgpack"))
+    runs
+  }
+
+  test("kernel-tier outputs encode from the declared output type") {
+    // a union field (sized-int and literal branches), F32 in a list, in a
+    // nested record and in a union, and an absent-optional nested field
+    val runs = agreeBoth("KernelTier", """script "shapes";
+      |input  {id: Int, v: U8 | "none" | Str, w: Float};
+      |output {id: Int, v: U8 | "none" | Str, xs: [F32],
+      |        p: {w: F32, tag?: Str}, u: Int | F32};
+      |for x in [1, 2] {
+      |  if (x == 1) {
+      |    out {id: in.id, v: in.v, xs: [in.w, 0.1], p: {w: in.w}, u: x};
+      |  } else {
+      |    out {id: in.id, v: in.v, xs: [], p: {w: 0.1, tag: "t"}, u: in.w};
+      |  }
+      |}""".stripMargin,
+      """{"id": 1, "v": 5, "w": 0.1}""", """{"id": 2, "v": "none", "w": 2}""",
+      """{"id": 3, "v": "hi", "w": 1.5}""", """{"id": 4, "v": 1.5, "w": 1.0}""")
+    val f = "0.10000000149011612"
+    assert(runs("dlq").out == Seq(
+      s"""{"id":1,"v":{"_tag":"U8","v0":5},"xs":[$f,$f],"p":{"w":$f,"tag__present":false},"u":{"_tag":"Int","v0":1}}""",
+      s"""{"id":1,"v":{"_tag":"U8","v0":5},"xs":[],"p":{"w":$f,"tag":"t","tag__present":true},"u":{"_tag":"F32","v1":$f}}""",
+      s"""{"id":2,"v":{"_tag":"val:none","v1":"none"},"xs":[2.0,$f],"p":{"w":2.0,"tag__present":false},"u":{"_tag":"Int","v0":1}}""",
+      s"""{"id":2,"v":{"_tag":"val:none","v1":"none"},"xs":[],"p":{"w":$f,"tag":"t","tag__present":true},"u":{"_tag":"F32","v1":2.0}}""",
+      s"""{"id":3,"v":{"_tag":"Str","v2":"hi"},"xs":[1.5,$f],"p":{"w":1.5,"tag__present":false},"u":{"_tag":"Int","v0":1}}""",
+      s"""{"id":3,"v":{"_tag":"Str","v2":"hi"},"xs":[],"p":{"w":$f,"tag":"t","tag__present":true},"u":{"_tag":"F32","v1":1.5}}"""))
+    assert(runs("dlq").err.map(_.split("\t").last) == Seq("union_no_branch:v"))
+  }
+
+  test("tuple and scalar kernel-tier outputs encode from the declared type") {
+    val tuple = agreeBoth("KernelTier", """script "pair";
+      |input  {a: Int, f: Float};
+      |output (Int, F32);
+      |for x in [in.a] { out (x, in.f); }""".stripMargin,
+      """{"a": 1, "f": 0.1}""", """{"a": 2, "f": 3}""")
+    assert(tuple("dlq").out ==
+      Seq("""{"_1":1,"_2":0.10000000149011612}""", """{"_1":2,"_2":3.0}"""))
+    // 300 fits no branch: the record stops, as a throw does
+    val scalar = agreeBoth("KernelTier", """script "scalar";
+      |input  {a: Int};
+      |output U8 | Str;
+      |for x in [in.a] { out x; }""".stripMargin,
+      """{"a": 5}""", """{"a": 300}""")
+    assert(scalar("dlq").out == Seq("""{"_tag":"U8","v0":5}"""))
+    assert(scalar("dlq").err == Seq("300\tno union slot for 300"))
+    assert(scalar("abort").err == Seq("runtime error: no union slot for 300"))
+  }
+
+  test("conditions read truthiness as the interpreter does, on both paths") {
+    val runs = agreeIn("ColumnTier", """script "truthy";
+      |input  {n: Int, f: Float, s: Str, xs: [Int]};
+      |output {n: Int, k: Str};
+      |if (in.n) { out {n: in.n, k: "int"}; }
+      |if (in.f) { out {n: in.n, k: "float"}; }
+      |if (in.s) { out {n: in.n, k: "str"}; }
+      |if (in.xs) { out {n: in.n, k: "list"}; }
+      |out {n: in.n, k: if (in.s) { in.s } else { "-" }};""".stripMargin,
+      """{"n": 0, "f": 0.0, "s": "", "xs": []}""",
+      """{"n": 3, "f": 0.5, "s": "a", "xs": [1]}""")
+    assert(runs("dlq").out == Seq("""{"n":0,"k":"-"}""", """{"n":3,"k":"a"}""",
+      """{"n":3,"k":"float"}""", """{"n":3,"k":"int"}""",
+      """{"n":3,"k":"list"}""", """{"n":3,"k":"str"}"""))
+  }
+
+  test("a null condition takes the else branch on both paths") {
+    val runs = agreeIn("ColumnTier", """script "nullelse";
+      |input  {id: Int, b: Bool?};
+      |output {id: Int, r: Str};
+      |if (in.b) { out {id: in.id, r: "then"}; }
+      |else { out {id: in.id, r: "else"}; }""".stripMargin,
+      """{"id": 1, "b": true}""", """{"id": 2, "b": false}""",
+      """{"id": 3, "b": null}""")
+    assert(runs("dlq").out == Seq("""{"id":1,"r":"then"}""",
+      """{"id":2,"r":"else"}""", """{"id":3,"r":"else"}"""))
+  }
+
+  test("Int / and % by zero stop the record on both paths") {
+    val div = agreeIn("ColumnTier", """script "div";
+      |input  {a: Int, b: Int};
+      |output {q: Int};
+      |out {q: in.a / in.b};""".stripMargin,
+      """{"a": 7, "b": 2}""", """{"a": 7, "b": 0}""", """{"a": -7, "b": 2}""")
+    assert(div("dlq").out == Seq("""{"q":-3}""", """{"q":3}"""))
+    assert(div("dlq").err == Seq("7\t0\tdiv by zero"))
+    assert(div("abort").err == Seq("runtime error: div by zero"))
+    val mod = agreeIn("ColumnTier", """script "mod";
+      |input  {a: Int, b: Int};
+      |output {r: Int};
+      |out {r: in.a % in.b};""".stripMargin,
+      """{"a": -7, "b": 2}""", """{"a": 7, "b": 0}""")
+    assert(mod("dlq").out == Seq("""{"r":-1}"""))
+    assert(mod("dlq").err == Seq("7\t0\tmod by zero"))
+  }
+
+  test("Float / and % by zero are IEEE on both paths") {
+    val runs = agreeIn("ColumnTier", """script "fdiv";
+      |input  {a: Float, b: Float};
+      |output {q: Float, r: Float};
+      |out {q: in.a / in.b, r: in.a % in.b};""".stripMargin,
+      """{"a": 7.0, "b": 0.0}""", """{"a": -7.0, "b": 0.0}""",
+      """{"a": 0.0, "b": 0.0}""", """{"a": 7.5, "b": 2.0}""")
+    assert(runs("dlq").out == Seq("""{"q":"-Infinity","r":"NaN"}""",
+      """{"q":"Infinity","r":"NaN"}""", """{"q":"NaN","r":"NaN"}""",
+      """{"q":3.75,"r":1.5}"""))
   }
 
   test("msgpack stdin/stdout round-trips like the JSON run, on both paths") {

@@ -24,8 +24,11 @@ class StoreGcSpec extends SparkSpec {
   private val entries =
     Seq("corpus_build_incr", "idx_ivf_append", "tok_bpe_drift")
 
-  private def run(name: String) =
-    graft.SparkEntry.queries(name)(spark, sf).collect().toSeq
+  /** An entry's rows as a sorted multiset: corpus_build_incr's
+    * chainReport has no ORDER BY (its shard rows come from a groupBy), so
+    * a served run may return them in another order. */
+  private def run(name: String): Seq[String] =
+    graft.SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
 
   test("gc keeps exactly the reachability roots; every entry still " +
     "serves rebuild-free afterwards; dead families and orphan temp " +
