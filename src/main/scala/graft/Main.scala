@@ -8,10 +8,11 @@ import scala.jdk.CollectionConverters._
 
 import graft.kernel.UdException
 import graft.lang.Ast._
-import graft.lang.{UdParser, UdScript}
+import graft.lang.{Interp, UdParser, UdScript}
+import graft.lang.Values.Value
 import graft.sources.{JsonRecords, Msgpack, ValidatedIngest}
 import org.apache.spark.{SparkException, SparkThrowable}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
@@ -22,13 +23,15 @@ import org.apache.spark.sql.types._
   * `run` is the unix-filter deployment shape (HACKING.md:136-140): records
   * in on stdin, records out on stdout, JSON-lines or msgpack framing. A
   * pipe is one stream, so with neither `--in` nor `--out` the script runs
-  * in this thread with no SparkSession: each record is decoded (the same
-  * row, presence flags and invalid reasons as the Spark sources), run
-  * through `Interp` whatever its lowering tier, and rendered as `to_json`
-  * would. JSON lines stream in constant memory; msgpack stdin is read
-  * whole, then decoded one record at a time. `--in`/`--out` paths are
-  * the parallel file legs a cluster job uses: they plan the script on
-  * Spark, and `--cores` applies to them only.
+  * in this thread with no SparkSession, through `Interp` whatever its
+  * lowering tier. JSON lines run on interpreter values: each line decodes
+  * straight into the input value (the values and invalid reasons of the
+  * Spark sources), and the outputs are written under the declared output
+  * type in the bytes `to_json` gives, with no Spark row or schema built.
+  * They stream in constant memory. msgpack stdin is read whole, then
+  * decoded one record at a time into rows. `--in`/`--out` paths are the
+  * parallel file legs a cluster job uses: they plan the script on Spark,
+  * and `--cores` applies to them only.
   *
   * Usage:
   *   graft.Main --dump-expr                     REPL: parse one expression per line
@@ -99,7 +102,7 @@ object Main {
         out.println(s"output schema: ${c.outputSchema.simpleString}")
         // the engine's IR is the lowered Spark plan: compile the script
         // against an empty frame of the declared input and dump it
-        session.orElse(Some(GraftSession.local(2))).foreach { s =>
+        session.orElse(Some(ownSession(2))).foreach { s =>
           val empty = s.createDataFrame(
             new java.util.ArrayList[Row](), c.inputSchema)
           // analyzed (not optimized): an empty input constant-folds to
@@ -197,7 +200,7 @@ object Main {
     // the run path's parser: a malformed payload or an integer outside
     // i64 is an invalid record, routed like a --schema mismatch
     def encode(text: String): Unit =
-      JsonRecords.parseOrNull(text, strict = false) match {
+      JsonRecords.parseOrNull(text) match {
         case null => drop("malformed_json:_payload")
         case tree => wireValue(tree) match {
           case None => drop("range:_payload")
@@ -283,79 +286,97 @@ object Main {
     }
   }
 
-  /** The good rows on stdin, each with the input frame's columns: the
-    * declared fields and `__present` flags of a record, or `value` of a
-    * scalar. Invalid records follow `mode` here: abort stops the run,
-    * skip drops them, dlq prints them to `dlq` (the JSON line and its
-    * reason, or the whole decoded msgpack row). */
-  private def stdinRows(c: UdScript.Compiled, opts: Opts, in: InputStream,
-                        dlq: LineBuffer): (StructType, Iterator[Row]) = {
-    lazy val lines = {
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-      Iterator.continually(r.readLine()).takeWhile(_ != null)
-    }
-    // each tagged row (its last column the invalid reason) comes with
-    // its DLQ line
-    def goodRows(tagged: StructType, rows: Iterator[(Row, () => String)])
-        : (StructType, Iterator[Row]) = {
-      val schema = StructType(tagged.fields.init)
-      (schema, rows.flatMap { case (r, dlqLine) =>
-        r.getString(r.length - 1) match {
-          case null =>
-            Some(new GenericRowWithSchema(r.toSeq.init.toArray, schema))
-          case reason => opts.mode match {
-            case "abort" => throw RunError(reason)
-            case "skip"  => None
-            case _       => dlq += dlqLine(); None
-          }
-        }
-      })
-    }
-    def jsonLines(decode: String => Row): Iterator[(Row, () => String)] =
-      lines.map { l =>
-        val r = decode(l)
-        (r, () => l + "\t" + r.getString(r.length - 1))
-      }
-    (c.script.input, opts.format) match {
-      case (rec: TRecord, "msgpack") =>
-        goodRows(Msgpack.decodedSchema(rec),
-          Msgpack.decodeFile(in.readAllBytes(), rec).map(r => (r, () => r.mkString("\t"))))
-      case (rec: TRecord, _) =>
-        goodRows(Msgpack.decodedSchema(rec), jsonLines(JsonRecords.lineDecoder(rec)))
-      case (_, "msgpack") =>
-        throw CliError("scalar input requires --format json (one JSON value per line)")
-      case (scalar, _) =>
-        goodRows(JsonRecords.scalarSchema(scalar),
-          jsonLines(JsonRecords.scalarDecoder(scalar)))
-    }
+  /** Route an invalid record by mode: abort stops the run, skip drops
+    * it, dlq prints its DLQ line. */
+  private def invalid(opts: Opts, dlq: LineBuffer, reason: String,
+                      dlqLine: => String): Unit = opts.mode match {
+    case "abort" => throw RunError(reason)
+    case "skip"  => ()
+    case _       => dlq += dlqLine
   }
+
+  /** The good msgpack records on stdin as rows of the input frame (the
+    * declared fields and `__present` flags); invalid ones follow `mode`,
+    * a DLQ line being the whole decoded row. */
+  private def msgpackRows(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                          dlq: LineBuffer): (StructType, Iterator[Row]) =
+    c.script.input match {
+      case rec: TRecord =>
+        val tagged = Msgpack.decodedSchema(rec)
+        val schema = StructType(tagged.fields.init)
+        (schema, Msgpack.decodeFile(in.readAllBytes(), rec).flatMap { r =>
+          r.getString(r.length - 1) match {
+            case null =>
+              Some(new GenericRowWithSchema(r.toSeq.init.toArray, schema))
+            case reason => invalid(opts, dlq, reason, r.mkString("\t")); None
+          }
+        })
+      case _ =>
+        throw CliError("scalar input requires --format json (one JSON value per line)")
+    }
 
   /** Does the script emit bare wire values rather than records? */
   private def scalarOut(c: UdScript.Compiled): Boolean =
     !c.script.output.isInstanceOf[TRecord] && !c.script.output.isInstanceOf[TTuple]
 
-  /** stdin → stdout in this thread, with no session: decode, route by
-    * mode, `Interp`, render. A record's outputs are written once it has
-    * run to the end. In dlq mode a `throw` sends the input row and its
-    * message to stderr, as `runEither` does. */
+  /** stdin → stdout in this thread, with no session. A record's outputs
+    * are written once it has run to the end. In dlq mode a `throw` sends
+    * the input row and its message to stderr, as `runEither` does. */
   private def runLocal(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream): Unit = {
-    val outSchema = c.outputSchema
-    val kernel = UdScript.kernel(c.script, c.libs)
     val dlq = new LineBuffer(err)
-    val text = new LineBuffer(out)
-    val bytes = new java.io.BufferedOutputStream(out, 1 << 16)
-    val emit: Row => Unit = (opts.format, scalarOut(c)) match {
-      case ("msgpack", true) => r => Msgpack.writeValue(bytes, r.get(0))
-      case ("msgpack", false) =>
-        r => Msgpack.writeRows(bytes, outSchema.fieldNames.toSeq, Iterator(r))
-      case (_, true) =>
-        r => text += JsonRecords.render(r.get(0), outSchema.fields(0).dataType)
-      case (_, false) => r => text += JsonRecords.render(r, outSchema)
-    }
     try {
-      val (_, rows) = stdinRows(c, opts, in, dlq)
+      if (opts.format == "msgpack") runMsgpack(c, opts, in, out, dlq)
+      else runJson(c, opts, in, out, dlq)
+    } finally dlq.flush()
+  }
+
+  /** JSON lines on values: decode each line straight into the
+    * interpreter's input, run `Interp`, and write the outputs under the
+    * declared output type — no Spark row or schema on the way. */
+  private def runJson(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                      out: PrintStream, dlq: LineBuffer): Unit = {
+    val decode = c.script.input match {
+      case rec: TRecord => JsonRecords.lineDecoder(rec)
+      case scalar       => JsonRecords.scalarDecoder(scalar)
+    }
+    val interp = new Interp(c.script, c.libs)
+    interp.initEnv
+    val lines = new JsonRecords.JsonLines(out, c.script.output)
+    val outputs = scala.collection.mutable.ArrayBuffer.empty[Value]
+    def thrown(input: Value, message: String): Unit =
+      if (opts.mode == "dlq") dlq += decode.rowText(input) + "\t" + message
+      else throw RunError(message)
+    val reader = new java.io.BufferedReader(
+      new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
+    try {
+      var line = reader.readLine()
+      while (line != null) {
+        try decode(line) match {
+          case Left(reason) => invalid(opts, dlq, reason, line + "\t" + reason)
+          case Right(v) =>
+            outputs.clear()
+            try { interp.run(v, outputs += _); lines.write(outputs) }
+            catch { case e: UdException => thrown(v, e.message) }
+        } catch { case JsonRecords.OutOfRange(v, message) => thrown(v, message) }
+        line = reader.readLine()
+      }
+    } finally lines.flush()
+  }
+
+  /** msgpack records through the kernel tier's per-record function. */
+  private def runMsgpack(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                         out: PrintStream, dlq: LineBuffer): Unit = {
+    val kernel = UdScript.kernel(c.script, c.libs)
+    val bytes = new java.io.BufferedOutputStream(out, 1 << 16)
+    val emit: Row => Unit =
+      if (scalarOut(c)) r => Msgpack.writeValue(bytes, r.get(0))
+      else {
+        val names = c.outputSchema.fieldNames.toSeq
+        r => Msgpack.writeRows(bytes, names, Iterator(r))
+      }
+    try {
+      val (_, rows) = msgpackRows(c, opts, in, dlq)
       rows.foreach { r =>
         try kernel(r).foreach(emit)
         catch {
@@ -364,9 +385,7 @@ object Main {
           case e: UdException => throw RunError(e.message)
         }
       }
-    } finally {
-      text.flush(); bytes.flush(); dlq.flush()
-    }
+    } finally bytes.flush()
   }
 
   /** The message a Spark run failed on: a `raise_error` of an invalid
@@ -384,7 +403,7 @@ object Main {
   private def runSpark(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream,
                        session: Option[SparkSession]): Unit = {
-    val s = session.getOrElse(GraftSession.local(opts.cores))
+    val s = session.getOrElse(ownSession(opts.cores))
     val mode = opts.mode match {
       case "abort" => ValidatedIngest.Abort
       case "skip"  => ValidatedIngest.Skip
@@ -393,12 +412,16 @@ object Main {
     try {
       val validated = opts.inPath match {
         case Some(p) => readPath(s, c, opts, p, mode)
-        case None =>
+        case None if opts.format == "msgpack" =>
           val dlq = new LineBuffer(err)
-          val (schema, rows) = stdinRows(c, opts, in, dlq)
+          val (schema, rows) = msgpackRows(c, opts, in, dlq)
           val good = try rows.toList finally dlq.flush()
           ValidatedIngest.Validated(
             s.createDataFrame(good.asJava, schema), s.emptyDataFrame)
+        case None =>
+          val lines = new java.io.BufferedReader(new java.io.InputStreamReader(
+            in, StandardCharsets.UTF_8)).lines().iterator().asScala.toList
+          readJson(s, c, s.createDataset(lines)(Encoders.STRING), mode)
       }
       val dlq = new LineBuffer(err)
       val text = new LineBuffer(out)
@@ -445,16 +468,48 @@ object Main {
   private def readPath(s: SparkSession, c: UdScript.Compiled, opts: Opts,
                        path: String, mode: ValidatedIngest.Mode)
       : ValidatedIngest.Validated =
-    c.script.input match {
-      case rec: TRecord => opts.format match {
-        case "msgpack" => Msgpack.read(s, path, rec, mode)
-        case _ => JsonRecords.read(s, s.read.textFile(path), rec, mode)
-      }
-      case scalar =>
-        if (opts.format != "json")
-          throw CliError("scalar input requires --format json (one JSON value per line)")
-        JsonRecords.readScalar(s, s.read.textFile(path), scalar, mode)
+    (c.script.input, opts.format) match {
+      case (rec: TRecord, "msgpack") => Msgpack.read(s, path, rec, mode)
+      case (_, "msgpack") =>
+        throw CliError("scalar input requires --format json (one JSON value per line)")
+      case _ => readJson(s, c, s.read.textFile(path), mode)
     }
+
+  private def readJson(s: SparkSession, c: UdScript.Compiled,
+                       lines: Dataset[String], mode: ValidatedIngest.Mode)
+      : ValidatedIngest.Validated =
+    c.script.input match {
+      case rec: TRecord => JsonRecords.read(s, lines, rec, mode)
+      case scalar       => JsonRecords.readScalar(s, lines, scalar, mode)
+    }
+
+  /** The session a `--compile`, `--in` or `--out` run starts for itself.
+    * Its log shows errors only while it starts, and never the executor's
+    * report of a failed task: the run reports that failure as its one
+    * `runtime error:` line. A session passed in keeps its own logging. */
+  private def ownSession(cores: Int): SparkSession = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    import org.apache.logging.log4j.core.config.builder.api.ConfigurationBuilderFactory
+    def quiet() = {
+      val b = ConfigurationBuilderFactory.newConfigurationBuilder()
+      b.add(b.newAppender("stderr", "Console").addAttribute("target", "SYSTEM_ERR")
+        .add(b.newLayout("PatternLayout")
+          .addAttribute("pattern", "%d{yy/MM/dd HH:mm:ss} %p %c{1}: %m%n%ex")))
+      b.add(b.newRootLogger(Level.ERROR).add(b.newAppenderRef("stderr")))
+      Seq("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager").foreach { name =>
+        b.add(b.newLogger(name, Level.OFF))
+      }
+      b.build()
+    }
+    // Spark loads its own INFO profile unless both the class loader's
+    // context and the current one are configured
+    Configurator.reconfigure(quiet())
+    LogManager.getContext().asInstanceOf[LoggerContext].reconfigure(quiet())
+    GraftSession.local(cores)
+  }
 
   // ---- helpers ----
 

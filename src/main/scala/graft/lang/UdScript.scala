@@ -59,8 +59,9 @@ object UdScript {
                             typeErrors: Seq[Typechecker.TypeError],
                             @transient types: Typechecker.Types,
                             libs: Map[String, Values.Value] = Map.empty) {
-    val inputSchema: StructType = schemaOf(script.input)
-    val outputSchema: StructType = schemaOf(script.output)
+    // lazy: the in-process CLI pipe runs on values and never needs them
+    lazy val inputSchema: StructType = schemaOf(script.input)
+    lazy val outputSchema: StructType = schemaOf(script.output)
 
     /** Run over a DataFrame whose columns match the declared input. */
     def run(df: DataFrame): DataFrame = tier match {
@@ -325,7 +326,7 @@ object UdScript {
   // allocation overhead)
   private val absentOkCache =
     new java.util.concurrent.ConcurrentHashMap[TRecord, Set[String]]()
-  private def absentOkOf(t: TRecord): Set[String] = {
+  private[graft] def absentOkOf(t: TRecord): Set[String] = {
     var v = absentOkCache.get(t)
     if (v == null) {
       v = t.fields.filter(_.absentOptional).map(_.name).toSet
@@ -357,8 +358,7 @@ object UdScript {
     case (null, _)          => VNone
     case (x, TOption(inner)) => anyToValue(x, inner)
     case (x: Long, n: TIntN) =>
-      if (n.contains(x)) VInt(x)
-      else Values.err(s"range: $x not a ${if (n.signed) "I" else "U"}${n.bits}")
+      if (n.contains(x)) VInt(x) else Values.err(s"range: $x not a ${tagOf(n)}")
     case (x: Long, _)       => VInt(x)
     case (x: Int, n: TIntN)  => anyToValue(x.toLong, n)
     case (x: Int, _)        => VInt(x.toLong)
@@ -370,7 +370,10 @@ object UdScript {
     case (x: String, _)     => VStr(x)
     case (x: scala.collection.Seq[_], TList(et)) => // Rows use mutable.ArraySeq
       VList(x.map(anyToValue(_, et)).toVector)
-    case (x: Row, TPoint)   => VPoint(x.getDouble(0), x.getDouble(1))
+    // a coordinate `from_json` could not read leaves no point
+    case (x: Row, TPoint)   =>
+      if (x.isNullAt(0) || x.isNullAt(1)) VNone
+      else VPoint(x.getDouble(0), x.getDouble(1))
     case (x: Row, TTuple(ts)) =>
       VTuple(ts.zipWithIndex.map { case (t2, i) =>
         if (x.isNullAt(i)) VNone else anyToValue(x.get(i), t2)
@@ -388,7 +391,7 @@ object UdScript {
   }
 
   /** The kernel tier's per-record function, for `runKernel`,
-    * `runKernelEither` and the CLI's in-process run: decode, `Interp`,
+    * `runKernelEither` and the CLI's msgpack pipe: decode, `Interp`,
     * `valueToRow`. A `throw` surfaces as UdException. */
   def kernel(script: Script, libs: Map[String, Value]): Row => Vector[Row] = {
     val interp = new Interp(script, libs)
@@ -418,21 +421,17 @@ object UdScript {
   private def encode(v: Value, t: UdType, dt: DataType): Any = (v, dt) match {
     // leaves first: they are most of the calls
     case (VNone, _)              => null
-    case (VInt(i), LongType)     => i
+    case (_, LongType)           => intSlot(v, t)
     case (VStr(s), StringType)   => s
     case (VBool(b), BooleanType) => b
-    case (VFloat(d), DoubleType) => if (typeHasF32(t)) d.toFloat.toDouble else d
-    case (VInt(i), DoubleType)   =>
-      if (typeHasF32(t)) i.toFloat.toDouble else i.toDouble
-    case (VFloat(d), LongType)   => d.toLong
+    case (_, DoubleType)         => floatSlot(v, t)
     case (_, StringType)         => render(v)
     case _ =>
       def st = dt.asInstanceOf[StructType]
       (v, t) match {
         case (_, TOption(inner)) => encode(v, inner, dt)
         case (_, TUnion(ts)) =>
-          val i = ts.indexWhere(belongs(v, _))
-          if (i < 0) Values.err(s"no union slot for ${render(v)}")
+          val i = unionSlot(v, ts)
           new GenericRowWithSchema((tagOf(ts(i)) +: ts.indices.map(j =>
             if (j == i) encode(v, ts(i), st.fields(i + 1).dataType) else null)).toArray, st)
         case (m: VMap, TRecord(fs, _)) =>
@@ -458,9 +457,38 @@ object UdScript {
         case (m: VMap, TMap(vt)) => m.entries.map { case (k, x) =>
           k -> encode(x, vt, dt.asInstanceOf[MapType].valueType)
         }.toMap
-        case _ => Values.err(s"cannot encode ${render(v)} as $dt")
+        case _ => cannotEncode(v, t)
       }
   }
+
+  // The leaf and union rules of output encoding, shared by `valueToRow`
+  // and the CLI pipe's JSON writer (`JsonRecords.JsonLines`).
+
+  /** A number in an Int slot: a Float truncates. */
+  private[graft] def intSlot(v: Value, t: UdType): Long = v match {
+    case VInt(i)   => i
+    case VFloat(d) => d.toLong
+    case _         => cannotEncode(v, t)
+  }
+
+  /** A number in a Float slot: an Int widens, and a declared F32 rounds
+    * through float32. */
+  private[graft] def floatSlot(v: Value, t: UdType): Double = v match {
+    case VFloat(d) => if (typeHasF32(t)) d.toFloat.toDouble else d
+    case VInt(i)   => if (typeHasF32(t)) i.toFloat.toDouble else i.toDouble
+    case _         => cannotEncode(v, t)
+  }
+
+  /** The general-union branch an output value takes: the first it belongs
+    * to. A value that fits none stops its record, as a `throw` does. */
+  private[graft] def unionSlot(v: Value, ts: Seq[UdType]): Int = {
+    val i = ts.indexWhere(belongs(v, _))
+    if (i < 0) Values.err(s"no union slot for ${render(v)}")
+    i
+  }
+
+  private[graft] def cannotEncode(v: Value, t: UdType): Nothing =
+    Values.err(s"cannot encode ${render(v)} as $t")
 
   /** Does an interpreter value belong to a union branch? An Int belongs
     * to `Int` and to a sized int whose range holds it, a Float to `Float`
@@ -622,24 +650,25 @@ private[lang] object Lowering {
           }
         case Match(s, cs, d) =>
           // literal patterns always lower; type patterns only when the
-          // scrutinee is a declared (input-rooted) tagged union — anything
-          // else (Some/none, type tests on untyped values) is kernel tier
-          val isTaggedUnion = (s match {
+          // scrutinee is a declared (input-rooted) tagged union and the
+          // slots they match share one Spark type — anything else
+          // (Some/none, type tests on untyped values) is kernel tier
+          val union = (s match {
             case In => Some(script.input)
             case Dot(In, f) => script.input match {
               case TRecord(fs, _) => fs.find(_.name == f).map(_.t)
               case _              => None
             }
             case _ => None
-          }).exists {
-            case TUnion(ts) => !ts.forall(_.isInstanceOf[TValue])
-            case _          => false
+          }).collect {
+            case TUnion(ts) if !ts.forall(_.isInstanceOf[TValue]) => ts
           }
           exprOk(s, stack, bound) &&
             cs.forall {
               case ((_: PLitStr | _: PLitInt), b) => exprOk(b, stack, bound)
-              case (PType(binder, _), b) if isTaggedUnion =>
-                exprOk(b, stack, bound + binder)
+              case (PType(binder, t), b) if union.isDefined =>
+                patternSlots(union.get, t).isDefined &&
+                  exprOk(b, stack, bound + binder)
               case _ => false
             } &&
             d.forall(exprOk(_, stack, bound))
@@ -654,6 +683,44 @@ private[lang] object Lowering {
       }
 
     exprOk(e0, stack0, bound0)
+  }
+
+  /** The slots of a tagged union `{_tag, v0, …}` that a type pattern
+    * matches, in branch order, each with the test its value must also
+    * pass: every branch whose values `Interp.matchesType` may accept for
+    * t. An `Int` pattern takes the sized-int branches too; a sized-int,
+    * F32 or string-literal pattern tests the slot's range, precision or
+    * text. None when the matched slots ride as different Spark types,
+    * which one binder cannot hold: that `match` stays on the kernel tier. */
+  def patternSlots(ts: Seq[UdType], t: UdType): Option[Seq[(Int, Option[Op1])]] = {
+    // None: the branch never matches; Some(None): always; Some(Some(f)):
+    // when f holds of the slot
+    def test(b: UdType, t: UdType): Option[Option[Op1]] = (b, t) match {
+      case (_, TAny) => Some(None)
+      case (_, TUnion(ps)) =>
+        val tests = ps.flatMap(test(b, _))
+        if (tests.isEmpty) None
+        else if (tests.contains(None)) Some(None)
+        else Some(Some(c => tests.flatten.map(_(c)).reduce(_ || _)))
+      case (TInt | TIntN(_, _), TInt) | (TFloat | TFloat32, TFloat) |
+          (TFloat32, TFloat32) | (TStr | TValue(_), TStr) | (TBool, TBool) |
+          (TPoint, TPoint) | (TNone, TNone) | (TList(_), TList(_)) => Some(None)
+      case (TInt | TIntN(_, _), n: TIntN) => Some(Some(c => c >= n.lo && c <= n.hi))
+      case (TFloat, TFloat32) =>
+        Some(Some(c => c.cast(FloatType).cast(DoubleType) === c))
+      case (TStr, TValue(s)) => Some(Some(_ === lit(s)))
+      case (TValue(a), TValue(s)) => Option.when(a == s)(None)
+      case (TTuple(_), TTuple(_)) => Option.when(b == t)(None)
+      case _ => None
+    }
+    def carrier(b: UdType): UdType = b match {
+      case TIntN(_, _)        => TInt
+      case TFloat32           => TFloat
+      case TValue(_)          => TStr
+      case other              => other
+    }
+    val slots = ts.indices.flatMap(i => test(ts(i), t).map(i -> _))
+    Option.when(slots.map(s => carrier(ts(s._1))).distinct.size <= 1)(slots)
   }
 
   /** Column-tier eligibility: body is a sequence of OutStmt / IfStmt
@@ -902,10 +969,22 @@ private[lang] object Lowering {
               case PLitInt(v) => (sc === lit(v), binds)
               case PType(binder, t) if unionBranches.isDefined =>
                 val ts = unionBranches.get
-                val i = ts.indexWhere(b => b == t || tagOf(b) == tagOf(t))
-                if (i < 0) throw CompileError(s"no union branch for $t")
-                (sc.getField("_tag") === lit(tagOf(ts(i))),
-                  binds + (binder -> sc.getField(s"v$i")))
+                val slots = patternSlots(ts, t).getOrElse(
+                  throw CompileError(s"pattern $t binds slots of different types"))
+                val tag = sc.getField("_tag")
+                def isTag(i: Int) = tag === lit(tagOf(ts(i)))
+                def slot(i: Int) = sc.getField(s"v$i")
+                val cond = slots.map { case (i, test) =>
+                  test.fold(isTag(i))(f => isTag(i) && f(slot(i)))
+                }.reduceOption(_ || _).getOrElse(lit(false))
+                // the binder is the slot of whichever matched branch is set
+                val bound = slots match {
+                  case Seq((i, _)) => slot(i)
+                  case _ => slots.map(_._1).foldLeft(lit(null)) {
+                    case (acc, i) => when(isTag(i), slot(i)).otherwise(acc)
+                  }
+                }
+                (cond, binds + (binder -> bound))
               case other =>
                 throw CompileError(s"pattern $other needs kernel tier")
             }

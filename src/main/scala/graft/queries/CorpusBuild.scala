@@ -384,11 +384,14 @@ object CorpusBuild {
         expr(s"CAST((total + ${SeqCap - 1}) DIV $SeqCap AS BIGINT)")
           .as("n_docs"),
         col("total").as("n_tokens"))
+    // in shard order whatever the plan's partitioning: one partition
+    // (a narrow coalesce, no extra stage) of at most `Shards` rows
     val shardRows = asg.groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).cast("long").as("n_tokens"))
       .select(lit("shard").as("kind"), col("shard").cast("int").as("id"),
         lit("shard").as("label"), col("n_docs"), col("n_tokens"))
+      .coalesce(1).sortWithinPartitions("id")
     stageRow(norm, 0, "ingest", col("n_raw"))
       .union(stageRow(norm, 1, "normalize", col("n_norm")))
       .union(stageRow(q, 2, "quality", col("n_norm")))

@@ -1,13 +1,14 @@
 package graft.sources
 
-import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonGenerator, JsonParser, JsonToken, StreamReadFeature}
+import com.fasterxml.jackson.core.JsonToken._
+import graft.kernel.UdException
 import graft.lang.Ast._
-import graft.lang.UdScript
+import graft.lang.{UdScript, Values}
+import graft.lang.Values._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -290,7 +291,7 @@ object JsonRecords {
 
   // ---- per-record decode without a session (the CLI's stdin leg) ----
   //
-  // A parsed payload is a small tree of plain values: JsonNull, Boolean,
+  // A parsed JSON value is a small tree of plain values: JsonNull, Boolean,
   // Long (an integer that fits, what `schema_of_variant` calls BIGINT),
   // BigInteger (a wider integer), Double, String, Vector (array) and
   // LinkedHashMap (object, in key order). jackson-core's streaming parser
@@ -302,72 +303,76 @@ object JsonRecords {
 
   private val jsonFactory = new JsonFactory()
 
-  /** The payload's first JSON value, or null when it is malformed (as
-    * for `try_parse_json`: empty, invalid, or — when `strict` — holding a
-    * duplicate key; `from_json` keeps the last of duplicates instead).
-    * Text after the first value is ignored, as by both. */
-  private[graft] def parseOrNull(text: String, strict: Boolean): Any = {
-    import com.fasterxml.jackson.core.JsonToken._
+  /** Rejects a duplicate key at any depth, as `try_parse_json` does
+    * (`from_json` keeps the last of duplicates instead). */
+  private val strictJson = new JsonFactoryBuilder()
+    .enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION).build()
+
+  /** The payload's first JSON value as a tree, or null when it is
+    * malformed (empty or invalid). A duplicate key keeps its last value.
+    * Text after the first value is ignored. */
+  private[graft] def parseOrNull(text: String): Any = {
     val p = jsonFactory.createParser(text)
-    def value(t: JsonToken): Any = t match {
-      case START_OBJECT =>
-        val m = new java.util.LinkedHashMap[String, Any]()
-        while (p.nextToken() == FIELD_NAME) {
-          val k = p.currentName
-          if (m.put(k, value(p.nextToken())) != null && strict) throw Malformed
-        }
-        m
-      case START_ARRAY =>
-        val b = Vector.newBuilder[Any]
-        var e = p.nextToken()
-        while (e != END_ARRAY) { b += value(e); e = p.nextToken() }
-        b.result()
-      case VALUE_STRING => p.getText
-      case VALUE_NUMBER_INT =>
-        if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
-          p.getBigIntegerValue
-        else p.getLongValue
-      case VALUE_NUMBER_FLOAT => p.getDoubleValue
-      case VALUE_TRUE  => true
-      case VALUE_FALSE => false
-      case VALUE_NULL  => JsonNull
-      case _ => throw Malformed
-    }
     try {
       val t = p.nextToken()
-      if (t == null) null else value(t)
+      if (t == null) null else tree(p, t, variant = false)
     } catch {
       case _: java.io.IOException | Malformed => null
     } finally p.close()
   }
 
-  private def field(obj: Any, name: String): Any = obj match {
-    case m: java.util.LinkedHashMap[_, _] => m.get(name)
-    case _ => null
+  /** The JSON value at token t as a tree. With `variant`, a number reads
+    * as the variant parse stores it: a negative zero written as a plain
+    * decimal is 0.0, since a decimal has no sign of zero. */
+  private def tree(p: JsonParser, t: JsonToken, variant: Boolean): Any = t match {
+    case START_OBJECT =>
+      val m = new java.util.LinkedHashMap[String, Any]()
+      while (p.nextToken() == FIELD_NAME) {
+        val k = p.currentName
+        m.put(k, tree(p, p.nextToken(), variant))
+      }
+      m
+    case START_ARRAY =>
+      val b = Vector.newBuilder[Any]
+      var e = p.nextToken()
+      while (e != END_ARRAY) { b += tree(p, e, variant); e = p.nextToken() }
+      b.result()
+    case VALUE_STRING => p.getText
+    case VALUE_NUMBER_INT =>
+      if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
+        p.getBigIntegerValue
+      else p.getLongValue
+    case VALUE_NUMBER_FLOAT => if (variant) variantDouble(p) else p.getDoubleValue
+    case VALUE_TRUE  => true
+    case VALUE_FALSE => false
+    case VALUE_NULL  => JsonNull
+    case _ => throw Malformed
+  }
+
+  /** A JSON fraction as `try_variant_get(…, "double")` reads it: the
+    * variant keeps a plain decimal of up to 38 digits as a decimal. */
+  private def variantDouble(p: JsonParser): Double = {
+    val d = p.getDoubleValue
+    if (d != 0.0 || 1 / d > 0) d
+    else {
+      val text = p.getText
+      if (text.forall(c => c == '-' || c == '.' || c.isDigit) &&
+          new java.math.BigDecimal(text).scale <= 38) 0.0
+      else d
+    }
   }
 
   private def isNull(n: Any): Boolean = n == null || n == JsonNull
+
+  private def isNone(t: UdType): Boolean = t match {
+    case TOption(x) => isNone(x)
+    case _ => t == TNone
+  }
 
   private def asDouble(n: Any): Any = n match {
     case x: Long   => x.toDouble
     case x: Double => x
     case x: java.math.BigInteger => x.doubleValue
-    case _ => null
-  }
-
-  private def row(values: Seq[Any], st: StructType): Row =
-    new GenericRowWithSchema(values.toArray, st)
-
-  /** `strictExtract` over a parsed value: null unless the JSON type is
-    * the declared one. */
-  private def strictValue(n: Any, t: UdType): Any = (n, t) match {
-    case (_, TOption(x)) => strictValue(n, x)
-    case (x: Long, TInt | TIntN(_, _)) => x
-    case (_, TFloat) => asDouble(n)
-    case (_, TFloat32) =>
-      asDouble(n) match { case d: Double => d.toFloat.toDouble; case _ => null }
-    case (b: Boolean, TBool) => b
-    case (s: String, TStr | TUnion(_) | TValue(_)) => s
     case _ => null
   }
 
@@ -383,182 +388,358 @@ object JsonRecords {
     case _ => false
   }
 
-  /** `try_variant_get` of a union slot: leaves that do not cast are null,
-    * fractional numbers truncate into a Long slot, a String slot takes
-    * any value as its JSON text. */
-  private def variantCast(n: Any, dt: DataType): Any =
-    if (isNull(n)) null
-    else (n, dt) match {
-      case (x: Long, LongType)   => x
-      case (x: Double, LongType) => if (x.abs < 9.2e18) x.toLong else null
-      case (_, DoubleType)       => asDouble(n)
-      case (b: Boolean, BooleanType) => b
-      case (s: String, StringType)   => s
-      case (_, StringType)           => render(n, null)
-      case (xs: Vector[_], ArrayType(et, _)) =>
-        ArraySeq.from(xs.map(variantCast(_, et)))
-      case (m: java.util.LinkedHashMap[_, _], st: StructType) =>
-        row(st.fields.toSeq.map(f => variantCast(m.get(f.name), f.dataType)), st)
-      case (m: java.util.LinkedHashMap[_, _], MapType(_, vt, _)) =>
-        m.asScala.map { case (k, x) => String.valueOf(k) -> variantCast(x, vt) }.toMap
-      case _ => null
-    }
-
   private object Unconvertible extends RuntimeException(null, null, false, false)
 
-  /** `from_json` (PERMISSIVE, partial results) of one value: a token the
-    * type cannot take throws; a struct keeps its other fields, an array
-    * or map fails whole. A string takes any JSON value as its compact
-    * text. */
-  private def fromJson(n: Any, dt: DataType): Any =
-    if (isNull(n)) null
-    else (n, dt) match {
-      case (x: Long, LongType) => x
-      case (_: Long | _: Double | _: java.math.BigInteger, DoubleType) =>
-        asDouble(n)
-      case (s: String, DoubleType) => s match {
-        case "NaN" => Double.NaN
-        case "+INF" | "+Infinity" | "Infinity" => Double.PositiveInfinity
-        case "-INF" | "-Infinity" => Double.NegativeInfinity
+  /** A record whose value holds a sized int outside its range in a nested
+    * shape or a union branch. `UdScript.rowToValue` stops such a record
+    * as a `throw` does; `input` is the record, for its DLQ line. */
+  final case class OutOfRange(input: Value, message: String)
+      extends RuntimeException(message, null, false, false)
+
+  /** A stdin decoder with no session: each line becomes the interpreter's
+    * input value (Right), the value `UdScript.rowToValue` makes of the
+    * row the Spark source keeps, or the reason that source gives it
+    * (Left), with the same reasons in the same precedence. A sized int
+    * out of range below the top level throws `OutOfRange`. */
+  sealed abstract class LineDecoder extends (String => Either[String, Value]) {
+
+    /** The record's cells as the Spark leg prints its input row on a DLQ
+      * line (`Row.mkString("\t")`). */
+    def rowText(v: Value): String
+
+    /** The first out-of-range message of the field being read. */
+    protected var range: String = null
+
+    private def int(x: Long, t: UdType): Value = {
+      t match {
+        case n: TIntN if !n.contains(x) && range == null =>
+          range = s"range: $x not a ${UdScript.tagOf(n)}"
+        case _ =>
+      }
+      VInt(x)
+    }
+
+    private def float(d: Double, t: UdType): Value =
+      VFloat(if (t == TFloat32) d.toFloat.toDouble else d)
+
+    private def text(n: Any): Value = VStr(n match {
+      case s: String => s
+      case _ => render(n, null)
+    })
+
+    private def entries(m: java.util.LinkedHashMap[_, _])(f: Any => Value): Value =
+      VMap(m.asScala.toVector.map { case (k, x) => String.valueOf(k) -> f(x) }
+        .sortBy(_._1))()
+
+    /** A struct field of `from_json` keeps partial results: a value its
+      * type cannot take is null. */
+    private def partial(v: => Value): Value = {
+      val saved = range
+      try v catch { case Unconvertible => range = saved; VNone }
+    }
+
+    /** `from_json` of a parsed value under t, as `anyToValue` reads the
+      * cell it makes: a value the type cannot take throws Unconvertible
+      * (a record keeps its other fields, a list or map fails whole), and
+      * a Str takes any JSON value as its compact text. With `presence`
+      * (the records under a top-level field, as `withNestedPresence`
+      * flags them) a missing absent-optional key is an omitted field;
+      * elsewhere it reads as none. */
+    protected def fromJsonValue(n: Any, t: UdType, presence: Boolean): Value =
+      if (isNull(n)) VNone
+      else (t, n) match {
+        case (TOption(x), _) => fromJsonValue(n, x, presence)
+        case (TInt | TIntN(_, _), x: Long) => int(x, t)
+        case (TFloat | TFloat32, _) => float(n match {
+          case x: Long   => x.toDouble
+          case x: Double => x
+          case x: java.math.BigInteger => x.doubleValue
+          case "NaN" => Double.NaN
+          case "+INF" | "+Infinity" | "Infinity" => Double.PositiveInfinity
+          case "-INF" | "-Infinity" => Double.NegativeInfinity
+          case _ => throw Unconvertible
+        }, t)
+        case (TBool, b: Boolean) => VBool(b)
+        case (TStr | TAny | TValue(_), _) => text(n)
+        case (TUnion(ts), _) if ts.forall(_.isInstanceOf[TValue]) => text(n)
+        case (TNone, _) => VNone
+        case (TList(et), xs: Vector[_]) => VList(xs.map(fromJsonValue(_, et, false)))
+        case (TMap(vt), m: java.util.LinkedHashMap[_, _]) =>
+          entries(m)(fromJsonValue(_, vt, false))
+        case (rec @ TRecord(fs, _), m: java.util.LinkedHashMap[_, _]) =>
+          VMap(fs.iterator.filterNot(f =>
+            presence && f.absentOptional && !m.containsKey(f.name)
+          ).map(f => f.name -> partial(fromJsonValue(m.get(f.name), f.t, presence)))
+            .toVector)(UdScript.absentOkOf(rec))
+        case (TPoint, m: java.util.LinkedHashMap[_, _]) =>
+          (partial(fromJsonValue(m.get("x"), TFloat, false)),
+            partial(fromJsonValue(m.get("y"), TFloat, false))) match {
+            case (VFloat(x), VFloat(y)) => VPoint(x, y)
+            case _ => VNone
+          }
+        case (TTuple(ts), m: java.util.LinkedHashMap[_, _]) =>
+          VTuple(ts.indices.map(i =>
+            partial(fromJsonValue(m.get(s"_${i + 1}"), ts(i), false))).toVector)
+        case (TUnion(ts), m: java.util.LinkedHashMap[_, _]) =>
+          val tag = partial(fromJsonValue(m.get("_tag"), TStr, false))
+          val i = ts.indexWhere(b => tag == VStr(UdScript.tagOf(b)))
+          if (i < 0) VNone else partial(fromJsonValue(m.get(s"v$i"), ts(i), false))
         case _ => throw Unconvertible
       }
-      case (b: Boolean, BooleanType) => b
-      case (s: String, StringType)   => s
-      case (_, StringType)           => render(n, null)
-      case (xs: Vector[_], ArrayType(et, _)) =>
-        ArraySeq.from(xs.map(fromJson(_, et)))
-      case (m: java.util.LinkedHashMap[_, _], MapType(_, vt, _)) =>
-        m.asScala.map { case (k, x) => String.valueOf(k) -> fromJson(x, vt) }.toMap
-      case (m: java.util.LinkedHashMap[_, _], st: StructType) =>
-        row(st.fields.toSeq.map { f =>
-          try fromJson(m.get(f.name), f.dataType)
-          catch { case Unconvertible => null }
-        }, st)
-      case (_, NullType) => null
-      case _ => throw Unconvertible
-    }
 
-  /** `withNestedPresence` over a parsed value: in-struct `__present`
-    * flags say whether the key exists, even with a null value. */
-  private def nestedPresence(n: Any, base: Any, t: UdType,
-                             dt: DataType): Any = (t, base, n) match {
-    case (TOption(x), _, _) => nestedPresence(n, base, x, dt)
-    case (TRecord(fs, _), r: Row, m: java.util.LinkedHashMap[_, _]) =>
-      val st = dt.asInstanceOf[StructType]
-      row(fs.map { f =>
-        nestedPresence(m.get(f.name), r.get(st.fieldIndex(f.name)), f.t,
-          st(f.name).dataType)
-      } ++ fs.filter(_.absentOptional).map(f => m.containsKey(f.name)), st)
-    case _ => base
+    /** `try_variant_get` of a union slot, as `anyToValue` reads it: a leaf
+      * that does not cast is none, a fractional number truncates into an
+      * Int slot, and a Str takes any JSON value as its text. */
+    protected def variantValue(n: Any, t: UdType): Value =
+      if (isNull(n)) VNone
+      else (t, n) match {
+        case (TOption(x), _) => variantValue(n, x)
+        case (TInt | TIntN(_, _), x: Long) => int(x, t)
+        case (TInt | TIntN(_, _), x: Double) =>
+          if (x.abs < 9.2e18) int(x.toLong, t) else VNone
+        case (TFloat | TFloat32, _) => asDouble(n) match {
+          case d: Double => float(d, t)
+          case _ => VNone
+        }
+        case (TBool, b: Boolean) => VBool(b)
+        case (TStr | TAny | TValue(_), _) => text(n)
+        case (TUnion(ts), _) if ts.forall(_.isInstanceOf[TValue]) => text(n)
+        case (TList(et), xs: Vector[_]) => VList(xs.map(variantValue(_, et)))
+        case (TMap(vt), m: java.util.LinkedHashMap[_, _]) =>
+          entries(m)(variantValue(_, vt))
+        case (rec @ TRecord(fs, _), m: java.util.LinkedHashMap[_, _]) =>
+          VMap(fs.map(f => f.name -> variantValue(m.get(f.name), f.t)).toVector)(
+            UdScript.absentOkOf(rec))
+        case (TPoint, m: java.util.LinkedHashMap[_, _]) =>
+          (asDouble(m.get("x")), asDouble(m.get("y"))) match {
+            case (x: Double, y: Double) => VPoint(x, y)
+            case _ => VNone
+          }
+        case (TTuple(ts), m: java.util.LinkedHashMap[_, _]) =>
+          VTuple(ts.indices.map(i => variantValue(m.get(s"_${i + 1}"), ts(i))).toVector)
+        case (TUnion(ts), m: java.util.LinkedHashMap[_, _]) =>
+          val tag = variantValue(m.get("_tag"), TStr)
+          val i = ts.indexWhere(b => tag == VStr(UdScript.tagOf(b)))
+          if (i < 0) VNone else variantValue(m.get(s"v$i"), ts(i))
+        case _ => VNone
+      }
   }
 
-  /** A per-line decoder for a declared record, with no session: each
-    * line becomes the row `read` tags before routing (declared fields,
-    * `__present` flags, `_invalid_reason`), with the same reasons in the
-    * same precedence. Malformedness and top-level scalars follow the
-    * variant parse, nested shapes follow `from_json`. */
-  def lineDecoder(declared: TRecord): String => Row = {
-    val schema = Msgpack.decodedSchema(declared)
-    val fs = declared.fields
-    val dts = fs.map(f => UdScript.sparkType(f.t))
-    val unions = fs.map(f => unionBranches(f.t))
-    val strict = fs.zip(unions).map { case (f, u) =>
-      u.isEmpty && flatExtractable(f.t) }
-    val absentOpt = fs.filter(_.absentOptional).map(_.name)
-    val nulls = Array.fill[Any](schema.length - 1)(null)
-    absentOpt.indices.foreach(i => nulls(fs.length + i) = false)
-    line => {
-      val pv = parseOrNull(line, strict = true)
-      if (pv == null) row(nulls.toSeq :+ "malformed_json:_payload", schema)
-      else {
-        val nodes = fs.map(f => field(pv, f.name))
-        // what `read` tests: the strict extraction or the from_json field
-        // (a payload with no duplicate key parses the same for both)
-        val fieldVals = fs.indices.map { i =>
-          if (unions(i).nonEmpty) null
-          else if (strict(i)) strictValue(nodes(i), fs(i).t)
-          else try fromJson(nodes(i), dts(i))
-          catch { case Unconvertible => null }
+  /** The decoder of a declared record, planned once: a field index and a
+    * reader per field. Each line is then one token pass over its
+    * top-level fields. A scalar or enum field reads its one token,
+    * strictly, as `read` extracts it from the variant; a union field picks
+    * its branch by the JSON type; any other field is `from_json` of its
+    * own subtree. An absent optional field is an omitted key. */
+  def lineDecoder(declared: TRecord): LineDecoder = new LineDecoder {
+    private val fs = declared.fields.toArray
+    private val n = fs.length
+    private val index = new java.util.HashMap[String, Integer]()
+    fs.indices.foreach(i => index.put(fs(i).name, i))
+    private val unions = fs.map(f => unionBranches(f.t).orNull)
+    private val strict = fs.map(f => unionBranches(f.t).isEmpty && flatExtractable(f.t))
+    private val enums = fs.map(f => enumLits(f.t).map(_.toSet).orNull)
+    private val sized = fs.map(f => sizedInt(f.t).orNull)
+    private val required = fs.map(f => !f.absentOptional && !f.t.isInstanceOf[TOption])
+    private val absentOk = UdScript.absentOkOf(declared)
+
+    // the checks of `read`, in its precedence; missing and null share one
+    private final val NoBranch = 1
+    private final val Type = 2
+    private final val Enum = 3
+    private final val Range = 4
+    private final val Missing = 5
+    private final val Null = 6
+    private val reasons = Array("union_no_branch", "type", "bad_enum",
+      "range", "missing", "null").map(r => fs.map(f => s"$r:${f.name}"))
+
+    // the line being decoded
+    private val seen = new Array[Boolean](n)
+    private val nulls = new Array[Boolean](n)
+    private val vals = new Array[Value](n)
+    private val fails = new Array[Int](n)
+    private val ranges = new Array[String](n)
+
+    private def strictValue(p: JsonParser, t: JsonToken, ft: UdType): Value =
+      (t, ft) match {
+        case (_, TOption(x)) => strictValue(p, t, x)
+        case (VALUE_NUMBER_INT, TInt | TIntN(_, _)) =>
+          if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER) null
+          else VInt(p.getLongValue)
+        case (VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT, TFloat | TFloat32) =>
+          val d = if (t == VALUE_NUMBER_FLOAT) variantDouble(p) else p.getDoubleValue
+          VFloat(if (ft == TFloat32) d.toFloat.toDouble else d)
+        case (VALUE_TRUE, TBool)  => VBool(true)
+        case (VALUE_FALSE, TBool) => VBool(false)
+        case (VALUE_STRING, TStr | TUnion(_) | TValue(_)) => VStr(p.getText)
+        case _ => p.skipChildren(); null
+      }
+
+    private def read(p: JsonParser, i: Int, t: JsonToken): Unit = {
+      seen(i) = true
+      range = null
+      if (t == VALUE_NULL) nulls(i) = true
+      else if (strict(i)) strictValue(p, t, fs(i).t) match {
+        case null => fails(i) = Type
+        case VStr(s) if enums(i) != null && !enums(i)(s) => fails(i) = Enum
+        case VInt(x) if sized(i) != null && !sized(i).contains(x) => fails(i) = Range
+        case v => vals(i) = v
+      }
+      else if (unions(i) != null) {
+        val node = tree(p, t, variant = true)
+        unions(i).find(branchMatches(node, _)) match {
+          case Some(bt) => vals(i) = variantValue(node, bt)
+          case None => fails(i) = NoBranch
         }
-        val presentNonNull = nodes.map(n => !isNull(n))
-        val tags = fs.indices.map(i => unions(i).flatMap { ts =>
-          if (!presentNonNull(i)) None
-          else ts.find(branchMatches(nodes(i), _)).map(UdScript.tagOf)
-        })
-        val data = fs.indices.map { i =>
-          unions(i) match {
-            case Some(ts) => tags(i).map { tag =>
-              val st = dts(i).asInstanceOf[StructType]
-              row(tag +: ts.indices.map(j =>
-                if (UdScript.tagOf(ts(j)) == tag)
-                  variantCast(nodes(i), st(j + 1).dataType)
-                else null), st)
-            }.orNull
-            case None if hasNestedPresence(fs(i).t) =>
-              nestedPresence(nodes(i), fieldVals(i), fs(i).t, dts(i))
-            case None => fieldVals(i)
+      } else {
+        try vals(i) = fromJsonValue(tree(p, t, variant = false), fs(i).t, presence = true)
+        catch { case Unconvertible => range = null; fails(i) = Type }
+        // `from_json` reads no value of type None
+        if (isNone(fs(i).t)) fails(i) = Type
+      }
+      ranges(i) = range
+    }
+
+    def apply(line: String): Either[String, Value] = {
+      java.util.Arrays.fill(seen, false)
+      java.util.Arrays.fill(nulls, false)
+      java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(fails, 0)
+      java.util.Arrays.fill(ranges.asInstanceOf[Array[AnyRef]], null)
+      val p = strictJson.createParser(line)
+      val wellFormed = try {
+        val t = p.nextToken()
+        if (t == START_OBJECT) {
+          var next = 0 // fields mostly arrive in declared order
+          while (p.nextToken() == FIELD_NAME) {
+            val name = p.currentName
+            val i =
+              if (next < n && fs(next).name == name) next
+              else { val j = index.get(name); if (j == null) -1 else j.intValue }
+            val vt = p.nextToken()
+            if (i < 0) p.skipChildren() else { read(p, i, vt); next = i + 1 }
           }
+        } else if (t != null) p.skipChildren()
+        t != null
+      } catch {
+        case _: java.io.IOException | Malformed => false
+      } finally p.close()
+      if (!wellFormed) Left("malformed_json:_payload")
+      else {
+        var reason: String = null
+        var rank = Int.MaxValue
+        var i = 0
+        while (i < n) {
+          val fail =
+            if (fails(i) != 0) fails(i)
+            else if (!required(i)) 0
+            else if (!seen(i)) Missing
+            else if (nulls(i)) Null
+            else 0
+          if (fail != 0 && math.min(fail, Missing) * n + i < rank) {
+            rank = math.min(fail, Missing) * n + i
+            reason = reasons(fail - 1)(i)
+          }
+          i += 1
         }
-        def first(checks: Iterator[Option[String]]): String =
-          checks.collectFirst { case Some(r) => r }.orNull
-        val reason = first(
-          fs.indices.iterator.map(i =>
-            if (unions(i).nonEmpty && presentNonNull(i) && tags(i).isEmpty)
-              Some(s"union_no_branch:${fs(i).name}") else None) ++
-          fs.indices.iterator.map(i =>
-            if (unions(i).isEmpty && presentNonNull(i) && fieldVals(i) == null)
-              Some(s"type:${fs(i).name}") else None) ++
-          fs.indices.iterator.map(i => enumLits(fs(i).t).flatMap { lits =>
-            val v = fieldVals(i)
-            if (v != null && !lits.contains(v)) Some(s"bad_enum:${fs(i).name}")
-            else None
-          }) ++
-          fs.indices.iterator.map(i => sizedInt(fs(i).t).flatMap { n =>
-            fieldVals(i) match {
-              case v: Long if !n.contains(v) => Some(s"range:${fs(i).name}")
-              case _ => None
-            }
-          }) ++
-          fs.indices.iterator.map { i =>
-            val f = fs(i)
-            if (f.absentOptional || f.t.isInstanceOf[TOption]) None
-            else if (nodes(i) == null) Some(s"missing:${f.name}")
-            else if (nodes(i) == JsonNull) Some(s"null:${f.name}")
-            else None
-          })
-        row((data ++ absentOpt.map(n => field(pv, n) != null)) :+ reason,
-          schema)
+        if (reason != null) Left(reason)
+        else {
+          val b = Vector.newBuilder[(String, Value)]
+          i = 0
+          while (i < n) {
+            if (seen(i) || !fs(i).absentOptional)
+              b += fs(i).name -> (if (vals(i) == null) VNone else vals(i))
+            i += 1
+          }
+          val v = VMap(b.result())(absentOk)
+          ranges.find(_ != null).foreach(m => throw OutOfRange(v, m))
+          Right(v)
+        }
       }
     }
+
+    def rowText(v: Value): String = {
+      val m = v.asInstanceOf[VMap].index
+      (fs.map(f => m.get(f.name).fold("null")(cellText(_, f.t, presence = true))) ++
+        fs.filter(_.absentOptional).map(f => m.contains(f.name).toString))
+        .mkString("\t")
+    }
   }
+
+  /** The decoder of a scalar-input script: each line is `from_json` of
+    * `{"value":<line>}`, as `readScalar` reads it. */
+  def scalarDecoder(t: UdType): LineDecoder = new LineDecoder {
+    def apply(line: String): Either[String, Value] = {
+      val p = strictJson.createParser("{\"value\":" + line + "}")
+      val node = try {
+        p.nextToken(); p.nextToken() // the wrapper's `{"value":`
+        val n = tree(p, p.nextToken(), variant = false)
+        while (p.nextToken() == FIELD_NAME) { p.nextToken(); p.skipChildren() }
+        n
+      } catch {
+        case _: java.io.IOException | Malformed => null
+      } finally p.close()
+      range = null
+      node match {
+        case null => Left("malformed_json:_payload")
+        case JsonNull =>
+          if (t.isInstanceOf[TOption]) Right(VNone) else Left("null:value")
+        case _ =>
+          val v = try fromJsonValue(node, t, presence = false)
+          catch { case Unconvertible => null }
+          if (v == null || isNone(t)) Left("type:value")
+          else if (range != null) throw OutOfRange(v, range)
+          else Right(v)
+      }
+    }
+
+    def rowText(v: Value): String = cellText(v, t, presence = false)
+  }
+
+  /** A decoded value as Spark prints the row cell it comes from: a struct
+    * `[a,b]`, an array `ArraySeq(…)`, a map as a Scala `Map`, a general
+    * union as its tagged struct. `presence`: nested `__present` flags
+    * hold key presence along the records under a top-level field, and
+    * are null elsewhere. */
+  private def cellText(v: Value, t: UdType, presence: Boolean): String =
+    (v, t) match {
+      case (VNone, _) => "null"
+      case (_, TOption(x)) => cellText(v, x, presence)
+      case (_, TUnion(ts)) if !ts.forall(_.isInstanceOf[TValue]) =>
+        // the branch ingest gave the value
+        val i = ts.indexWhere(b => (v, b) match {
+          case (VInt(_), TInt | TIntN(_, _)) | (VFloat(_), TFloat) |
+              (VStr(_), TStr) | (VBool(_), TBool) | (VList(_), TList(_)) |
+              (_: VMap, TRecord(_, _) | TMap(_)) | (VPoint(_, _), TPoint) => true
+          case (VStr(s), TValue(l)) => s == l
+          case _ => false
+        })
+        if (i < 0) Values.render(v)
+        else (UdScript.tagOf(ts(i)) +: ts.indices.map(j =>
+          if (j == i) cellText(v, ts(i), presence = false) else "null"))
+          .mkString("[", ",", "]")
+      case (VList(xs), TList(et)) =>
+        xs.map(cellText(_, et, presence = false)).mkString("ArraySeq(", ", ", ")")
+      case (m: VMap, TMap(vt)) =>
+        m.entries.map { case (k, x) => k -> cellText(x, vt, presence = false) }
+          .toMap.toString
+      case (m: VMap, TRecord(fs, _)) =>
+        (fs.map(f => m.index.get(f.name).fold("null")(cellText(_, f.t, presence))) ++
+          fs.filter(_.absentOptional).map(f =>
+            if (presence) m.index.contains(f.name).toString else "null"))
+          .mkString("[", ",", "]")
+      case (VTuple(xs), TTuple(ts)) =>
+        xs.zip(ts).map { case (x, t2) => cellText(x, t2, presence = false) }
+          .mkString("[", ",", "]")
+      case (VPoint(x, y), _) => s"[$x,$y]"
+      case _ => Values.render(v)
+    }
 
   /** The tagged frame of a scalar-input script: `value` and the reason
     * it is invalid (null when valid). */
-  def scalarSchema(t: UdType): StructType = StructType(Seq(
+  private def scalarSchema(t: UdType): StructType = StructType(Seq(
     StructField("value", UdScript.sparkType(t)),
     StructField("_invalid_reason", StringType)))
-
-  /** A per-line decoder for a scalar-input script, with no session: the
-    * row `readScalar` tags, with the same reasons. */
-  def scalarDecoder(t: UdType): String => Row = {
-    val schema = scalarSchema(t)
-    val dt = schema("value").dataType
-    line => {
-      val (v, reason) =
-        parseOrNull("{\"value\":" + line + "}", strict = true) match {
-          case m: java.util.LinkedHashMap[_, _] => m.get("value") match {
-            case null => (null, "missing:value")
-            case JsonNull =>
-              (null, if (t.isInstanceOf[TOption]) null else "null:value")
-            case n =>
-              val x = try fromJson(n, dt) catch { case Unconvertible => null }
-              (x, if (x == null) "type:value" else null)
-          }
-          case _ => (null, "malformed_json:_payload")
-        }
-      row(Seq(v, reason), schema)
-    }
-  }
 
   /** Parse one JSON value per line under a declared scalar type: the
     * value is `from_json` of `{"value":<line>}`. A line is invalid, and
@@ -642,6 +823,111 @@ object JsonRecords {
         g.writeEndArray()
       case (other, _) => g.writeString(String.valueOf(other))
     }
+
+  /** Writes without a separator between root values: the lines end in
+    * `\n`. */
+  private val linesFactory = new JsonFactoryBuilder().rootValueSeparator(null: String).build()
+
+  /** Interpreter outputs as JSON lines under the declared output type, in
+    * the bytes `render(valueToRow(v, t, schema), schema)` gives: null
+    * fields left out, a nested record's `__present` flags, a general
+    * union as `{"_tag":…,"v<i>":…}`. One generator writes the whole run
+    * into a line buffer that drains to `out` in 64 KB chunks. */
+  final class JsonLines(out: java.io.OutputStream, t: UdType) {
+    private val text = new java.lang.StringBuilder()
+    private val sink = new java.io.Writer {
+      def write(cs: Array[Char], off: Int, len: Int): Unit = text.append(cs, off, len)
+      def flush(): Unit = ()
+      def close(): Unit = ()
+    }
+    private var g = linesFactory.createGenerator(sink)
+
+    /** One record's outputs, all or none: a value that fits no slot stops
+      * the record (UdException) and leaves nothing of it written. */
+    def write(vs: Iterable[Value]): Unit = {
+      val mark = text.length
+      try {
+        vs.foreach { v =>
+          (v, t) match {
+            case (m: VMap, rec: TRecord) => record(m, rec, flags = false)
+            case _ => value(v, t)
+          }
+          g.writeRaw('\n')
+        }
+        g.flush()
+      } catch {
+        case e: UdException =>
+          g = linesFactory.createGenerator(sink)
+          text.setLength(mark)
+          throw e
+      }
+      if (text.length >= (1 << 16)) drain()
+    }
+
+    def flush(): Unit = { g.flush(); drain(); out.flush() }
+
+    private def drain(): Unit = {
+      val b = text.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out.write(b, 0, b.length)
+      text.setLength(0)
+    }
+
+    /** A top-level record has no flag columns; nested ones do. */
+    private def record(m: VMap, rec: TRecord, flags: Boolean): Unit = {
+      g.writeStartObject()
+      rec.fields.foreach { f =>
+        m.index.get(f.name) match {
+          case Some(x) if x != VNone => g.writeFieldName(f.name); value(x, f.t)
+          case _ =>
+        }
+      }
+      if (flags) rec.fields.foreach { f =>
+        if (f.absentOptional)
+          g.writeBooleanField(s"${f.name}__present", m.index.contains(f.name))
+      }
+      g.writeEndObject()
+    }
+
+    private def value(v: Value, t: UdType): Unit = (v, t) match {
+      case (VNone, _) => g.writeNull()
+      case (_, TOption(x)) => value(v, x)
+      case (_, TInt | TIntN(_, _)) => g.writeNumber(UdScript.intSlot(v, t))
+      case (_, TFloat | TFloat32) => g.writeNumber(UdScript.floatSlot(v, t))
+      case (VBool(b), TBool) => g.writeBoolean(b)
+      case (_, TStr | TAny | TValue(_)) => g.writeString(Values.render(v))
+      case (_, TUnion(ts)) if ts.forall(_.isInstanceOf[TValue]) =>
+        g.writeString(Values.render(v))
+      case (_, TUnion(ts)) =>
+        val i = UdScript.unionSlot(v, ts)
+        g.writeStartObject()
+        g.writeStringField("_tag", UdScript.tagOf(ts(i)))
+        g.writeFieldName(s"v$i")
+        value(v, ts(i))
+        g.writeEndObject()
+      case (m: VMap, rec: TRecord) => record(m, rec, flags = true)
+      case (VTuple(xs), TTuple(ts)) =>
+        g.writeStartObject()
+        xs.zip(ts).zipWithIndex.foreach { case ((x, t2), i) =>
+          if (x != VNone) { g.writeFieldName(s"_${i + 1}"); value(x, t2) }
+        }
+        g.writeEndObject()
+      case (VPoint(x, y), TPoint) =>
+        g.writeStartObject()
+        g.writeNumberField("x", x)
+        g.writeNumberField("y", y)
+        g.writeEndObject()
+      case (VList(xs), TList(et)) =>
+        g.writeStartArray()
+        xs.foreach(value(_, et))
+        g.writeEndArray()
+      case (m: VMap, TMap(vt)) =>
+        // in the order of the Scala map `valueToRow` builds
+        g.writeStartObject()
+        m.entries.toMap.foreach { case (k, x) => g.writeFieldName(k); value(x, vt) }
+        g.writeEndObject()
+      case _ => UdScript.cannotEncode(v, t)
+    }
+  }
 
   /** Write a DataFrame as JSON-lines strings (egress lowering). */
   def toJsonLines(df: DataFrame): Dataset[String] = {

@@ -471,6 +471,37 @@ class CliDifferentialSpec extends SparkSpec {
       """{"q":3.75,"r":1.5}"""))
   }
 
+  test("a JSON -0.0 reads as the Spark source reads it, on both paths") {
+    // top-level fields extract from the variant parse, which keeps a plain
+    // decimal with no sign of zero; nested ones keep from_json's -0.0
+    val runs = agreeIn("ColumnTier", """script "negzero";
+      |input  {a: Float, b: Float, xs: [Float]};
+      |output {q: Float, b: Float, xs: [Float]};
+      |out {q: in.a / in.b, b: in.b, xs: in.xs};""".stripMargin,
+      """{"a": 7.0, "b": -0.0, "xs": [-0.0]}""", """{"a": 7.0, "b": -0e0, "xs": []}""")
+    assert(runs("dlq").out == Seq("""{"q":"-Infinity","b":-0.0,"xs":[]}""",
+      """{"q":"Infinity","b":0.0,"xs":[-0.0]}"""))
+  }
+
+  test("a column-tier match on a base type takes its sized-int branches") {
+    val runs = agreeIn("ColumnTier", """script "basetype";
+      |input  {x: U8 | Str};
+      |output {r: Str};
+      |out {r: match (in.x) { case i: Int => "n"; case s: Str => s; }};""".stripMargin,
+      """{"x": 5}""", """{"x": "hi"}""", """{"x": true}""")
+    assert(runs("dlq").out == Seq("""{"r":"hi"}""", """{"r":"n"}"""))
+    assert(runs("abort").code == 1)
+    // an Int pattern over two int branches binds whichever slot is set
+    val two = agreeIn("ColumnTier", """script "twoints";
+      |input  {x: I16 | U8 | Str};
+      |output {n: Int, s: Str};
+      |out {n: match (in.x) { case i: Int => i * 2; else => -1; },
+      |     s: match (in.x) { case s: Str => s; case v: U8 => "u8"; else => "-"; }};""".stripMargin,
+      """{"x": 5}""", """{"x": -3}""", """{"x": "hi"}""")
+    assert(two("dlq").out ==
+      Seq("""{"n":-1,"s":"hi"}""", """{"n":-6,"s":"-"}""", """{"n":10,"s":"u8"}"""))
+  }
+
   test("msgpack stdin/stdout round-trips like the JSON run, on both paths") {
     val json = lines(
       """{"id": 1, "note": "x", "score": 2.5}""",

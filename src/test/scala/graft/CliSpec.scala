@@ -3,6 +3,8 @@ package graft
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, PrintStream}
 import java.nio.ByteBuffer
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Msgpack
 
 /** End-to-end CLI driver (reference main.rs:51-62 UX): scripts from the
@@ -259,16 +261,59 @@ class CliSpec extends SparkSpec {
     assert(!b.hasRemaining)
   }
 
+  /** `graft.Main` in a fresh JVM on this classpath, with this JVM's
+    * `--add-opens` flags: exit code, stdout, stderr. */
+  private def fresh(jvmFlags: Seq[String], args: Seq[String],
+                    stdin: String = ""): (Int, String, String) = {
+    val jvm = new java.io.File(System.getProperty("java.home"), "bin/java")
+    val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val opens = inherited.zip(inherited.drop(1) :+ "").flatMap {
+      case ("--add-opens", v) => Seq("--add-opens", v)
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case _ => Nil
+    }
+    val (in, out, err) = (tmpFile(".in", stdin), tmpFile(".out", ""), tmpFile(".err", ""))
+    val p = new ProcessBuilder((Seq(jvm.getPath, "-Xmx1g") ++ opens ++ jvmFlags ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Main") ++ args): _*)
+      .redirectInput(new java.io.File(in)).redirectOutput(new java.io.File(out))
+      .redirectError(new java.io.File(err)).start()
+    def read(f: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f)), "UTF-8")
+    (p.waitFor(), read(out), read(err))
+  }
+
   test("front-end output is UTF-8 whatever the platform charset") {
     val src = tmpFile(".us",
       "script \"a\";\ninput Str;\noutput Str;\nout \"ä\" + in;\n")
-    val jvm = new java.io.File(System.getProperty("java.home"), "bin/java")
-    val p = new ProcessBuilder(jvm.getPath, "-Dfile.encoding=US-ASCII",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.Main", "--dump-ast", src).redirectErrorStream(true).start()
-    val text = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    assert(p.waitFor() == 0, text)
-    assert(text.contains("\"ä\""), text)
+    val (code, out, err) = fresh(Seq("-Dfile.encoding=US-ASCII"), Seq("--dump-ast", src))
+    assert(code == 0, err)
+    assert(out.contains("\"ä\""), out)
+  }
+
+  test("an abort on the Spark leg prints only its runtime error line") {
+    val in = tmpFile(".jsonl", """{"event_id": 2, "value": -1.0}""" + "\n")
+    val (code, out, err) = fresh(Nil, Seq("--in", in, "examples/checked_effects.us"))
+    assert(code == 1 && out.isEmpty)
+    assert(err == "runtime error: negative value\n", err)
+  }
+
+  test("the stdin pipe builds no Spark schema: no collation classes load") {
+    // StringType's collation tables start ICU; a Spark schema needs them
+    for ((script, stdin, want) <- Seq(
+        ("examples/hello.us", "\"world\"\n", "\"Hello, world\"\n"),
+        ("examples/filter_events.us",
+          """{"event_id": 1, "event_type": "click", "value": 80.5}""" + "\n",
+          """{"event_id":1,"cat":"ui","boosted":161.0}""" + "\n"))) {
+      val log = tmpFile(".log", "")
+      val (code, out, err) = fresh(Seq(s"-Xlog:class+load:file=$log"), Seq(script), stdin)
+      assert(code == 0 && out == want, err)
+      val loaded = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(log)), "UTF-8")
+      assert(loaded.contains("graft.lang.Interp"), s"$script: no class-load log")
+      assert(!loaded.contains("com.ibm.icu.") && !loaded.contains("CollationFactory"),
+        s"$script loaded collation classes")
+    }
   }
 
   test("modules resolve from --libdir (and the script's own directory)") {

@@ -1,13 +1,20 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.kernel.UdException
 import graft.lang.Ast._
+import graft.lang.UdScript
+import graft.lang.Values._
 import org.apache.spark.sql.{Encoders, Row}
 
-/** The session-free decoders reproduce the Spark sources row for row:
-  * `lineDecoder` against `JsonRecords.read`, `scalarDecoder` against
-  * `readScalar` — the same invalid reason for every payload and the same
-  * values for every valid one, over edge payloads of each field kind. */
+/** The session-free decoders agree with the Spark sources record for
+  * record: `lineDecoder` with `JsonRecords.read`, `scalarDecoder` with
+  * `readScalar`. Every payload gets the same invalid reason; a valid one
+  * decodes to the value the interpreter gets from the kept row
+  * (`UdScript.rowToValue`), or stops with the same boundary error, and
+  * prints the same DLQ text as that row, over edge payloads of each
+  * field kind. Values compare exactly: NaN equals NaN and -0.0 is not
+  * 0.0 (`Row.equals` calls them equal). */
 class JsonLineDecoderSpec extends SparkSpec {
 
   private def f(n: String, t: UdType, absent: Boolean = false) =
@@ -26,18 +33,49 @@ class JsonLineDecoderSpec extends SparkSpec {
     })
   }
 
-  private def agree(payloads: Seq[String], decode: String => Row,
-                    read: org.apache.spark.sql.Dataset[String] => ValidatedIngest.Validated)
+  /** Exact value equality, with a record's absent-optional names. */
+  private def same(a: Value, b: Value): Boolean = (a, b) match {
+    case (VFloat(x), VFloat(y)) => java.lang.Double.compare(x, y) == 0
+    case (VPoint(x1, y1), VPoint(x2, y2)) =>
+      same(VFloat(x1), VFloat(x2)) && same(VFloat(y1), VFloat(y2))
+    case (VList(xs), VList(ys)) =>
+      xs.size == ys.size && xs.zip(ys).forall { case (x, y) => same(x, y) }
+    case (VTuple(xs), VTuple(ys)) =>
+      xs.size == ys.size && xs.zip(ys).forall { case (x, y) => same(x, y) }
+    case (m: VMap, n: VMap) =>
+      m.absentOk == n.absentOk && m.entries.size == n.entries.size &&
+        m.entries.zip(n.entries).forall { case ((k1, x), (k2, y)) =>
+          k1 == k2 && same(x, y) }
+    case _ => a == b
+  }
+
+  /** Each payload's reason, after checking it and, for a valid payload,
+    * the value (`value` reads the kept row as the interpreter's input)
+    * and the DLQ text. `partial`: payloads whose row holds a point with
+    * an unreadable coordinate, a value of none with no DLQ text to match. */
+  private def agree(payloads: Seq[String], decode: JsonRecords.LineDecoder,
+                    read: org.apache.spark.sql.Dataset[String] => ValidatedIngest.Validated,
+                    value: Row => Value, partial: Set[String] = Set.empty)
       : Seq[String] = {
     assert(payloads.distinct == payloads)
     payloads.zip(sparkRows(payloads, read)).map { case (p, (reason, good)) =>
-      val r = decode(p)
-      val local = r.getString(r.length - 1)
+      val (local, v, stop) = try decode(p) match {
+        case Left(r)  => (r, null, null)
+        case Right(x) => (null, x, null)
+      } catch { case JsonRecords.OutOfRange(x, m) => (null, x, m) }
       assert(local == reason, s"reason of $p")
-      good.foreach(g => assert(Row.fromSeq(r.toSeq.init) == g, s"row of $p"))
+      good.foreach { g =>
+        val (want, wantStop) =
+          try (value(g), null) catch { case e: UdException => (null, e.message) }
+        assert(stop == wantStop, s"boundary error of $p")
+        if (stop == null) assert(same(v, want), s"value of $p: $v vs $want")
+        if (!partial(p)) assert(decode.rowText(v) == g.mkString("\t"), s"DLQ text of $p")
+      }
       local
     }
   }
+
+  private def record(t: TRecord): Row => Value = UdScript.rowToValue(_, t)
 
   private val scalars = TRecord(Seq(
     f("i", TInt), f("x", TFloat), f("s", TStr), f("b", TBool),
@@ -59,10 +97,11 @@ class JsonLineDecoderSpec extends SparkSpec {
       """{"i": 1, "i": 2, "x": 1, "s": "s", "b": true, "e": "a", "n": 1, "g": 1}""",
       s"{$base} trailing text", s"  {$base}  ",
       """[1, 2]""", "\"just a string\"", "42", "null", "", "   ", "{", "{\"i\": 1,}",
-      "not json", "{\"i\": NaN}")
+      "not json", "{\"i\": NaN}",
+      """{"i": 2, "x": -0.0, "s": "s", "b": true, "e": "a", "n": 1, "g": -0.0}""")
     val reasons = agree(payloads, JsonRecords.lineDecoder(scalars),
-      JsonRecords.read(spark, _, scalars, ValidatedIngest.Dlq))
-    assert(reasons.count(_ == null) == 5, reasons)
+      JsonRecords.read(spark, _, scalars, ValidatedIngest.Dlq), record(scalars))
+    assert(reasons.count(_ == null) == 6, reasons)
     assert(Set("type:i", "bad_enum:e", "range:n", "null:i", "missing:i",
       "malformed_json:_payload").subsetOf(reasons.toSet), reasons)
   }
@@ -87,20 +126,37 @@ class JsonLineDecoderSpec extends SparkSpec {
       """{"id": 7, "u": null, "r": [1], "m": [1], "l": "x"}""",
       """{"id": 8, "u": 12345678901234567890, "r": {"l": [2e3], "a": 9}}""",
       """{"id": 9, "r": {"a": 1, "l": [1], "extra": {"deep": [1]}}, "p": {"x": "1", "y": 2}}""",
-      """{"id": 10, "m": {"a": 1, "b": null}, "l": ["ä", "tab\there"]}""")
+      """{"id": 10, "m": {"a": 1, "b": null}, "l": ["ä", "tab\there"]}""",
+      """{"id": 11, "u": -0.0, "r": {"a": 1, "l": [-0.0, -0e0]}}""")
     val reasons = agree(payloads, JsonRecords.lineDecoder(shapes),
-      JsonRecords.read(spark, _, shapes, ValidatedIngest.Dlq))
+      JsonRecords.read(spark, _, shapes, ValidatedIngest.Dlq), record(shapes),
+      partial = Set(payloads(8)))
     assert(reasons.contains("union_no_branch:u") && reasons.contains(null), reasons)
   }
 
   test("scalar-input lines match readScalar") {
     for (t <- Seq(TStr, TInt, TFloat, TOption(TInt), TList(TFloat),
                   TRecord(Seq(f("a", TInt))))) {
-      val payloads = Seq("\"s\"", "42", "2.5", "1e2", "\"NaN\"", "true", "null",
+      val payloads = Seq("\"s\"", "42", "2.5", "-0.0", "1e2", "\"NaN\"", "true", "null",
         "[1, 2.5]", "[1, \"x\"]", """{"a": 1}""", """{"a": "x"}""", "not json",
         "", "1, \"value\": 2", "1} {\"x\": 2")
       agree(payloads, JsonRecords.scalarDecoder(t),
-        JsonRecords.readScalar(spark, _, t, ValidatedIngest.Dlq))
+        JsonRecords.readScalar(spark, _, t, ValidatedIngest.Dlq),
+        r => if (r.isNullAt(0)) VNone else UdScript.anyToValue(r.get(0), t))
     }
+  }
+
+  test("a sized-int union branch out of range stops the record as rowToValue does") {
+    val t = TRecord(Seq(f("id", TInt),
+      f("v", TUnion(Seq(TIntN(8, false), TValue("none"), TStr))),
+      f("w", TOption(TUnion(Seq(TInt, TFloat))))))
+    val payloads = Seq("""{"id": 1, "v": 300}""", """{"id": 2, "v": 5, "w": -0.0}""",
+      """{"id": 3, "v": "none", "w": -0.0e0}""", """{"id": 4, "v": "x", "w": -0}""",
+      """{"id": 5, "v": 2.5}""")
+    val reasons = agree(payloads, JsonRecords.lineDecoder(t),
+      JsonRecords.read(spark, _, t, ValidatedIngest.Dlq), record(t))
+    assert(reasons == Seq(null, null, null, null, "union_no_branch:v"))
+    val stopped = intercept[JsonRecords.OutOfRange](JsonRecords.lineDecoder(t)(payloads.head))
+    assert(stopped.message == "range: 300 not a U8")
   }
 }
