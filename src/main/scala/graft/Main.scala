@@ -10,7 +10,7 @@ import graft.kernel.UdException
 import graft.lang.Ast._
 import graft.lang.{Interp, UdParser, UdScript}
 import graft.lang.Values.Value
-import graft.sources.{JsonRecords, Msgpack, ValidatedIngest}
+import graft.sources.{JsonRecords, LineBuffer, Msgpack, ValidatedIngest}
 import org.apache.spark.{SparkException, SparkThrowable}
 import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
@@ -271,21 +271,6 @@ object Main {
     }
   }
 
-  /** Lines to a stream as UTF-8 (what stdin is read as, whatever the
-    * platform charset), written in 64 KB chunks instead of one flush per
-    * line. */
-  private final class LineBuffer(out: PrintStream) {
-    private val sb = new java.lang.StringBuilder()
-    def +=(line: String): Unit = {
-      sb.append(line).append('\n')
-      if (sb.length >= (1 << 16)) flush()
-    }
-    def flush(): Unit = {
-      val b = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.write(b, 0, b.length); out.flush(); sb.setLength(0)
-    }
-  }
-
   /** Route an invalid record by mode: abort stops the run, skip drops
     * it, dlq prints its DLQ line. */
   private def invalid(opts: Opts, dlq: LineBuffer, reason: String,
@@ -321,7 +306,8 @@ object Main {
 
   /** stdin → stdout in this thread, with no session. A record's outputs
     * are written once it has run to the end. In dlq mode a `throw` sends
-    * the input row and its message to stderr, as `runEither` does. */
+    * the input row's cells and its message to stderr, as `runEither`
+    * does. */
   private def runLocal(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream): Unit = {
     val dlq = new LineBuffer(err)
@@ -342,10 +328,10 @@ object Main {
     }
     val interp = new Interp(c.script, c.libs)
     interp.initEnv
-    val lines = new JsonRecords.JsonLines(out, c.script.output)
+    val lines = new JsonRecords.JsonLines(new LineBuffer(out), c.script.output)
     val outputs = scala.collection.mutable.ArrayBuffer.empty[Value]
-    def thrown(input: Value, message: String): Unit =
-      if (opts.mode == "dlq") dlq += decode.rowText(input) + "\t" + message
+    def thrown(line: String, message: String): Unit =
+      if (opts.mode == "dlq") dlq += decode.rowText(line) + "\t" + message
       else throw RunError(message)
     val reader = new java.io.BufferedReader(
       new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
@@ -357,8 +343,8 @@ object Main {
           case Right(v) =>
             outputs.clear()
             try { interp.run(v, outputs += _); lines.write(outputs) }
-            catch { case e: UdException => thrown(v, e.message) }
-        } catch { case JsonRecords.OutOfRange(v, message) => thrown(v, message) }
+            catch { case e: UdException => thrown(line, e.message) }
+        } catch { case JsonRecords.OutOfRange(message) => thrown(line, message) }
         line = reader.readLine()
       }
     } finally lines.flush()
@@ -398,8 +384,10 @@ object Main {
         t.getMessageParameters.get("errorMessage")
     }
 
-  /** The `--in`/`--out` legs: the script planned on Spark. Records from
-    * stdin (with `--out` alone) take the same decoder as `runLocal`. */
+  /** The `--in`/`--out` legs: the script planned on Spark. With `--out`
+    * alone, JSON stdin is read as an `--in FILE` is, through the Spark
+    * sources; msgpack stdin is decoded in this thread and handed to
+    * `createDataFrame`. */
   private def runSpark(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream,
                        session: Option[SparkSession]): Unit = {
@@ -484,9 +472,13 @@ object Main {
     }
 
   /** The session a `--compile`, `--in` or `--out` run starts for itself.
-    * Its log shows errors only while it starts, and never the executor's
-    * report of a failed task: the run reports that failure as its one
-    * `runtime error:` line. A session passed in keeps its own logging. */
+    * Unless a log4j configuration file is given (the system property
+    * `log4j2.configurationFile` or `log4j.configurationFile`, or
+    * `LOG4J_CONFIGURATION_FILE`), its log shows errors only, and none
+    * from the executor or the task scheduler: a run that fails reports it
+    * as its one `runtime error:` line with the failure's message, so the
+    * stack trace of any executor error, a script's `throw` or not, is not
+    * printed. A session passed in keeps its own logging. */
   private def ownSession(cores: Int): SparkSession = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.LoggerContext
@@ -504,10 +496,14 @@ object Main {
       }
       b.build()
     }
+    val configured = sys.env.contains("LOG4J_CONFIGURATION_FILE") ||
+      Seq("log4j2.configurationFile", "log4j.configurationFile").exists(sys.props.contains)
     // Spark loads its own INFO profile unless both the class loader's
     // context and the current one are configured
-    Configurator.reconfigure(quiet())
-    LogManager.getContext().asInstanceOf[LoggerContext].reconfigure(quiet())
+    if (!configured) {
+      Configurator.reconfigure(quiet())
+      LogManager.getContext().asInstanceOf[LoggerContext].reconfigure(quiet())
+    }
     GraftSession.local(cores)
   }
 

@@ -293,9 +293,13 @@ object JsonRecords {
   //
   // A parsed JSON value is a small tree of plain values: JsonNull, Boolean,
   // Long (an integer that fits, what `schema_of_variant` calls BIGINT),
-  // BigInteger (a wider integer), Double, String, Vector (array) and
-  // LinkedHashMap (object, in key order). jackson-core's streaming parser
-  // builds it; databind's ObjectMapper would load ~400 classes at start-up.
+  // String, Vector (array), a java.util.Map (object), and a wider number as
+  // the parse it stands for stores it. `from_json`'s tree keeps a
+  // BigInteger or a Double, and objects in key order (LinkedHashMap). The
+  // variant parse's tree keeps a plain decimal of up to 38 digits as a
+  // BigDecimal with no trailing zeros, any other as a Double, and objects
+  // sorted by key (TreeMap). jackson-core's streaming parser builds it;
+  // databind's ObjectMapper would load ~400 classes at start-up.
 
   private[graft] case object JsonNull
 
@@ -321,12 +325,12 @@ object JsonRecords {
     } finally p.close()
   }
 
-  /** The JSON value at token t as a tree. With `variant`, a number reads
-    * as the variant parse stores it: a negative zero written as a plain
-    * decimal is 0.0, since a decimal has no sign of zero. */
+  /** The JSON value at token t as a tree, as `from_json` or, with
+    * `variant`, the variant parse reads it. */
   private def tree(p: JsonParser, t: JsonToken, variant: Boolean): Any = t match {
     case START_OBJECT =>
-      val m = new java.util.LinkedHashMap[String, Any]()
+      val m: java.util.Map[String, Any] =
+        if (variant) new java.util.TreeMap() else new java.util.LinkedHashMap()
       while (p.nextToken() == FIELD_NAME) {
         val k = p.currentName
         m.put(k, tree(p, p.nextToken(), variant))
@@ -339,26 +343,35 @@ object JsonRecords {
       b.result()
     case VALUE_STRING => p.getText
     case VALUE_NUMBER_INT =>
-      if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
-        p.getBigIntegerValue
-      else p.getLongValue
-    case VALUE_NUMBER_FLOAT => if (variant) variantDouble(p) else p.getDoubleValue
+      if (p.getNumberType != JsonParser.NumberType.BIG_INTEGER) p.getLongValue
+      else if (variant) variantNumber(p) else p.getBigIntegerValue
+    case VALUE_NUMBER_FLOAT => if (variant) variantNumber(p) else p.getDoubleValue
     case VALUE_TRUE  => true
     case VALUE_FALSE => false
     case VALUE_NULL  => JsonNull
     case _ => throw Malformed
   }
 
-  /** A JSON fraction as `try_variant_get(…, "double")` reads it: the
-    * variant keeps a plain decimal of up to 38 digits as a decimal. */
+  /** A wide or fractional JSON number as the variant parse stores it: a
+    * plain decimal of up to 38 digits as a decimal, which has no trailing
+    * zeros and no sign of zero, any other as a double. */
+  private def variantNumber(p: JsonParser): Any = {
+    val text = p.getText
+    val d =
+      if (text.forall(c => c == '-' || c == '.' || c.isDigit)) new java.math.BigDecimal(text)
+      else null
+    if (d != null && d.scale <= 38 && d.precision <= 38) d.stripTrailingZeros
+    else p.getDoubleValue
+  }
+
+  /** A JSON number as `try_variant_get(…, "double")` reads it. */
   private def variantDouble(p: JsonParser): Double = {
     val d = p.getDoubleValue
+    // only a zero can differ: a decimal has no sign of zero
     if (d != 0.0 || 1 / d > 0) d
-    else {
-      val text = p.getText
-      if (text.forall(c => c == '-' || c == '.' || c.isDigit) &&
-          new java.math.BigDecimal(text).scale <= 38) 0.0
-      else d
+    else variantNumber(p) match {
+      case x: java.math.BigDecimal => x.doubleValue
+      case _ => d
     }
   }
 
@@ -369,31 +382,138 @@ object JsonRecords {
     case _ => t == TNone
   }
 
-  private def asDouble(n: Any): Any = n match {
-    case x: Long   => x.toDouble
-    case x: Double => x
-    case x: java.math.BigInteger => x.doubleValue
-    case _ => null
-  }
-
-  /** The branch test of `unionTag`, on a parsed value. */
+  /** The branch test of `unionTag`, on a variant tree. */
   private def branchMatches(n: Any, bt: UdType): Boolean = (n, bt) match {
     case (_: Long, TInt | TIntN(_, _)) => true
-    case (_: Double | _: java.math.BigInteger, TFloat) => true
+    case (_: Double | _: java.math.BigDecimal, TFloat) => true
     case (_: String, TStr)  => true
     case (_: Boolean, TBool) => true
     case (x: String, TValue(s)) => x == s
     case (_: Vector[_], TList(_)) => true
-    case (_: java.util.LinkedHashMap[_, _], TRecord(_, _) | TPoint | TMap(_)) => true
+    case (_: java.util.Map[_, _], TRecord(_, _) | TPoint | TMap(_)) => true
     case _ => false
   }
 
   private object Unconvertible extends RuntimeException(null, null, false, false)
 
+  /** A value its type cannot take: `from_json` fails it (Unconvertible),
+    * a variant cast reads it as null. */
+  private def fail(variant: Boolean): Unit = if (!variant) throw Unconvertible
+
+  /** Is t read as one leaf: an Int, Float, Bool or Str (Any, a string
+    * literal and a string-literal enum are Strs)? */
+  private def isLeaf(t: UdType): Boolean = t match {
+    case TInt | TIntN(_, _) | TFloat | TFloat32 | TBool | TStr | TAny | TValue(_) => true
+    case TUnion(ts) => ts.forall(_.isInstanceOf[TValue])
+    case _ => false
+  }
+
+  /** A parsed leaf under a leaf type as the Spark cell holds it: a Long,
+    * Double, Boolean or String, or null. A Str takes any JSON value as its
+    * compact text. Otherwise `from_json` (not `variant`) takes a value of
+    * the type only, a Float any number or the name of NaN or an infinity,
+    * and fails the rest; a variant cast casts across the types as
+    * `try_variant_get` does and reads what does not cast as null. */
+  private def leaf(n: Any, t: UdType, variant: Boolean): Any = (t, n) match {
+    case (TInt | TIntN(_, _), x: Long) => x
+    case (TFloat | TFloat32, x: Long) => x.toDouble
+    case (TFloat | TFloat32, x: Double) => x
+    case (TBool, x: Boolean) => x
+    case (TInt | TIntN(_, _) | TFloat | TFloat32 | TBool, _) =>
+      if (variant) cast(n, t)
+      else (t, n) match {
+        case (TFloat | TFloat32, x: java.math.BigInteger) => x.doubleValue
+        case (TFloat | TFloat32, "NaN") => Double.NaN
+        case (TFloat | TFloat32, "+INF" | "+Infinity" | "Infinity") => Double.PositiveInfinity
+        case (TFloat | TFloat32, "-INF" | "-Infinity") => Double.NegativeInfinity
+        case _ => throw Unconvertible
+      }
+    case (_, s: String) => s
+    case _ => render(n, null)
+  }
+
+  /** `try_variant_get`'s cast of a variant leaf to an Int, Float or Bool
+    * of another type, or null. */
+  private def cast(n: Any, t: UdType): Any = t match {
+    case TBool => n match {
+      case x: Long => x != 0
+      case x: Double => x != 0
+      case x: java.math.BigDecimal => x.signum != 0
+      case s: String => s.trim.toLowerCase match {
+        case "t" | "true" | "y" | "yes" | "1" => true
+        case "f" | "false" | "n" | "no" | "0" => false
+        case _ => null
+      }
+      case _ => null
+    }
+    case TFloat | TFloat32 => n match {
+      case x: java.math.BigDecimal => x.doubleValue
+      case b: Boolean => if (b) 1.0 else 0.0
+      case s: String =>
+        try s.toDouble catch {
+          case _: NumberFormatException => s.trim.toLowerCase match {
+            case "inf" | "+inf" | "infinity" | "+infinity" => Double.PositiveInfinity
+            case "-inf" | "-infinity" => Double.NegativeInfinity
+            case "nan" => Double.NaN
+            case _ => null
+          }
+        }
+      case _ => null
+    }
+    case _ => n match { // an Int or a sized int
+      case x: Double =>
+        if (math.floor(x) <= Long.MaxValue && math.ceil(x) >= Long.MinValue) x.toLong
+        else null
+      case x: java.math.BigDecimal =>
+        val i = x.toBigInteger // toward zero
+        if (i.bitLength < 64) i.longValue else null
+      case b: Boolean => if (b) 1L else 0L
+      case s: String if s.trim.matches("[+-]?[0-9]+") =>
+        try s.trim.toLong catch { case _: NumberFormatException => null }
+      case _ => null
+    }
+  }
+
+  /** The cell Spark keeps of a parsed value under t, as `Row.mkString`
+    * prints it: a struct `[a,b]`, an array `ArraySeq(…)`, a map as a Scala
+    * `Map` in the tree's key order, a union as its tagged struct, a float
+    * unrounded. `variant`: the cell is a `try_variant_get` cast (a union
+    * slot), else `from_json`'s. It has the partial results
+    * `LineDecoder.convert` has; `presence` as there. */
+  private def cell(n: Any, t: UdType, presence: Boolean, variant: Boolean): String = {
+    // a struct field keeps partial results: what its type cannot take is null
+    def field(x: Any, ft: UdType, p: Boolean) =
+      try cell(x, ft, p, variant) catch { case Unconvertible => "null" }
+    if (isNull(n)) "null"
+    else (t, n) match {
+      case (TOption(x), _) => cell(n, x, presence, variant)
+      case _ if isLeaf(t) => String.valueOf(leaf(n, t, variant))
+      case (TNone, _) => "null"
+      case (TList(et), xs: Vector[_]) =>
+        xs.map(cell(_, et, false, variant)).mkString("ArraySeq(", ", ", ")")
+      case (TMap(vt), m: java.util.Map[_, _]) =>
+        m.asScala.iterator.map { case (k, x) =>
+          String.valueOf(k) -> cell(x, vt, false, variant) }.toMap.toString
+      case (TRecord(fs, _), m: java.util.Map[_, _]) =>
+        (fs.map(f => field(m.get(f.name), f.t, presence)) ++
+          fs.filter(_.absentOptional).map(f =>
+            if (presence) m.containsKey(f.name).toString else "null"))
+          .mkString("[", ",", "]")
+      case (TPoint, m: java.util.Map[_, _]) =>
+        s"[${field(m.get("x"), TFloat, false)},${field(m.get("y"), TFloat, false)}]"
+      case (TTuple(ts), m: java.util.Map[_, _]) =>
+        ts.indices.map(i => field(m.get(s"_${i + 1}"), ts(i), false)).mkString("[", ",", "]")
+      case (TUnion(ts), m: java.util.Map[_, _]) =>
+        (field(m.get("_tag"), TStr, false) +:
+          ts.indices.map(i => field(m.get(s"v$i"), ts(i), false))).mkString("[", ",", "]")
+      case _ => fail(variant); "null"
+    }
+  }
+
   /** A record whose value holds a sized int outside its range in a nested
     * shape or a union branch. `UdScript.rowToValue` stops such a record
-    * as a `throw` does; `input` is the record, for its DLQ line. */
-  final case class OutOfRange(input: Value, message: String)
+    * as a `throw` does. */
+  final case class OutOfRange(message: String)
       extends RuntimeException(message, null, false, false)
 
   /** A stdin decoder with no session: each line becomes the interpreter's
@@ -403,9 +523,11 @@ object JsonRecords {
     * out of range below the top level throws `OutOfRange`. */
   sealed abstract class LineDecoder extends (String => Either[String, Value]) {
 
-    /** The record's cells as the Spark leg prints its input row on a DLQ
-      * line (`Row.mkString("\t")`). */
-    def rowText(v: Value): String
+    /** A valid line's cells as the Spark leg prints its input row on a DLQ
+      * line (`Row.mkString("\t")`). The line is parsed again: the value
+      * has dropped what the row keeps (an unrounded F32, a point with one
+      * unreadable coordinate, the JSON order of a map's keys). */
+    def rowText(line: String): String
 
     /** The first out-of-range message of the field being read. */
     protected var range: String = null
@@ -419,110 +541,54 @@ object JsonRecords {
       VInt(x)
     }
 
-    private def float(d: Double, t: UdType): Value =
-      VFloat(if (t == TFloat32) d.toFloat.toDouble else d)
-
-    private def text(n: Any): Value = VStr(n match {
-      case s: String => s
-      case _ => render(n, null)
-    })
-
-    private def entries(m: java.util.LinkedHashMap[_, _])(f: Any => Value): Value =
-      VMap(m.asScala.toVector.map { case (k, x) => String.valueOf(k) -> f(x) }
-        .sortBy(_._1))()
-
-    /** A struct field of `from_json` keeps partial results: a value its
-      * type cannot take is null. */
-    private def partial(v: => Value): Value = {
-      val saved = range
-      try v catch { case Unconvertible => range = saved; VNone }
-    }
-
-    /** `from_json` of a parsed value under t, as `anyToValue` reads the
-      * cell it makes: a value the type cannot take throws Unconvertible
-      * (a record keeps its other fields, a list or map fails whole), and
-      * a Str takes any JSON value as its compact text. With `presence`
-      * (the records under a top-level field, as `withNestedPresence`
-      * flags them) a missing absent-optional key is an omitted field;
-      * elsewhere it reads as none. */
-    protected def fromJsonValue(n: Any, t: UdType, presence: Boolean): Value =
+    /** A parsed value under t, as `anyToValue` reads the cell `cell`
+      * prints. `variant`: the cell is a `try_variant_get` cast (a union
+      * slot: leaves cast as `leaf` says, what does not cast is none); else
+      * it is `from_json`'s (a value the type cannot take throws
+      * Unconvertible: a record keeps its other fields, a list or map fails
+      * whole). With `presence` (the records under a top-level field, as
+      * `withNestedPresence` flags them) a missing absent-optional key is an
+      * omitted field; elsewhere it reads as none. */
+    protected def convert(n: Any, t: UdType, presence: Boolean, variant: Boolean): Value = {
+      // a struct field keeps partial results: what its type cannot take is none
+      def field(x: Any, ft: UdType, p: Boolean): Value = {
+        val saved = range
+        try convert(x, ft, p, variant) catch { case Unconvertible => range = saved; VNone }
+      }
       if (isNull(n)) VNone
       else (t, n) match {
-        case (TOption(x), _) => fromJsonValue(n, x, presence)
-        case (TInt | TIntN(_, _), x: Long) => int(x, t)
-        case (TFloat | TFloat32, _) => float(n match {
-          case x: Long   => x.toDouble
-          case x: Double => x
-          case x: java.math.BigInteger => x.doubleValue
-          case "NaN" => Double.NaN
-          case "+INF" | "+Infinity" | "Infinity" => Double.PositiveInfinity
-          case "-INF" | "-Infinity" => Double.NegativeInfinity
-          case _ => throw Unconvertible
-        }, t)
-        case (TBool, b: Boolean) => VBool(b)
-        case (TStr | TAny | TValue(_), _) => text(n)
-        case (TUnion(ts), _) if ts.forall(_.isInstanceOf[TValue]) => text(n)
+        case (TOption(x), _) => convert(n, x, presence, variant)
+        case _ if isLeaf(t) => leaf(n, t, variant) match {
+          case null => VNone
+          case x: Long => int(x, t)
+          case d: Double => VFloat(if (t == TFloat32) d.toFloat.toDouble else d)
+          case b: Boolean => VBool(b)
+          case x => VStr(x.toString)
+        }
         case (TNone, _) => VNone
-        case (TList(et), xs: Vector[_]) => VList(xs.map(fromJsonValue(_, et, false)))
-        case (TMap(vt), m: java.util.LinkedHashMap[_, _]) =>
-          entries(m)(fromJsonValue(_, vt, false))
-        case (rec @ TRecord(fs, _), m: java.util.LinkedHashMap[_, _]) =>
+        case (TList(et), xs: Vector[_]) => VList(xs.map(convert(_, et, false, variant)))
+        case (TMap(vt), m: java.util.Map[_, _]) =>
+          VMap(m.asScala.toVector.map { case (k, x) =>
+            String.valueOf(k) -> convert(x, vt, false, variant) }.sortBy(_._1))()
+        case (rec @ TRecord(fs, _), m: java.util.Map[_, _]) =>
           VMap(fs.iterator.filterNot(f =>
             presence && f.absentOptional && !m.containsKey(f.name)
-          ).map(f => f.name -> partial(fromJsonValue(m.get(f.name), f.t, presence)))
+          ).map(f => f.name -> field(m.get(f.name), f.t, presence))
             .toVector)(UdScript.absentOkOf(rec))
-        case (TPoint, m: java.util.LinkedHashMap[_, _]) =>
-          (partial(fromJsonValue(m.get("x"), TFloat, false)),
-            partial(fromJsonValue(m.get("y"), TFloat, false))) match {
+        case (TPoint, m: java.util.Map[_, _]) =>
+          (field(m.get("x"), TFloat, false), field(m.get("y"), TFloat, false)) match {
             case (VFloat(x), VFloat(y)) => VPoint(x, y)
             case _ => VNone
           }
-        case (TTuple(ts), m: java.util.LinkedHashMap[_, _]) =>
-          VTuple(ts.indices.map(i =>
-            partial(fromJsonValue(m.get(s"_${i + 1}"), ts(i), false))).toVector)
-        case (TUnion(ts), m: java.util.LinkedHashMap[_, _]) =>
-          val tag = partial(fromJsonValue(m.get("_tag"), TStr, false))
+        case (TTuple(ts), m: java.util.Map[_, _]) =>
+          VTuple(ts.indices.map(i => field(m.get(s"_${i + 1}"), ts(i), false)).toVector)
+        case (TUnion(ts), m: java.util.Map[_, _]) =>
+          val tag = field(m.get("_tag"), TStr, false)
           val i = ts.indexWhere(b => tag == VStr(UdScript.tagOf(b)))
-          if (i < 0) VNone else partial(fromJsonValue(m.get(s"v$i"), ts(i), false))
-        case _ => throw Unconvertible
+          if (i < 0) VNone else field(m.get(s"v$i"), ts(i), false)
+        case _ => fail(variant); VNone
       }
-
-    /** `try_variant_get` of a union slot, as `anyToValue` reads it: a leaf
-      * that does not cast is none, a fractional number truncates into an
-      * Int slot, and a Str takes any JSON value as its text. */
-    protected def variantValue(n: Any, t: UdType): Value =
-      if (isNull(n)) VNone
-      else (t, n) match {
-        case (TOption(x), _) => variantValue(n, x)
-        case (TInt | TIntN(_, _), x: Long) => int(x, t)
-        case (TInt | TIntN(_, _), x: Double) =>
-          if (x.abs < 9.2e18) int(x.toLong, t) else VNone
-        case (TFloat | TFloat32, _) => asDouble(n) match {
-          case d: Double => float(d, t)
-          case _ => VNone
-        }
-        case (TBool, b: Boolean) => VBool(b)
-        case (TStr | TAny | TValue(_), _) => text(n)
-        case (TUnion(ts), _) if ts.forall(_.isInstanceOf[TValue]) => text(n)
-        case (TList(et), xs: Vector[_]) => VList(xs.map(variantValue(_, et)))
-        case (TMap(vt), m: java.util.LinkedHashMap[_, _]) =>
-          entries(m)(variantValue(_, vt))
-        case (rec @ TRecord(fs, _), m: java.util.LinkedHashMap[_, _]) =>
-          VMap(fs.map(f => f.name -> variantValue(m.get(f.name), f.t)).toVector)(
-            UdScript.absentOkOf(rec))
-        case (TPoint, m: java.util.LinkedHashMap[_, _]) =>
-          (asDouble(m.get("x")), asDouble(m.get("y"))) match {
-            case (x: Double, y: Double) => VPoint(x, y)
-            case _ => VNone
-          }
-        case (TTuple(ts), m: java.util.LinkedHashMap[_, _]) =>
-          VTuple(ts.indices.map(i => variantValue(m.get(s"_${i + 1}"), ts(i))).toVector)
-        case (TUnion(ts), m: java.util.LinkedHashMap[_, _]) =>
-          val tag = variantValue(m.get("_tag"), TStr)
-          val i = ts.indexWhere(b => tag == VStr(UdScript.tagOf(b)))
-          if (i < 0) VNone else variantValue(m.get(s"v$i"), ts(i))
-        case _ => VNone
-      }
+    }
   }
 
   /** The decoder of a declared record, planned once: a field index and a
@@ -560,6 +626,32 @@ object JsonRecords {
     private val fails = new Array[Int](n)
     private val ranges = new Array[String](n)
 
+    /** One token pass over the line's top-level object: `field` reads the
+      * value token of each declared field. False when the line is
+      * malformed; a line that is not an object visits no field. */
+    private def scan(line: String)(field: (JsonParser, Int, JsonToken) => Unit): Boolean = {
+      java.util.Arrays.fill(seen, false)
+      val p = strictJson.createParser(line)
+      try {
+        val t = p.nextToken()
+        if (t == START_OBJECT) {
+          var next = 0 // fields mostly arrive in declared order
+          while (p.nextToken() == FIELD_NAME) {
+            val name = p.currentName
+            val i =
+              if (next < n && fs(next).name == name) next
+              else { val j = index.get(name); if (j == null) -1 else j.intValue }
+            val vt = p.nextToken()
+            if (i < 0) p.skipChildren()
+            else { seen(i) = true; field(p, i, vt); next = i + 1 }
+          }
+        } else if (t != null) p.skipChildren()
+        t != null
+      } catch {
+        case _: java.io.IOException | Malformed => false
+      } finally p.close()
+    }
+
     private def strictValue(p: JsonParser, t: JsonToken, ft: UdType): Value =
       (t, ft) match {
         case (_, TOption(x)) => strictValue(p, t, x)
@@ -575,8 +667,7 @@ object JsonRecords {
         case _ => p.skipChildren(); null
       }
 
-    private def read(p: JsonParser, i: Int, t: JsonToken): Unit = {
-      seen(i) = true
+    private val read: (JsonParser, Int, JsonToken) => Unit = (p, i, t) => {
       range = null
       if (t == VALUE_NULL) nulls(i) = true
       else if (strict(i)) strictValue(p, t, fs(i).t) match {
@@ -588,11 +679,12 @@ object JsonRecords {
       else if (unions(i) != null) {
         val node = tree(p, t, variant = true)
         unions(i).find(branchMatches(node, _)) match {
-          case Some(bt) => vals(i) = variantValue(node, bt)
+          case Some(bt) => vals(i) = convert(node, bt, presence = false, variant = true)
           case None => fails(i) = NoBranch
         }
       } else {
-        try vals(i) = fromJsonValue(tree(p, t, variant = false), fs(i).t, presence = true)
+        try vals(i) = convert(tree(p, t, variant = false), fs(i).t,
+          presence = true, variant = false)
         catch { case Unconvertible => range = null; fails(i) = Type }
         // `from_json` reads no value of type None
         if (isNone(fs(i).t)) fails(i) = Type
@@ -601,30 +693,11 @@ object JsonRecords {
     }
 
     def apply(line: String): Either[String, Value] = {
-      java.util.Arrays.fill(seen, false)
       java.util.Arrays.fill(nulls, false)
       java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
       java.util.Arrays.fill(fails, 0)
       java.util.Arrays.fill(ranges.asInstanceOf[Array[AnyRef]], null)
-      val p = strictJson.createParser(line)
-      val wellFormed = try {
-        val t = p.nextToken()
-        if (t == START_OBJECT) {
-          var next = 0 // fields mostly arrive in declared order
-          while (p.nextToken() == FIELD_NAME) {
-            val name = p.currentName
-            val i =
-              if (next < n && fs(next).name == name) next
-              else { val j = index.get(name); if (j == null) -1 else j.intValue }
-            val vt = p.nextToken()
-            if (i < 0) p.skipChildren() else { read(p, i, vt); next = i + 1 }
-          }
-        } else if (t != null) p.skipChildren()
-        t != null
-      } catch {
-        case _: java.io.IOException | Malformed => false
-      } finally p.close()
-      if (!wellFormed) Left("malformed_json:_payload")
+      if (!scan(line)(read)) Left("malformed_json:_payload")
       else {
         var reason: String = null
         var rank = Int.MaxValue
@@ -644,6 +717,7 @@ object JsonRecords {
         }
         if (reason != null) Left(reason)
         else {
+          ranges.find(_ != null).foreach(m => throw OutOfRange(m))
           val b = Vector.newBuilder[(String, Value)]
           i = 0
           while (i < n) {
@@ -651,17 +725,27 @@ object JsonRecords {
               b += fs(i).name -> (if (vals(i) == null) VNone else vals(i))
             i += 1
           }
-          val v = VMap(b.result())(absentOk)
-          ranges.find(_ != null).foreach(m => throw OutOfRange(v, m))
-          Right(v)
+          Right(VMap(b.result())(absentOk))
         }
       }
     }
 
-    def rowText(v: Value): String = {
-      val m = v.asInstanceOf[VMap].index
-      (fs.map(f => m.get(f.name).fold("null")(cellText(_, f.t, presence = true))) ++
-        fs.filter(_.absentOptional).map(f => m.contains(f.name).toString))
+    def rowText(line: String): String = {
+      val cells = Array.fill(n)("null")
+      scan(line) { (p, i, t) =>
+        cells(i) =
+          if (t == VALUE_NULL) "null"
+          else if (strict(i)) Values.render(strictValue(p, t, fs(i).t))
+          else if (unions(i) != null) {
+            // the tagged struct of `unionStruct`: the tag and one slot set
+            val node = tree(p, t, variant = true)
+            val b = unions(i).indexWhere(branchMatches(node, _))
+            (UdScript.tagOf(unions(i)(b)) +: unions(i).indices.map(j =>
+              if (j == b) cell(node, unions(i)(b), presence = false, variant = true)
+              else "null")).mkString("[", ",", "]")
+          } else cell(tree(p, t, variant = false), fs(i).t, presence = true, variant = false)
+      }
+      (cells ++ fs.indices.filter(fs(_).absentOptional).map(seen(_).toString))
         .mkString("\t")
     }
   }
@@ -669,9 +753,10 @@ object JsonRecords {
   /** The decoder of a scalar-input script: each line is `from_json` of
     * `{"value":<line>}`, as `readScalar` reads it. */
   def scalarDecoder(t: UdType): LineDecoder = new LineDecoder {
-    def apply(line: String): Either[String, Value] = {
+    /** The line's value as a tree, or null when the line is malformed. */
+    private def parse(line: String): Any = {
       val p = strictJson.createParser("{\"value\":" + line + "}")
-      val node = try {
+      try {
         p.nextToken(); p.nextToken() // the wrapper's `{"value":`
         val n = tree(p, p.nextToken(), variant = false)
         while (p.nextToken() == FIELD_NAME) { p.nextToken(); p.skipChildren() }
@@ -679,61 +764,26 @@ object JsonRecords {
       } catch {
         case _: java.io.IOException | Malformed => null
       } finally p.close()
+    }
+
+    def apply(line: String): Either[String, Value] = {
       range = null
-      node match {
+      parse(line) match {
         case null => Left("malformed_json:_payload")
         case JsonNull =>
           if (t.isInstanceOf[TOption]) Right(VNone) else Left("null:value")
-        case _ =>
-          val v = try fromJsonValue(node, t, presence = false)
+        case node =>
+          val v = try convert(node, t, presence = false, variant = false)
           catch { case Unconvertible => null }
           if (v == null || isNone(t)) Left("type:value")
-          else if (range != null) throw OutOfRange(v, range)
+          else if (range != null) throw OutOfRange(range)
           else Right(v)
       }
     }
 
-    def rowText(v: Value): String = cellText(v, t, presence = false)
+    def rowText(line: String): String =
+      cell(parse(line), t, presence = false, variant = false)
   }
-
-  /** A decoded value as Spark prints the row cell it comes from: a struct
-    * `[a,b]`, an array `ArraySeq(…)`, a map as a Scala `Map`, a general
-    * union as its tagged struct. `presence`: nested `__present` flags
-    * hold key presence along the records under a top-level field, and
-    * are null elsewhere. */
-  private def cellText(v: Value, t: UdType, presence: Boolean): String =
-    (v, t) match {
-      case (VNone, _) => "null"
-      case (_, TOption(x)) => cellText(v, x, presence)
-      case (_, TUnion(ts)) if !ts.forall(_.isInstanceOf[TValue]) =>
-        // the branch ingest gave the value
-        val i = ts.indexWhere(b => (v, b) match {
-          case (VInt(_), TInt | TIntN(_, _)) | (VFloat(_), TFloat) |
-              (VStr(_), TStr) | (VBool(_), TBool) | (VList(_), TList(_)) |
-              (_: VMap, TRecord(_, _) | TMap(_)) | (VPoint(_, _), TPoint) => true
-          case (VStr(s), TValue(l)) => s == l
-          case _ => false
-        })
-        if (i < 0) Values.render(v)
-        else (UdScript.tagOf(ts(i)) +: ts.indices.map(j =>
-          if (j == i) cellText(v, ts(i), presence = false) else "null"))
-          .mkString("[", ",", "]")
-      case (VList(xs), TList(et)) =>
-        xs.map(cellText(_, et, presence = false)).mkString("ArraySeq(", ", ", ")")
-      case (m: VMap, TMap(vt)) =>
-        m.entries.map { case (k, x) => k -> cellText(x, vt, presence = false) }
-          .toMap.toString
-      case (m: VMap, TRecord(fs, _)) =>
-        (fs.map(f => m.index.get(f.name).fold("null")(cellText(_, f.t, presence))) ++
-          fs.filter(_.absentOptional).map(f =>
-            if (presence) m.index.contains(f.name).toString else "null"))
-          .mkString("[", ",", "]")
-      case (VTuple(xs), TTuple(ts)) =>
-        xs.zip(ts).map { case (x, t2) => cellText(x, t2, presence = false) }
-          .mkString("[", ",", "]")
-      case (VPoint(x, y), _) => s"[$x,$y]"
-      case _ => Values.render(v)
-    }
 
   /** The tagged frame of a scalar-input script: `value` and the reason
     * it is invalid (null when valid). */
@@ -803,7 +853,8 @@ object JsonRecords {
           }
         }
         g.writeEndObject()
-      case (m: java.util.LinkedHashMap[_, _], _) => write(g, m.asScala, dt)
+      case (d: java.math.BigDecimal, _) => g.writeNumber(d.toPlainString)
+      case (m: java.util.Map[_, _], _) => write(g, m.asScala, dt)
       case (m: scala.collection.Map[_, _], _) =>
         val vt = dt match { case MapType(_, x, _) => x; case _ => null }
         g.writeStartObject()
@@ -832,20 +883,14 @@ object JsonRecords {
     * the bytes `render(valueToRow(v, t, schema), schema)` gives: null
     * fields left out, a nested record's `__present` flags, a general
     * union as `{"_tag":…,"v<i>":…}`. One generator writes the whole run
-    * into a line buffer that drains to `out` in 64 KB chunks. */
-  final class JsonLines(out: java.io.OutputStream, t: UdType) {
-    private val text = new java.lang.StringBuilder()
-    private val sink = new java.io.Writer {
-      def write(cs: Array[Char], off: Int, len: Int): Unit = text.append(cs, off, len)
-      def flush(): Unit = ()
-      def close(): Unit = ()
-    }
-    private var g = linesFactory.createGenerator(sink)
+    * into `text`. */
+  final class JsonLines(text: LineBuffer, t: UdType) {
+    private var g = linesFactory.createGenerator(text.writer)
 
     /** One record's outputs, all or none: a value that fits no slot stops
       * the record (UdException) and leaves nothing of it written. */
     def write(vs: Iterable[Value]): Unit = {
-      val mark = text.length
+      val mark = text.mark
       try {
         vs.foreach { v =>
           (v, t) match {
@@ -857,20 +902,14 @@ object JsonRecords {
         g.flush()
       } catch {
         case e: UdException =>
-          g = linesFactory.createGenerator(sink)
-          text.setLength(mark)
+          g = linesFactory.createGenerator(text.writer)
+          text.rollback(mark)
           throw e
       }
-      if (text.length >= (1 << 16)) drain()
+      text.drainFull()
     }
 
-    def flush(): Unit = { g.flush(); drain(); out.flush() }
-
-    private def drain(): Unit = {
-      val b = text.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.write(b, 0, b.length)
-      text.setLength(0)
-    }
+    def flush(): Unit = { g.flush(); text.flush() }
 
     /** A top-level record has no flag columns; nested ones do. */
     private def record(m: VMap, rec: TRecord, flags: Boolean): Unit = {

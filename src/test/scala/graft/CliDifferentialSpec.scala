@@ -220,6 +220,21 @@ class CliDifferentialSpec extends SparkSpec {
     assert(runs("skip").code == 1)
   }
 
+  test("a thrown record's DLQ line prints its input row's cells on both paths") {
+    // the row keeps a nested F32 unrounded, a point with an unreadable
+    // coordinate and a map's keys in JSON order
+    val runs = agree(script("""script "cells";
+      |input  {id: Int, r: {g: F32, gs: [F32]}, p: Point?, m: Map[Int]?};
+      |output {id: Int};
+      |if (in.id < 0) { throw "negative id"; }
+      |out {id: in.id};""".stripMargin), lines(
+      """{"id": 1, "r": {"g": 0.1, "gs": [0.1]}}""",
+      """{"id": -1, "r": {"g": 0.1, "gs": [0.1, 2]}, "p": {"x": "1", "y": 2}, "m": {"b": 1, "a": 2}}"""))
+    assert(runs("dlq").out == Seq("""{"id":1}"""))
+    assert(runs("dlq").err ==
+      Seq("-1\t[0.1,ArraySeq(0.1, 2.0)]\t[null,2.0]\tMap(b -> 1, a -> 2)\tnegative id"))
+  }
+
   /** `src` compiles to `tier` and agrees on both paths over `input`. */
   private def agreeIn(tier: String, src: String, input: String*): Map[String, Run] = {
     val path = script(src)

@@ -296,6 +296,16 @@ class CliSpec extends SparkSpec {
     val (code, out, err) = fresh(Nil, Seq("--in", in, "examples/checked_effects.us"))
     assert(code == 1 && out.isEmpty)
     assert(err == "runtime error: negative value\n", err)
+    // a log4j configuration file given to the JVM is kept
+    val conf = tmpFile(".properties", Seq("rootLogger.level = error",
+      "rootLogger.appenderRef.stderr.ref = stderr",
+      "appender.console.type = Console", "appender.console.name = stderr",
+      "appender.console.target = SYSTEM_ERR", "appender.console.layout.type = PatternLayout",
+      "appender.console.layout.pattern = USERLOG %p %c{1}: %m%n").mkString("\n"))
+    val (code2, _, err2) = fresh(Seq(s"-Dlog4j2.configurationFile=$conf"),
+      Seq("--in", in, "examples/checked_effects.us"))
+    assert(code2 == 1 && err2.contains("USERLOG ERROR Executor: Exception in task"), err2)
+    assert(err2.endsWith("runtime error: negative value\n"), err2)
   }
 
   test("the stdin pipe builds no Spark schema: no collation classes load") {

@@ -51,25 +51,23 @@ class JsonLineDecoderSpec extends SparkSpec {
 
   /** Each payload's reason, after checking it and, for a valid payload,
     * the value (`value` reads the kept row as the interpreter's input)
-    * and the DLQ text. `partial`: payloads whose row holds a point with
-    * an unreadable coordinate, a value of none with no DLQ text to match. */
+    * and the DLQ text. */
   private def agree(payloads: Seq[String], decode: JsonRecords.LineDecoder,
                     read: org.apache.spark.sql.Dataset[String] => ValidatedIngest.Validated,
-                    value: Row => Value, partial: Set[String] = Set.empty)
-      : Seq[String] = {
+                    value: Row => Value): Seq[String] = {
     assert(payloads.distinct == payloads)
     payloads.zip(sparkRows(payloads, read)).map { case (p, (reason, good)) =>
       val (local, v, stop) = try decode(p) match {
         case Left(r)  => (r, null, null)
         case Right(x) => (null, x, null)
-      } catch { case JsonRecords.OutOfRange(x, m) => (null, x, m) }
+      } catch { case JsonRecords.OutOfRange(m) => (null, null, m) }
       assert(local == reason, s"reason of $p")
       good.foreach { g =>
         val (want, wantStop) =
           try (value(g), null) catch { case e: UdException => (null, e.message) }
         assert(stop == wantStop, s"boundary error of $p")
         if (stop == null) assert(same(v, want), s"value of $p: $v vs $want")
-        if (!partial(p)) assert(decode.rowText(v) == g.mkString("\t"), s"DLQ text of $p")
+        assert(decode.rowText(p) == g.mkString("\t"), s"DLQ text of $p")
       }
       local
     }
@@ -113,7 +111,10 @@ class JsonLineDecoderSpec extends SparkSpec {
     f("r", TOption(TRecord(Seq(f("a", TInt), f("b", TStr, absent = true),
       f("l", TList(TFloat)))))),
     f("m", TOption(TMap(TInt))), f("l", TOption(TList(TStr))),
-    f("p", TOption(TPoint))))
+    f("p", TOption(TPoint)),
+    f("h", TOption(TRecord(Seq(f("g", TFloat32), f("gs", TList(TFloat32)),
+      f("gm", TMap(TFloat32)))))),
+    f("v", TOption(TUnion(Seq(TPoint, TStr))))))
 
   test("unions, nested records with presence, maps, lists and points match read") {
     val payloads = Seq(
@@ -127,18 +128,42 @@ class JsonLineDecoderSpec extends SparkSpec {
       """{"id": 8, "u": 12345678901234567890, "r": {"l": [2e3], "a": 9}}""",
       """{"id": 9, "r": {"a": 1, "l": [1], "extra": {"deep": [1]}}, "p": {"x": "1", "y": 2}}""",
       """{"id": 10, "m": {"a": 1, "b": null}, "l": ["ä", "tab\there"]}""",
-      """{"id": 11, "u": -0.0, "r": {"a": 1, "l": [-0.0, -0e0]}}""")
+      """{"id": 11, "u": -0.0, "r": {"a": 1, "l": [-0.0, -0e0]}}""",
+      // the row keeps an F32 unrounded and a map in JSON key order
+      """{"id": 12, "h": {"g": 0.1, "gs": [0.1, 2], "gm": {"z": 0.1, "a": 1}}, "m": {"b": 1, "a": 2}}""",
+      """{"id": 13, "p": {"x": 1, "y": "NaN"}, "v": {"x": 1, "y": 2.5}}""",
+      """{"id": 14, "p": {"y": 1}, "v": {"x": "1", "y": 2}}""",
+      """{"id": 15, "v": {"x": 1.5, "y": 2, "z": 3}}""")
     val reasons = agree(payloads, JsonRecords.lineDecoder(shapes),
-      JsonRecords.read(spark, _, shapes, ValidatedIngest.Dlq), record(shapes),
-      partial = Set(payloads(8)))
+      JsonRecords.read(spark, _, shapes, ValidatedIngest.Dlq), record(shapes))
     assert(reasons.contains("union_no_branch:u") && reasons.contains(null), reasons)
+  }
+
+  test("leaves inside a union branch cast as try_variant_get casts them") {
+    val t = TRecord(Seq(f("id", TInt),
+      f("u", TOption(TUnion(Seq(TList(TInt), TRecord(Seq(f("f", TFloat),
+        f("b", TBool), f("s", TStr), f("i", TInt), f("m", TOption(TMap(TStr))),
+        f("g", TOption(TFloat32)), f("t", TOption(TTuple(Seq(TBool, TStr))))))))))))
+    val payloads = Seq(
+      """{"id": 1, "u": ["1", 2.5, true, " 3 ", "1.5", "x", null, 1e20, 9223372036854775808, [1], -0.0]}""",
+      """{"id": 2, "u": {"f": "1e2", "b": "yes", "s": 2.50, "i": "+5", "m": {"b": 1.0, "a": {"z": -0.0, "c": [1.50]}}}}""",
+      """{"id": 3, "u": {"f": true, "b": 0, "s": 1e2, "i": 7.9, "m": {}, "g": "0.1"}}""",
+      """{"id": 4, "u": {"f": " NaN ", "b": "  f ", "s": 12345678901234567890, "i": -2.5, "m": {"k": [1, 2.50]}}}""",
+      """{"id": 5, "u": {"f": "inf", "b": 2.5, "s": true, "i": false, "m": {"k": "v"}, "t": {"_1": "t", "_2": 1}}}""",
+      """{"id": 6, "u": {"f": "-Infinity", "b": "1", "s": null, "i": "0x10", "g": 0.1}}""",
+      """{"id": 7, "u": {"f": 123456789012345678901234567890.5, "b": 1e-7, "s": 0.1234567890123456789012345678901234567890, "i": 123456789012345678901234567890.5}}""",
+      """{"id": 8, "u": {"f": "1d", "b": "no", "s": [1.0, {"b": 1, "a": 0.10}], "i": " 9223372036854775807 ", "t": [1]}}""")
+    val reasons = agree(payloads, JsonRecords.lineDecoder(t),
+      JsonRecords.read(spark, _, t, ValidatedIngest.Dlq), record(t))
+    assert(reasons.forall(_ == null), reasons)
   }
 
   test("scalar-input lines match readScalar") {
     for (t <- Seq(TStr, TInt, TFloat, TOption(TInt), TList(TFloat),
-                  TRecord(Seq(f("a", TInt))))) {
+                  TRecord(Seq(f("a", TInt))), TList(TFloat32), TMap(TFloat32))) {
       val payloads = Seq("\"s\"", "42", "2.5", "-0.0", "1e2", "\"NaN\"", "true", "null",
         "[1, 2.5]", "[1, \"x\"]", """{"a": 1}""", """{"a": "x"}""", "not json",
+        "[0.1, 2]", """{"b": 0.1, "a": 2}""",
         "", "1, \"value\": 2", "1} {\"x\": 2")
       agree(payloads, JsonRecords.scalarDecoder(t),
         JsonRecords.readScalar(spark, _, t, ValidatedIngest.Dlq),
