@@ -102,7 +102,7 @@ object Main {
         out.println(s"output schema: ${c.outputSchema.simpleString}")
         // the engine's IR is the lowered Spark plan: compile the script
         // against an empty frame of the declared input and dump it
-        session.orElse(Some(ownSession(2))).foreach { s =>
+        session.orElse(Some(SparkLeg.session(2))).foreach { s =>
           val empty = s.createDataFrame(
             new java.util.ArrayList[Row](), c.inputSchema)
           // analyzed (not optimized): an empty input constant-folds to
@@ -391,7 +391,7 @@ object Main {
   private def runSpark(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream,
                        session: Option[SparkSession]): Unit = {
-    val s = session.getOrElse(ownSession(opts.cores))
+    val s = session.getOrElse(SparkLeg.session(opts.cores))
     val mode = opts.mode match {
       case "abort" => ValidatedIngest.Abort
       case "skip"  => ValidatedIngest.Skip
@@ -471,42 +471,6 @@ object Main {
       case scalar       => JsonRecords.readScalar(s, lines, scalar, mode)
     }
 
-  /** The session a `--compile`, `--in` or `--out` run starts for itself.
-    * Unless a log4j configuration file is given (the system property
-    * `log4j2.configurationFile` or `log4j.configurationFile`, or
-    * `LOG4J_CONFIGURATION_FILE`), its log shows errors only, and none
-    * from the executor or the task scheduler: a run that fails reports it
-    * as its one `runtime error:` line with the failure's message, so the
-    * stack trace of any executor error, a script's `throw` or not, is not
-    * printed. A session passed in keeps its own logging. */
-  private def ownSession(cores: Int): SparkSession = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.LoggerContext
-    import org.apache.logging.log4j.core.config.Configurator
-    import org.apache.logging.log4j.core.config.builder.api.ConfigurationBuilderFactory
-    def quiet() = {
-      val b = ConfigurationBuilderFactory.newConfigurationBuilder()
-      b.add(b.newAppender("stderr", "Console").addAttribute("target", "SYSTEM_ERR")
-        .add(b.newLayout("PatternLayout")
-          .addAttribute("pattern", "%d{yy/MM/dd HH:mm:ss} %p %c{1}: %m%n%ex")))
-      b.add(b.newRootLogger(Level.ERROR).add(b.newAppenderRef("stderr")))
-      Seq("org.apache.spark.executor.Executor",
-        "org.apache.spark.scheduler.TaskSetManager").foreach { name =>
-        b.add(b.newLogger(name, Level.OFF))
-      }
-      b.build()
-    }
-    val configured = sys.env.contains("LOG4J_CONFIGURATION_FILE") ||
-      Seq("log4j2.configurationFile", "log4j.configurationFile").exists(sys.props.contains)
-    // Spark loads its own INFO profile unless both the class loader's
-    // context and the current one are configured
-    if (!configured) {
-      Configurator.reconfigure(quiet())
-      LogManager.getContext().asInstanceOf[LoggerContext].reconfigure(quiet())
-    }
-    GraftSession.local(cores)
-  }
-
   // ---- helpers ----
 
   private def readFile(path: String): String = {
@@ -539,5 +503,46 @@ object Main {
         pad + p.productPrefix + "(\n" + kids + s"\n$pad)"
       case other => pad + String.valueOf(other)
     }
+  }
+}
+
+/** The `--compile`, `--in` and `--out` legs' session, apart from `Main`:
+  * log4j's classes load only when a run needs a session, not when `Main`
+  * is loaded for the stdin pipe. */
+private object SparkLeg {
+  /** The session a `--compile`, `--in` or `--out` run starts for itself.
+    * Unless a log4j configuration file is given (the system property
+    * `log4j2.configurationFile` or `log4j.configurationFile`, or
+    * `LOG4J_CONFIGURATION_FILE`), its log shows errors only, and none
+    * from the executor or the task scheduler: a run that fails reports it
+    * as its one `runtime error:` line with the failure's message, so the
+    * stack trace of any executor error, a script's `throw` or not, is not
+    * printed. A session passed in keeps its own logging. */
+  def session(cores: Int): SparkSession = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    import org.apache.logging.log4j.core.config.builder.api.ConfigurationBuilderFactory
+    def quiet() = {
+      val b = ConfigurationBuilderFactory.newConfigurationBuilder()
+      b.add(b.newAppender("stderr", "Console").addAttribute("target", "SYSTEM_ERR")
+        .add(b.newLayout("PatternLayout")
+          .addAttribute("pattern", "%d{yy/MM/dd HH:mm:ss} %p %c{1}: %m%n%ex")))
+      b.add(b.newRootLogger(Level.ERROR).add(b.newAppenderRef("stderr")))
+      Seq("org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager").foreach { name =>
+        b.add(b.newLogger(name, Level.OFF))
+      }
+      b.build()
+    }
+    val configured = sys.env.contains("LOG4J_CONFIGURATION_FILE") ||
+      Seq("log4j2.configurationFile", "log4j.configurationFile").exists(sys.props.contains)
+    // Spark loads its own INFO profile unless both the class loader's
+    // context and the current one are configured
+    if (!configured) {
+      Configurator.reconfigure(quiet())
+      LogManager.getContext().asInstanceOf[LoggerContext].reconfigure(quiet())
+    }
+    GraftSession.local(cores)
   }
 }

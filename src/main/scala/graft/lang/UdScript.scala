@@ -284,6 +284,31 @@ object UdScript {
     case other => throw CompileError(s"no schema for $other")
   }
 
+  /** `sparkType(t)` spelled as a UdType, built without any Spark type:
+    * two types ride as the same Spark type exactly when their carriers
+    * are equal. None where `sparkType` has no schema. */
+  def carrierOf(t: UdType): Option[UdType] = t match {
+    case TBool | TNone               => Some(t)
+    case TInt | TIntN(_, _)          => Some(TInt)
+    case TFloat | TFloat32           => Some(TFloat)
+    case TStr | TAny | TValue(_)     => Some(TStr)
+    case TUnion(ts) if ts.forall(_.isInstanceOf[TValue]) => Some(TStr)
+    case TOption(x)                  => carrierOf(x)
+    case TList(x)                    => carrierOf(x).map(TList)
+    case TMap(v)                     => carrierOf(v).map(TMap)
+    case TTuple(ts) => struct(ts.zipWithIndex.map { case (x, i) => s"_${i + 1}" -> x })
+    case TRecord(fs, _) => struct(fs.map(f => f.name -> f.t) ++
+      fs.filter(_.absentOptional).map(f => s"${f.name}__present" -> TBool))
+    case TPoint     => struct(Seq("x" -> TFloat, "y" -> TFloat))
+    case TUnion(ts) => struct(("_tag" -> TStr) +:
+      ts.zipWithIndex.map { case (x, i) => s"v$i" -> x })
+    case _ => None
+  }
+  private def struct(fs: Seq[(String, UdType)]): Option[UdType] = {
+    val cs = fs.map { case (n, x) => carrierOf(x).map(TField(n, _, absentOptional = false)) }
+    Option.when(cs.forall(_.isDefined))(TRecord(cs.flatten))
+  }
+
   /** The _tag discriminator for a union branch type — one name per type,
     * used by ingest, egress and the column tier's `match` alike. Sized
     * ints are spelled as the parser reads them (`U8`, `I16`, `U64`). */
@@ -564,8 +589,7 @@ private[lang] object Lowering {
       // deep equality is false across types, which Spark would cast
       // together: the two sides must ride as the same Spark type
       case Eq | Neq =>
-        def carrier(t: UdType) =
-          if (t == TAny) None else scala.util.Try(sparkType(t)).toOption
+        def carrier(t: UdType) = if (t == TAny) None else carrierOf(t)
         Option.when[Op2](l == TNone || r == TNone ||
             carrier(l).exists(carrier(r).contains))(
           if (op == Eq) F.eq else F.neq)

@@ -308,22 +308,101 @@ class CliSpec extends SparkSpec {
     assert(err2.endsWith("runtime error: negative value\n"), err2)
   }
 
+  /** The classes `graft.Main` loads in a fresh JVM (`-Xlog:class+load`):
+    * the class name and where it came from, per class. */
+  private def classLoads(args: Seq[String], stdin: String, want: String)
+      : Seq[(String, String)] = {
+    val log = tmpFile(".log", "")
+    val (code, out, err) = fresh(Seq(s"-Xlog:class+load:file=$log"), args, stdin)
+    assert(code == 0 && out == want, s"$args: $err")
+    val loads = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(log)), "UTF-8").linesIterator.collect {
+      case ClassLoad(name, source) => (name, source)
+    }.toSeq
+    assert(loads.exists(_._1 == "graft.lang.Interp"), s"$args: no class-load log")
+    loads
+  }
+  private val ClassLoad = """.*\] (\S+) source: (.*)""".r
+
+  /** The jars the stdin pipe loads classes from, which build.sbt lists
+    * first on the classpath. */
+  private val PipeJar = """(scala-library|jackson-core|spark-common-utils|spark-sql-api)(_2\.13)?-\d.*\.jar""".r
+
+  private val classpath = System.getProperty("java.class.path")
+    .split(java.io.File.pathSeparator).toSeq.map(new java.io.File(_))
+
+  private val pipeRuns = Seq(
+    (Seq("examples/hello.us"), "\"world\"\n", "\"Hello, world\"\n"),
+    (Seq("examples/filter_events.us"),
+      """{"event_id": 1, "event_type": "click", "value": 80.5}""" + "\n",
+      """{"event_id":1,"cat":"ui","boosted":161.0}""" + "\n"),
+    (Seq("--mode", "dlq", "examples/checked_effects.us"),
+      """{"event_id": 1, "value": 2.5}""" + "\n" + """{"event_id": 2, "value": -1.0}""" + "\n",
+      """{"event_id":1,"score":25.0}""" + "\n"))
+
   test("the stdin pipe builds no Spark schema: no collation classes load") {
-    // StringType's collation tables start ICU; a Spark schema needs them
-    for ((script, stdin, want) <- Seq(
-        ("examples/hello.us", "\"world\"\n", "\"Hello, world\"\n"),
-        ("examples/filter_events.us",
-          """{"event_id": 1, "event_type": "click", "value": 80.5}""" + "\n",
-          """{"event_id":1,"cat":"ui","boosted":161.0}""" + "\n"))) {
-      val log = tmpFile(".log", "")
-      val (code, out, err) = fresh(Seq(s"-Xlog:class+load:file=$log"), Seq(script), stdin)
-      assert(code == 0 && out == want, err)
-      val loaded = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(log)), "UTF-8")
-      assert(loaded.contains("graft.lang.Interp"), s"$script: no class-load log")
-      assert(!loaded.contains("com.ibm.icu.") && !loaded.contains("CollationFactory"),
-        s"$script loaded collation classes")
+    // StringType's collation tables start ICU; a Spark schema needs them,
+    // and so did choosing the tier of a Str `==`
+    val eq = tmpFile(".us", "script \"eq\";\ninput {s: Str};\noutput {b: Bool};\n" +
+      "out {b: in.s == \"x\"};\n")
+    for ((args, stdin, want) <- pipeRuns.take(2) :+
+        ((Seq(eq), """{"s": "x"}""" + "\n", """{"b":true}""" + "\n"))) {
+      val loaded = classLoads(args, stdin, want).map(_._1)
+      assert(!loaded.exists(n => n.startsWith("com.ibm.icu.") || n.contains("CollationFactory")),
+        s"$args loaded collation classes")
     }
+  }
+
+  test("the stdin pipe loads classes only from graft, the JDK and the pipe's jars") {
+    val classDirs = classpath.filter(_.isDirectory).map(_.toURI.toString).toSet
+    for ((args, stdin, want) <- pipeRuns) {
+      val loads = classLoads(args, stdin, want)
+      val sources = loads.map(_._2).filter(_.startsWith("file:")).distinct
+      val elsewhere = sources.filterNot { s =>
+        classDirs(s) || PipeJar.matches(s.substring(s.lastIndexOf('/') + 1))
+      }
+      assert(elsewhere.isEmpty, s"$args")
+      val unwanted = loads.map(_._1).filter(n =>
+        n.startsWith("scala.util.parsing.") || n.startsWith("org.apache.logging."))
+      assert(unwanted.isEmpty, s"$args")
+    }
+  }
+
+  test("java.class.path lists the pipe's jars first, hiding nothing of a later jar") {
+    val jars = classpath.filter(_.getName.endsWith(".jar"))
+    def artifact(jar: java.io.File) = jar.getName.replaceAll("""(_2\.13)?-\d.*""", "")
+    val heads = jars.takeWhile(j => PipeJar.matches(j.getName))
+    assert(heads.map(artifact) ==
+      Seq("scala-library", "jackson-core", "spark-common-utils", "spark-sql-api"))
+    // the rest of their directory follows by name
+    val dir = heads.head.getParentFile
+    val rest = jars.drop(heads.size).filter(_.getParentFile == dir).map(_.getName)
+    assert(rest.nonEmpty && rest == rest.sorted)
+    // a head jar wins every class, service file and log4j plugin file it
+    // holds: a later jar may hold the same class only byte for byte (the
+    // managed scala-library copy, Spark's empty UnusedStubClass). Both
+    // copies of a service file are read: Jackson's YAML module also
+    // registers a JsonFactory, which nothing in the engine looks up.
+    def entries(jar: java.io.File): Map[String, Long] = {
+      val z = new java.util.zip.ZipFile(jar)
+      try z.entries().asScala.filter { e =>
+        val n = e.getName
+        (n.endsWith(".class") && !n.endsWith("module-info.class")) ||
+          (n.startsWith("META-INF/services/") && !e.isDirectory) ||
+          n.endsWith("Log4j2Plugins.dat")
+      }.map(e => e.getName -> e.getCrc).toMap finally z.close()
+    }
+    val headEntries = heads.map(entries)
+    val clashes = for {
+      later <- jars.drop(heads.size)
+      laterEntries = entries(later)
+      (head, held) <- heads.zip(headEntries)
+      (name, crc) <- held if laterEntries.get(name).exists { c =>
+        !(name.endsWith(".class") && c == crc)
+      }
+    } yield (artifact(head), artifact(later), name)
+    assert(clashes == Seq(("jackson-core", "jackson-dataformat-yaml",
+      "META-INF/services/com.fasterxml.jackson.core.JsonFactory")))
   }
 
   test("modules resolve from --libdir (and the script's own directory)") {

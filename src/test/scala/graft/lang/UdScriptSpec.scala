@@ -280,4 +280,27 @@ class UdScriptSpec extends SparkSpec {
     val rows = c.run(Seq(21L).toDF("value")).collect()
     assert(rows(0) == org.apache.spark.sql.Row(42L, "v21"))
   }
+
+  test("carrierOf: two types share a carrier exactly when sparkType agrees") {
+    import graft.lang.Ast._
+    val leaves = Seq(TBool, TInt, TIntN(8, signed = false), TFloat, TFloat32,
+      TStr, TAny, TValue("a"), TNone, TPoint, TUnion(Seq(TValue("a"), TValue("b"))),
+      TUnion(Seq(TInt, TStr)), TRef("T"))
+    val types = leaves ++ leaves.flatMap(t => Seq(TOption(t), TList(t), TMap(t))) ++ Seq(
+      TTuple(Seq(TInt, TStr)), TTuple(Seq(TIntN(16, signed = true), TValue("x"))),
+      TRecord(Seq(TField("x", TFloat, false), TField("y", TFloat, false))),
+      TRecord(Seq(TField("x", TFloat32, false), TField("y", TInt, false))),
+      TRecord(Seq(TField("_1", TInt, false), TField("_2", TAny, false))),
+      TRecord(Seq(TField("a", TInt, true))),
+      TRecord(Seq(TField("a", TInt, false), TField("a__present", TBool, false))),
+      TRecord(Seq(TField("_tag", TStr, false), TField("v0", TInt, false),
+        TField("v1", TStr, false))),
+      TLambda(Seq(TInt), TInt))
+    def spark(t: UdType) = scala.util.Try(UdScript.sparkType(t)).toOption
+    for (a <- types; b <- types) {
+      assert(UdScript.carrierOf(a).isDefined == spark(a).isDefined, a)
+      if (spark(a).isDefined && spark(b).isDefined)
+        assert((UdScript.carrierOf(a) == UdScript.carrierOf(b)) == (spark(a) == spark(b)), (a, b))
+    }
+  }
 }
