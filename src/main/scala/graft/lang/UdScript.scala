@@ -1184,8 +1184,8 @@ private[lang] object Lowering {
     * outputs and carries the message; any other exception still aborts
     * the job (a bug is not data). The tagged rows are materialized once
     * (an eager local checkpoint), so consuming both legs evaluates each
-    * record once and a `!` trace prints once per record. Batch frames
-    * only: a streaming frame cannot be checkpointed. */
+    * record once and a `!` trace prints once per record. A streaming frame
+    * cannot be checkpointed: there each leg evaluates the record itself. */
   def runKernelEither(script: Script, df: DataFrame,
                       libs: Map[String, Values.Value] = Map.empty)
       : (DataFrame, DataFrame) = {
@@ -1194,10 +1194,12 @@ private[lang] object Lowering {
       StructField("_out", ArrayType(schemaOf(script.output))),
       StructField("_error", StringType),
       StructField("_in", df.schema)))
-    val tagged = df.map { row =>
+    val routed = df.map { row =>
       try Row(k(row), null, row)
       catch { case e: UdException => Row(null, e.message, row) }
-    }(Encoders.row(tagSchema)).localCheckpoint(eager = true)
+    }(Encoders.row(tagSchema))
+    val tagged =
+      if (df.isStreaming) routed else routed.localCheckpoint(eager = true)
     val good = tagged.filter(col("_error").isNull)
       .select(explode(col("_out")).as("_o")).select(col("_o.*"))
     val dlq = tagged.filter(col("_error").isNotNull)

@@ -1,59 +1,49 @@
 package graft.queries
 
 import graft.Tables
-import graft.kernel.{Emitter, Kernel, UdException}
+import graft.lang.UdScript
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** uDLang dataflow surface (SURVEY.md §2.1-2.2), Spark-first.
   *
-  * Column-expressible kernels are written as native plans (select / filter /
+  * Column-expressible shapes are written as native plans (select / filter /
   * explode / HOFs) so Catalyst optimizes them — the Spark realization of the
-  * reference's planned partial-evaluation pass (SURVEY.md §4.2c). Kernels
-  * needing recursion / ordered multi-emit / capture semantics run through
-  * graft.kernel.Kernel (typed flatMap; still distributed + pipelined, no
-  * shuffle).
+  * reference's planned partial-evaluation pass (SURVEY.md §4.2c). The
+  * per-record kernel shapes (multi-emit, recursion, `for` over a map,
+  * `suppose`, `throw`) are uDLang scripts: `UdScript` compiles each and
+  * lowers it to whichever tier it fits (column, counted loop or kernel).
   */
 object Dataflow extends Serializable {
 
-  /** Input record shapes for typed kernels. */
-  final case class Ev(event_id: Long, user_id: Long, event_type: String,
-                      value: Double, props: String)
-  final case class TaggedVal(event_id: Long, tag: String, v: Double)
-  final case class CountRow(l_orderkey: Long, l_linenumber: Int, n: Int)
-  final case class FactRow(l_orderkey: Long, l_linenumber: Int, fact: Long)
-  final case class SupposeRow(event_id: Long, seq: Int, msg: String,
-                              v: Option[Double])
-  final case class RouteRow(event_id: Long, route: String, info: String)
-  final case class KvRow(event_id: Long, k: String, v: String)
+  // Per-record kernel work is CPU-bound; a compact parquet corpus arrives
+  // as ONE split (single row group), which would single-thread the whole
+  // pass — spread iff under-split (identity on well-split inputs; the
+  // Spread.forCpu contract).
+  private def events(s: SparkSession, d: String, cols: String*): DataFrame =
+    graft.operators.Spread.forCpu(Tables.events(s, d).select(cols.map(col): _*))
 
-  private def evDs(s: SparkSession, d: String) = {
-    import s.implicits._
-    // Kernel-tier flatMaps are CPU-bound per-row work; a compact parquet
-    // corpus arrives as ONE split (single row group), which would
-    // single-thread the whole kernel pass — spread iff under-split
-    // (identity on well-split inputs; the Spread.forCpu contract).
+  private def lineitem(s: SparkSession, d: String): DataFrame =
     graft.operators.Spread.forCpu(
-      Tables.events(s, d)
-        .select("event_id", "user_id", "event_type", "value", "props").as[Ev])
-  }
+      Tables.lineitem(s, d).select("l_orderkey", "l_linenumber"))
 
-  /** D1/D3: the kernel as flatMap — 0..n ordered outputs per record
-    * (reference: vm.rs:373-405; out: ir.rs:822-826). */
-  def d1KernelFlatmap(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = Kernel[Ev, TaggedVal] { (e, em) =>
-      e.event_type match {
-        case "click" =>
-          em.out(TaggedVal(e.event_id, "click_value", e.value))
-          em.out(TaggedVal(e.event_id, "click_double", e.value * 2))
-        case "purchase" =>
-          em.out(TaggedVal(e.event_id, "purchase_value", e.value))
-        case _ => // filter: no emission (examples/subjunctive.us idiom)
-      }
-    }
-    Kernel.run(evDs(s, d), k).toDF()
-  }
+  /** D1/D3: a kernel's 0..n outputs per record (reference:
+    * vm.rs:373-405; out: ir.rs:822-826); any other event type emits
+    * nothing (the examples/subjunctive.us filter idiom). */
+  val d1KernelFlatmapSrc: String =
+    """script "tagged values per event";
+      |input  {event_id: Int, event_type: Str, value: Float};
+      |output {event_id: Int, tag: Str, v: Float};
+      |if (in.event_type == "click") {
+      |  out {event_id: in.event_id, tag: "click_value", v: in.value};
+      |  out {event_id: in.event_id, tag: "click_double", v: in.value * 2.0};
+      |} elif (in.event_type == "purchase") {
+      |  out {event_id: in.event_id, tag: "purchase_value", v: in.value};
+      |}""".stripMargin
+
+  def d1KernelFlatmap(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(d1KernelFlatmapSrc)
+      .run(events(s, d, "event_id", "event_type", "value"))
 
   val d1KernelFlatmapSql: String =
     """SELECT * FROM (
@@ -65,21 +55,22 @@ object Dataflow extends Serializable {
       |) ORDER BY event_id, tag""".stripMargin
 
   /** D3/F5: recursive countdown kernel (examples/count.us) — emits
-    * n, n-1, …, 0 per record; recursion stays in the JVM closure tier. */
-  def d3MultiEmitCount(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val li = graft.operators.Spread.forCpu(
-      Tables.lineitem(s, d).select("l_orderkey", "l_linenumber")
-        .as[(Long, Int)])
-    val k = Kernel[(Long, Int), CountRow] { case ((ok, ln), em) =>
-      def count(n: Int): Unit = {        // count.us: out n; if n>0 count(n-1)
-        em.out(CountRow(ok, ln, n))
-        if (n > 0) count(n - 1)
-      }
-      count(ln)
-    }
-    Kernel.run(li, k).toDF()
-  }
+    * n, n-1, …, 0 per record. uDLang's Int rides as a Long; the entry
+    * keeps its INT columns. */
+  val d3MultiEmitCountSrc: String =
+    """script "countdown per line item";
+      |input  {l_orderkey: Int, l_linenumber: Int};
+      |output {l_orderkey: Int, l_linenumber: Int, n: Int};
+      |proc count(k: Int, ln: Int, n: Int) {
+      |  out {l_orderkey: k, l_linenumber: ln, n: n};
+      |  if (n > 0) { count(k, ln, n - 1); }
+      |}
+      |count(in.l_orderkey, in.l_linenumber, in.l_linenumber);""".stripMargin
+
+  def d3MultiEmitCount(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(d3MultiEmitCountSrc).run(lineitem(s, d))
+      .withColumns(Map("l_linenumber" -> col("l_linenumber").cast("int"),
+        "n" -> col("n").cast("int")))
 
   val d3MultiEmitCountSql: String =
     """SELECT l_orderkey, l_linenumber,
@@ -88,17 +79,19 @@ object Dataflow extends Serializable {
       |ORDER BY l_orderkey, l_linenumber, n""".stripMargin
 
   /** F1-F5: recursive factorial kernel (examples/fact.us). */
-  def dFactKernel(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val li = graft.operators.Spread.forCpu(
-      Tables.lineitem(s, d).select("l_orderkey", "l_linenumber")
-        .as[(Long, Int)])
-    val k = Kernel[(Long, Int), FactRow] { case ((ok, ln), em) =>
-      def fact(n: Long): Long = if (n <= 1) 1 else n * fact(n - 1)
-      em.out(FactRow(ok, ln, fact(ln.toLong)))
-    }
-    Kernel.run(li, k).toDF()
-  }
+  val dFactKernelSrc: String =
+    """script "factorial per line item";
+      |input  {l_orderkey: Int, l_linenumber: Int};
+      |output {l_orderkey: Int, l_linenumber: Int, fact: Int};
+      |func fact(n: Int) -> Int {
+      |  if (n <= 1) { 1 } else { n * fact(n - 1) }
+      |}
+      |out {l_orderkey: in.l_orderkey, l_linenumber: in.l_linenumber,
+      |     fact: fact(in.l_linenumber)};""".stripMargin
+
+  def dFactKernel(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(dFactKernelSrc).run(lineitem(s, d))
+      .withColumn("l_linenumber", col("l_linenumber").cast("int"))
 
   val dFactKernelSql: String =
     """SELECT l_orderkey, l_linenumber,
@@ -117,18 +110,20 @@ object Dataflow extends Serializable {
       |FROM part, unnest(string_split(p_name, ' ')) u(word)
       |ORDER BY p_partkey, word""".stripMargin
 
-  /** D7: `for (k,v) in map` — kernel builds a record map, iterates entries
-    * in declaration order (AList semantics, ir.rs:268-269). */
-  def d7ForMap(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = Kernel[Ev, KvRow] { (e, em) =>
-      val m = Seq(                        // insertion-ordered map entries
-        "type" -> e.event_type,
-        "bucket" -> (e.user_id % 10).toString)
-      for ((key, v) <- m) em.out(KvRow(e.event_id, key, v))
-    }
-    Kernel.run(evDs(s, d), k).toDF()
-  }
+  /** D7: `for (k,v) in map` — the script builds a record map and iterates
+    * its entries in declaration order (AList semantics, ir.rs:268-269). */
+  val d7ForMapSrc: String =
+    """script "for over a record's entries";
+      |input  {event_id: Int, user_id: Int, event_type: Str};
+      |output {event_id: Int, k: Str, v: Str};
+      |let m = {"type": in.event_type, bucket: (in.user_id % 10) as Str};
+      |for (k, v) in m {
+      |  out {event_id: in.event_id, k: k, v: v};
+      |}""".stripMargin
+
+  def d7ForMap(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(d7ForMapSrc)
+      .run(events(s, d, "event_id", "user_id", "event_type"))
 
   val d7ForMapSql: String =
     """SELECT * FROM (
@@ -153,26 +148,29 @@ object Dataflow extends Serializable {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** D9: `suppose` subjunctive (examples/subjunctive.us, vm.rs:602-638):
-    * speculative delegate; if it emitted, branch runs with splice (`...;`),
-    * else leaf. seq preserves the intra-record emission order. */
-  def d9Suppose(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = Kernel[Ev, SupposeRow] { (e, em) =>
-      var seq = 0
-      def emit(msg: String, v: Option[Double]): Unit = {
-        em.out(SupposeRow(e.event_id, seq, msg, v)); seq += 1
-      }
-      em.suppose {
-        if (e.event_type == "click") em.out(SupposeRow(e.event_id, -1, "Yeah!", Some(e.value)))
-      } { captured =>
-        emit("She loves you", None)
-        captured.foreach(c => emit(c.msg, c.v)) // `...;` splice, re-sequenced
-      } {
-        emit("Yesterday", None)
-      }
-    }
-    Kernel.run(evDs(s, d), k).toDF()
-  }
+    * speculative delegate; if it emitted, the branch runs and splices the
+    * capture (`...;`) after its own line, else the leaf runs. seq numbers
+    * the intra-record emission order. */
+  val d9SupposeSrc: String =
+    """script "suppose per event";
+      |input  {event_id: Int, event_type: Str, value: Float};
+      |output {event_id: Int, seq: Int, msg: Str, v: Float?};
+      |proc chorus() {
+      |  if (in.event_type == "click") {
+      |    out {event_id: in.event_id, seq: 1, msg: "Yeah!", v: in.value};
+      |  }
+      |}
+      |suppose(chorus()) {
+      |  out {event_id: in.event_id, seq: 0, msg: "She loves you", v: none};
+      |  ...;
+      |} else {
+      |  out {event_id: in.event_id, seq: 0, msg: "Yesterday", v: none};
+      |}""".stripMargin
+
+  def d9Suppose(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(d9SupposeSrc)
+      .run(events(s, d, "event_id", "event_type", "value"))
+      .withColumn("seq", col("seq").cast("int"))
 
   val d9SupposeSql: String =
     """SELECT * FROM (
@@ -187,18 +185,20 @@ object Dataflow extends Serializable {
       |) ORDER BY event_id, seq""".stripMargin
 
   /** D11: `throw` + recoverable routing (README.md:337-342): records whose
-    * kernel throws UdException are routed to a dead-letter output. */
+    * script throws route to the dead-letter leg; the entry surfaces both
+    * legs as one frame so the oracle checks the routing itself. */
+  val d11ThrowDlqSrc: String =
+    """script "throw per event";
+      |input  {event_id: Int, event_type: Str};
+      |output {event_id: Int, route: Str, info: Str};
+      |if (in.event_type == "error") { throw "boom:" + in.event_type; }
+      |out {event_id: in.event_id, route: "ok", info: in.event_type};""".stripMargin
+
   def d11ThrowDlq(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val k = Kernel[Ev, RouteRow] { (e, em) =>
-      if (e.event_type == "error")
-        throw UdException(s"boom:${e.event_type}")
-      em.out(RouteRow(e.event_id, "ok", e.event_type))
-    }
-    Kernel.runEither(evDs(s, d), k,
-        (e: Ev, ex: UdException) =>
-          Iterator(RouteRow(e.event_id, "dlq", ex.message)))
-      .toDF()
+    val (good, dlq) = UdScript.compile(d11ThrowDlqSrc)
+      .runEither(events(s, d, "event_id", "event_type"))
+    good.unionAll(dlq.select(col("event_id"), lit("dlq").as("route"),
+      col("_error").as("info")))
   }
 
   val d11ThrowDlqSql: String =

@@ -54,8 +54,8 @@ object UdLang extends Serializable {
       |FROM events WHERE value > 50.0 ORDER BY event_id""".stripMargin
 
   /** Kernel-tier: recursion (fact.us shape) over lineitem. */
-  def uFact(s: SparkSession, d: String): DataFrame = {
-    val src = """script "factorial over lineitem";
+  val uFactSrc: String =
+    """script "factorial over lineitem";
       |input  {l_orderkey: Int, l_linenumber: Int};
       |output {l_orderkey: Int, n: Int, fact: Int};
       |func fact(n: Int) -> Int {
@@ -63,9 +63,10 @@ object UdLang extends Serializable {
       |}
       |out {l_orderkey: in.l_orderkey, n: in.l_linenumber,
       |     fact: fact(in.l_linenumber)};""".stripMargin
-    UdScript.compile(src)
+
+  def uFact(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(uFactSrc)
       .run(graft.operators.Spread.forCpu(Tables.lineitem(s, d).select("l_orderkey", "l_linenumber")))
-  }
 
   val uFactSql: String =
     """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS n,
@@ -73,8 +74,8 @@ object UdLang extends Serializable {
       |FROM lineitem ORDER BY l_orderkey, n""".stripMargin
 
   /** Kernel-tier: recursive multi-emit (count.us shape). */
-  def uCount(s: SparkSession, d: String): DataFrame = {
-    val src = """script "countdown over lineitem";
+  val uCountSrc: String =
+    """script "countdown over lineitem";
       |input  {l_orderkey: Int, l_linenumber: Int};
       |output {l_orderkey: Int, n: Int};
       |proc count(k: Int, n: Int) {
@@ -82,9 +83,10 @@ object UdLang extends Serializable {
       |  if (n > 0) { count(k, n - 1); }
       |}
       |count(in.l_orderkey, in.l_linenumber);""".stripMargin
-    UdScript.compile(src)
+
+  def uCount(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(uCountSrc)
       .run(graft.operators.Spread.forCpu(Tables.lineitem(s, d).select("l_orderkey", "l_linenumber")))
-  }
 
   val uCountSql: String =
     """SELECT l_orderkey,
@@ -568,18 +570,20 @@ object UdLang extends Serializable {
 
   /** Effect-annotated function (`-> Str ! Str`, README.md:337-342) whose
     * declared exception routes throwing records to the dead-letter leg —
-    * the script-level twin of the kernel-level d11_throw_dlq. The entry
+    * the effect-annotated twin of d11_throw_dlq's top-level throw. The entry
     * surfaces both legs as one ordered frame so the oracle can check the
     * routing itself. */
-  def uEffectDlq(s: SparkSession, d: String): DataFrame = {
-    val src = """script "effect-annotated categorize";
+  val uEffectDlqSrc: String =
+    """script "effect-annotated categorize";
       |input  {event_id: Int, event_type: Str};
       |output {event_id: Int, info: Str};
       |func categorize(t: Str) -> Str ! Str {
       |  if (t == "error") { throw "boom:" + t } else { t }
       |}
       |out {event_id: in.event_id, info: categorize(in.event_type)};""".stripMargin
-    val compiled = UdScript.compile(src)
+
+  def uEffectDlq(s: SparkSession, d: String): DataFrame = {
+    val compiled = UdScript.compile(uEffectDlqSrc)
     require(compiled.tier == UdScript.KernelTier,
       "throwing funcs run on the kernel tier")
     val (good, dlq) = compiled.runEither(graft.operators.Spread.forCpu(
@@ -1100,13 +1104,13 @@ object UdLang extends Serializable {
        |GROUP BY 1, 2
        |ORDER BY win_start_us, c_nationkey""".stripMargin
 
-  /** `suppose` + comprehension from uDLang SOURCE (not the kernel-API
-    * twins d8/d9): the subjunctive speculatively runs the proc, the taken
+  /** `suppose` + comprehension from uDLang SOURCE (d9_suppose without
+    * the comprehension): the subjunctive speculatively runs the proc, the taken
     * branch splices the captured emissions with `...;`, and the captured
     * record's msg is built by a comprehension + join — the whole chain
     * through UdScript.compile, driver-gated. */
-  def uSuppose(s: SparkSession, d: String): DataFrame = {
-    val src = """script "subjunctive with comprehension";
+  val uSupposeSrc: String =
+    """script "subjunctive with comprehension";
       |input  {event_id: Int, event_type: Str, value: Float};
       |output {event_id: Int, seq: Int, msg: Str};
       |let exclaims = ["Yeah", "yeah", "YEAH"];
@@ -1122,9 +1126,10 @@ object UdLang extends Serializable {
       |} else {
       |  out {event_id: in.event_id, seq: 0, msg: "Yesterday"};
       |}""".stripMargin
-    UdScript.compile(src)
+
+  def uSuppose(s: SparkSession, d: String): DataFrame =
+    UdScript.compile(uSupposeSrc)
       .run(graft.operators.Spread.forCpu(Tables.events(s, d).select("event_id", "event_type", "value")))
-  }
 
   val uSupposeSql: String =
     """SELECT * FROM (

@@ -32,9 +32,12 @@ object JsonRecords {
     * time from the value's JSON type — the payload is parsed ONCE into a
     * VARIANT and each branch tests schema_of_variant (exact: a quoted
     * "42" is STRING, never Int; an array never matches a Str branch).
-    * The FIRST matching branch in declared order wins. Extraction is a
-    * type-aligned variant cast, so no branch re-parses the payload —
-    * from_json probes were one Jackson parse PER BRANCH per row.
+    * The FIRST matching branch in declared order wins; a sized-int
+    * branch takes an integer in its range and an F32 branch a
+    * float32-exact number, as `Msgpack.branchMatches` picks them.
+    * Extraction is a type-aligned variant cast, so no branch re-parses
+    * the payload — from_json probes were one Jackson parse PER BRANCH per
+    * row.
     * Split into two halves so each can be pinned once per row (see
     * read): `unionTag` infers the branch from the extracted variant
     * value `vg`, and `unionStruct` builds the tagged struct from the
@@ -43,9 +46,15 @@ object JsonRecords {
     * A JSON-null or missing key yields a null union. */
   def unionTag(vg: Column, ts: Seq[UdType]): Column = {
     val sv = schema_of_variant(vg)
+    val number = sv === "DOUBLE" || sv.startsWith("DECIMAL")
     def typeMatches(bt: UdType): Column = bt match {
-      case TInt | TIntN(_, _) => sv === "BIGINT"
-      case TFloat => sv === "DOUBLE" || sv.startsWith("DECIMAL")
+      case TInt => sv === "BIGINT"
+      case n: TIntN => sv === "BIGINT" &&
+        try_variant_get(vg, "$", "bigint").between(n.lo, n.hi)
+      case TFloat => number
+      case TFloat32 =>
+        val d = try_variant_get(vg, "$", "double")
+        number && d.cast("float").cast("double") === d
       case TStr   => sv === "STRING"
       case TBool  => sv === "BOOLEAN"
       case TValue(s) => sv === "STRING" &&
@@ -384,8 +393,11 @@ object JsonRecords {
 
   /** The branch test of `unionTag`, on a variant tree. */
   private def branchMatches(n: Any, bt: UdType): Boolean = (n, bt) match {
-    case (_: Long, TInt | TIntN(_, _)) => true
+    case (_: Long, TInt) => true
+    case (x: Long, t: TIntN) => t.contains(x)
     case (_: Double | _: java.math.BigDecimal, TFloat) => true
+    case (x: Double, TFloat32) => x.toFloat.toDouble == x
+    case (x: java.math.BigDecimal, TFloat32) => branchMatches(x.doubleValue, bt)
     case (_: String, TStr)  => true
     case (_: Boolean, TBool) => true
     case (x: String, TValue(s)) => x == s

@@ -541,4 +541,51 @@ class CliDifferentialSpec extends SparkSpec {
     assert(viaMsgpack.size == 2)
     assert(runs("dlq").err.size == 1 && runs("dlq").err.head.contains("type:id"))
   }
+
+  test("a union picks its sized-int and F32 branches as msgpack does, on both paths") {
+    // 300 is no U8: an ingest reason on JSON as on msgpack; 0.5 is
+    // float32-exact and takes F32, 0.1 is not and takes Float. The thrown
+    // records' DLQ lines print the branch ingest picked.
+    val src = """script "branches";
+      |input  {id: Int, v: U8 | "none" | Str, z: F32 | Float};
+      |output {id: Int};
+      |if (in.id > 1) { throw "seen"; }
+      |out {id: in.id};""".stripMargin
+    val input = Seq("""{"id": 1, "v": 300, "z": 0.5}""",
+      """{"id": 2, "v": 5, "z": 0.5}""", """{"id": 3, "v": "none", "z": 0.1}""")
+    val json = agreeIn("KernelTier", src, input: _*)
+    val msgpack = agree(script(src), lifted(lines(input: _*)), List("--format", "msgpack"))
+    for (runs <- Seq(json, msgpack)) {
+      // msgpack's reason names the wire type after the field
+      assert(runs("dlq").err.map(_.split("\t").last.takeWhile(_ != ' ')).sorted ==
+        Seq("seen", "seen", "union_no_branch:v"))
+      assert(runs("abort").code == 1 &&
+        runs("abort").err.head.startsWith("runtime error: union_no_branch:v"))
+    }
+    assert(json("dlq").err.take(2) == Seq("2\t[U8,5,null,null]\t[F32,0.5,null]\tseen",
+      "3\t[val:none,null,none,null]\t[Float,null,0.1]\tseen"))
+  }
+
+  test("the oracle entries' uDLang scripts agree on both paths") {
+    import graft.queries.{Dataflow, UdLang}
+    val events = lines(
+      """{"event_id": 1, "user_id": 23, "event_type": "click", "value": 80.5}""",
+      """{"event_id": 2, "user_id": 7, "event_type": "purchase", "value": 12.0}""",
+      """{"event_id": 3, "user_id": 40, "event_type": "error", "value": 0.5}""",
+      """{"event_id": 4, "user_id": 5, "event_type": "view", "value": 3}""",
+      """{"event_id": 5, "event_type": "click"}""")
+    val items = lines("""{"l_orderkey": 1, "l_linenumber": 3}""",
+      """{"l_orderkey": 2, "l_linenumber": 1}""", """{"l_orderkey": 3, "l_linenumber": 0}""",
+      """{"l_orderkey": 4}""")
+    val onEvents = Seq(Dataflow.d1KernelFlatmapSrc, Dataflow.d7ForMapSrc,
+      Dataflow.d9SupposeSrc, Dataflow.d11ThrowDlqSrc, UdLang.uSupposeSrc,
+      UdLang.uEffectDlqSrc).map(src => agree(script(src), events))
+    val onItems = Seq(Dataflow.d3MultiEmitCountSrc, Dataflow.dFactKernelSrc,
+      UdLang.uCountSrc, UdLang.uFactSrc).map(src => agree(script(src), items))
+    // d11: the error event routes with the thrown message, the rest emit
+    assert(onEvents(3)("dlq").err == Seq("3\terror\tboom:error"))
+    assert(onEvents(3)("dlq").out.size == 4 && onEvents(3)("abort").code == 1)
+    // d3: 3..0, 1..0 and 0 per line item; the record with no line number is invalid
+    assert(onItems(0)("dlq").out.size == 7 && onItems(0)("dlq").err.size == 1)
+  }
 }

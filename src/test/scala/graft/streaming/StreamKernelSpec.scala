@@ -1,14 +1,14 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.kernel.{Kernel, UdException}
+import graft.lang.UdScript
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** The uDLang kernels running over Structured Streaming: same Kernel value,
-  * streaming source, micro-batch execution — plus watermarked event-time
-  * windows and stateful (udmonad-shaped) processing. */
+/** uDLang scripts running over Structured Streaming: the same compiled
+  * script, a streaming source, micro-batch execution — plus watermarked
+  * event-time windows and stateful (udmonad-shaped) processing. */
 class StreamKernelSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -16,17 +16,18 @@ class StreamKernelSpec extends SparkSpec {
   test("kernel runs unchanged over a memory stream (multi-emit + filter)") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[Int]
-    val k = Kernel[Int, Int] { (n, em) =>
-      if (n % 2 == 0) { em.out(n); em.out(n * 10) } // multi-emit evens
-    }
-    val q = Kernel.run(input.toDS(), k)
+    val input = MemoryStream[Long]
+    val c = UdScript.compile("""script "evens";
+      |input Int; output Int;
+      |if (in % 2 == 0) { for x in [in, in * 10] { out x; } }""".stripMargin)
+    assert(c.tier == UdScript.KernelTier)
+    val q = c.run(input.toDF())
       .writeStream.format("memory").queryName("kout").outputMode("append")
       .start()
     try {
       input.addData(1, 2, 3, 4)
       q.processAllAvailable()
-      val got = spark.table("kout").as[Int].collect().sorted
+      val got = spark.table("kout").as[Long].collect().sorted
       assert(got.toSeq == Seq(2, 4, 20, 40))
     } finally q.stop()
   }
@@ -34,13 +35,12 @@ class StreamKernelSpec extends SparkSpec {
   test("streaming DLQ: thrown records route, stream survives") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[Int]
-    val k = Kernel[Int, String] { (n, em) =>
-      if (n < 0) throw UdException(s"neg:$n")
-      em.out(s"ok:$n")
-    }
-    val q = Kernel.runEither(input.toDS(), k,
-        (i: Int, e: UdException) => Iterator(s"dlq:${e.message}"))
+    val input = MemoryStream[Long]
+    val (good, dlq) = UdScript.compile("""script "neg";
+      |input Int; output Str;
+      |if (in < 0) { throw "neg:" + (in as Str); }
+      |out "ok:" + (in as Str);""".stripMargin).runEither(input.toDF())
+    val q = good.union(dlq.select(concat(lit("dlq:"), col("_error"))))
       .writeStream.format("memory").queryName("dlqout").outputMode("append")
       .start()
     try {
@@ -83,28 +83,7 @@ class StreamKernelSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stateful per-key running aggregate (udmonad shape)") {
-    import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(String, Double)]
-    val q = StreamKernel.statefulCount(input.toDS())
-      .toDF("key", "n", "sum")
-      .writeStream.format("memory").queryName("stateout")
-      .outputMode("append").start()
-    try {
-      input.addData(("a", 1.0), ("a", 2.0), ("b", 5.0))
-      q.processAllAvailable()
-      input.addData(("a", 3.0))
-      q.processAllAvailable()
-      val got = spark.table("stateout").as[(String, Long, Double)]
-        .collect().toSet
-      assert(got.contains(("a", 2L, 3.0)))   // after batch 1
-      assert(got.contains(("b", 1L, 5.0)))
-      assert(got.contains(("a", 3L, 6.0)))   // state carried into batch 2
-    } finally q.stop()
-  }
-
-  test("transformWithState twin matches statefulCount output") {
+  test("transformWithState per-key running aggregate (udmonad shape)") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the Spark 4 operator requires the RocksDB state store provider
@@ -123,7 +102,7 @@ class StreamKernelSpec extends SparkSpec {
         q.processAllAvailable()
         val got = spark.table("twsout").as[(String, Long, Double)]
           .collect().toSet
-        // identical emissions to the flatMapGroupsWithState shape above
+        // one emission per key and batch; batch 2 carries a's state
         assert(got == Set(("a", 2L, 3.0), ("b", 1L, 5.0), ("a", 3L, 6.0)))
       } finally q.stop()
     } finally
