@@ -56,8 +56,8 @@ object Bench {
     warmQuery("q1_agg")
     Seq("events", "documents", "embeddings")
       .foreach(t => warm(Tables.t(spark, sfDir, t).count()))
-    // Variant-ingest expression family (try_parse_json / variant_get /
-    // schema_of_variant classloading + Janino codegen).
+    // JSON ingest (the decoder's mapPartitions, its row encoder's
+    // codegen) and the column tier's union `match`.
     warmQuery("u_union_ingest")
     // RocksDB state-store provider (native lib load + column families).
     warmQuery("u_stream_state")

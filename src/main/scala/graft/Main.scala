@@ -287,8 +287,7 @@ object Main {
                           dlq: LineBuffer): (StructType, Iterator[Row]) =
     c.script.input match {
       case rec: TRecord =>
-        val tagged = Msgpack.decodedSchema(rec)
-        val schema = StructType(tagged.fields.init)
+        val schema = UdScript.inputFrame(rec)
         (schema, Msgpack.decodeFile(in.readAllBytes(), rec).flatMap { r =>
           r.getString(r.length - 1) match {
             case null =>
@@ -330,21 +329,23 @@ object Main {
     interp.initEnv
     val lines = new JsonRecords.JsonLines(new LineBuffer(out), c.script.output)
     val outputs = scala.collection.mutable.ArrayBuffer.empty[Value]
-    def thrown(line: String, message: String): Unit =
-      if (opts.mode == "dlq") dlq += decode.rowText(line) + "\t" + message
+    // a thrown record's DLQ line prints the row the Spark source keeps of it
+    def thrown(v: Value, message: String): Unit =
+      if (opts.mode == "dlq") dlq += decode.cells(v) + "\t" + message
       else throw RunError(message)
     val reader = new java.io.BufferedReader(
       new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
     try {
       var line = reader.readLine()
       while (line != null) {
-        try decode(line) match {
+        decode(line) match {
           case Left(reason) => invalid(opts, dlq, reason, line + "\t" + reason)
+          case Right(v) if decode.outOfRange != null => thrown(v, decode.outOfRange)
           case Right(v) =>
             outputs.clear()
             try { interp.run(v, outputs += _); lines.write(outputs) }
-            catch { case e: UdException => thrown(line, e.message) }
-        } catch { case JsonRecords.OutOfRange(message) => thrown(line, message) }
+            catch { case e: UdException => thrown(v, e.message) }
+        }
         line = reader.readLine()
       }
     } finally lines.flush()

@@ -341,6 +341,17 @@ object UdScript {
     case scalar => StructType(Seq(StructField("out", sparkType(scalar))))
   }
 
+  /** The frame a source keeps of a declared input record: its fields, all
+    * nullable (an invalid record's row holds none of them, and a non-null
+    * field would fail the row encoder before the reason could route it),
+    * then one `<f>__present` flag per absent-optional field. */
+  def inputFrame(declared: TRecord): StructType = {
+    val base = schemaOf(declared)
+    StructType(base.fields.toSeq.map(_.copy(nullable = true)) ++
+      declared.fields.filter(_.absentOptional).map(f =>
+        StructField(s"${f.name}__present", BooleanType, nullable = false)))
+  }
+
   // ---- Row <-> Value ----
   /** Absent-vs-null: when the input frame carries a `<f>__present` flag
     * (JsonRecords / Msgpack) and it is false, the field is OMITTED from
@@ -436,7 +447,9 @@ object UdScript {
     * and that branch's `tagOf`; a declared F32 slot rounds through
     * float32; nested presence flags follow `TField.absentOptional`; an
     * Int widens into a Float slot and a Float narrows into an Int slot. A
-    * value that fits no slot stops its record, as a `throw` does. */
+    * value that fits no slot stops its record, as a `throw` does. Columns
+    * of `schema` after those a record fills (a source's
+    * `_invalid_reason`) stay null. */
   def valueToRow(v: Value, t: UdType, schema: StructType): Row = t match {
     case TRecord(_, _) | TTuple(_) => encode(v, t, schema).asInstanceOf[Row]
     case _ => new GenericRowWithSchema(
@@ -486,8 +499,39 @@ object UdScript {
       }
   }
 
-  // The leaf and union rules of output encoding, shared by `valueToRow`
-  // and the CLI pipe's JSON writer (`JsonRecords.JsonLines`).
+  /** The cells of `valueToRow(m, rec, inputFrame(rec))` as a collected
+    * row prints them (`Row.mkString`), built with no Spark type: the CLI
+    * pipe prints a thrown record's DLQ line without loading Spark's type
+    * system. */
+  private[graft] def rowCells(m: VMap, rec: TRecord): Seq[String] =
+    rec.fields.map(f => m.index.get(f.name).fold("null")(cellText(_, f.t))) ++
+      rec.fields.filter(_.absentOptional).map(f => m.index.contains(f.name).toString)
+
+  private def cellText(v: Value, t: UdType): String = (v, t) match {
+    case (VNone, _) => "null"
+    case (_, TOption(inner)) => cellText(v, inner)
+    case (_, TInt | TIntN(_, _)) => intSlot(v, t).toString
+    case (_, TFloat | TFloat32) => floatSlot(v, t).toString
+    case (VBool(b), TBool) => b.toString
+    case (_, TStr | TAny | TValue(_)) => render(v)
+    case (_, TUnion(ts)) if ts.forall(_.isInstanceOf[TValue]) => render(v)
+    case (_, TUnion(ts)) =>
+      val i = unionSlot(v, ts)
+      (tagOf(ts(i)) +: ts.indices.map(j =>
+        if (j == i) cellText(v, ts(i)) else "null")).mkString("[", ",", "]")
+    case (m: VMap, rec: TRecord) => rowCells(m, rec).mkString("[", ",", "]")
+    case (VTuple(xs), TTuple(ts)) =>
+      xs.zip(ts).map { case (x, t2) => cellText(x, t2) }.mkString("[", ",", "]")
+    case (VPoint(x, y), TPoint) => s"[$x,$y]"
+    case (VList(xs), TList(et)) => xs.map(cellText(_, et)).mkString("ArraySeq(", ", ", ")")
+    case (m: VMap, TMap(vt)) => // in the order of the Scala map `encode` builds
+      m.entries.toMap.iterator.map { case (k, x) => s"$k -> ${cellText(x, vt)}" }
+        .mkString("Map(", ", ", ")")
+    case _ => cannotEncode(v, t)
+  }
+
+  // The leaf and union rules of output encoding, shared by `valueToRow`,
+  // `rowCells` and the CLI pipe's JSON writer (`JsonRecords.JsonLines`).
 
   /** A number in an Int slot: a Float truncates. */
   private[graft] def intSlot(v: Value, t: UdType): Long = v match {
@@ -504,10 +548,14 @@ object UdScript {
     case _         => cannotEncode(v, t)
   }
 
-  /** The general-union branch an output value takes: the first it belongs
-    * to. A value that fits none stops its record, as a `throw` does. */
+  /** The general-union branch an output value takes: the first it matches
+    * exactly (`Values.matchesType`, the test of `match`), else the first
+    * it belongs to. A decoded input so keeps its ingest branch: a Float
+    * takes an F32 branch only when it is float32-exact. A value that fits
+    * none stops its record, as a `throw` does. */
   private[graft] def unionSlot(v: Value, ts: Seq[UdType]): Int = {
-    val i = ts.indexWhere(belongs(v, _))
+    val exact = ts.indexWhere(Values.matchesType(v, _))
+    val i = if (exact >= 0) exact else ts.indexWhere(belongs(v, _))
     if (i < 0) Values.err(s"no union slot for ${render(v)}")
     i
   }
@@ -515,10 +563,10 @@ object UdScript {
   private[graft] def cannotEncode(v: Value, t: UdType): Nothing =
     Values.err(s"cannot encode ${render(v)} as $t")
 
-  /** Does an interpreter value belong to a union branch? An Int belongs
-    * to `Int` and to a sized int whose range holds it, a Float to `Float`
-    * and `F32` (rounded at the leaf), a string to an equal literal and to
-    * `Str`. */
+  /** Does an interpreter value belong to a union branch, once rounded? An
+    * Int belongs to `Int` and to a sized int whose range holds it, a Float
+    * to `Float` and `F32` (rounded at the leaf), a string to an equal
+    * literal and to `Str`, a map to a record or map branch. */
   private def belongs(v: Value, t: UdType): Boolean = (v, t) match {
     case (_, TOption(inner))      => belongs(v, inner)
     case (_, TUnion(ts))          => ts.exists(belongs(v, _))
@@ -711,7 +759,7 @@ private[lang] object Lowering {
 
   /** The slots of a tagged union `{_tag, v0, …}` that a type pattern
     * matches, in branch order, each with the test its value must also
-    * pass: every branch whose values `Interp.matchesType` may accept for
+    * pass: every branch whose values `Values.matchesType` may accept for
     * t. An `Int` pattern takes the sized-int branches too; a sized-int,
     * F32 or string-literal pattern tests the slot's range, precision or
     * text. None when the matched slots ride as different Spark types,

@@ -68,6 +68,27 @@ object Values {
 
   def err(m: String): Nothing = throw UdException(m)
 
+  /** Does a value match a type exactly? The test of a `match` type
+    * pattern, and the first choice of a union slot on egress
+    * (`UdScript.unionSlot`): a sized int holds the value in its range, and
+    * F32 takes only a float32-exact Float. */
+  def matchesType(v: Value, t: UdType): Boolean = (v, t) match {
+    case (VInt(_), TInt) | (VFloat(_), TFloat) | (VStr(_), TStr) |
+        (VBool(_), TBool) | (VNone, TNone) |
+        (VPoint(_, _), TPoint) => true
+    case (VInt(i), n: TIntN)                => n.contains(i) // range test
+    // precision test, the float twin of the TIntN range test
+    case (VFloat(d), TFloat32)              => d.toFloat.toDouble == d
+    case (VStr(s), TValue(lit))             => s == lit
+    case (VList(_), TList(_))               => true
+    case (VTuple(xs), TTuple(ts))           =>
+      xs.size == ts.size &&
+        xs.zip(ts).forall { case (x, t2) => matchesType(x, t2) }
+    case (_, TAny)                          => true
+    case (_, TUnion(ts))                    => ts.exists(matchesType(v, _))
+    case _                                  => false
+  }
+
   def truthy(v: Value): Boolean = v match {
     case VBool(b)  => b
     case VInt(i)   => i != 0
@@ -577,22 +598,5 @@ final class Interp(script: Ast.Script,
       "replace" -> { case Seq(VStr(s), VStr(from), VStr(to)) =>
                        VStr(s.replace(from, to))
                      case _ => err("replace expects (Str, Str, Str)") })
-  }
-
-  private def matchesType(v: Value, t: UdType): Boolean = (v, t) match {
-    case (VInt(_), TInt) | (VFloat(_), TFloat) | (VStr(_), TStr) |
-        (VBool(_), TBool) | (VNone, TNone) |
-        (VPoint(_, _), TPoint) => true
-    case (VInt(i), n: TIntN)                => n.contains(i) // range test
-    // precision test, the float twin of the TIntN range test
-    case (VFloat(d), TFloat32)              => d.toFloat.toDouble == d
-    case (VStr(s), TValue(lit))             => s == lit
-    case (VList(_), TList(_))               => true
-    case (VTuple(xs), TTuple(ts))           =>
-      xs.size == ts.size &&
-        xs.zip(ts).forall { case (x, t2) => matchesType(x, t2) }
-    case (_, TAny)                          => true
-    case (_, TUnion(ts))                    => ts.exists(matchesType(v, _))
-    case _                                  => false
   }
 }

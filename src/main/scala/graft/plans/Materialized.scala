@@ -15,13 +15,13 @@ import org.apache.spark.sql.types.DataType
   * PushDownPredicates will not substitute it into a predicate pushed
   * below it. Evaluation and codegen are exactly the child's.
   *
-  * Why it exists: an expensive parse (e.g. `try_parse_json`) aliased in
-  * a Project and consumed by N downstream expressions is re-inlined N
-  * times when a routing Filter is pushed through the Project — and
+  * Why it exists: a column aliased in a Project and consumed downstream
+  * is re-inlined into a Filter pushed through the Project, and
   * subexpression elimination cannot rescue occurrences inside
-  * conditionally-evaluated when/coalesce arms. Wrapping the alias body
-  * in MaterializeOnce keeps ONE evaluation per row, which is the whole
-  * design of a validated-ingest projection (JsonRecords.read).
+  * conditionally-evaluated when/coalesce arms. Its one user is
+  * `ValidatedIngest.routeTagged`'s abort check: pinned, the
+  * `raise_error` of an invalid record runs before any filter a script
+  * pushes down could drop that record.
   */
 case class MaterializeOnce(child: Expression) extends UnaryExpression {
   // The flag is the entire mechanism: no state, no RNG — evaluation is

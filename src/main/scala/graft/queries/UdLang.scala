@@ -157,7 +157,7 @@ object UdLang extends Serializable {
     * _tag — the VERDICT r1 union-encoding ask. The union column is built
     * from events (even ids carry Int user_id, odd ids carry Str
     * event_type), the script never sees the encoding. */
-  private val unionScriptSrc = """script "union narrowing";
+  val unionScriptSrc = """script "union narrowing";
     |input  {event_id: Int, v: Int | Str};
     |output {event_id: Int, shown: Str, doubled: Int};
     |out {event_id: in.event_id,
@@ -193,10 +193,11 @@ object UdLang extends Serializable {
 
   /** TRUE union ingest (the r2 watch item): the wire records carry the
     * union field as its RAW JSON value — an int for even ids, a string
-    * for odd — and the tag is inferred at validation time by
-    * JsonRecords.unionParse probing branches in declared order. The
-    * script (same compiled source as u_union_match) never sees raw JSON
-    * or tags; the encoding is produced by INGEST, not pre-built. */
+    * for odd — and `JsonRecords.read` tags it at validation time, its
+    * decoder taking the first branch in declared order that the JSON
+    * value fits. The script (same compiled source as u_union_match) never
+    * sees raw JSON or tags; the encoding is produced by INGEST, not
+    * pre-built. */
   def uUnionIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val lines = Tables.events(s, d).select(

@@ -8,102 +8,34 @@ import graft.kernel.UdException
 import graft.lang.Ast._
 import graft.lang.{UdScript, Values}
 import graft.lang.Values._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** JSON record ingest/egress — the reference's wire-format story (§1.4):
   * msgpack framing is delegated to lift/lower companions; JSON is the MVP
-  * format (roadmap.md:25-26). Here: JSON-lines ⇄ DataFrame with the
-  * DECLARED uDLang input type as the schema (no inference, ever), the
-  * validation modes of ValidatedIngest, and absent-vs-null preservation.
+  * format (roadmap.md:25-26). Here: JSON lines under the DECLARED uDLang
+  * input type (no inference, ever), the validation modes of
+  * ValidatedIngest, and absent-vs-null preservation.
+  *
+  * One decoder reads every JSON record: `lineDecoder` (a declared record)
+  * or `scalarDecoder` (one JSON value per line) turns a line into the
+  * interpreter's input value or the reason it is invalid. The CLI's stdin
+  * pipe runs it line by line with no session; `read`/`readScalar` run it
+  * in one `mapPartitions` over a text Dataset and encode each value with
+  * `UdScript.valueToRow` into the source's frame, so a Spark row holds
+  * exactly the decoded value.
   *
   * Absent vs null (README.md:220-228, SURVEY §7.4 hard part #2):
   * `blocker?: U32` (absent-optional) and `blocker: U32?` (nullable) both
-  * surface as nullable columns after from_json — so for every
-  * absent-optional field we add a presence column `<name>__present` =
-  * whether the key exists in the payload. `rec.?.field` (Has) then means
-  * presence, not non-null, exactly as the reference distinguishes them.
+  * surface as nullable columns, so every absent-optional field has a
+  * presence column `<name>__present` = whether the key exists in the
+  * payload (inside the struct for a nested record). `rec.?.field` (Has)
+  * then means presence, not non-null, exactly as the reference
+  * distinguishes them.
   */
 object JsonRecords {
-
-  /** True union INGEST (manual.md:112-115): a declared `Int | Str` field
-    * arrives as its RAW JSON value, and the tag is inferred at validation
-    * time from the value's JSON type — the payload is parsed ONCE into a
-    * VARIANT and each branch tests schema_of_variant (exact: a quoted
-    * "42" is STRING, never Int; an array never matches a Str branch).
-    * The FIRST matching branch in declared order wins; a sized-int
-    * branch takes an integer in its range and an F32 branch a
-    * float32-exact number, as `Msgpack.branchMatches` picks them.
-    * Extraction is a type-aligned variant cast, so no branch re-parses
-    * the payload — from_json probes were one Jackson parse PER BRANCH per
-    * row.
-    * Split into two halves so each can be pinned once per row (see
-    * read): `unionTag` infers the branch from the extracted variant
-    * value `vg`, and `unionStruct` builds the tagged struct from the
-    * MATERIALIZED (vg, tag) pair — so the schema probes are not
-    * re-inlined into every struct slot and validation check.
-    * A JSON-null or missing key yields a null union. */
-  def unionTag(vg: Column, ts: Seq[UdType]): Column = {
-    val sv = schema_of_variant(vg)
-    val number = sv === "DOUBLE" || sv.startsWith("DECIMAL")
-    def typeMatches(bt: UdType): Column = bt match {
-      case TInt => sv === "BIGINT"
-      case n: TIntN => sv === "BIGINT" &&
-        try_variant_get(vg, "$", "bigint").between(n.lo, n.hi)
-      case TFloat => number
-      case TFloat32 =>
-        val d = try_variant_get(vg, "$", "double")
-        number && d.cast("float").cast("double") === d
-      case TStr   => sv === "STRING"
-      case TBool  => sv === "BOOLEAN"
-      case TValue(s) => sv === "STRING" &&
-        try_variant_get(vg, "$", "string") === s
-      case TList(_)  => sv.startsWith("ARRAY")
-      case TRecord(_, _) | TPoint | TMap(_) => sv.startsWith("OBJECT")
-      case _ => lit(false)
-    }
-    coalesce(ts.map(bt =>
-      when(typeMatches(bt), lit(UdScript.tagOf(bt)))): _*)
-  }
-
-  def unionStruct(vg: Column, tag: Column, ts: Seq[UdType]): Column = {
-    val slots = ts.zipWithIndex.map { case (bt, i) =>
-      val dt = UdScript.sparkType(bt)
-      when(tag === lit(UdScript.tagOf(bt)),
-        try_variant_get(vg, "$", dt.catalogString))
-        .otherwise(lit(null).cast(dt)).as(s"v$i")
-    }
-    when(tag.isNotNull, struct(tag.as("_tag") +: slots: _*))
-  }
-
-  /** Does t contain a NESTED record with absent-optional fields (whose
-    * presence flags live inside the struct)? Lists are out of scope —
-    * per-element presence has no column to live in. */
-  private def hasNestedPresence(t: UdType): Boolean = t match {
-    case TRecord(fs, _) =>
-      fs.exists(_.absentOptional) || fs.exists(f => hasNestedPresence(f.t))
-    case TOption(x) => hasNestedPresence(x)
-    case _ => false
-  }
-
-  /** Rebuild a nested record column with its in-struct __present flags
-    * populated from the variant (key present ⟺ variant_get non-null,
-    * even for a JSON-null value). Recurses through nested records. */
-  private def withNestedPresence(pv: Column, base: Column, path: String,
-                                 t: UdType): Column = t match {
-    case TOption(x) => withNestedPresence(pv, base, path, x)
-    case TRecord(fs, _) =>
-      val parts = fs.map { f =>
-        withNestedPresence(pv, base.getField(f.name), s"$path.${f.name}",
-          f.t).as(f.name)
-      } ++ fs.filter(_.absentOptional).map { f =>
-        variant_get(pv, s"$path.${f.name}", "variant").isNotNull
-          .as(s"${f.name}__present")
-      }
-      when(base.isNotNull, struct(parts: _*))
-    case _ => base
-  }
 
   /** General (non-enum) union branches of a declared field, if any. */
   private def unionBranches(t: UdType): Option[Seq[UdType]] = t match {
@@ -112,45 +44,14 @@ object JsonRecords {
     case _ => None
   }
 
-  /** Can every field of the declared record be extracted STRICTLY from
-    * the variant parse alone? Scalars, enums and unions qualify; nested
-    * records / lists / maps keep the from_json path (their leaf-level
-    * strictness is Jackson's, and per-element presence lives there). */
-  private def flatExtractable(t: UdType): Boolean = t match {
+  /** Is a top-level field of this type read strictly from its one token?
+    * Scalars and enums are; a union picks a branch, and a nested record,
+    * list or map reads as `from_json` reads it. */
+  private def readsStrictly(t: UdType): Boolean = t match {
     case TInt | TIntN(_, _) | TFloat | TFloat32 | TStr | TBool => true
-    case TOption(x) => flatExtractable(x)
-    case TUnion(ts) if ts.forall(_.isInstanceOf[TValue]) => true // enum
-    case TUnion(_) => true // general unions use the variant machinery
+    case TOption(x) => readsStrictly(x)
+    case TUnion(ts) => ts.forall(_.isInstanceOf[TValue]) // an enum
     case _ => false
-  }
-
-  /** Strict scalar extraction from a variant value: the JSON type must
-    * MATCH the declared type (same posture as the msgpack decoder's
-    * typed coerce — a quoted "42" never populates an Int field, an int
-    * never populates a Str field; a Float accepts any JSON number). A
-    * type mismatch extracts null, which the type:<f> check then routes
-    * by mode. Every TOP-LEVEL scalar/enum field goes through this
-    * extraction — whether or not the record also has nested fields — so
-    * a field's validation semantics never depend on its siblings.
-    * (Inside nested records the leaf strictness is Jackson's, as
-    * flatExtractable documents.) */
-  private def strictExtract(vg: Column, t: UdType): Column = t match {
-    case TOption(x) => strictExtract(vg, x)
-    case TInt | TIntN(_, _) =>
-      when(schema_of_variant(vg) === "BIGINT",
-        try_variant_get(vg, "$", "bigint"))
-    case TFloat =>
-      val sv = schema_of_variant(vg)
-      when(sv === "BIGINT" || sv === "DOUBLE" || sv.startsWith("DECIMAL"),
-        try_variant_get(vg, "$", "double"))
-    case TFloat32 => // float32-rounded at the ingest boundary
-      strictExtract(vg, TFloat).cast("float").cast("double")
-    case TBool =>
-      when(schema_of_variant(vg) === "BOOLEAN",
-        try_variant_get(vg, "$", "boolean"))
-    case _ => // TStr and string-literal enums ride as strings
-      when(schema_of_variant(vg) === "STRING",
-        try_variant_get(vg, "$", "string"))
   }
 
   /** The literals of a string-literal enum field, if it is one. */
@@ -168,137 +69,13 @@ object JsonRecords {
     case _          => None
   }
 
-  /** Parse a JSON-lines Dataset under a declared uDLang record type.
-    * Output columns = declared fields (+ `__present` flags for
-    * absent-optional ones). Malformed payloads follow `mode`.
-    *
-    * The payload is parsed exactly TWICE per row — once into a VARIANT
-    * (`_pv`: presence / union-tag / missing-vs-null probes) and once
-    * under the declared schema (`_rec`: the typed data) — in a
-    * projection of their own, with every downstream probe referencing
-    * the shared columns. Subexpression elimination alone is not enough:
-    * it skips conditionally-evaluated branches (when/coalesce arms), so
-    * rooting the probes at a materialized alias is what guarantees one
-    * parse per row; CollapseProject keeps the stage split because the
-    * parses are non-cheap and multiply-referenced. */
-  def read(s: SparkSession, lines: Dataset[String], declared: TRecord,
-           mode: ValidatedIngest.Mode): ValidatedIngest.Validated = {
-    val schema: StructType = UdScript.schemaOf(declared)
-    val raw = lines.toDF("_payload")
-    val payload = col("_payload")
-    val once = graft.plans.Materialized.once _
-    // FLAT schemas (scalars / enums / unions only) need no from_json at
-    // all — every field extracts strictly from the one variant parse,
-    // halving the per-row Jackson work. Nested shapes keep from_json for
-    // their nested fields, but TOP-LEVEL scalars still extract strictly
-    // from the variant so field semantics don't depend on siblings.
-    val flat = declared.fields.forall(f => flatExtractable(f.t))
-    val parsed0 =
-      if (flat) raw.select(payload, once(try_parse_json(payload)).as("_pv"))
-      else raw.select(payload,
-        once(try_parse_json(payload)).as("_pv"),
-        once(from_json(payload, schema)).as("_rec"))
-    val pv = col("_pv")
-    val rec = col("_rec")
-    val unionFields = declared.fields.flatMap(f =>
-      unionBranches(f.t).map(f.name -> _))
-    val unionNames = unionFields.map(_._1).toSet
-    def strictField(f: TField): Boolean =
-      !unionNames.contains(f.name) && flatExtractable(f.t)
-    // Pin every strict scalar extraction (and, per union field, the
-    // extracted variant value and inferred tag) ONCE per row — the
-    // variant probes would otherwise be re-instantiated in the data
-    // column AND each validation check that mentions the field, and
-    // subexpression elimination skips conditionally-evaluated arms.
-    val pinned = parsed0.columns.map(col).toSeq ++
-      unionFields.flatMap { case (n, ts) =>
-        val vg = variant_get(pv, s"$$.$n", "variant")
-        Seq(once(vg).as(s"_vg_$n"),
-          once(unionTag(vg, ts)).as(s"_tag_$n"))
-      } ++
-      declared.fields.filter(strictField).map(f =>
-        once(strictExtract(
-          variant_get(pv, s"$$.${f.name}", "variant"), f.t))
-          .as(s"_fx_${f.name}"))
-    val parsed =
-      if (pinned.size == parsed0.columns.size) parsed0
-      else parsed0.select(pinned: _*)
-    // Declared-type field access: pinned strict variant extraction for
-    // top-level scalars/enums, from_json struct access for nested shapes.
-    def fieldCol(f: TField): Column =
-      if (strictField(f)) col(s"_fx_${f.name}")
-      else rec.getField(f.name)
-    val unions: Map[String, (Column, Column, Column)] = unionFields.map {
-      case (n, ts) =>
-        val vg = col(s"_vg_$n")
-        val tag = col(s"_tag_$n")
-        val presentNonNull = vg.isNotNull &&
-          !coalesce(is_variant_null(vg), lit(false))
-        n -> (unionStruct(vg, tag, ts), tag, presentNonNull)
-    }.toMap
-    val dataCols =
-      declared.fields.map { f =>
-        unions.get(f.name) match {
-          case Some((structCol, _, _)) => structCol.as(f.name)
-          case None if hasNestedPresence(f.t) =>
-            withNestedPresence(pv, rec.getField(f.name), s"$$.${f.name}",
-              f.t).as(f.name)
-          case None => fieldCol(f).as(f.name)
-        }
-      } ++
-        declared.fields.filter(_.absentOptional).map(f =>
-          variant_get(pv, s"$$.${f.name}", "variant").isNotNull
-            .as(s"${f.name}__present"))
-    // type-safe by default: a PRESENT, non-null value that fails its
-    // declared field type (from_json is strict, so the parsed field is
-    // null exactly then) is an invalid record, not a silent null — the
-    // same posture as the msgpack decoder's coerce errors
-    val typeChecks = declared.fields
-      .filterNot(f => unions.contains(f.name)).map { f =>
-        val vg = variant_get(pv, s"$$.${f.name}", "variant")
-        val presentNonNull = vg.isNotNull &&
-          !coalesce(is_variant_null(vg), lit(false))
-        when(presentNonNull && fieldCol(f).isNull,
-          lit(s"type:${f.name}"))
-      }
-    // string-literal enums (ValueType unions) are a CHECK constraint at
-    // ingest (README.md:218): a value outside the declared literals is
-    // an invalid record
-    val enumChecks = declared.fields.flatMap(f => enumLits(f.t).map { lits =>
-      val c = fieldCol(f)
-      when(c.isNotNull && !c.isin(lits: _*), lit(s"bad_enum:${f.name}"))
-    })
-    // sized-int declared ranges are boundary checks too (same posture as
-    // the msgpack decoder): out-of-range values route by mode
-    val rangeChecks = declared.fields.flatMap(f => sizedInt(f.t).map { n =>
-      val c = fieldCol(f)
-      when(c.isNotNull && (c < n.lo || c > n.hi), lit(s"range:${f.name}"))
-    })
-    // a REQUIRED field (neither absent-optional nor T?) must be present
-    // and non-null — the msgpack decoder's missing:<f> posture, extended
-    // with null:<f> for an explicit JSON null
-    val requiredChecks = declared.fields
-      .filterNot(f => f.absentOptional || f.t.isInstanceOf[TOption]).map { f =>
-        val vg = variant_get(pv, s"$$.${f.name}", "variant")
-        when(vg.isNull, lit(s"missing:${f.name}"))
-          .when(coalesce(is_variant_null(vg), lit(false)),
-            lit(s"null:${f.name}"))
-      }
-    val reason = coalesce(
-      (when(pv.isNull, lit("malformed_json:_payload")) +:
-        unionFields.map { case (n, _) =>
-          val (_, tag, presentNonNull) = unions(n)
-          when(presentNonNull && tag.isNull, lit(s"union_no_branch:$n"))
-        }) ++ typeChecks ++ enumChecks ++ rangeChecks ++ requiredChecks: _*)
-    val tagged = parsed.select(
-      (payload +: dataCols) :+ reason.as("_invalid_reason"): _*)
-    val routed = ValidatedIngest.routeTagged(tagged, mode)
-    ValidatedIngest.Validated(routed.good.drop("_payload"),
-      if (routed.bad.columns.isEmpty) routed.bad
-      else routed.bad.select(col("_payload"), col("_invalid_reason")))
-  }
-
-  // ---- per-record decode without a session (the CLI's stdin leg) ----
+  // ---- the decoder ----
+  //
+  // Its rules are those of Spark's JSON functions: a top-level field reads
+  // as a cast of the `try_parse_json` variant reads it, strictly; a nested
+  // value as `from_json` reads it; a union branch's leaves cast as
+  // `try_variant_get` casts them. `src/test/resources/ingest/` holds what a
+  // Catalyst plan of those functions gave for each test payload.
   //
   // A parsed JSON value is a small tree of plain values: JsonNull, Boolean,
   // Long (an integer that fits, what `schema_of_variant` calls BIGINT),
@@ -391,7 +168,11 @@ object JsonRecords {
     case _ => t == TNone
   }
 
-  /** The branch test of `unionTag`, on a variant tree. */
+  /** Does a variant tree fit a union branch? True union ingest
+    * (manual.md:112-115) infers the tag from the JSON value's own type: a
+    * quoted "42" is a Str, never an Int. A sized int takes an integer in
+    * its range and F32 a float32-exact number, as `Msgpack.branchMatches`
+    * decides; the first branch in declared order that fits wins. */
   private def branchMatches(n: Any, bt: UdType): Boolean = (n, bt) match {
     case (_: Long, TInt) => true
     case (x: Long, t: TIntN) => t.contains(x)
@@ -420,8 +201,8 @@ object JsonRecords {
     case _ => false
   }
 
-  /** A parsed leaf under a leaf type as the Spark cell holds it: a Long,
-    * Double, Boolean or String, or null. A Str takes any JSON value as its
+  /** A parsed leaf under a leaf type: a Long, Double, Boolean or String,
+    * or null. A Str takes any JSON value as its
     * compact text. Otherwise `from_json` (not `variant`) takes a value of
     * the type only, a Float any number or the name of NaN or an infinity,
     * and fails the rest; a variant cast casts across the types as
@@ -486,60 +267,32 @@ object JsonRecords {
     }
   }
 
-  /** The cell Spark keeps of a parsed value under t, as `Row.mkString`
-    * prints it: a struct `[a,b]`, an array `ArraySeq(…)`, a map as a Scala
-    * `Map` in the tree's key order, a union as its tagged struct, a float
-    * unrounded. `variant`: the cell is a `try_variant_get` cast (a union
-    * slot), else `from_json`'s. It has the partial results
-    * `LineDecoder.convert` has; `presence` as there. */
-  private def cell(n: Any, t: UdType, presence: Boolean, variant: Boolean): String = {
-    // a struct field keeps partial results: what its type cannot take is null
-    def field(x: Any, ft: UdType, p: Boolean) =
-      try cell(x, ft, p, variant) catch { case Unconvertible => "null" }
-    if (isNull(n)) "null"
-    else (t, n) match {
-      case (TOption(x), _) => cell(n, x, presence, variant)
-      case _ if isLeaf(t) => String.valueOf(leaf(n, t, variant))
-      case (TNone, _) => "null"
-      case (TList(et), xs: Vector[_]) =>
-        xs.map(cell(_, et, false, variant)).mkString("ArraySeq(", ", ", ")")
-      case (TMap(vt), m: java.util.Map[_, _]) =>
-        m.asScala.iterator.map { case (k, x) =>
-          String.valueOf(k) -> cell(x, vt, false, variant) }.toMap.toString
-      case (TRecord(fs, _), m: java.util.Map[_, _]) =>
-        (fs.map(f => field(m.get(f.name), f.t, presence)) ++
-          fs.filter(_.absentOptional).map(f =>
-            if (presence) m.containsKey(f.name).toString else "null"))
-          .mkString("[", ",", "]")
-      case (TPoint, m: java.util.Map[_, _]) =>
-        s"[${field(m.get("x"), TFloat, false)},${field(m.get("y"), TFloat, false)}]"
-      case (TTuple(ts), m: java.util.Map[_, _]) =>
-        ts.indices.map(i => field(m.get(s"_${i + 1}"), ts(i), false)).mkString("[", ",", "]")
-      case (TUnion(ts), m: java.util.Map[_, _]) =>
-        (field(m.get("_tag"), TStr, false) +:
-          ts.indices.map(i => field(m.get(s"v$i"), ts(i), false))).mkString("[", ",", "]")
-      case _ => fail(variant); "null"
-    }
-  }
+  /** The decoder of one declared input: each line becomes the
+    * interpreter's input value (Right) or the reason it is invalid
+    * (Left). A sized int below the top level may lie outside its range:
+    * the value keeps it and `outOfRange` names it, and the record stops
+    * there, as `UdScript.rowToValue` stops it on the row. A decoder reads
+    * one line at a time. */
+  sealed abstract class LineDecoder(val frameType: TRecord)
+      extends (String => Either[String, Value]) {
 
-  /** A record whose value holds a sized int outside its range in a nested
-    * shape or a union branch. `UdScript.rowToValue` stops such a record
-    * as a `throw` does. */
-  final case class OutOfRange(message: String)
-      extends RuntimeException(message, null, false, false)
+    /** A good line's value as a record of `frameType`: the declared
+      * record, or a scalar's one `value` field. */
+    protected def wrap(v: Value): VMap
 
-  /** A stdin decoder with no session: each line becomes the interpreter's
-    * input value (Right), the value `UdScript.rowToValue` makes of the
-    * row the Spark source keeps, or the reason that source gives it
-    * (Left), with the same reasons in the same precedence. A sized int
-    * out of range below the top level throws `OutOfRange`. */
-  sealed abstract class LineDecoder extends (String => Either[String, Value]) {
+    /** A good line's value as the source's row under `schema`: the
+      * columns of `UdScript.inputFrame(frameType)`, then any that stay
+      * null. */
+    def row(v: Value, schema: StructType): Row =
+      UdScript.valueToRow(wrap(v), frameType, schema)
 
-    /** A valid line's cells as the Spark leg prints its input row on a DLQ
-      * line (`Row.mkString("\t")`). The line is parsed again: the value
-      * has dropped what the row keeps (an unrounded F32, a point with one
-      * unreadable coordinate, the JSON order of a map's keys). */
-    def rowText(line: String): String
+    /** The same row's cells as a DLQ line prints them (`Row.mkString`),
+      * built with no Spark type. */
+    def cells(v: Value): String = UdScript.rowCells(wrap(v), frameType).mkString("\t")
+
+    /** After a Right: the line's first out-of-range message, or null. */
+    def outOfRange: String = stopped
+    protected var stopped: String = null
 
     /** The first out-of-range message of the field being read. */
     protected var range: String = null
@@ -553,14 +306,13 @@ object JsonRecords {
       VInt(x)
     }
 
-    /** A parsed value under t, as `anyToValue` reads the cell `cell`
-      * prints. `variant`: the cell is a `try_variant_get` cast (a union
-      * slot: leaves cast as `leaf` says, what does not cast is none); else
-      * it is `from_json`'s (a value the type cannot take throws
-      * Unconvertible: a record keeps its other fields, a list or map fails
-      * whole). With `presence` (the records under a top-level field, as
-      * `withNestedPresence` flags them) a missing absent-optional key is an
-      * omitted field; elsewhere it reads as none. */
+    /** A parsed value under t. `variant`: a `try_variant_get` cast (a
+      * union slot: leaves cast as `leaf` says, what does not cast is
+      * none); else `from_json`'s reading (a value the type cannot take
+      * throws Unconvertible: a record keeps its other fields, a list or
+      * map fails whole). With `presence` (the records under a top-level
+      * field) a missing absent-optional key is an omitted field;
+      * elsewhere it reads as none. */
     protected def convert(n: Any, t: UdType, presence: Boolean, variant: Boolean): Value = {
       // a struct field keeps partial results: what its type cannot take is none
       def field(x: Any, ft: UdType, p: Boolean): Value = {
@@ -606,22 +358,24 @@ object JsonRecords {
   /** The decoder of a declared record, planned once: a field index and a
     * reader per field. Each line is then one token pass over its
     * top-level fields. A scalar or enum field reads its one token,
-    * strictly, as `read` extracts it from the variant; a union field picks
-    * its branch by the JSON type; any other field is `from_json` of its
-    * own subtree. An absent optional field is an omitted key. */
-  def lineDecoder(declared: TRecord): LineDecoder = new LineDecoder {
+    * strictly; a union field picks its branch by the JSON type; any other
+    * field is `from_json` of its own subtree. An absent optional field is
+    * an omitted key. A line's reason is the first failing check, in the
+    * order malformed, `union_no_branch`, `type`, `bad_enum`, `range`,
+    * then `missing`/`null`, and within a check the first declared field. */
+  def lineDecoder(declared: TRecord): LineDecoder = new LineDecoder(declared) {
     private val fs = declared.fields.toArray
     private val n = fs.length
     private val index = new java.util.HashMap[String, Integer]()
     fs.indices.foreach(i => index.put(fs(i).name, i))
     private val unions = fs.map(f => unionBranches(f.t).orNull)
-    private val strict = fs.map(f => unionBranches(f.t).isEmpty && flatExtractable(f.t))
+    private val strict = fs.map(f => readsStrictly(f.t))
     private val enums = fs.map(f => enumLits(f.t).map(_.toSet).orNull)
     private val sized = fs.map(f => sizedInt(f.t).orNull)
     private val required = fs.map(f => !f.absentOptional && !f.t.isInstanceOf[TOption])
     private val absentOk = UdScript.absentOkOf(declared)
 
-    // the checks of `read`, in its precedence; missing and null share one
+    // the checks in their precedence; missing and null share one
     private final val NoBranch = 1
     private final val Type = 2
     private final val Enum = 3
@@ -704,7 +458,10 @@ object JsonRecords {
       ranges(i) = range
     }
 
+    protected def wrap(v: Value): VMap = v.asInstanceOf[VMap]
+
     def apply(line: String): Either[String, Value] = {
+      stopped = null
       java.util.Arrays.fill(nulls, false)
       java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
       java.util.Arrays.fill(fails, 0)
@@ -729,7 +486,7 @@ object JsonRecords {
         }
         if (reason != null) Left(reason)
         else {
-          ranges.find(_ != null).foreach(m => throw OutOfRange(m))
+          stopped = ranges.find(_ != null).orNull
           val b = Vector.newBuilder[(String, Value)]
           i = 0
           while (i < n) {
@@ -741,30 +498,14 @@ object JsonRecords {
         }
       }
     }
-
-    def rowText(line: String): String = {
-      val cells = Array.fill(n)("null")
-      scan(line) { (p, i, t) =>
-        cells(i) =
-          if (t == VALUE_NULL) "null"
-          else if (strict(i)) Values.render(strictValue(p, t, fs(i).t))
-          else if (unions(i) != null) {
-            // the tagged struct of `unionStruct`: the tag and one slot set
-            val node = tree(p, t, variant = true)
-            val b = unions(i).indexWhere(branchMatches(node, _))
-            (UdScript.tagOf(unions(i)(b)) +: unions(i).indices.map(j =>
-              if (j == b) cell(node, unions(i)(b), presence = false, variant = true)
-              else "null")).mkString("[", ",", "]")
-          } else cell(tree(p, t, variant = false), fs(i).t, presence = true, variant = false)
-      }
-      (cells ++ fs.indices.filter(fs(_).absentOptional).map(seen(_).toString))
-        .mkString("\t")
-    }
   }
 
   /** The decoder of a scalar-input script: each line is `from_json` of
-    * `{"value":<line>}`, as `readScalar` reads it. */
-  def scalarDecoder(t: UdType): LineDecoder = new LineDecoder {
+    * `{"value":<line>}`. A line is invalid when it is malformed
+    * (`malformed_json`), holds a null for a non-optional type
+    * (`null:value`), or a value of another type (`type:value`). */
+  def scalarDecoder(t: UdType): LineDecoder =
+      new LineDecoder(TRecord(Seq(TField("value", t, absentOptional = false)))) {
     /** The line's value as a tree, or null when the line is malformed. */
     private def parse(line: String): Any = {
       val p = strictJson.createParser("{\"value\":" + line + "}")
@@ -778,8 +519,11 @@ object JsonRecords {
       } finally p.close()
     }
 
+    protected def wrap(v: Value): VMap = VMap(Vector("value" -> v))()
+
     def apply(line: String): Either[String, Value] = {
       range = null
+      stopped = null
       parse(line) match {
         case null => Left("malformed_json:_payload")
         case JsonNull =>
@@ -788,43 +532,47 @@ object JsonRecords {
           val v = try convert(node, t, presence = false, variant = false)
           catch { case Unconvertible => null }
           if (v == null || isNone(t)) Left("type:value")
-          else if (range != null) throw OutOfRange(range)
-          else Right(v)
+          else { stopped = range; Right(v) }
       }
     }
-
-    def rowText(line: String): String =
-      cell(parse(line), t, presence = false, variant = false)
   }
 
-  /** The tagged frame of a scalar-input script: `value` and the reason
-    * it is invalid (null when valid). */
-  private def scalarSchema(t: UdType): StructType = StructType(Seq(
-    StructField("value", UdScript.sparkType(t)),
-    StructField("_invalid_reason", StringType)))
+  // ---- the Spark source ----
 
-  /** Parse one JSON value per line under a declared scalar type: the
-    * value is `from_json` of `{"value":<line>}`. A line is invalid, and
-    * follows `mode`, when that text is malformed (`malformed_json`),
-    * holds a null for a non-optional type (`null:value`), or a value of
-    * another type (`type:value`). */
+  /** Parse a JSON-lines Dataset under a declared uDLang record type.
+    * Output columns = declared fields (+ `__present` flags for
+    * absent-optional ones); invalid lines follow `mode`, the bad side
+    * keeping `(_payload, _invalid_reason)`. */
+  def read(s: SparkSession, lines: Dataset[String], declared: TRecord,
+           mode: ValidatedIngest.Mode): ValidatedIngest.Validated =
+    ingest(lines, () => lineDecoder(declared), mode)
+
+  /** Parse one JSON value per line under a declared scalar type, into one
+    * `value` column, with `scalarDecoder`'s reasons. */
   def readScalar(s: SparkSession, lines: Dataset[String], t: UdType,
-                 mode: ValidatedIngest.Mode): ValidatedIngest.Validated = {
-    val schema = scalarSchema(t)
-    val wrapped = concat(lit("{\"value\":"), col("_payload"), lit("}"))
-    val parsed = lines.toDF("_payload").select(col("_payload"),
-      graft.plans.Materialized.once(try_parse_json(wrapped)).as("_pv"),
-      from_json(wrapped, StructType(schema.fields.take(1)))
-        .getField("value").as("value"))
-    val vg = variant_get(col("_pv"), "$.value", "variant")
-    val isNullValue = coalesce(is_variant_null(vg), lit(false))
-    val reason = coalesce(
-      when(col("_pv").isNull, lit("malformed_json:_payload")),
-      when(vg.isNull, lit("missing:value")),
-      when(isNullValue && !lit(t.isInstanceOf[TOption]), lit("null:value")),
-      when(!isNullValue && col("value").isNull, lit("type:value")))
-    val routed = ValidatedIngest.routeTagged(parsed.select(col("_payload"),
-      col("value"), reason.as("_invalid_reason")), mode)
+                 mode: ValidatedIngest.Mode): ValidatedIngest.Validated =
+    ingest(lines, () => scalarDecoder(t), mode)
+
+  /** One decode per line, in one `mapPartitions`: a good line becomes its
+    * value's row in the decoder's frame, a bad one its payload and
+    * reason. `ValidatedIngest.routeTagged` then routes them by mode. */
+  private def ingest(lines: Dataset[String], decoder: () => LineDecoder,
+                     mode: ValidatedIngest.Mode): ValidatedIngest.Validated = {
+    val frame = UdScript.inputFrame(decoder().frameType)
+    val tagged = StructType(frame.fields ++ Seq(StructField("_payload", StringType),
+      StructField("_invalid_reason", StringType)))
+    // a bad line keeps no field, and its presence flags read false
+    val none = frame.fields.map[Any](f => if (f.nullable) null else false)
+    val rows = lines.mapPartitions { it =>
+      val decode = decoder()
+      it.map { line =>
+        (if (line == null) Left("malformed_json:_payload") else decode(line)) match {
+          case Right(v) => decode.row(v, tagged)
+          case Left(reason) => new GenericRowWithSchema(none :+ line :+ reason, tagged)
+        }
+      }
+    }(Encoders.row(tagged))
+    val routed = ValidatedIngest.routeTagged(rows.toDF(), mode)
     ValidatedIngest.Validated(routed.good.drop("_payload"),
       if (routed.bad.columns.isEmpty) routed.bad
       else routed.bad.select(col("_payload"), col("_invalid_reason")))

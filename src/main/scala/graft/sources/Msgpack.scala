@@ -238,8 +238,7 @@ object Msgpack extends Serializable {
         else throw MsgpackError(s"bad_enum:$path=$x")
       case (_, TUnion(ts)) if !ts.forall(_.isInstanceOf[TValue]) =>
         val i = ts.indexWhere(branchMatches(v, _))
-        if (i < 0) throw MsgpackError(
-          s"union_no_branch:$path ${v.getClass.getSimpleName}")
+        if (i < 0) throw MsgpackError(s"union_no_branch:$path")
         val st = dt.asInstanceOf[StructType]
         row(UdScript.tagOf(ts(i)) +: ts.zipWithIndex.map {
           case (bt, j) =>
@@ -338,18 +337,12 @@ object Msgpack extends Serializable {
   def decodeOne(bytes: Array[Byte], declared: TRecord): Row =
     decodeFile(bytes, declared).next()
 
-  /** Schema of the decoded frame: declared fields + presence flags +
-    * the (pre-routing) invalid reason. Every declared field is nullable
-    * here: an invalid record's row carries nulls even for required
-    * fields, and a non-null field would fail the row encoder before the
-    * reason could route it. */
-  def decodedSchema(declared: TRecord): StructType = {
-    val base = UdScript.schemaOf(declared)
-    StructType(base.fields.toSeq.map(_.copy(nullable = true)) ++
-      declared.fields.filter(_.absentOptional).map(f =>
-        StructField(s"${f.name}__present", BooleanType, nullable = false)) :+
+  /** Schema of the decoded frame: `UdScript.inputFrame` (declared
+    * fields, all nullable, + presence flags) + the (pre-routing) invalid
+    * reason. */
+  def decodedSchema(declared: TRecord): StructType =
+    StructType(UdScript.inputFrame(declared).fields :+
       StructField("_invalid_reason", StringType, nullable = true))
-  }
 
   /** Read a directory (or file) of msgpack record streams under a declared
     * uDLang record type, with the ValidatedIngest modes. */

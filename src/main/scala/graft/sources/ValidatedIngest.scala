@@ -63,7 +63,7 @@ object ValidatedIngest {
 
   /** Route a frame that already carries `_invalid_reason` (null = valid)
     * by mode — shared by rule-based validation and sources that compute
-    * the reason during decode (Msgpack). */
+    * the reason during decode (JsonRecords, Msgpack). */
   def routeTagged(tagged: DataFrame, mode: Mode): Validated = mode match {
     case Abort =>
       // pinned: a downstream filter (a script's `if`) pushed below the

@@ -221,8 +221,8 @@ class CliDifferentialSpec extends SparkSpec {
   }
 
   test("a thrown record's DLQ line prints its input row's cells on both paths") {
-    // the row keeps a nested F32 unrounded, a point with an unreadable
-    // coordinate and a map's keys in JSON order
+    // the row holds the decoded value: a nested F32 rounded, a point with
+    // an unreadable coordinate none, a map's keys sorted
     val runs = agree(script("""script "cells";
       |input  {id: Int, r: {g: F32, gs: [F32]}, p: Point?, m: Map[Int]?};
       |output {id: Int};
@@ -232,7 +232,8 @@ class CliDifferentialSpec extends SparkSpec {
       """{"id": -1, "r": {"g": 0.1, "gs": [0.1, 2]}, "p": {"x": "1", "y": 2}, "m": {"b": 1, "a": 2}}"""))
     assert(runs("dlq").out == Seq("""{"id":1}"""))
     assert(runs("dlq").err ==
-      Seq("-1\t[0.1,ArraySeq(0.1, 2.0)]\t[null,2.0]\tMap(b -> 1, a -> 2)\tnegative id"))
+      Seq("-1\t[0.10000000149011612,ArraySeq(0.10000000149011612, 2.0)]\tnull\t" +
+        "Map(a -> 2, b -> 1)\tnegative id"))
   }
 
   /** `src` compiles to `tier` and agrees on both paths over `input`. */
@@ -556,14 +557,58 @@ class CliDifferentialSpec extends SparkSpec {
     val json = agreeIn("KernelTier", src, input: _*)
     val msgpack = agree(script(src), lifted(lines(input: _*)), List("--format", "msgpack"))
     for (runs <- Seq(json, msgpack)) {
-      // msgpack's reason names the wire type after the field
-      assert(runs("dlq").err.map(_.split("\t").last.takeWhile(_ != ' ')).sorted ==
+      assert(runs("dlq").err.map(_.split("\t").last).sorted ==
         Seq("seen", "seen", "union_no_branch:v"))
       assert(runs("abort").code == 1 &&
-        runs("abort").err.head.startsWith("runtime error: union_no_branch:v"))
+        runs("abort").err == Seq("runtime error: union_no_branch:v"))
     }
     assert(json("dlq").err.take(2) == Seq("2\t[U8,5,null,null]\t[F32,0.5,null]\tseen",
       "3\t[val:none,null,none,null]\t[Float,null,0.1]\tseen"))
+  }
+
+  test("an F32 | Float field passes through with the branch ingest gave it") {
+    // 0.5 is float32-exact and takes F32; 0.1 is not and stays a Float,
+    // on the column tier (the ingest struct) as on the kernel tier
+    // (re-encoded from the value)
+    val input = Seq("""{"id": 1, "z": 0.1}""", """{"id": 2, "z": 0.5}""")
+    val column = agreeIn("ColumnTier", """script "passthrough";
+      |input  {id: Int, z: F32 | Float};
+      |output {id: Int, z: F32 | Float};
+      |out {id: in.id, z: in.z};""".stripMargin, input: _*)
+    val kernel = agreeIn("KernelTier", """script "passthrough kernel";
+      |input  {id: Int, z: F32 | Float};
+      |output {id: Int, z: F32 | Float};
+      |for x in [in.z] { out {id: in.id, z: x}; }""".stripMargin, input: _*)
+    for (runs <- Seq(column, kernel); mode <- modes)
+      assert(runs(mode).out == Seq("""{"id":1,"z":{"_tag":"Float","v1":0.1}}""",
+        """{"id":2,"z":{"_tag":"F32","v0":0.5}}"""), mode)
+  }
+
+  test("u_union_ingest's script agrees on both paths over Int | Str records") {
+    import graft.queries.UdLang
+    // even ids carry an Int, odd ids a Str, as u_union_ingest builds them
+    val runs = agree(script(UdLang.unionScriptSrc), lines(
+      """{"event_id": 2, "v": 23}""", """{"event_id": 3, "v": "click"}""",
+      """{"event_id": 4, "v": -7}""", """{"event_id": 5, "v": "42"}""",
+      """{"event_id": 6, "v": true}""", """{"event_id": 7}"""))
+    assert(runs("dlq").out == Seq(
+      """{"event_id":2,"shown":"int","doubled":46}""",
+      """{"event_id":3,"shown":"click","doubled":0}""",
+      """{"event_id":4,"shown":"int","doubled":-14}""",
+      """{"event_id":5,"shown":"42","doubled":0}"""))
+    assert(runs("dlq").err.map(_.split("\t").last) == Seq("union_no_branch:v", "missing:v"))
+  }
+
+  test("a nested U8 out of range stops a kernel-tier record on both paths") {
+    // ingest keeps 300 in the row; the kernel tier's decode stops the record
+    val runs = agreeIn("KernelTier", """script "nested range";
+      |input  {id: Int, r: {a: U8}};
+      |output {id: Int, a: Int};
+      |for x in [in.r.a] { out {id: in.id, a: x}; }""".stripMargin,
+      """{"id": 1, "r": {"a": 5}}""", """{"id": 2, "r": {"a": 300}}""")
+    assert(runs("dlq").out == Seq("""{"id":1,"a":5}"""))
+    assert(runs("dlq").err == Seq("2\t[300]\trange: 300 not a U8"))
+    assert(runs("abort").err == Seq("runtime error: range: 300 not a U8"))
   }
 
   test("the oracle entries' uDLang scripts agree on both paths") {

@@ -87,21 +87,29 @@ class PlanSpec extends SparkSpec {
       s"assignment shuffles: $p")
   }
 
-  test("union ingest parses the payload once into a variant") {
+  test("JSON ingest decodes each line once per consumed leg, no variant plan") {
     import graft.lang.Ast._
+    import graft.sources.{JsonRecords, ValidatedIngest}
     val declared = TRecord(Seq(
       TField("id", TInt, absentOptional = false),
       TField("v", TUnion(Seq(TInt, TStr)), absentOptional = false)))
-    import spark.implicits._
-    val lines = spark.createDataset(Seq("""{"id": 1, "v": 42}"""))
-    val good = graft.sources.JsonRecords
-      .read(spark, lines, declared, graft.sources.ValidatedIngest.Skip).good
-    val p = planOf(good)
-    // every branch probe must read the SAME parse_json subexpression —
-    // the plan may name it several times but whole-stage codegen CSEs
-    // identical deterministic children; assert no per-branch from_json
-    val fromJsonCount = "from_json".r.findAllIn(p).size
-    assert(fromJsonCount <= 1, s"per-branch from_json probes leaked: $p")
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_ingest").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
+      "{\"id\": 1, \"v\": 42}\n{\"id\": 2, \"v\": true}\n".getBytes("UTF-8"))
+    val lines = spark.read.textFile(dir.getPath)
+    val legs = Seq(ValidatedIngest.Abort, ValidatedIngest.Skip, ValidatedIngest.Dlq).flatMap { mode =>
+      val v = JsonRecords.read(spark, lines, declared, mode)
+      v.good +: (if (mode == ValidatedIngest.Dlq) Seq(v.bad) else Nil)
+    }
+    for (leg <- legs) {
+      val p = planOf(leg)
+      assert(Seq("from_json", "parse_json", "variant_get").forall(!p.contains(_)),
+        s"Catalyst JSON functions in: $p")
+      // one decoder pass over one scan of the text
+      assert("MapPartitions".r.findAllIn(p).size == 1, s"decodes per leg: $p")
+      assert("FileScan text".r.findAllIn(p).size == 1, s"scans per leg: $p")
+    }
+    assert(legs.last.collect().map(_.getString(1)).toSeq == Seq("union_no_branch:v"))
   }
 
   test("sequence chunking is a pure fan-out (no shuffle before the sort)") {
