@@ -543,6 +543,44 @@ class CliDifferentialSpec extends SparkSpec {
     assert(runs("dlq").err.size == 1 && runs("dlq").err.head.contains("type:id"))
   }
 
+  test("msgpack DLQ lines print the decoded fields and the reason, on both paths") {
+    val src = script("""script "msgpack dlq";
+      |input  {id: Int, r: {a: Int, b?: Str}, xs: [Int], m: Map<Int>};
+      |output {id: Int, a: Int};
+      |if (in.id < 0) { throw "negative id"; }
+      |out {id: in.id, a: in.r.a};""".stripMargin)
+    val o = new ByteArrayOutputStream()
+    def rec(id: Long, r: Any, xs: Any, m: Any): Unit =
+      Msgpack.writeMap(o, Seq("id" -> id, "r" -> r, "xs" -> xs, "m" -> m))
+    def map(kvs: (String, Any)*) = scala.collection.immutable.ListMap(kvs: _*)
+    rec(1, map("a" -> 1L, "b" -> "x"), Seq(1L, 2L), map("k" -> 1L))
+    rec(2, map("a" -> 2L), Seq.empty, map("k" -> 2L))
+    rec(3, map("a" -> 3L), "no list", map("k" -> 3L))        // type mismatch
+    Msgpack.writeMap(o, Seq("id" -> 4L, "r" -> map("a" -> 4L),
+      "xs" -> Seq(4L)))                                      // missing m
+    rec(5, null, Seq(5L), map("k" -> 5L))                    // explicit nil
+    val notRecord = o.size
+    Msgpack.writeValue(o, "oops")                             // not a map
+    rec(-1, map("a" -> 6L, "b" -> "y"), Seq(6L), map("k" -> 6L)) // throws
+    val tail = o.size
+    val whole = new ByteArrayOutputStream()
+    Msgpack.writeMap(whole, Seq("id" -> 7L, "xs" -> Seq(7L)))
+    o.write(whole.toByteArray, 0, whole.size - 2)            // truncated
+    val runs = agree(src, o.toByteArray, List("--format", "msgpack"))
+    assert(decodeAll(runs("dlq").bytes).map(render).sorted ==
+      Seq("""{"id":1,"a":1}""", """{"id":2,"a":2}"""))
+    assert(runs("dlq").err == Seq(
+      "-1\t[6,y,true]\tArraySeq(6)\tMap(k -> 6)\tnegative id",
+      "3\t[3,null,false]\tnull\tMap(k -> 3)\ttype:xs expected array<bigint> got String",
+      "4\t[4,null,false]\tArraySeq(4)\tnull\tmissing:m",
+      "5\tnull\tArraySeq(5)\tMap(k -> 5)\tnull:r",
+      s"null\tnull\tnull\tnull\tmalformed@$tail:null",
+      s"null\tnull\tnull\tnull\tnot_a_record@$notRecord").sorted)
+    assert(runs("skip").err == Seq("runtime error: negative id"))
+    assert(runs("abort").err ==
+      Seq("runtime error: type:xs expected array<bigint> got String"))
+  }
+
   test("a union picks its sized-int and F32 branches as msgpack does, on both paths") {
     // 300 is no U8: an ingest reason on JSON as on msgpack; 0.5 is
     // float32-exact and takes F32, 0.1 is not and takes Float. The thrown
