@@ -1,7 +1,8 @@
 package graft
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":...,"queries":{...}}. Times are end-to-end
+  * prints one JSON line of totals {"metric":"total","value":...}; the
+  * per-entry times go to bench_out.json. Times are end-to-end
   * per query (plan + execute to count), after one warm-up of the flagship
   * query to amortize JVM/codegen startup out of the per-query numbers. */
 object Bench {
@@ -169,19 +170,15 @@ object Bench {
     val total = scale.map(_._2).sum
     val baseTotal = baseline.map(_._2).sum
     val baseNames = baseline.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    // The PRINTED line is compact (no evidence map): with the inline
-    // evidence the line grew to ~62 KB and the driver's stdout capture
-    // (a short tail) has never been able to parse it since round 12 —
-    // every BENCH_r12..r16.json carries `parsed: null` and PERF loses
-    // its per-query and scaling blocks. Metric/value/queries/baseline
-    // keep the exact same keys and semantics; the per-entry evidence
-    // map moves to bench_evidence.json, and bench_out.json keeps the
-    // full-fidelity line for the judge.
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"baseline_only":$baseNames,"baseline_sec":$baseTotal%.3f,"sf":"$sfDir"}"""
-    val fullLine = line.dropRight(1) + s""","evidence":$ev}"""
+    // The PRINTED line carries totals only (~200 bytes: `n` counts the
+    // entries summed into `value`), so a 2,000-byte tail of stdout holds
+    // it whole. bench_out.json adds the per-entry `queries` times, the
+    // baseline names and the evidence map; bench_evidence.json holds the
+    // evidence alone.
+    val totals = f""""metric":"total","value":$total%.3f,"unit":"sec","n":${scale.size},"baseline_sec":$baseTotal%.3f,"sf":"$sfDir","cpus":$cpus"""
+    val line = s"{$totals}"
+    val fullLine = s"""{$totals,"queries":$qs,"baseline_only":$baseNames,"evidence":$ev}"""
     println(line)
-    // Round-4's captured stdout was truncated mid-JSON; persist the full
-    // line so the driver (and the judge) can always read it whole.
     try {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_out.json"), fullLine + "\n")

@@ -12,9 +12,7 @@ import graft.lang.{Interp, UdParser, UdScript}
 import graft.lang.Values.Value
 import graft.sources.{JsonRecords, LineBuffer, Msgpack, ValidatedIngest}
 import org.apache.spark.{SparkException, SparkThrowable}
-import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Encoders, Row, SparkSession}
 
 /** The command-line driver — the reference's front door
   * (reference src/main.rs:51-62: `--dump-expr`, `--dump-ast path`,
@@ -29,9 +27,10 @@ import org.apache.spark.sql.types._
   * Spark sources), and the outputs are written under the declared output
   * type in the bytes `to_json` gives, with no Spark row or schema built.
   * They stream in constant memory. msgpack stdin is read whole, then
-  * decoded one record at a time into rows. `--in`/`--out` paths are the
-  * parallel file legs a cluster job uses: they plan the script on Spark,
-  * and `--cores` applies to them only.
+  * decoded one record at a time into the same input values, and runs the
+  * same loop; its outputs are written in the msgpack sink's bytes.
+  * `--in`/`--out` paths are the parallel file legs a cluster job uses:
+  * they plan the script on Spark, and `--cores` applies to them only.
   *
   * Usage:
   *   graft.Main --dump-expr                     REPL: parse one expression per line
@@ -196,6 +195,7 @@ object Main {
       case "ignore" => ()
       case "warn"   => err.println(s"warning: dropped record: $reason")
     }
+    val decoder = declared.map(new Msgpack.Decoder(_))
     val o = new java.io.BufferedOutputStream(out, 1 << 16)
     // the run path's parser: a malformed payload or an integer outside
     // i64 is an invalid record, routed like a --schema mismatch
@@ -208,12 +208,9 @@ object Main {
             val buf = new ByteArrayOutputStream()
             Msgpack.writeValue(buf, v)
             val bytes = buf.toByteArray
-            // --schema: decode-validate through the SAME typed path the
+            // --schema: decode-validate through the SAME decoder the
             // engine's msgpack source uses
-            val reason = declared.flatMap { rec =>
-              val row = Msgpack.decodeOne(bytes, rec)
-              Option(row.getString(row.length - 1))
-            }
+            val reason = decoder.flatMap(_.records(bytes).next().left.toOption.map(_._1))
             reason.fold(o.write(bytes))(drop)
         }
       }
@@ -271,108 +268,93 @@ object Main {
     }
   }
 
-  /** Route an invalid record by mode: abort stops the run, skip drops
-    * it, dlq prints its DLQ line. */
-  private def invalid(opts: Opts, dlq: LineBuffer, reason: String,
-                      dlqLine: => String): Unit = opts.mode match {
-    case "abort" => throw RunError(reason)
-    case "skip"  => ()
-    case _       => dlq += dlqLine
-  }
-
-  /** The good msgpack records on stdin as rows of the input frame (the
-    * declared fields and `__present` flags); invalid ones follow `mode`,
-    * a DLQ line being the whole decoded row. */
-  private def msgpackRows(c: UdScript.Compiled, opts: Opts, in: InputStream,
-                          dlq: LineBuffer): (StructType, Iterator[Row]) =
-    c.script.input match {
-      case rec: TRecord =>
-        val schema = UdScript.inputFrame(rec)
-        (schema, Msgpack.decodeFile(in.readAllBytes(), rec).flatMap { r =>
-          r.getString(r.length - 1) match {
-            case null =>
-              Some(new GenericRowWithSchema(r.toSeq.init.toArray, schema))
-            case reason => invalid(opts, dlq, reason, r.mkString("\t")); None
-          }
-        })
-      case _ =>
-        throw CliError("scalar input requires --format json (one JSON value per line)")
-    }
-
   /** Does the script emit bare wire values rather than records? */
   private def scalarOut(c: UdScript.Compiled): Boolean =
     !c.script.output.isInstanceOf[TRecord] && !c.script.output.isInstanceOf[TTuple]
 
-  /** stdin → stdout in this thread, with no session. A record's outputs
-    * are written once it has run to the end. In dlq mode a `throw` sends
-    * the input row's cells and its message to stderr, as `runEither`
-    * does. */
+  /** stdin → stdout in this thread, with no session. In dlq mode a
+    * `throw` sends the input row's cells and its message to stderr, as
+    * `runEither` does. */
   private def runLocal(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream): Unit = {
     val dlq = new LineBuffer(err)
     try {
-      if (opts.format == "msgpack") runMsgpack(c, opts, in, out, dlq)
-      else runJson(c, opts, in, out, dlq)
+      if (opts.format == "msgpack") msgpackPipe(c, opts, in, out, dlq)
+      else jsonPipe(c, opts, in, out, dlq)
     } finally dlq.flush()
   }
 
-  /** JSON lines on values: decode each line straight into the
-    * interpreter's input, run `Interp`, and write the outputs under the
-    * declared output type — no Spark row or schema on the way. */
-  private def runJson(c: UdScript.Compiled, opts: Opts, in: InputStream,
-                      out: PrintStream, dlq: LineBuffer): Unit = {
+  /** JSON lines, decoded one line at a time; the outputs are written
+    * under the declared output type, with no Spark row or schema. */
+  private def jsonPipe(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                       out: PrintStream, dlq: LineBuffer): Unit = {
     val decode = c.script.input match {
       case rec: TRecord => JsonRecords.lineDecoder(rec)
       case scalar       => JsonRecords.scalarDecoder(scalar)
     }
-    val interp = new Interp(c.script, c.libs)
-    interp.initEnv
     val lines = new JsonRecords.JsonLines(new LineBuffer(out), c.script.output)
-    val outputs = scala.collection.mutable.ArrayBuffer.empty[Value]
-    // a thrown record's DLQ line prints the row the Spark source keeps of it
-    def thrown(v: Value, message: String): Unit =
-      if (opts.mode == "dlq") dlq += decode.cells(v) + "\t" + message
-      else throw RunError(message)
     val reader = new java.io.BufferedReader(
       new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-    try {
-      var line = reader.readLine()
-      while (line != null) {
-        decode(line) match {
-          case Left(reason) => invalid(opts, dlq, reason, line + "\t" + reason)
-          case Right(v) if decode.outOfRange != null => thrown(v, decode.outOfRange)
-          case Right(v) =>
-            outputs.clear()
-            try { interp.run(v, outputs += _); lines.write(outputs) }
-            catch { case e: UdException => thrown(v, e.message) }
-        }
-        line = reader.readLine()
-      }
-    } finally lines.flush()
+    val records = Iterator.continually(reader.readLine()).takeWhile(_ != null)
+      .map(line => decode(line) match {
+        case Left(reason) => Left((reason, line + "\t" + reason))
+        case Right(v) => Right(v)
+      })
+    try pipe(c, opts, dlq, records, decode.cells, () => decode.outOfRange, lines.write)
+    finally lines.flush()
   }
 
-  /** msgpack records through the kernel tier's per-record function. */
-  private def runMsgpack(c: UdScript.Compiled, opts: Opts, in: InputStream,
-                         out: PrintStream, dlq: LineBuffer): Unit = {
-    val kernel = UdScript.kernel(c.script, c.libs)
+  /** msgpack records, decoded one at a time from the whole of stdin; each
+    * output is written as the msgpack sink writes its row. */
+  private def msgpackPipe(c: UdScript.Compiled, opts: Opts, in: InputStream,
+                          out: PrintStream, dlq: LineBuffer): Unit = {
+    val decoder = c.script.input match {
+      case rec: TRecord => new Msgpack.Decoder(rec)
+      case _ =>
+        throw CliError("scalar input requires --format json (one JSON value per line)")
+    }
+    val records = decoder.records(in.readAllBytes()).map(_.left.map {
+      case (reason, v) => (reason, decoder.cells(v) + "\t" + reason)
+    })
     val bytes = new java.io.BufferedOutputStream(out, 1 << 16)
-    val emit: Row => Unit =
-      if (scalarOut(c)) r => Msgpack.writeValue(bytes, r.get(0))
-      else {
-        val names = c.outputSchema.fieldNames.toSeq
-        r => Msgpack.writeRows(bytes, names, Iterator(r))
-      }
-    try {
-      val (_, rows) = msgpackRows(c, opts, in, dlq)
-      rows.foreach { r =>
-        try kernel(r).foreach(emit)
-        catch {
-          case e: UdException if opts.mode == "dlq" =>
-            dlq += (r.toSeq :+ e.message).mkString("\t")
-          case e: UdException => throw RunError(e.message)
-        }
-      }
-    } finally bytes.flush()
+    // a record's outputs are encoded whole before any is written
+    val write: Iterable[Value] => Unit = vs => writeMsgpack(c, bytes,
+      vs.map(UdScript.valueToRow(_, c.script.output, c.outputSchema)).toList.iterator)
+    try pipe(c, opts, dlq, records, decoder.cells, () => null, write)
+    finally bytes.flush()
+  }
+
+  /** Output rows as the msgpack sink writes them: a record as a map, a
+    * scalar output as its bare value. */
+  private def writeMsgpack(c: UdScript.Compiled, o: java.io.OutputStream,
+                           rows: Iterator[Row]): Unit =
+    if (scalarOut(c)) rows.foreach(r => Msgpack.writeValue(o, r.get(0)))
+    else Msgpack.writeRows(o, c.outputSchema.fieldNames.toSeq, rows)
+
+  /** The pipe's loop over decoded records: a record is its input value, or
+    * its invalid reason and DLQ line, which abort stops the run on, skip
+    * drops and dlq prints. `cells` are a thrown record's DLQ cells;
+    * `stopped`, after a value, is why the record stops before it runs (a
+    * nested sized int out of range), or null. */
+  private def pipe(c: UdScript.Compiled, opts: Opts, dlq: LineBuffer,
+                   records: Iterator[Either[(String, String), Value]],
+                   cells: Value => String, stopped: () => String,
+                   write: Iterable[Value] => Unit): Unit = {
+    val interp = new Interp(c.script, c.libs)
+    interp.initEnv
+    val outputs = scala.collection.mutable.ArrayBuffer.empty[Value]
+    def thrown(v: Value, message: String): Unit =
+      if (opts.mode == "dlq") dlq += cells(v) + "\t" + message
+      else throw RunError(message)
+    records.foreach {
+      case Left((reason, _)) if opts.mode == "abort" => throw RunError(reason)
+      case Left((_, line)) => if (opts.mode == "dlq") dlq += line
+      case Right(v) if stopped() != null => thrown(v, stopped())
+      case Right(v) =>
+        outputs.clear()
+        try { interp.run(v, outputs += _); write(outputs) }
+        catch { case e: UdException => thrown(v, e.message) }
+    }
   }
 
   /** The message a Spark run failed on: a `raise_error` of an invalid
@@ -386,9 +368,8 @@ object Main {
     }
 
   /** The `--in`/`--out` legs: the script planned on Spark. With `--out`
-    * alone, JSON stdin is read as an `--in FILE` is, through the Spark
-    * sources; msgpack stdin is decoded in this thread and handed to
-    * `createDataFrame`. */
+    * alone, stdin is read as an `--in FILE` is, through the Spark
+    * sources. */
   private def runSpark(c: UdScript.Compiled, opts: Opts, in: InputStream,
                        out: PrintStream, err: PrintStream,
                        session: Option[SparkSession]): Unit = {
@@ -399,18 +380,24 @@ object Main {
       case "dlq"   => ValidatedIngest.Dlq
     }
     try {
-      val validated = opts.inPath match {
-        case Some(p) => readPath(s, c, opts, p, mode)
-        case None if opts.format == "msgpack" =>
-          val dlq = new LineBuffer(err)
-          val (schema, rows) = msgpackRows(c, opts, in, dlq)
-          val good = try rows.toList finally dlq.flush()
-          ValidatedIngest.Validated(
-            s.createDataFrame(good.asJava, schema), s.emptyDataFrame)
-        case None =>
-          val lines = new java.io.BufferedReader(new java.io.InputStreamReader(
-            in, StandardCharsets.UTF_8)).lines().iterator().asScala.toList
-          readJson(s, c, s.createDataset(lines)(Encoders.STRING), mode)
+      val validated = (c.script.input, opts.format) match {
+        case (rec: TRecord, "msgpack") => opts.inPath match {
+          case Some(p) => Msgpack.read(s, p, rec, mode)
+          case None => Msgpack.ingest(
+            s.createDataset(Seq(in.readAllBytes()))(Encoders.BINARY), rec, mode)
+        }
+        case (_, "msgpack") =>
+          throw CliError("scalar input requires --format json (one JSON value per line)")
+        case (input, _) =>
+          val lines = opts.inPath.fold {
+            val stdin = new java.io.BufferedReader(new java.io.InputStreamReader(
+              in, StandardCharsets.UTF_8)).lines().iterator().asScala.toList
+            s.createDataset(stdin)(Encoders.STRING)
+          }(p => s.read.textFile(p))
+          input match {
+            case rec: TRecord => JsonRecords.read(s, lines, rec, mode)
+            case scalar       => JsonRecords.readScalar(s, lines, scalar, mode)
+          }
       }
       val dlq = new LineBuffer(err)
       val text = new LineBuffer(out)
@@ -434,8 +421,7 @@ object Main {
           JsonRecords.toJsonLines(result).write.mode("overwrite").text(p)
         case None if opts.format == "msgpack" =>
           val buffered = new java.io.BufferedOutputStream(out, 1 << 16)
-          if (scalarOut(c)) rows().foreach(r => Msgpack.writeValue(buffered, r.get(0)))
-          else Msgpack.writeRows(buffered, result.schema.fieldNames.toSeq, rows())
+          writeMsgpack(c, buffered, rows())
           buffered.flush()
         case None if scalarOut(c) =>
           val dt = c.outputSchema.fields(0).dataType
@@ -449,28 +435,6 @@ object Main {
         throw RunError(recordFailure(e).get)
     }
   }
-
-  /** Input leg from a file or directory: declared-type-driven decode in
-    * either framing. Record inputs go through the validating sources
-    * (presence flags, modes); scalar inputs are JSON values one per line.
-    */
-  private def readPath(s: SparkSession, c: UdScript.Compiled, opts: Opts,
-                       path: String, mode: ValidatedIngest.Mode)
-      : ValidatedIngest.Validated =
-    (c.script.input, opts.format) match {
-      case (rec: TRecord, "msgpack") => Msgpack.read(s, path, rec, mode)
-      case (_, "msgpack") =>
-        throw CliError("scalar input requires --format json (one JSON value per line)")
-      case _ => readJson(s, c, s.read.textFile(path), mode)
-    }
-
-  private def readJson(s: SparkSession, c: UdScript.Compiled,
-                       lines: Dataset[String], mode: ValidatedIngest.Mode)
-      : ValidatedIngest.Validated =
-    c.script.input match {
-      case rec: TRecord => JsonRecords.read(s, lines, rec, mode)
-      case scalar       => JsonRecords.readScalar(s, lines, scalar, mode)
-    }
 
   // ---- helpers ----
 

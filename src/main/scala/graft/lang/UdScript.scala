@@ -256,7 +256,7 @@ object UdScript {
     })
     // NESTED records carry their absent-optional presence flags INSIDE
     // the struct (top-level records keep them as external sibling
-    // columns, appended by the sources/decodedSchema) — `rec.addr.zip?`
+    // columns, appended by `inputFrame`) — `rec.addr.zip?`
     // then reads a real column in both tiers instead of conflating
     // absent with null. Nested fields are all nullable: from_json yields
     // nullable struct fields, and a cast of such a struct to one with a
@@ -426,9 +426,9 @@ object UdScript {
     case (x, _) => VStr(String.valueOf(x))
   }
 
-  /** The kernel tier's per-record function, for `runKernel`,
-    * `runKernelEither` and the CLI's msgpack pipe: decode, `Interp`,
-    * `valueToRow`. A `throw` surfaces as UdException. */
+  /** The kernel tier's per-record function, for `runKernel` and
+    * `runKernelEither`: decode the row, `Interp`, `valueToRow`. A `throw`
+    * surfaces as UdException. */
   def kernel(script: Script, libs: Map[String, Value]): Row => Vector[Row] = {
     val interp = new Interp(script, libs)
     interp.initEnv
@@ -812,7 +812,30 @@ private[lang] object Lowering {
     }
 
     script.body.nonEmpty && script.body.forall(stmtOk) &&
-      countOuts(script.body) >= 1
+      countOuts(script.body) >= 1 && !uncheckedSizedInt(script.input)
+  }
+
+  /** Does the declared input hold a sized int that JSON ingest does not
+    * range-check? It checks a top-level field (and a top-level union's
+    * branch pick); a nested or scalar-input sized int is kept, and named
+    * in `LineDecoder.outOfRange`. The kernel tier's decode (`anyToValue`)
+    * checks every depth, so such a script stays on the kernel tier and a
+    * record out of range stops on every leg. */
+  private def uncheckedSizedInt(input: UdType): Boolean = {
+    def holds(t: UdType, top: Boolean): Boolean = t match {
+      case _: TIntN       => !top
+      case TOption(x)     => holds(x, top)
+      case TUnion(ts)     => ts.exists(holds(_, top))
+      case TList(x)       => holds(x, top = false)
+      case TMap(x)        => holds(x, top = false)
+      case TTuple(ts)     => ts.exists(holds(_, top = false))
+      case TRecord(fs, _) => fs.exists(f => holds(f.t, top = false))
+      case _              => false
+    }
+    input match {
+      case TRecord(fs, _) => fs.exists(f => holds(f.t, top = true))
+      case scalar         => holds(scalar, top = false)
+    }
   }
 
   /** Recognize the tail-recursive counted emit loop (count.us shape):
@@ -835,7 +858,7 @@ private[lang] object Lowering {
       case _ => None
     }
     script.body match {
-      case Seq(only) =>
+      case Seq(only) if !uncheckedSizedInt(script.input) =>
         for {
           (pname, initArgs) <- callOf(only)
           p <- procs.get(pname)
@@ -937,12 +960,6 @@ private[lang] object Lowering {
       case LitNone     => lit(null)
       case In => script.input match {
         case TRecord(_, _) => struct(df.columns.map(df(_)).toSeq: _*)
-        case n: TIntN => // scalar sized-int input: same range guard
-          val c = df(df.columns.head)
-          when(c.isNull || (c >= n.lo && c <= n.hi), c)
-            .otherwise(raise_error(concat(
-              lit("range: "), c.cast("string"),
-              lit(s" not a ${if (n.signed) "I" else "U"}${n.bits}"))))
         case t if typeHasF32(t) =>
           // declared F32 slots round on read (kernel twin: anyToValue)
           // so both tiers see the same float32 values at any depth

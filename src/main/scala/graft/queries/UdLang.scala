@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.lang.UdScript
 import graft.lang.Ast.{TField, TFloat, TInt, TRecord, TStr}
-import graft.sources.Msgpack
+import graft.sources.{Msgpack, ValidatedIngest}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -444,11 +444,12 @@ object UdLang extends Serializable {
     * driver-checked entry: a live localhost socket serves one
     * base64-encoded msgpack record map per line (binary frames need a
     * text-safe channel through Spark's line-based socket source), the
-    * stream decodes each frame through Msgpack.decodeOne under the
-    * DECLARED record type, and the same compiled filter script runs over
-    * the decoded frames. Socket sources have no end-of-stream marker, so
-    * completion is detected by sink row count reaching the batch-computed
-    * expectation — the oracle then checks the VALUES, not just arrival.
+    * stream decodes each frame through `Msgpack.ingest` under the
+    * DECLARED record type (skipping an invalid frame), and the same
+    * compiled filter script runs over the decoded frames. Socket sources
+    * have no end-of-stream marker, so completion is detected by sink row
+    * count reaching the batch-computed expectation — the oracle then
+    * checks the VALUES, not just arrival.
     *
     * Scale: a socket is one serialized stream by nature; the parallel
     * form of this ingest is the msgpack file source (one task per file).
@@ -493,12 +494,9 @@ object UdLang extends Serializable {
       .option("host", "127.0.0.1")
       .option("port", server.getLocalPort.toString)
       .load()
-    val enc = Encoders.row(Msgpack.decodedSchema(declared))
-    val decoded = lines.select(col("value")).as[String].map { line =>
-      Msgpack.decodeOne(java.util.Base64.getDecoder.decode(line), declared)
-    }(enc)
-    val good = decoded.where(col("_invalid_reason").isNull)
-      .drop("_invalid_reason")
+    val bytes = lines.select(col("value")).as[String]
+      .map(line => java.util.Base64.getDecoder.decode(line))(Encoders.BINARY)
+    val good = Msgpack.ingest(bytes, declared, ValidatedIngest.Skip).good
     val c = UdScript.compile(streamFilterSrc)
     require(c.tier == UdScript.ColumnTier)
     s.catalog.dropTempView("u_stream_pipe_sink")

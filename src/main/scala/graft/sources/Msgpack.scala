@@ -3,13 +3,11 @@ package graft.sources
 import java.io.OutputStream
 import java.nio.ByteBuffer
 
-import scala.collection.immutable.ArraySeq
-
 import graft.lang.Ast._
 import graft.lang.UdScript
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import graft.lang.Values._
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** msgpack wire format — the reference's native framing ("The input is a
@@ -32,9 +30,16 @@ import org.apache.spark.sql.types._
   *  - All file IO uses the Hadoop FileSystem API resolved from the path
   *    URI, so any scheme works (file:, hdfs:, s3a:), not just local disk.
   *
-  * Absent vs null follows JsonRecords: for every absent-optional declared
-  * field a `<name>__present` column records whether the KEY existed in the
-  * record map — a nil value is present-but-null, a missing key is absent.
+  * One decoder reads every msgpack record: `Decoder` turns each record
+  * map straight into the interpreter's input value, or into the reason it
+  * is invalid with the fields it did decode. The CLI's stdin pipe runs it
+  * record by record with no session; `read`/`ingest` run it in one
+  * `mapPartitions` and encode each value with `UdScript.valueToRow` into
+  * the source's frame, as `JsonRecords` does for JSON lines.
+  *
+  * Absent vs null follows JsonRecords: an absent-optional field whose KEY
+  * is missing from the record map is omitted from the value, and its
+  * `<name>__present` column reads false — a nil value is present-but-null.
   */
 object Msgpack extends Serializable {
 
@@ -169,35 +174,7 @@ object Msgpack extends Serializable {
     }
   }
 
-  // ---- msgpack value → declared Spark type ----
-  // Decoded values take the shape of a collected Spark row: structs carry
-  // their schema (`rowToValue` and the writer look fields up by name) and
-  // arrays are ArraySeqs.
-
-  private def row(cells: Seq[Any], st: StructType): Row =
-    new GenericRowWithSchema(cells.toArray, st)
-
-  private def coerce(v: Any, dt: DataType, path: String): Any = (v, dt) match {
-    case (null, _)                 => null
-    case (x: Long, LongType)       => x
-    case (x: Long, DoubleType)     => x.toDouble
-    case (x: Double, DoubleType)   => x
-    case (x: Boolean, BooleanType) => x
-    case (x: String, StringType)   => x
-    case (x: Array[Byte], BinaryType) => x
-    case (xs: Vector[_], ArrayType(et, _)) if !xs.headOption.exists(_.isInstanceOf[(_, _)]) =>
-      ArraySeq.from(xs.map(coerce(_, et, path)))
-    case (es: Vector[_], st: StructType) =>
-      val entries = es.collect { case (k: String, x) => k -> x }.toMap
-      row(st.fields.toSeq.map(f =>
-        entries.get(f.name).map(coerce(_, f.dataType, s"$path.${f.name}")).orNull), st)
-    case (es: Vector[_], MapType(StringType, vt, _)) =>
-      es.collect { case (k: String, x) => k -> coerce(x, vt, path) }.toMap
-    case (x, t) =>
-      throw MsgpackError(s"type:$path expected ${t.simpleString} got ${x.getClass.getSimpleName}")
-  }
-
-  // ---- declared-type-driven coercion (true union ingest) ----
+  // ---- msgpack records → interpreter values ----
 
   /** Does a decoded wire value fit a union branch? Exact runtime types
     * only — declared order resolves any ambiguity (empty collections
@@ -221,138 +198,181 @@ object Msgpack extends Serializable {
     case _ => false
   }
 
-  /** Coerce under the DECLARED uDLang type: union fields arrive as their
-    * raw wire value, and the tag is inferred here — at validation time —
-    * by probing branches in declared order (manual.md:112-115). The
-    * result is the engine's tagged-struct encoding {_tag, v0, ...}; a
-    * value matching no branch is a decode error (mode-routed upstream).
-    * Non-union shapes recurse so NESTED records keep union support; the
-    * scalar leaves delegate to the DataType-driven coerce. */
-  def coerceTyped(v: Any, t: UdType, dt: DataType, path: String): Any =
-    (v, t) match {
-      case (null, _) => null
-      // string-literal enum: a CHECK constraint at the boundary
-      case (x: String, TUnion(ts))
-          if ts.nonEmpty && ts.forall(_.isInstanceOf[TValue]) =>
-        if (ts.exists { case TValue(s) => s == x; case _ => false }) x
-        else throw MsgpackError(s"bad_enum:$path=$x")
-      case (_, TUnion(ts)) if !ts.forall(_.isInstanceOf[TValue]) =>
-        val i = ts.indexWhere(branchMatches(v, _))
-        if (i < 0) throw MsgpackError(s"union_no_branch:$path")
-        val st = dt.asInstanceOf[StructType]
-        row(UdScript.tagOf(ts(i)) +: ts.zipWithIndex.map {
-          case (bt, j) =>
-            if (j == i) coerceTyped(v, bt, st(s"v$j").dataType, path)
-            else null
-        }, st)
-      case (_, TOption(inner)) => coerceTyped(v, inner, dt, path)
-      // sized ints enforce their declared range AT THE BOUNDARY, so an
-      // out-of-range record routes through abort/skip/dlq like any other
-      // invalid input instead of erroring mid-query
-      case (x: Long, n: TIntN) =>
-        if (n.contains(x)) x
-        else throw MsgpackError(
-          s"range:$path=$x not a ${if (n.signed) "I" else "U"}${n.bits}")
-      // declared F32 rounds through float32 at the boundary (the float
-      // twin of the sized-int range check; both codecs agree)
-      case (x: Long, TFloat32)   => x.toFloat.toDouble
-      case (x: Double, TFloat32) => x.toFloat.toDouble
-      case (es: Vector[_], TPoint) if branchMatches(v, TPoint) =>
-        val m = es.collect { case (k: String, x) => k -> x }.toMap
-        def d(x: Any): Any = x match {
-          case l: Long => l.toDouble; case dd: Double => dd
-          case other => throw MsgpackError(s"type:$path Point wants floats")
-        }
-        row(Seq(d(m("x")), d(m("y"))), dt.asInstanceOf[StructType])
-      case (es: Vector[_], TRecord(fs, _)) if dt.isInstanceOf[StructType] =>
-        val st = dt.asInstanceOf[StructType]
-        val entries = es.collect { case (k: String, x) => k -> x }.toMap
-        // a nested struct ends with one flag per absent-optional field,
-        // set from key presence
-        row(fs.zipWithIndex.map { case (f, i) =>
-          entries.get(f.name).map(x =>
-            coerceTyped(x, f.t, st.fields(i).dataType, s"$path.${f.name}"))
-            .orNull
-        } ++ fs.filter(_.absentOptional).map(f => entries.contains(f.name)), st)
-      case (xs: Vector[_], TList(et))
-          if dt.isInstanceOf[ArrayType] && branchMatches(v, TList(et)) =>
-        ArraySeq.from(xs.map(coerceTyped(_, et,
-          dt.asInstanceOf[ArrayType].elementType, path)))
-      case (es: Vector[_], TMap(vt)) if dt.isInstanceOf[MapType] =>
-        es.collect { case (k: String, x) =>
-          k -> coerceTyped(x, vt, dt.asInstanceOf[MapType].valueType, path)
-        }.toMap
-      case _ => coerce(v, dt, path)
-    }
+  /** A decoded map's entries by key; a duplicate key keeps its last value. */
+  private def entries(es: Vector[_]): Map[String, Any] =
+    es.collect { case (k: String, x) => k -> x }.toMap
 
-  /** Decode a whole file (concatenated record maps) into Rows of
-    * `decodedSchema`: declared fields ++ __present flags ++
-    * _invalid_reason. Records decode one at a time, as the iterator is
-    * read. A record whose shape mismatches the declaration yields a reason
-    * row; a byte level decode failure yields one final reason row (a
-    * corrupt stream cannot be resynced — msgpack has no sync markers) and
-    * stops the file.
-    */
-  def decodeFile(bytes: Array[Byte], declared: TRecord): Iterator[Row] = {
-    val schema = decodedSchema(declared)
-    val absentOpt = declared.fields.filter(_.absentOptional).map(_.name)
-    def invalid(reason: String): Row =
-      row(declared.fields.map(_ => null) ++ absentOpt.map(_ => false) :+ reason,
-        schema)
-    val buf = ByteBuffer.wrap(bytes)
-    var halted = false
-    Iterator.continually(()).takeWhile(_ => buf.hasRemaining && !halted).map { _ =>
-      val offset = buf.position()
-      try {
-        readValue(buf) match {
-          case entries: Vector[_] if entries.forall(_.isInstanceOf[(_, _)]) =>
-            val m = entries.collect { case (k: String, v) => k -> v }.toMap
-            var reason: String = null // the first field's wins
-            def fail(r: String): Any = { if (reason == null) reason = r; null }
-            val fieldVals = declared.fields.map { f =>
-              val required = !f.absentOptional && !f.t.isInstanceOf[TOption]
-              m.get(f.name) match {
-                // explicit nil for a REQUIRED field — same posture as a
-                // missing key, distinct reason
-                case Some(null) if required => fail(s"null:${f.name}")
-                case Some(v) =>
-                  try coerceTyped(v, f.t, schema(f.name).dataType, f.name)
-                  catch { case e: MsgpackError => fail(e.msg) }
-                case None => if (required) fail(s"missing:${f.name}") else null
-              }
-            }
-            row(fieldVals ++ absentOpt.map(m.contains) :+ reason, schema)
-          case _ => invalid(s"not_a_record@$offset")
-        }
-      } catch {
-        case e: Throwable =>
-          halted = true
-          invalid(s"malformed@$offset:${e.getMessage}")
+  /** The reader of a wire value under the declared type t, planned once:
+    * the interpreter value, or a MsgpackError whose message is the
+    * record's invalid reason. `path` names the top-level field, then the
+    * nested record fields below it. Nil is none at any depth. A union
+    * field arrives as its raw wire value and takes the first branch, in
+    * declared order, that it fits (manual.md:112-115); a sized int
+    * outside its range and a string outside its enum are invalid, and a
+    * declared F32 rounds through float32, at every depth. */
+  private def reader(t: UdType, path: String): Any => Value = {
+    def mismatch(v: Any): Nothing = throw MsgpackError(s"type:$path expected " +
+      s"${UdScript.sparkType(t).simpleString} got ${v.getClass.getSimpleName}")
+    // nil is none at any depth; a value no case takes is a type mismatch
+    def reading(read: PartialFunction[Any, Value]): Any => Value =
+      v => if (v == null) VNone else read.applyOrElse(v, mismatch)
+    t match {
+      case TOption(inner) => reader(inner, path)
+      case TInt => reading { case x: Long => VInt(x) }
+      case n: TIntN => reading {
+        case x: Long =>
+          if (n.contains(x)) VInt(x)
+          else throw MsgpackError(s"range:$path=$x not a ${UdScript.tagOf(n)}")
       }
+      case TFloat | TFloat32 => reading {
+        case x: Long => VFloat(if (t == TFloat32) x.toFloat.toDouble else x.toDouble)
+        case x: Double => VFloat(if (t == TFloat32) x.toFloat.toDouble else x)
+      }
+      case TBool => reading { case b: Boolean => VBool(b) }
+      case TStr | TAny | TValue(_) => reading { case s: String => VStr(s) }
+      // string-literal enum: a CHECK constraint at the boundary
+      case TUnion(ts) if ts.forall(_.isInstanceOf[TValue]) =>
+        val lits = ts.collect { case TValue(s) => s }.toSet
+        reading {
+          case s: String =>
+            if (lits(s)) VStr(s) else throw MsgpackError(s"bad_enum:$path=$s")
+        }
+      case TUnion(ts) =>
+        val branches = ts.map(reader(_, path)).toArray
+        reading { case v =>
+          val i = ts.indexWhere(branchMatches(v, _))
+          if (i < 0) throw MsgpackError(s"union_no_branch:$path")
+          branches(i)(v)
+        }
+      case TList(et) =>
+        val element = reader(et, path)
+        reading { case xs: Vector[_] if branchMatches(xs, t) => VList(xs.map(element)) }
+      case TMap(vt) =>
+        val value = reader(vt, path)
+        reading { case es: Vector[_] =>
+          VMap(es.collect { case (k: String, x) => k -> value(x) }.toMap
+            .toVector.sortBy(_._1))()
+        }
+      // a nested record reads what it finds: a field with no key is none,
+      // or omitted when it is absent-optional
+      case rec @ TRecord(fs, _) =>
+        val fields = fs.map(f => (f, reader(f.t, s"$path.${f.name}")))
+        val absentOk = UdScript.absentOkOf(rec)
+        reading { case es: Vector[_] =>
+          val m = entries(es)
+          VMap(fields.collect {
+            case (f, read) if !f.absentOptional || m.contains(f.name) =>
+              f.name -> read(m.getOrElse(f.name, null))
+          }.toVector)(absentOk)
+        }
+      // a point is {x, y}: with exactly those keys in that order both must
+      // be numbers; otherwise it is none unless both coordinates read
+      case TPoint =>
+        val (x, y) = (reader(TFloat, s"$path.x"), reader(TFloat, s"$path.y"))
+        def coordinate(c: Any): Double = c match {
+          case l: Long => l.toDouble
+          case d: Double => d
+          case _ => throw MsgpackError(s"type:$path Point wants floats")
+        }
+        reading {
+          case es: Vector[_] if branchMatches(es, TPoint) =>
+            val m = entries(es)
+            VPoint(coordinate(m("x")), coordinate(m("y")))
+          case es: Vector[_] =>
+            val m = entries(es)
+            (x(m.getOrElse("x", null)), y(m.getOrElse("y", null))) match {
+              case (VFloat(a), VFloat(b)) => VPoint(a, b)
+              case _ => VNone
+            }
+        }
+      case TTuple(ts) =>
+        val slots = ts.indices.map(i => (s"_${i + 1}", reader(ts(i), s"$path._${i + 1}")))
+        reading { case es: Vector[_] =>
+          val m = entries(es)
+          VTuple(slots.map { case (k, read) => read(m.getOrElse(k, null)) }.toVector)
+        }
+      case _ => reading(PartialFunction.empty)
     }
   }
 
-  /** Decode exactly one framed record (socket/pipe ingest: one frame =
-    * one record map). Same row shape as decodeFile. */
-  def decodeOne(bytes: Array[Byte], declared: TRecord): Row =
-    decodeFile(bytes, declared).next()
+  /** The decoder of a declared input record, planned once: a reader per
+    * field. `records` turns a stream of concatenated record maps into, per
+    * record, the interpreter's input value (Right), or the reason it is
+    * invalid with the fields it did decode (Left) — a failed field is
+    * none. A record's reason is its first failing field's: `null:<f>` or
+    * `missing:<f>` for a required field, else its reader's. A top-level
+    * value that is not a map is `not_a_record@<offset>`; bytes that do not
+    * decode are `malformed@<offset>:<error>` and stop the stream (msgpack
+    * has no sync markers to resync on). */
+  final class Decoder(val declared: TRecord) {
+    private val fs = declared.fields.toArray
+    private val readers = fs.map(f => reader(f.t, f.name))
+    private val required = fs.map(f => !f.absentOptional && !f.t.isInstanceOf[TOption])
+    private val absentOk = UdScript.absentOkOf(declared)
+    private val empty = VMap(Vector.empty)(absentOk)
 
-  /** Schema of the decoded frame: `UdScript.inputFrame` (declared
-    * fields, all nullable, + presence flags) + the (pre-routing) invalid
-    * reason. */
-  def decodedSchema(declared: TRecord): StructType =
-    StructType(UdScript.inputFrame(declared).fields :+
-      StructField("_invalid_reason", StringType, nullable = true))
+    def records(bytes: Array[Byte]): Iterator[Either[(String, VMap), VMap]] = {
+      val buf = ByteBuffer.wrap(bytes)
+      var halted = false
+      Iterator.continually(()).takeWhile(_ => buf.hasRemaining && !halted).map { _ =>
+        val offset = buf.position()
+        try readValue(buf) match {
+          case es: Vector[_] if es.forall(_.isInstanceOf[(_, _)]) => record(entries(es))
+          case _ => Left(s"not_a_record@$offset" -> empty)
+        } catch {
+          case e: Throwable =>
+            halted = true
+            Left(s"malformed@$offset:${e.getMessage}" -> empty)
+        }
+      }
+    }
+
+    private def record(m: Map[String, Any]): Either[(String, VMap), VMap] = {
+      var reason: String = null // the first field's wins
+      def fail(r: String): Value = { if (reason == null) reason = r; VNone }
+      val value = VMap(fs.indices.collect {
+        case i if m.contains(fs(i).name) || !fs(i).absentOptional =>
+          val f = fs(i)
+          f.name -> (m.getOrElse(f.name, null) match {
+            // a nil for a required field is as invalid as a missing key
+            case null if required(i) =>
+              fail(s"${if (m.contains(f.name)) "null" else "missing"}:${f.name}")
+            case v => try readers(i)(v) catch { case e: MsgpackError => fail(e.msg) }
+          })
+      }.toVector)(absentOk)
+      if (reason == null) Right(value) else Left(reason -> value)
+    }
+
+    /** The same row's cells as a DLQ line prints them (`Row.mkString`),
+      * built with no Spark type. */
+    def cells(v: Value): String =
+      UdScript.rowCells(v.asInstanceOf[VMap], declared).mkString("\t")
+  }
 
   /** Read a directory (or file) of msgpack record streams under a declared
     * uDLang record type, with the ValidatedIngest modes. */
   def read(s: SparkSession, path: String, declared: TRecord,
-           mode: ValidatedIngest.Mode): ValidatedIngest.Validated = {
-    val enc = Encoders.row(decodedSchema(declared))
-    val bin = s.read.format("binaryFile").load(path).select("content")
-    val tagged = bin.flatMap(r =>
-      decodeFile(r.getAs[Array[Byte]](0), declared))(enc)
-    ValidatedIngest.routeTagged(tagged.toDF(), mode)
+           mode: ValidatedIngest.Mode): ValidatedIngest.Validated =
+    ingest(s.read.format("binaryFile").load(path).select("content")
+      .as[Array[Byte]](Encoders.BINARY), declared, mode)
+
+  /** Decode each record stream of `streams` (a file's bytes, or one
+    * socket frame) in one `mapPartitions`, encode each record's value with
+    * `UdScript.valueToRow` into the input frame plus `_invalid_reason`,
+    * and route by mode. An invalid record's row keeps the fields it did
+    * decode. */
+  def ingest(streams: Dataset[Array[Byte]], declared: TRecord,
+             mode: ValidatedIngest.Mode): ValidatedIngest.Validated = {
+    val tagged = UdScript.inputFrame(declared).add("_invalid_reason", StringType)
+    val rows = streams.mapPartitions { it =>
+      val decoder = new Decoder(declared)
+      it.flatMap(decoder.records).map {
+        case Right(v) => UdScript.valueToRow(v, declared, tagged)
+        case Left((reason, v)) => new GenericRowWithSchema(
+          (UdScript.valueToRow(v, declared, tagged).toSeq.init :+ reason).toArray, tagged)
+      }
+    }(Encoders.row(tagged))
+    ValidatedIngest.routeTagged(rows.toDF(), mode)
   }
 
   /** Encode rows as concatenated record maps. Columns named

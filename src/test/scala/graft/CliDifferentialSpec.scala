@@ -649,6 +649,26 @@ class CliDifferentialSpec extends SparkSpec {
     assert(runs("abort").err == Seq("runtime error: range: 300 not a U8"))
   }
 
+  test("a nested sized int keeps a pass-through script off the column tier") {
+    // JSON ingest range-checks top-level fields only; the kernel tier's
+    // decode stops a record whose nested U8 is out of range, on both legs
+    val record = agreeBoth("KernelTier", """script "nested range pass";
+      |input  {id: Int, r: {a: U8}};
+      |output {id: Int, a: Int};
+      |out {id: in.id, a: in.r.a};""".stripMargin,
+      """{"id": 1, "r": {"a": 5}}""", """{"id": 2, "r": {"a": 300}}""")
+    assert(record("dlq").out == Seq("""{"id":1,"a":5}"""))
+    assert(record("dlq").err == Seq("2\t[300]\trange: 300 not a U8"))
+    assert(record("abort").err == Seq("runtime error: range: 300 not a U8"))
+    val list = agreeBoth("KernelTier", """script "nested range list";
+      |input  {id: Int, xs: [U8]};
+      |output {id: Int, xs: [Int]};
+      |out {id: in.id, xs: in.xs};""".stripMargin,
+      """{"id": 1, "xs": [5]}""", """{"id": 2, "xs": [300]}""")
+    assert(list("dlq").out == Seq("""{"id":1,"xs":[5]}"""))
+    assert(list("dlq").err == Seq("2\tArraySeq(300)\trange: 300 not a U8"))
+  }
+
   test("the oracle entries' uDLang scripts agree on both paths") {
     import graft.queries.{Dataflow, UdLang}
     val events = lines(

@@ -368,6 +368,14 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("the JSON stdin pipe loads no msgpack class") {
+    for ((args, stdin, want) <- pipeRuns) {
+      val msgpack = classLoads(args, stdin, want).map(_._1)
+        .filter(_.startsWith("graft.sources.Msgpack"))
+      assert(msgpack.isEmpty, s"$args loaded $msgpack")
+    }
+  }
+
   test("java.class.path lists the pipe's jars first, hiding nothing of a later jar") {
     val jars = classpath.filter(_.getName.endsWith(".jar"))
     def artifact(jar: java.io.File) = jar.getName.replaceAll("""(_2\.13)?-\d.*""", "")

@@ -125,15 +125,17 @@ class UnionSpec extends SparkSpec {
     Msgpack.writeMap(o, Seq("id" -> 1L, "v" -> 42L))      // raw int
     Msgpack.writeMap(o, Seq("id" -> 2L, "v" -> "hello"))  // raw str
     Msgpack.writeMap(o, Seq("id" -> 3L, "v" -> true))     // no branch!
-    val rows = Msgpack.decodeFile(o.toByteArray, declared).toSeq
-    assert(rows.length == 3)
-    val r1 = rows(0); val r2 = rows(1); val r3 = rows(2)
+    val routed = Msgpack.ingest(spark.createDataset(Seq(o.toByteArray))(
+      org.apache.spark.sql.Encoders.BINARY), declared, ValidatedIngest.Dlq)
+    val rows = routed.good.orderBy("id").collect().toSeq
+    assert(rows.length == 2)
+    val r1 = rows(0); val r2 = rows(1); val r3 = routed.bad.collect().head
     assert(r1.getStruct(1).getString(0) == "Int" &&
       r1.getStruct(1).getLong(1) == 42L)
     assert(r2.getStruct(1).getString(0) == "Str" &&
       r2.getStruct(1).getString(2) == "hello")
     // bool fits neither branch: field null + reason, routed by mode
-    assert(r3.isNullAt(1) &&
+    assert(r3.getLong(0) == 3L && r3.isNullAt(1) &&
       r3.getString(2).startsWith("union_no_branch:v"))
   }
 

@@ -79,9 +79,9 @@ class JsonRecordsSpec extends SparkSpec {
     val o = new java.io.ByteArrayOutputStream()
     Msgpack.writeMap(o, Seq("id" -> 1L, "status" -> "blocked"))
     Msgpack.writeMap(o, Seq("id" -> 2L, "status" -> "bogus"))
-    val rows = Msgpack.decodeFile(o.toByteArray, declared).toSeq
-    assert(rows(0).getString(rows(0).length - 1) == null)
-    assert(rows(1).getString(rows(1).length - 1).startsWith("bad_enum:status"))
+    val recs = new Msgpack.Decoder(declared).records(o.toByteArray).toSeq
+    assert(recs(0).isRight)
+    assert(recs(1).swap.exists(_._1.startsWith("bad_enum:status")))
   }
 
   test("sized-int ranges route by mode at ingest in both codecs") {
@@ -99,9 +99,9 @@ class JsonRecordsSpec extends SparkSpec {
     val o = new java.io.ByteArrayOutputStream()
     Msgpack.writeMap(o, Seq("id" -> 1L, "age" -> 200L))
     Msgpack.writeMap(o, Seq("id" -> 2L, "age" -> 300L))
-    val rows = Msgpack.decodeFile(o.toByteArray, sized).toSeq
-    assert(rows(0).getString(rows(0).length - 1) == null)
-    assert(rows(1).getString(rows(1).length - 1).startsWith("range:age"))
+    val recs = new Msgpack.Decoder(sized).records(o.toByteArray).toSeq
+    assert(recs(0).isRight)
+    assert(recs(1).swap.exists(_._1.startsWith("range:age")))
   }
 
   test("malformed payloads route to the DLQ; egress round-trips") {

@@ -66,8 +66,7 @@ class MsgpackSpec extends SparkSpec {
     val df = spark.createDataFrame(
       java.util.Arrays.asList(
         Row(1L, 10L, true), Row(2L, null, true), Row(3L, null, false)),
-      Msgpack.decodedSchema(declared).copy(fields =
-        Msgpack.decodedSchema(declared).fields.filterNot(_.name == "_invalid_reason")))
+      graft.lang.UdScript.inputFrame(declared))
     Msgpack.write(df, dir)
     val back = Msgpack.read(spark, dir, declared, ValidatedIngest.Skip)
       .good.orderBy("id").collect()
